@@ -205,16 +205,60 @@ def test_smoke_script_importable_and_consistent():
 def test_release_caches_empties_cache_manager(spark):
     """r6 ADVICE 3: api.release_caches must drop BOTH the _PERSISTED
     staging frames and untracked query-internal persists (title_reigns'
-    status_changes) from the session CacheManager."""
-    from ufc_data_warehouse_spark import api
+    status_changes) from the session CacheManager, forget every memo
+    entry of the session, and let the dedup family re-persist its
+    shingles and LSH candidates afterwards (a stale memo entry would hand
+    back an unpersisted frame that recomputes on every reference)."""
+    from pyspark import StorageLevel
 
-    api.build_model(spark, "/root/testdata/sf0.001", "title_reigns").count()
+    from ufc_data_warehouse_spark import api, cache
+    from ufc_data_warehouse_spark.extra_queries import (
+        _lsh_candidates,
+        _shingles,
+        q_dedup_minhash_lsh,
+    )
+
+    sf = SF_DIR
+    api.build_model(spark, sf, "title_reigns").count()
+    q_dedup_minhash_lsh(spark, sf).count()
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert not jcm.isEmpty(), "expected persisted frames after a build"
     api.release_caches(spark)
     assert jcm.isEmpty(), "release_caches left cached plans behind"
-    key_prefix = spark.sparkContext.applicationId
-    assert not [k for k in api._frame_cache if k[0] == key_prefix]
+    app = spark.sparkContext.applicationId
+    assert not [k for k in cache._memo if k[0] == app]
     # the next build repopulates the cache transparently
-    api.build_model(spark, "/root/testdata/sf0.001", "title_reigns").count()
+    api.build_model(spark, sf, "title_reigns").count()
     assert not jcm.isEmpty()
+    q_dedup_minhash_lsh(spark, sf).count()
+    assert _shingles(spark, sf).storageLevel != StorageLevel.NONE
+    assert _lsh_candidates(spark, sf).storageLevel != StorageLevel.NONE
+
+
+def test_queries_leave_session_conf_alone(spark):
+    """Queries have no hidden global side effects: a sample from every
+    query module (events readers included), a model build and a
+    streaming query leave ``spark.conf`` exactly as they found it."""
+    from ufc_data_warehouse_spark import (
+        analytics_queries,
+        api,
+        curation_queries,
+        extra_queries,
+        pipeline_queries,
+        tpch_extra,
+    )
+
+    sf = SF_DIR
+    sample = [
+        extra_queries.q_json_props_stats,
+        analytics_queries.q_ts_ols_trend,
+        pipeline_queries.q_bigram_lm_quality,
+        curation_queries.q_text_pii_redaction,
+        tpch_extra.q_tpch_q8_market_share,
+        lambda s, d: api.build_model(s, d, "title_reigns"),
+        extra_queries.q_streaming_tumbling_counts,
+    ]
+    before = spark.conf.getAll
+    for q in sample:
+        q(spark, sf).collect()
+    assert spark.conf.getAll == before

@@ -22,14 +22,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: E402
+from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from ufc_data_warehouse_spark.sources.ingest import read_table as _read  # noqa: E402
+
 RUNS = 3
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # ---- OLD shapes (the r4 plans: one keyed window over raw fact rows) ----

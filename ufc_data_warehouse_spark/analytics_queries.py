@@ -21,20 +21,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import dedup, grouped, patterns, timeseries
+from .operators.scale import spread_single_split as _spread
+from .sources.ingest import read_table as _read
 
 Query = Callable[[SparkSession, str], DataFrame]
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .extra_queries import _read as read
-
-    return read(spark, sf_dir, name)
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    from .extra_queries import _spread as spread
-
-    return spread(df)
 
 
 # ---------------------------------------------------------------------------

@@ -8,12 +8,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import models  # noqa: F401 — populates the registry
+from . import cache, models  # noqa: F401 — models populates the registry
 from .registry import REGISTRY
 from .session import apply_runtime_confs
 from .synth import ufc_raw_tables
 
-# Hot-frame cache per (session, sf_dir): every model consumes the two
+# Hot frames persisted per (session, sf_dir): every model consumes the two
 # staging views, and title_reigns feeds three dependents (fct_title_reigns,
 # total_champ_days, the reign card) — persisting these once turns the
 # N-query workload (the correctness driver runs ~30 model queries
@@ -25,53 +25,24 @@ _PERSISTED = (
     "stg_title_fights_norm",
     "title_reigns",
 )
-_frame_cache: dict[tuple[int, str], dict[str, DataFrame]] = {}
-# r8 (guide §4/§5 — the driver boundary): deriving the raw layer is
-# ~1.2 s of pure driver-side plan CONSTRUCTION (py4j chatter), and it was
-# re-run on every build_model call. The frames are lazy — memoizing them
-# per (session, sf_dir) caches plan objects, not data, so repeated
-# builds (the driver runs ~50 queries back-to-back) skip the rebuild
-# while every execution still computes from parquet.
-_raw_cache: dict[tuple[int, str], dict[str, DataFrame]] = {}
 
 
 def _sources(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    # applicationId is unique per SparkContext and survives GC churn
-    # (an id()-based key could collide after a session is collected)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _frame_cache.get(key)
-    raw = _raw_cache.get(key)
-    if raw is None:
-        raw = _raw_cache[key] = ufc_raw_tables(spark, sf_dir)
-    if cached is None:
+    # Deriving the raw layer is ~1.2 s of pure driver-side plan
+    # CONSTRUCTION (py4j chatter). The raw frames are lazy, so memoizing
+    # them caches plan objects, not data: repeated builds skip the rebuild
+    # while every execution still computes from parquet.
+    raw = cache.memo(spark, ("raw", sf_dir), lambda: ufc_raw_tables(spark, sf_dir))
+
+    def persist_hot() -> dict[str, DataFrame]:
         built = REGISTRY.build(raw, targets=list(_PERSISTED))
-        cached = {name: built[name].persist() for name in _PERSISTED}
-        _frame_cache[key] = cached
-    return {**raw, **cached}
+        return {name: built[name].persist() for name in _PERSISTED}
+
+    return {**raw, **cache.memo(spark, ("persisted", sf_dir), persist_hot)}
 
 
-def release_caches(spark: SparkSession) -> None:
-    """Release every frame this engine persisted in ``spark`` — the
-    ``_PERSISTED`` staging cache for all sf_dirs plus query-internal
-    persists that outlive their builder (title_reigns' status_changes;
-    text_token_rarity's vocab): cached plans live in the session
-    CacheManager until session end otherwise (r6 ADVICE 3). Callers own
-    the trade-off: the next build re-derives everything (bench relies on
-    the warm cache for steady-state timings, so it does NOT call this
-    between runs — documented at bench.RUNS)."""
-    key_prefix = spark.sparkContext.applicationId
-    for key in [k for k in _frame_cache if k[0] == key_prefix]:
-        for df in _frame_cache.pop(key).values():
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — session already stopped
-                pass
-    for key in [k for k in _raw_cache if k[0] == key_prefix]:
-        _raw_cache.pop(key)  # lazy plan objects only — nothing to unpersist
-    try:
-        spark.catalog.clearCache()  # untracked query-internal persists
-    except Exception:  # noqa: BLE001
-        pass
+# the only invalidation of everything the engine holds per session
+release_caches = cache.release
 
 
 def build_model(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

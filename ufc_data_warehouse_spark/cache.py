@@ -1,0 +1,60 @@
+"""The one per-session memo for every frame and probe the engine holds.
+
+Entries are keyed by ``(applicationId, key)``: applicationId is unique per
+SparkContext and survives GC churn (an id()-based key could collide after
+a session is collected). What lives here: the lazy raw-layer plans and the
+persisted ``api._PERSISTED`` frames per sf_dir, the dedup shingles and LSH
+candidates per sf_dir, and the ``spread_single_split`` partition probes
+per plan. :func:`release` is the only invalidation.
+
+Leaf module (imports only pyspark/py4j) so ``operators/`` can use it
+without an import cycle.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable, Hashable
+from typing import TypeVar
+
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
+
+_memo: dict[tuple[str, Hashable], object] = {}
+
+
+def memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
+    """Return the value stored under ``key`` for this session, calling
+    ``build()`` on first use."""
+    k = (spark.sparkContext.applicationId, key)
+    if k not in _memo:
+        _memo[k] = build()
+    return _memo[k]  # type: ignore[return-value]
+
+
+def release(spark: SparkSession) -> None:
+    """Release everything the engine holds for ``spark``: the lazy raw
+    plans and persisted ``api._PERSISTED`` frames of every sf_dir, the
+    dedup shingles and LSH candidates, the spread probes, and (through
+    ``clearCache``) query-internal persists that outlive their builder
+    (title_reigns' status_changes, text_token_rarity's vocab).
+
+    This is the only invalidation: call it after rewriting files under an
+    sf_dir, or to get memory back. The next build re-derives and
+    re-persists on demand (bench relies on the warm cache for
+    steady-state timings, so it does NOT call this between runs —
+    documented at bench.RUNS). Exposed as ``api.release_caches``."""
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _memo if k[0] == app]:
+        value = _memo.pop(k)
+        for v in value.values() if isinstance(value, dict) else (value,):
+            if isinstance(v, DataFrame) and v.is_cached:
+                try:
+                    v.unpersist()
+                except Py4JError:  # JVM side already stopped: nothing held
+                    pass
+    try:
+        spark.catalog.clearCache()
+    except Py4JError:  # JVM side already stopped: nothing held
+        pass

@@ -18,14 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import dedup, simsearch, text, training
+from .sources.ingest import read_table as _read
 
 Query = Callable[[SparkSession, str], DataFrame]
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from .extra_queries import _read as read
-
-    return read(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------

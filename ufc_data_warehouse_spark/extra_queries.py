@@ -14,8 +14,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import cache
 from .operators import dedup, scale, simsearch, text
+from .operators.scale import spread_single_split as _spread
 from .session import apply_runtime_confs
+from .sources.ingest import read_table as _read
 
 Query = Callable[[SparkSession, str], DataFrame]
 
@@ -25,12 +28,8 @@ Query = Callable[[SparkSession, str], DataFrame]
 # join) plus across three queries — Catalyst recomputes each reference, so
 # persist once per (session, sf_dir). MEMORY_AND_DISK: spills, never OOMs.
 # On a real 100 TB run this frame is the one you'd checkpoint to parquet.
-_shingle_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _shingle_cache:
+    def build() -> DataFrame:
         docs = _spread(_read(spark, sf_dir, "documents"))
         # r8 (VERDICT r7 item 2): the r7 _spread left the CACHED frame at
         # 32 tiny partitions, taxing every downstream read of the cache
@@ -41,49 +40,20 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scale — so read-side task count tracks data, not core count
         # (§2.2 fewer/larger partitions; interleaved A/B: 32-way cache
         # 2.7-5.9 s vs compacted 2.0-3.1 s on the lsh pipeline).
-        _shingle_cache[key] = (
-            dedup.word_shingles(docs, n=3).hint("rebalance").persist()
-        )
-    return _shingle_cache[key]
+        return dedup.word_shingles(docs, n=3).hint("rebalance").persist()
+
+    return cache.memo(spark, ("shingles", sf_dir), build)
 
 
 # LSH candidate pairs are consumed by two queries (the verify and the full
 # cluster pipeline) and are tiny (bucket collisions only) — persist the
 # frame, not just the plan, so the minhash re-derivation is paid once.
-_cand_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _cand_cache:
+    def build() -> DataFrame:
         sigs = dedup.minhash_signatures(_shingles(spark, sf_dir), num_hashes=16)
-        _cand_cache[key] = dedup.lsh_candidate_pairs(
-            sigs, bands=4, rows_per_band=4
-        ).persist()
-    return _cand_cache[key]
+        return dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).persist()
 
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Single shared implementation since r8 (r7 ADVICE: this helper was
-    duplicated in synth.py while two other modules delegated here —
-    partitioning policy now lives in one place with a per-session probe
-    memo). See :func:`operators.scale.spread_single_split`."""
-    return scale.spread_single_split(df)
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    if name == "events":
-        # events.parquet carries TIMESTAMP(NANOS) which the Spark parquet
-        # reader rejects; read nanos as long and truncate to micros with
-        # INTEGER division — `ns / 1000` through double loses precision
-        # (epoch-nanos exceed 2^53) and drifts ±1µs off the DuckDB oracle.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return cache.memo(spark, ("lsh_candidates", sf_dir), build)
 
 
 # ---------------------------------------------------------------------------

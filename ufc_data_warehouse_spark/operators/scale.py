@@ -21,15 +21,11 @@ from __future__ import annotations
 import shutil
 from pathlib import Path
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-# spread_single_split decision memo per (applicationId, cores, plan hash):
-# the partition-count probe (df.rdd.getNumPartitions()) forces a full
-# physical-plan/RDD conversion on the driver EVERY call, which the r7
-# ADVICE flagged — identical plans get one probe per session now.
-_spread_cache: dict[tuple[str, int, int], bool] = {}
+from .. import cache
 
 
 def spread_single_split(df: DataFrame) -> DataFrame:
@@ -51,30 +47,28 @@ def spread_single_split(df: DataFrame) -> DataFrame:
     (r7 ADVICE — all current call sites are map-free).
 
     r8: the single-split probe result is memoized per (session, cores,
-    canonicalized plan), so repeated builds of the same query pay the
-    RDD-conversion probe once instead of per invocation.
+    canonicalized plan) in :mod:`cache`, so repeated builds of the same
+    query pay the RDD-conversion probe once instead of per invocation.
     """
     from pyspark.sql.types import MapType
 
     assert not any(
         isinstance(f.dataType, MapType) for f in df.schema.fields
     ), "spread_single_split: MapType columns break deterministic round-robin"
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
+    spark = df.sparkSession
+    n = spark.sparkContext.defaultParallelism
+
+    def probe() -> bool:
+        # a full physical-plan/RDD conversion on the driver per call, so
+        # identical plans share one probe per session
+        return df.rdd.getNumPartitions() < n
+
     try:
-        key = (
-            sc.applicationId,
-            n,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 — probe uncached rather than fail
-        key = None
-    if key is not None and key in _spread_cache:
-        needs = _spread_cache[key]
+        plan = df._jdf.queryExecution().analyzed().semanticHash()
+    except Py4JError:  # JVM lacks the method: probe uncached rather than fail
+        needs = probe()
     else:
-        needs = df.rdd.getNumPartitions() < n
-        if key is not None:
-            _spread_cache[key] = needs
+        needs = cache.memo(spark, ("spread", n, plan), probe)
     return df.repartition(n) if needs else df
 
 

@@ -33,6 +33,10 @@ RUNTIME_CONFS: dict[str, str] = {
     # let AQE re-optimize plans that sit under a persist(); without this the
     # cache-materialization pass runs with static shuffle partitioning
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # TIMESTAMP(NANOS) parquet (some events.parquet generations) is
+    # rejected by the reader otherwise; it lands as a bigint of nanos that
+    # sources.ingest.read_table and the events stream convert to micros
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

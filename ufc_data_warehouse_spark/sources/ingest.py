@@ -25,6 +25,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import apply_runtime_confs
+
 # /root/reference/dlt/load.py:18-22
 FACT_TABLES = {"ufc_fight_details", "ufc_fight_results", "ufc_fight_stats"}
 VACANCY_TABLE = "title_status_changes_outside_octagon"
@@ -133,6 +135,21 @@ def load_raw(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFrame]:
         name: spark.read.parquet(os.path.join(base, name))
         for name in sorted(os.listdir(base))
     }
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table (``<sf_dir>/<name>.parquet``) for a query.
+
+    events.parquet may carry TIMESTAMP(NANOS), which the parquet reader
+    only accepts as a bigint of nanos (``nanosAsLong``, set in
+    ``session.RUNTIME_CONFS``); truncate to micros with INTEGER division —
+    ``ns / 1000`` through double loses precision (epoch-nanos exceed 2^53)
+    and drifts ±1µs off the DuckDB oracle."""
+    apply_runtime_confs(spark)
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 # ---------------------------------------------------------------------------

@@ -31,10 +31,9 @@ from pyspark.sql.types import (
 def _events_batch_schema(spark: SparkSession, sf_dir: str):
     """Probe events.parquet with the batch reader to learn how this file's
     ``ts`` column lands in Spark. Testdata generations have shipped both
-    TIMESTAMP(NANOS) (rejected by the reader unless nanosAsLong=true, then
-    a bigint of nanos) and plain TIMESTAMP(MICROS) — the stream must adapt
+    TIMESTAMP(NANOS) (read as a bigint of nanos under session.RUNTIME_CONFS'
+    nanosAsLong) and plain TIMESTAMP(MICROS) — the stream must adapt
     rather than assume a unit."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     probe = spark.read.parquet(f"{sf_dir}/events.parquet")
     ts_is_nanos_long = dict(probe.dtypes).get("ts") == "bigint"
     return probe.schema, ts_is_nanos_long

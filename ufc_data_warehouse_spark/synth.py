@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.scale import spread_single_split as _spread
+
 # ---------------------------------------------------------------------------
 # shared value pools (single source of truth for BOTH engines)
 # ---------------------------------------------------------------------------
@@ -109,16 +111,6 @@ def _fmt_date(date_col: Column, sel: Column, blank_when: Column, blank_val: str)
         .when(sel == 2, F.date_format(date_col, "MMM yyyy"))
         .otherwise(F.date_format(date_col, "MMMM yyyy"))
     )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Guide §2.5 (input skew): spread the single-split testdata scans so
-    the raw-layer derivation (DISTINCT over lineitem + per-row string
-    building) uses the whole box. One shared implementation since r8
-    (r7 ADVICE): operators/scale.py::spread_single_split."""
-    from .operators.scale import spread_single_split
-
-    return spread_single_split(df)
 
 
 def ufc_raw_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -17,12 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .session import apply_runtime_confs
-
-
-def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    apply_runtime_confs(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .sources.ingest import read_table as _read
 
 
 def _rev() -> Column:
