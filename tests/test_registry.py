@@ -257,8 +257,34 @@ def test_queries_leave_session_conf_alone(spark):
         tpch_extra.q_tpch_q8_market_share,
         lambda s, d: api.build_model(s, d, "title_reigns"),
         extra_queries.q_streaming_tumbling_counts,
+        lambda s, d: api.sql(
+            s,
+            d,
+            "SELECT fighter, championship_rounds_fought FROM "
+            "fighters_extracted_goat_status.mv_championship_rounds_fought "
+            "ORDER BY championship_rounds_fought DESC, fighter LIMIT :k",
+            args={"k": 5},
+        ),
     ]
     before = spark.conf.getAll
     for q in sample:
         q(spark, sf).collect()
     assert spark.conf.getAll == before
+
+
+def test_apply_runtime_confs_skips_locked_confs(spark, monkeypatch):
+    """A static conf in RUNTIME_CONFS is skipped (Spark refuses it with an
+    AnalysisException), and the confs after it still apply."""
+    from ufc_data_warehouse_spark import session
+
+    static = "spark.sql.warehouse.dir"
+    before = spark.conf.get(static)
+    monkeypatch.setattr(
+        session,
+        "RUNTIME_CONFS",
+        {static: before + "-elsewhere", **session.RUNTIME_CONFS},
+    )
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    assert session.apply_runtime_confs(spark) is spark
+    assert spark.conf.get(static) == before
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"

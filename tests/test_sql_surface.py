@@ -3,9 +3,12 @@ using the reference's qualified names (charts.sh:154-498 shape)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from tests.conftest import SF_DIR
 
 from ufc_data_warehouse_spark.api import build_model, register_views, sql
+from ufc_data_warehouse_spark.registry import REGISTRY
 
 
 def test_register_views_namespacing(spark):
@@ -113,3 +116,65 @@ def test_sql_macro_matches_column_expr(spark):
     assert all(r["col_form"] == r["sql_form"] for r in rows), rows
     plan = both._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+_CHAMP_ROUNDS = (
+    "SELECT fighter, championship_rounds_fought "
+    "FROM fighters_extracted_goat_status.mv_championship_rounds_fought "
+    "ORDER BY championship_rounds_fought DESC, fighter LIMIT 10"
+)
+
+
+def test_sql_names_match_case_insensitively(spark):
+    """Spark identifiers are case-insensitive, so a card written in upper
+    case resolves to the same view; a reference name that is only the
+    prefix of a longer identifier is left alone."""
+    lower = sql(spark, SF_DIR, _CHAMP_ROUNDS).collect()
+    upper = sql(spark, SF_DIR, _CHAMP_ROUNDS.upper()).collect()
+    assert lower and [tuple(r) for r in upper] == [tuple(r) for r in lower]
+
+    with pytest.raises(
+        AnalysisException, match=r"`fighters_extracted`\.`mv_fighters_by_wins_typo`"
+    ):
+        sql(
+            spark, SF_DIR,
+            "SELECT * FROM fighters_extracted.mv_fighters_by_wins_typo",
+        ).collect()
+
+
+def test_sql_builds_only_the_models_it_names(spark, monkeypatch):
+    """A card builds and registers the models its SQL names, in either
+    spelling, and never touches the rest of the registry."""
+
+    def unreferenced(_):
+        raise AssertionError("api.sql built a model its query does not name")
+
+    monkeypatch.setattr(REGISTRY.models["fighters_by_wins"], "fn", unreferenced)
+    assert sql(spark, SF_DIR, _CHAMP_ROUNDS).collect()
+
+    # a join builds and registers both views it names
+    views = (
+        "fighters_extracted_goat_status__mv_title_reigns",
+        "fighters_extracted_goat_status__mv_total_champ_days",
+    )
+    for view in views:
+        spark.catalog.dropTempView(view)
+    joined = sql(
+        spark,
+        SF_DIR,
+        """
+        SELECT r.fighter, r.weight_category, t.total_champ_days
+        FROM fighters_extracted_goat_status.mv_title_reigns r
+        JOIN fighters_extracted_goat_status.mv_total_champ_days t
+          ON r.fighter = t.fighter AND r.weight_category = t.weight_category
+        """,
+    )
+    assert joined.count() > 0
+    assert all(spark.catalog.tableExists(view) for view in views)
+
+    # the flat view name resolves (and builds) too
+    spark.catalog.dropTempView("fighters_extracted__mv_title_fights")
+    flat = sql(
+        spark, SF_DIR, "SELECT count(*) AS n FROM fighters_extracted__mv_title_fights"
+    )
+    assert flat.collect()[0]["n"] > 0

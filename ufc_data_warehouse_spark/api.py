@@ -6,6 +6,8 @@ This is the reference's ``dbt run`` + Metabase-card surface in one place
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from . import cache, models  # noqa: F401 — models populates the registry
@@ -51,11 +53,6 @@ def build_model(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return REGISTRY.build(_sources(spark, sf_dir), targets=[name])[name]
 
 
-def build_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    apply_runtime_confs(spark)
-    return REGISTRY.build(_sources(spark, sf_dir))
-
-
 # ---------------------------------------------------------------------------
 # SQL serving surface — the Metabase entry point (SURVEY §3 entry 3).
 # dbt composes the target schema with each model's custom schema
@@ -72,26 +69,57 @@ def _qualified_schema(custom: str | None) -> str:
     return f"{_DBT_TARGET_SCHEMA}_{custom}" if custom else _DBT_TARGET_SCHEMA
 
 
+# model → (dotted reference name, flat temp-view name), read off the
+# registry without building anything
+_VIEWS: dict[str, tuple[str, str]] = {
+    name: (
+        f"{_qualified_schema(m.schema)}.{m.alias or name}",
+        f"{_qualified_schema(m.schema)}__{m.alias or name}",
+    )
+    for name, m in REGISTRY.models.items()
+}
+# either spelling of a reference, lower-cased → model
+_REFS = {ref.lower(): name for name, refs in _VIEWS.items() for ref in refs}
+# one case-insensitive, identifier-bounded matcher: a reference name inside
+# a longer identifier (or after a catalog qualifier) is neither rewritten
+# nor built
+_REF = re.compile(
+    r"(?<![\w.])(?:"
+    + "|".join(re.escape(r) for r in sorted(_REFS, key=len, reverse=True))
+    + r")(?!\w)",
+    re.IGNORECASE,
+)
+
+
+def _register(spark: SparkSession, sf_dir: str, names: list[str]) -> None:
+    """Build models ``names`` (and their deps, nothing else) and register
+    each as its flat temp view."""
+    apply_runtime_confs(spark)
+    if not names:
+        return  # REGISTRY.build reads no targets as every model
+    built = REGISTRY.build(_sources(spark, sf_dir), targets=names)
+    for name in names:
+        built[name].createOrReplaceTempView(_VIEWS[name][1])
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Register every model as a temp view named ``<schema>__<alias>``;
     returns the dotted name → view name mapping."""
-    built = build_all(spark, sf_dir)
-    mapping: dict[str, str] = {}
-    for name, model in REGISTRY.models.items():
-        schema = _qualified_schema(model.schema)
-        alias = model.alias or name
-        view = f"{schema}__{alias}"
-        built[name].createOrReplaceTempView(view)
-        mapping[f"{schema}.{alias}"] = view
-    return mapping
+    _register(spark, sf_dir, list(REGISTRY.models))
+    return dict(_VIEWS.values())
 
 
 def sql(
     spark: SparkSession, sf_dir: str, query: str, args: dict | list | None = None
 ) -> DataFrame:
-    """Run BI-card SQL against the model layer: dotted reference names
-    (e.g. ``fighters_extracted_goat_status.mv_title_reigns``) are rewritten
-    to the registered flat temp views, then handed to ``spark.sql``.
+    """Run BI-card SQL against the model layer.
+
+    Model references — dotted (``fighters_extracted_goat_status.mv_title_reigns``)
+    or flat (``fighters_extracted_goat_status__mv_title_reigns``), in any
+    case — are rewritten to the flat temp-view names. Only the models they
+    name are built (with their dependencies) and registered as views; the
+    text then goes to ``spark.sql``. Registered views stay in the session
+    until a later call replaces them.
 
     ``args`` enables parameterized SQL (named ``:param`` or positional
     ``?`` markers) — parameters bind as literals in the plan, never by
@@ -99,9 +127,15 @@ def sql(
     injection-safe and plan-cache-friendly. Spark's session-variable form
     (``DECLARE VARIABLE`` / ``SET VAR`` / ``EXECUTE IMMEDIATE``) works
     through here too since this is a thin veneer over ``spark.sql``."""
-    mapping = register_views(spark, sf_dir)
-    for dotted, view in mapping.items():
-        query = query.replace(dotted, view)
+    named: dict[str, None] = {}  # insertion-ordered set
+
+    def rewrite(ref: re.Match) -> str:
+        name = _REFS[ref.group(0).lower()]
+        named[name] = None
+        return _VIEWS[name][1]
+
+    query = _REF.sub(rewrite, query)
+    _register(spark, sf_dir, list(named))
     if args is not None:
         return spark.sql(query, args=args)
     return spark.sql(query)

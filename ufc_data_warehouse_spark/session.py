@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs we also re-apply to externally provided sessions
@@ -45,8 +46,10 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked down → keep going; queries guard themselves
+        except AnalysisException:
+            # static or locked conf (CANNOT_MODIFY_STATIC_CONFIG /
+            # CANNOT_MODIFY_CONFIG) → keep going; queries guard themselves
+            pass
     return spark
 
 
