@@ -3,6 +3,8 @@ silently degrade (SURVEY §4 / the 100 TB design points)."""
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_DIR
 
 from ufc_data_warehouse_spark.api import build_model
@@ -17,6 +19,33 @@ def test_fct_fights_broadcasts_events_dim(spark):
     plan = _plan(build_model(spark, SF_DIR, "fct_fights"))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "card, jobs",
+    [
+        ("card_best_record_top25", 1),
+        ("card_longest_streaks_top25", 2),
+        ("card_qof_at_time_top25", 2),
+        ("card_consec_defenses_top50", 2),
+    ],
+)
+def test_warm_dashboard_card_runs_no_shuffle(spark, card, jobs):
+    """Over a filled api cache the small staging frames are one partition,
+    so the aggregates and windows over them plan no exchange, and the
+    fighter unpivot is one stack pass that broadcasts the events dim once:
+    best record is one job, the three cards that join the events dim are
+    that broadcast plus one."""
+    EXTRA_QUERIES["card_title_reigns_days_top200"](spark, SF_DIR).collect()
+    sc = spark.sparkContext
+    group = f"job-count-{card}"
+    sc.setJobGroup(group, card)
+    try:
+        EXTRA_QUERIES[card](spark, SF_DIR).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
 def test_quality_of_opposition_has_no_self_sort_merge_join(spark):

@@ -235,6 +235,72 @@ def test_release_caches_empties_cache_manager(spark):
     assert _lsh_candidates(spark, sf).storageLevel != StorageLevel.NONE
 
 
+def test_large_staging_frames_keep_their_layout(spark):
+    """A staging frame is persisted as one partition only while its size
+    estimate is at or below AQE's coalescePartitions.minPartitionSize:
+    with that set to one byte, stg_fight_results keeps AQE's layout, is
+    still read from the cache, and a card returns the same rows."""
+    from ufc_data_warehouse_spark import api
+    from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    card = EXTRA_QUERIES["card_best_record_top25"]
+
+    def stg_fight_results() -> DataFrame:
+        return api.build_model(spark, SF_DIR, "stg_fight_results")
+
+    def layout() -> str:
+        return stg_fight_results()._jdf.queryExecution().logical().toString()
+
+    before = spark.conf.get(key)
+    api.release_caches(spark)
+    try:
+        expected = card(spark, SF_DIR).collect()
+        assert layout().startswith("Repartition 1, true")
+        api.release_caches(spark)
+        spark.conf.set(key, "1b")
+        assert "Repartition 1," not in layout()
+        plan = stg_fight_results()._jdf.queryExecution().executedPlan().toString()
+        assert plan.splitlines()[1].lstrip("+- ").startswith("InMemoryTableScan")
+        assert card(spark, SF_DIR).collect() == expected
+    finally:
+        spark.conf.set(key, before)
+        api.release_caches(spark)
+
+
+def test_persisted_frames_chain_in_dag_order(spark):
+    """Each api._PERSISTED frame is built over the ones persisted before
+    it: after a title_reigns build, the cached plan of
+    stg_title_fights_norm reads stg_fight_results from its
+    InMemoryRelation instead of recomputing it."""
+    from ufc_data_warehouse_spark import api
+
+    api.build_model(spark, SF_DIR, "title_reigns").count()
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+
+    def relation(name: str):
+        df = api.build_model(spark, SF_DIR, name)
+        return jcm.lookupCachedData(df._jdf).get().cachedRepresentation()
+
+    def scans(node):
+        """Cache builders of the InMemoryTableScans a physical plan reads."""
+        kind = node.getClass().getSimpleName()
+        if kind == "InMemoryTableScanExec":
+            yield node.relation().cacheBuilder()
+        elif kind == "AdaptiveSparkPlanExec":
+            yield from scans(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            yield from scans(node.plan())
+        else:
+            children = node.children().iterator()
+            while children.hasNext():
+                yield from scans(children.next())
+
+    sfr = relation("stg_fight_results").cacheBuilder()
+    reads = list(scans(relation("stg_title_fights_norm").cacheBuilder().cachedPlan()))
+    assert any(b.equals(sfr) for b in reads)
+
+
 def test_queries_leave_session_conf_alone(spark):
     """Queries have no hidden global side effects: a sample from every
     query module (events readers included), a model build and a

@@ -21,6 +21,11 @@ from .synth import ufc_raw_tables
 # N-query workload (the correctness driver runs ~30 model queries
 # back-to-back) from N full derivations into one. Default persist level is
 # MEMORY_AND_DISK so the worst case spills instead of OOMing.
+# Listed in DAG order: each is built over the frames persisted before it,
+# so its cached plan reads them from memory. A frame whose size estimate is
+# at or below AQE's coalescePartitions.minPartitionSize (AQE coalesces it
+# into one partition anyway) is persisted as one partition, so aggregates
+# and windows over it plan no exchange; larger ones keep AQE's layout.
 _PERSISTED = (
     "stg_fight_results",
     "stg_event_details",
@@ -37,8 +42,20 @@ def _sources(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     raw = cache.memo(spark, ("raw", sf_dir), lambda: ufc_raw_tables(spark, sf_dir))
 
     def persist_hot() -> dict[str, DataFrame]:
-        built = REGISTRY.build(raw, targets=list(_PERSISTED))
-        return {name: built[name].persist() for name in _PERSISTED}
+        jutils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        one_partition = jutils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+        )
+        hot: dict[str, DataFrame] = {}
+        for name in _PERSISTED:
+            df = REGISTRY.build({**raw, **hot}, targets=[name])[name]
+            # a throwaway projection: optimizing df's own plan before
+            # persist() fixes it, and actions on df would miss the cache
+            est = df.select("*")._jdf.queryExecution().optimizedPlan().stats()
+            if int(est.sizeInBytes()) <= one_partition:
+                df = df.repartition(1)
+            hot[name] = df.persist()
+        return hot
 
     return {**raw, **cache.memo(spark, ("persisted", sf_dir), persist_hot)}
 

@@ -12,10 +12,11 @@ cited per model). Conventions applied throughout:
   through as a final tiebreak on BOTH the Spark and oracle side; a strict
   refinement of the reference's semantics.
 - **Unpivot idiom (U1)**: the reference's fighter_1/fighter_2 UNION ALL
-  re-scans its source; here the source is a lazy plan so we use the
-  single-scan ``inline(arrays_zip…)``-free form: two selects + unionByName —
-  Catalyst dedups the scan via plan reuse, and at 100 TB the exchange reuse
-  keeps it one shuffle.
+  re-scans its source. Here it is one ``stack(2, …)`` generator in a
+  ``selectExpr``: a single pass that emits both sides of each row. Two
+  selects + unionByName would not share their input — each union branch
+  plans its own copy, so a broadcast join under the unpivot (the events
+  dim) runs as two broadcast jobs.
 - All aggregates producing Postgres ``bigint`` are cast to LongType so the
   DuckDB oracle (HUGEINT sums) and Spark agree on schema.
 """
@@ -135,8 +136,8 @@ def fightrers_by_avg_fight_time_min_5(d: dict[str, DataFrame]) -> DataFrame:
     """Avg fight time per fighter, ≥5 min (fightrers_by_avg_fight_time_min_5.sql:3-31;
     model name keeps the reference's typo for parity)."""
     base = d["stg_fight_results"].filter(F.col("fight_time_minutes").isNotNull())
-    fighters = base.select(F.col("fighter_1").alias("fighter"), "fight_time_seconds").unionByName(
-        base.select(F.col("fighter_2").alias("fighter"), "fight_time_seconds")
+    fighters = base.selectExpr(
+        "fight_time_seconds", "stack(2, fighter_1, fighter_2) AS (fighter)"
     )
     return (
         fighters.filter(not_null_or_empty("fighter"))
@@ -164,10 +165,9 @@ def fighters_best_record(d: dict[str, DataFrame]) -> DataFrame:
     """Win/loss/NC record + win_pct, ≥10 fights (fighters_best_record.sql:3-44)
     — A3 conditional aggs + X15 float division."""
     sfr = d["stg_fight_results"]
-    rows = sfr.select(
-        F.col("fighter_1").alias("fighter"), F.upper("outcome_1").alias("outcome")
-    ).unionByName(
-        sfr.select(F.col("fighter_2").alias("fighter"), F.upper("outcome_2").alias("outcome"))
+    rows = sfr.selectExpr(
+        "stack(2, fighter_1, upper(outcome_1), fighter_2, upper(outcome_2))"
+        " AS (fighter, outcome)"
     )
     counts = (
         rows.filter(not_null_or_empty("fighter"))
@@ -209,8 +209,7 @@ def clutch_wins(d: dict[str, DataFrame]) -> DataFrame:
     — J8 semi-join-as-filter + P7 range predicate."""
     sfr = d["stg_fight_results"]
     totals = (
-        sfr.select(F.col("fighter_1").alias("fighter"))
-        .unionByName(sfr.select(F.col("fighter_2").alias("fighter")))
+        sfr.selectExpr("stack(2, fighter_1, fighter_2) AS (fighter)")
         .filter(not_null_or_empty("fighter"))
         .groupBy("fighter")
         .agg(F.count("*").alias("total_fights"))
@@ -260,14 +259,10 @@ def fighters_by_longest_winning_streak(d: dict[str, DataFrame]) -> DataFrame:
         "outcome_1",
         "outcome_2",
     )
-    rows = fights.select(
+    rows = fights.selectExpr(
         "fight_id", "event", "bout", "event_date",
-        F.col("fighter_1").alias("fighter"), F.upper("outcome_1").alias("outcome"),
-    ).unionByName(
-        fights.select(
-            "fight_id", "event", "bout", "event_date",
-            F.col("fighter_2").alias("fighter"), F.upper("outcome_2").alias("outcome"),
-        )
+        "stack(2, fighter_1, upper(outcome_1), fighter_2, upper(outcome_2))"
+        " AS (fighter, outcome)",
     )
     w = Window.partitionBy("fighter").orderBy(*_fight_order())
     ordered = rows.filter(not_null_or_empty("fighter")).select(
@@ -336,9 +331,7 @@ def championship_rounds_fought(d: dict[str, DataFrame]) -> DataFrame:
         & ~F.col("weightclass").ilike("%interim%")
         & ~F.col("weightclass").ilike("%tournament%")
     )
-    rows = tf.select(F.col("fighter_1").alias("fighter"), "round_number").unionByName(
-        tf.select(F.col("fighter_2").alias("fighter"), "round_number")
-    )
+    rows = tf.selectExpr("round_number", "stack(2, fighter_1, fighter_2) AS (fighter)")
     return (
         rows.filter(not_null_or_empty("fighter"))
         .groupBy("fighter")
@@ -369,22 +362,21 @@ def title_fight_results_by_fighter(d: dict[str, DataFrame]) -> DataFrame:
     """Title-fight W/L per fighter per raw weightclass
     (title_fight_results_by_fighter.sql:3-44)."""
     tf = d["stg_fight_results"].filter(F.col("weightclass").ilike("%Title Bout%"))
-
-    def side(f: str, o: str) -> DataFrame:
-        return tf.select(
-            F.col(f).alias("fighter"),
-            F.col("weightclass").alias("category"),
-            F.when(F.upper(o) == "W", 1).otherwise(0).alias("title_fight_win"),
-            F.when(F.upper(o) == "L", 1).otherwise(0).alias("title_fight_loss"),
-        )
-
-    rows = side("fighter_1", "outcome_1").unionByName(side("fighter_2", "outcome_2"))
+    rows = tf.selectExpr(
+        "weightclass AS category",
+        "stack(2, fighter_1, upper(outcome_1), fighter_2, upper(outcome_2))"
+        " AS (fighter, outcome)",
+    )
     return (
         rows.filter(not_null_or_empty("fighter"))
         .groupBy("fighter", "category")
         .agg(
-            F.sum("title_fight_win").cast("long").alias("title_fight_wins"),
-            F.sum("title_fight_loss").cast("long").alias("title_fight_losses"),
+            F.sum(F.when(F.col("outcome") == "W", 1).otherwise(0))
+            .cast("long")
+            .alias("title_fight_wins"),
+            F.sum(F.when(F.col("outcome") == "L", 1).otherwise(0))
+            .cast("long")
+            .alias("title_fight_losses"),
         )
         .orderBy(F.desc("title_fight_wins"), F.asc("title_fight_losses"), F.asc("fighter"))
     )
@@ -410,18 +402,12 @@ def quality_of_opposition_faced(d: dict[str, DataFrame]) -> DataFrame:
             "event", "bout", "event_date", "fighter_1", "fighter_2", "winner",
         )
     )
-    rows = fights.select(
+    rows = fights.selectExpr(
         "fight_id", "event", "bout", "event_date",
-        F.col("fighter_1").alias("fighter"),
-        F.col("fighter_2").alias("opponent"),
-        F.when(F.col("winner") == F.col("fighter_1"), 1).otherwise(0).alias("is_win"),
-    ).unionByName(
-        fights.select(
-            "fight_id", "event", "bout", "event_date",
-            F.col("fighter_2").alias("fighter"),
-            F.col("fighter_1").alias("opponent"),
-            F.when(F.col("winner") == F.col("fighter_2"), 1).otherwise(0).alias("is_win"),
-        )
+        "stack(2,"
+        " fighter_1, fighter_2, CASE WHEN winner = fighter_1 THEN 1 ELSE 0 END,"
+        " fighter_2, fighter_1, CASE WHEN winner = fighter_2 THEN 1 ELSE 0 END)"
+        " AS (fighter, opponent, is_win)",
     )
     w = Window.partitionBy("fighter").orderBy(*_fight_order())
     prior = w.rowsBetween(Window.unboundedPreceding, -1)
@@ -637,16 +623,11 @@ def consecutive_title_defenses(d: dict[str, DataFrame]) -> DataFrame:
         )
     )
 
-    def side(f: str, o: str) -> DataFrame:
-        return tf.select(
-            F.col(f).alias("fighter"),
-            "weight_category",
-            "event_date",
-            F.when(F.upper(o) == "W", "W").when(F.upper(o) == "L", "L").alias("result"),
-            "url",
-        )
-
-    rows = side("fighter_1", "outcome_1").unionByName(side("fighter_2", "outcome_2"))
+    rows = tf.selectExpr(
+        "weight_category", "event_date", "url",
+        "stack(2, fighter_1, upper(outcome_1), fighter_2, upper(outcome_2))"
+        " AS (fighter, result)",
+    )
     w = (
         Window.partitionBy("fighter", "weight_category")
         .orderBy(F.asc("event_date"), F.asc("url"))

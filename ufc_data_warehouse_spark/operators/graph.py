@@ -31,6 +31,7 @@ global scalar per iteration). Documented so the oracle replays it.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -56,7 +57,7 @@ def _truncate(df: DataFrame, eager: bool = False) -> DataFrame:
     flag = "false"
     try:
         flag = df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false")
-    except Exception:  # noqa: BLE001 — conf service unavailable: local default
+    except Py4JError:  # conf service unavailable: local default
         pass
     if str(flag).lower() == "true":
         # reliable checkpoints write a job per call; keep them eager so the
