@@ -89,40 +89,6 @@ def test_pipeline_with_vacancy_builds_reigns(spark, tmp_path):
     assert ("A One", "retirement") in rows
 
 
-def test_incremental_overwrite_touches_only_changed_partitions(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from ufc_data_warehouse_spark.etl import incremental_overwrite
-
-    path = str(tmp_path / "inc")
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "c", 40)],
-        "id int, part string, v int",
-    )
-    base.write.partitionBy("part").parquet(path)
-    before = {
-        p: sorted(os.listdir(f"{path}/part={p}")) for p in ("a", "b", "c")
-    }
-
-    # increment carries only partition 'a' (with a changed + a new row)
-    inc = spark.createDataFrame(
-        [(1, "a", 11), (5, "a", 50)], "id int, part string, v int"
-    )
-    incremental_overwrite(spark, inc, path, ["part"])
-
-    out = spark.read.parquet(path)
-    got = {(r["id"], r["part"], r["v"]) for r in out.collect()}
-    # 'a' fully replaced by the increment; 'b' and 'c' untouched
-    assert got == {(1, "a", 11), (5, "a", 50), (3, "b", 30), (4, "c", 40)}
-    assert sorted(os.listdir(f"{path}/part=b")) == before["b"]
-    assert sorted(os.listdir(f"{path}/part=c")) == before["c"]
-    assert sorted(os.listdir(f"{path}/part=a")) != before["a"]
-    # overwrite mode restored (session default must not leak)
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode") != "dynamic"
-    )
-
-
 def test_upsert_replaces_matching_keys(spark):
     from ufc_data_warehouse_spark.etl import upsert
 
@@ -175,98 +141,3 @@ def test_pipeline_runs_declared_checks(spark, tmp_path):
         "not_null:event_name": 0,
         "unique:fight_id": 0,
     }
-
-
-def test_versioned_publish_atomic_history(spark, tmp_path):
-    """Publishing keeps history: v1 stays byte-readable after v2 lands,
-    the _LATEST pointer resolves to the newest snapshot, and pinned reads
-    reproduce the exact historical data."""
-    from ufc_data_warehouse_spark import etl
-
-    table = str(tmp_path / "mart")
-    v1 = etl.versioned_publish(
-        spark.createDataFrame([(1, "a")], "id long, s string"), table
-    )
-    v2 = etl.versioned_publish(
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string"), table
-    )
-    assert (v1, v2) == (1, 2)
-    assert etl.read_published(spark, table).count() == 2
-    assert etl.read_published(spark, table, version=1).count() == 1
-    # pointer survives a failed publish attempt (directory already there)
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        spark.createDataFrame([(9, "x")], "id long, s string").write.mode(
-            "errorifexists"
-        ).parquet(f"{table}/v=2")
-    assert etl.read_published(spark, table).count() == 2
-
-
-def test_write_audit_publish_gates_bad_data(spark, tmp_path):
-    """WAP: a snapshot failing its audit is staged but NEVER published —
-    readers stay on the last good version; a clean snapshot publishes."""
-    from ufc_data_warehouse_spark import etl
-
-    table = str(tmp_path / "wap_mart")
-    good = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    v, checks = etl.write_audit_publish(
-        spark, good, table, not_null=["id", "s"], unique=[["id"]]
-    )
-    assert v == 1 and all(n == 0 for n in checks.values())
-    assert etl.read_published(spark, table).count() == 2
-
-    bad = spark.createDataFrame(
-        [(3, "c"), (3, "d"), (4, None)], "id long, s string"
-    )
-    v2, checks2 = etl.write_audit_publish(
-        spark, bad, table, not_null=["id", "s"], unique=[["id"]]
-    )
-    assert v2 is None
-    assert any(n > 0 for n in checks2.values()), checks2
-    # pointer still on v1; staged bad version exists for debugging
-    assert etl.read_published(spark, table).count() == 2
-    import os
-
-    assert os.path.isdir(f"{table}/v=2")
-
-    fixed = spark.createDataFrame([(3, "c"), (4, "d")], "id long, s string")
-    v3, _ = etl.write_audit_publish(
-        spark, fixed, table, not_null=["id", "s"], unique=[["id"]]
-    )
-    assert v3 == 3
-    assert etl.read_published(spark, table).count() == 2
-    assert {r["id"] for r in etl.read_published(spark, table).collect()} == {3, 4}
-
-
-def test_prune_versions_keeps_latest_and_n(spark, tmp_path):
-    """Retention drops old snapshots but never the pointer target: after
-    5 publishes with keep=2, v4/v5 survive, v1-v3 are gone, and a pinned
-    pointer older than the cutoff is always retained."""
-    import os
-
-    from ufc_data_warehouse_spark import etl
-
-    d = str(tmp_path / "tbl")
-    for i in range(5):
-        df = spark.range(i + 1).selectExpr("id", f"{i + 1} as ver")
-        etl.versioned_publish(df, d)
-    pruned = etl.prune_versions(d, keep=2)
-    assert pruned == [1, 2, 3]
-    assert sorted(x for x in os.listdir(d) if x.startswith("v=")) == [
-        "v=4",
-        "v=5",
-    ]
-    assert etl.read_published(spark, d).count() == 5
-
-    # pin the pointer to an old version, then prune — the target survives
-    with open(f"{d}/_LATEST", "w") as f:
-        f.write("4")
-    etl.versioned_publish(spark.range(9), d)  # v=5 exists → writes v=6
-    with open(f"{d}/_LATEST", "w") as f:
-        f.write("4")
-    pruned2 = etl.prune_versions(d, keep=1)
-    left = sorted(x for x in os.listdir(d) if x.startswith("v="))
-    assert "v=4" in left and "v=6" in left and "v=5" not in left
-    assert 5 in pruned2
-    assert etl.read_published(spark, d).count() == 4

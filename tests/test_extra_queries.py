@@ -17,98 +17,6 @@ def test_extra_query_matches_oracle(spark, duck, name):
     assert_frames_match(spark_df, duck_df, label=name)
 
 
-def test_transform_with_state_totals(spark, duck):
-    """Spark 4 transformWithStateInPandas path — gated on google.protobuf,
-    which the TWS python driver worker imports (absent in some containers)."""
-    import pytest as _pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        _pytest.skip("google.protobuf unavailable — TWS driver worker needs it")
-    from ufc_data_warehouse_spark.extra_queries import (
-        q_streaming_transform_with_state,
-    )
-
-    sdf = q_streaming_transform_with_state(spark, SF_DIR)
-    duck_df = duck.execute(
-        """SELECT user_id, count(*) AS n_events,
-  sum(floor(value * 100)::BIGINT)::BIGINT AS value_cents
-FROM events GROUP BY user_id ORDER BY user_id"""
-    ).df()
-    assert_frames_match(sdf, duck_df, label="transform_with_state")
-
-
-def test_chunk_udtf_matches_column_chunker(spark):
-    """The SQL UDTF surface must be row-identical to the production
-    Column-based chunker."""
-    from pyspark.sql import functions as F
-
-    from ufc_data_warehouse_spark.extra_queries import _read
-    from ufc_data_warehouse_spark.operators import text as t
-
-    docs = _read(spark, SF_DIR, "documents").limit(100)
-    col_rows = {
-        (r["id"], r["chunk_idx"], r["chunk_text"], r["chunk_chars"])
-        for r in t.chunk_documents(docs, chunk_chars=200, overlap=50).collect()
-    }
-    t.register_sql_udtfs(spark)
-    docs.select(
-        F.col("doc_id").alias("id"),
-        t.normalized_text(F.col("text")).alias("norm"),
-    ).createOrReplaceTempView("docs_norm")
-    udtf_rows = {
-        tuple(r)
-        for r in spark.sql(
-            """SELECT d.id, c.chunk_idx, c.chunk_text, c.chunk_chars
-               FROM docs_norm d, LATERAL chunk_udtf(d.norm, 200, 50) c"""
-        ).collect()
-    }
-    assert udtf_rows == col_rows and len(col_rows) > 0
-
-
-def test_restart_resume_ingests_only_new_files(spark, tmp_path):
-    """Checkpointed streaming ingest must resume across restarts: run 1
-    consumes the files present, run 2 (same checkpoint) consumes ONLY the
-    newly-landed file, run 3 with nothing new is a no-op — the sink ends
-    exactly-once with no duplicates."""
-    import glob
-    import shutil
-
-    from tests.conftest import SF_DIR
-    from ufc_data_warehouse_spark.streaming import events as ev
-
-    full = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    half_a = full.filter("event_id % 2 = 0")
-    half_b = full.filter("event_id % 2 = 1")
-
-    src = tmp_path / "landing"
-    src.mkdir()
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def land(df, name):
-        staged = str(tmp_path / f"stage_{name}")
-        df.coalesce(1).write.mode("overwrite").parquet(staged)
-        part = glob.glob(f"{staged}/part-*.parquet")[0]
-        shutil.copy(part, str(src / f"{name}.parquet"))
-
-    land(half_a, "a")
-    ev.resumable_ingest_run(spark, str(src), sink, ckpt, full.schema)
-    n_a = spark.read.parquet(sink).count()
-    assert n_a == half_a.count()
-
-    land(half_b, "b")
-    ev.resumable_ingest_run(spark, str(src), sink, ckpt, full.schema)
-    after_b = spark.read.parquet(sink)
-    assert after_b.count() == full.count()
-    assert after_b.select("event_id").distinct().count() == full.count()
-
-    # idempotent restart: nothing new landed → nothing reprocessed
-    ev.resumable_ingest_run(spark, str(src), sink, ckpt, full.schema)
-    assert spark.read.parquet(sink).count() == full.count()
-
-
 def test_stateful_query_on_rocksdb_state_store(spark):
     """The watermarked dedup must run unchanged on the RocksDB state
     store provider — the disk-backed store that holds 100 TB-scale

@@ -144,27 +144,6 @@ def test_htmltable_python_datasource(spark, tmp_path):
     assert df.rdd.getNumPartitions() == 2
 
 
-def test_seqstream_python_streaming_source(spark):
-    """Custom Python streaming data source: offset-tracked, deterministic,
-    partition-parallel — the exactly-once replay contract in miniature."""
-    from ufc_data_warehouse_spark.sources import htmltable
-    from ufc_data_warehouse_spark.streaming.events import run_available_now
-
-    htmltable.register_seqstream(spark)
-    stream = (
-        spark.readStream.format("seqstream")
-        .option("maxrows", 500)
-        .option("tasks", 4)
-        .load()
-    )
-    agg = stream.groupBy().agg(
-        F.count("*").alias("n"), F.sum("id").alias("id_sum")
-    )
-    out = run_available_now(agg, output_mode="complete").collect()
-    assert out[0]["n"] == 500
-    assert out[0]["id_sum"] == 500 * 499 // 2  # exactly 0..499, no dup/loss
-
-
 def test_jsonl_roundtrip_and_corrupt_quarantine(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -257,90 +236,3 @@ def test_jsonlsink_python_datasource_writer(spark, tmp_path):
         f"{out}/*.jsonl"
     )
     assert back2.count() == 10
-
-
-def test_xml_native_source_roundtrip(spark, tmp_path):
-    """Native Spark 4 XML source: rowTag extraction, header
-    normalization, explicit-schema read, and sink round-trip."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    src = tmp_path / "feed"
-    src.mkdir()
-    (src / "a.xml").write_text(
-        "<feed><entry><DocId>1</DocId><Body Text='x'>hello</Body></entry>"
-        "<entry><DocId>2</DocId><Body>world</Body></entry></feed>"
-    )
-    df = ingest.read_xml(spark, str(src), row_tag="entry")
-    assert "docid" in df.columns or "doc_id" in df.columns
-    assert df.count() == 2
-
-    schema = StructType(
-        [StructField("DocId", LongType()), StructField("Body", StringType())]
-    )
-    typed = ingest.read_xml(spark, str(src), row_tag="entry", schema=schema)
-    rows = {r["docid"]: r["body"] for r in typed.collect()}
-    assert rows == {1: "hello", 2: "world"}
-
-    out = tmp_path / "out_xml"
-    ingest.write_xml(typed, str(out), row_tag="entry")
-    back = ingest.read_xml(spark, str(out), row_tag="entry", schema=schema)
-    assert sorted((r["docid"], r["body"]) for r in back.collect()) == [
-        (1, "hello"),
-        (2, "world"),
-    ]
-
-
-def test_binary_assets_source(spark, tmp_path):
-    """binaryFile ingest for multimodal assets: one row per file with
-    (path, modification_time, length, content); glob pruning happens at
-    listing time."""
-    assets = tmp_path / "assets"
-    assets.mkdir()
-    (assets / "a.png").write_bytes(b"\x89PNG\r\n" + b"\x00" * 10)
-    (assets / "b.png").write_bytes(b"\x89PNG\r\n" + b"\x01" * 20)
-    (assets / "notes.txt").write_text("not an image")
-
-    df = ingest.read_binary_assets(spark, str(assets), glob_filter="*.png")
-    rows = sorted(df.collect(), key=lambda r: r["path"])
-    assert len(rows) == 2
-    assert [r["length"] for r in rows] == [16, 26]
-    assert rows[0]["content"][:4] == b"\x89PNG"
-    assert set(df.columns) == {"path", "modification_time", "length", "content"}
-
-    # feeds straight into the multimodal decode plumbing: magic-byte
-    # format sniffing (pure Column), deterministic media ids
-    from ufc_data_warehouse_spark.operators import multimodal
-
-    all_assets = ingest.read_binary_assets(spark, str(assets))
-    meta = multimodal.attach_asset_metadata(all_assets)
-    kinds = {r["source"].rsplit("/", 1)[-1]: r["kind"] for r in meta.collect()}
-    assert kinds == {"a.png": "image", "b.png": "image", "notes.txt": "binary"}
-    ids1 = {r["media_id"] for r in meta.collect()}
-    ids2 = {
-        r["media_id"]
-        for r in multimodal.attach_asset_metadata(all_assets).collect()
-    }
-    assert ids1 == ids2 and all(i >= 0 for i in ids1)
-    # digest path works on sniffed assets too
-    digested = multimodal.media_metadata(meta)
-    assert digested.count() == 3
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    """A column added mid-stream must surface via mergeSchema: old files
-    read NULL for it; explicit-schema reads stay pinned."""
-    target = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")\
-        .write.mode("append").parquet(target)
-    spark.createDataFrame(
-        [(3, "c", "en")], "doc_id long, text string, lang string"
-    ).write.mode("append").parquet(target)
-
-    merged = ingest.read_parquet_evolving(spark, target)
-    assert set(merged.columns) == {"doc_id", "text", "lang"}
-    rows = {r["doc_id"]: r["lang"] for r in merged.collect()}
-    assert rows == {1: None, 2: None, 3: "en"}
-
-    pinned = spark.read.schema("doc_id long, text string").parquet(target)
-    assert set(pinned.columns) == {"doc_id", "text"}
-    assert pinned.count() == 3

@@ -2,8 +2,7 @@
 Postgres database written over a DB-API connection (reference
 dlt/load.py:55-59, .dlt/secrets.toml); here the sink is exercised against
 an embedded DuckDB over its JDBC driver when a driver jar is discoverable
-on this machine — otherwise the test skips, documented the same way as
-the protobuf-gated transformWithStateInPandas test.
+on this machine — otherwise the tests skip.
 
 DuckDB-driver quirk (does not affect Postgres, which has a first-class
 Spark JdbcDialect): Spark's create-table existence probe raises through
@@ -19,7 +18,7 @@ import os
 import duckdb
 import pytest
 
-from ufc_data_warehouse_spark.registry import jdbc_roundtrip, write_jdbc
+from ufc_data_warehouse_spark.registry import write_jdbc
 
 
 def _duckdb_jdbc_jar() -> str | None:
@@ -63,7 +62,8 @@ def test_jdbc_roundtrip_region(spark, tmp_path, jdbc_jar):
     spark.sql(f"ADD JAR {jdbc_jar}")
     df = spark.read.parquet(src)
     url = f"jdbc:duckdb:{db}"
-    back = jdbc_roundtrip(spark, df, url, "region_sink", options=_OPTS)
+    write_jdbc(df, url, "region_sink", options=_OPTS, num_partitions=1)
+    back = spark.read.options(**_OPTS).jdbc(url, "region_sink")
     want = sorted(map(tuple, df.collect()))
     got = sorted(map(tuple, back.collect()))
     assert got == want

@@ -128,105 +128,6 @@ def test_approx_percentile_within_bound_of_exact(spark):
         assert lo99 <= a99 <= hi99, (et, lo99, a99, hi99)
 
 
-def test_hll_sketch_rollup_within_bound_of_exact(spark):
-    """Per-day HLL sketches unioned per event_type estimate distinct users
-    within HLL's relative error (~1.6% at lg_k=12; assert 5%)."""
-    from ufc_data_warehouse_spark.extra_queries import _read
-    from ufc_data_warehouse_spark.operators.scale import (
-        hll_merged_estimate,
-        hll_partial_sketches,
-    )
-
-    ev = _read(spark, SF_DIR, "events").withColumn(
-        "day", F.to_date("ts")
-    )
-    sketches = hll_partial_sketches(
-        ev, ["event_type"], "user_id", "day", lg_k=12
-    )
-    est = {
-        r["event_type"]: r["approx_distinct"]
-        for r in hll_merged_estimate(sketches, ["event_type"]).collect()
-    }
-    exact = {
-        r["event_type"]: r["n"]
-        for r in ev.groupBy("event_type")
-        .agg(F.countDistinct("user_id").alias("n"))
-        .collect()
-    }
-    assert set(est) == set(exact)
-    for et, n in exact.items():
-        assert abs(est[et] - n) <= max(2, 0.05 * n), (et, est[et], n)
-
-
-def test_write_clustered_prunes_row_groups(spark, tmp_path):
-    """Files written by write_clustered cover disjoint key ranges, so a
-    selective filter reads a fraction of the rows at scan time."""
-    import pyarrow.parquet as pq
-
-    from ufc_data_warehouse_spark.operators.scale import write_clustered
-
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    path = str(tmp_path / "clustered")
-    write_clustered(li, path, ["l_partkey"], num_files=8)
-
-    # per-file key ranges must be (near-)disjoint: total overlap-free
-    files = sorted(
-        str(p) for p in __import__("pathlib").Path(path).glob("*.parquet")
-    )
-    assert len(files) >= 4
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        col_idx = next(
-            i for i in range(md.num_columns)
-            if md.row_group(0).column(i).path_in_schema == "l_partkey"
-        )
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, (ranges,)  # disjoint file ranges
-
-    # and Spark's scan actually skips: a tight key predicate reads only
-    # the files/row groups whose range covers it
-    some_key = li.select("l_partkey").first()["l_partkey"]
-    filtered = spark.read.parquet(path).filter(F.col("l_partkey") == some_key)
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(l_partkey), EqualTo(l_partkey" in plan
-    assert filtered.count() == li.filter(F.col("l_partkey") == some_key).count()
-
-
-def test_compact_small_files(spark, tmp_path):
-    from ufc_data_warehouse_spark.operators.scale import compact_small_files
-
-    path = str(tmp_path / "shards")
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    before_count = li.count()
-    before_sum = li.agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("s")
-    ).first()["s"]
-    # simulate incremental-append fragmentation: many tiny files
-    li.repartition(32).write.mode("overwrite").parquet(path)
-    import pathlib
-
-    assert len(list(pathlib.Path(path).glob("*.parquet"))) == 32
-    n = compact_small_files(spark, path, target_file_bytes=64 * 1024 * 1024)
-    assert n < 32
-    assert len(list(pathlib.Path(path).glob("*.parquet"))) == n
-    after = spark.read.parquet(path)
-    assert after.count() == before_count
-    assert (
-        after.agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("s")
-        ).first()["s"]
-        == before_sum
-    )
-
-
 def _py_z(a: int, b: int, bits: int = 16) -> int:
     z = 0
     for i in range(bits):
@@ -246,94 +147,6 @@ def test_z_value_matches_reference_bit_interleave(spark):
     }
     for a, b in rows:
         assert got[(a, b)] == _py_z(a, b), (a, b)
-
-
-def test_write_zordered_gives_both_columns_locality(spark, tmp_path):
-    """After Z-order clustering, BOTH key columns have bounded per-file
-    ranges (each file covers ≲ a quadrant-ish slice of either dimension),
-    which is what parquet min/max pruning needs."""
-    import pyarrow.parquet as pq
-
-    from ufc_data_warehouse_spark.operators.scale import write_zordered
-
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    path = str(tmp_path / "zord")
-    write_zordered(li, path, "l_partkey", "l_suppkey", num_files=8)
-    out = spark.read.parquet(path)
-    assert out.count() == li.count()
-
-    stats = li.agg(
-        F.max("l_partkey").alias("pmax"), F.max("l_suppkey").alias("smax")
-    ).first()
-    files = sorted(
-        str(p) for p in __import__("pathlib").Path(path).glob("*.parquet")
-    )
-    assert len(files) >= 4
-    tight = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        cols = {
-            md.row_group(0).column(i).path_in_schema: i
-            for i in range(md.num_columns)
-        }
-        pr = [
-            md.row_group(rg).column(cols["l_partkey"]).statistics
-            for rg in range(md.num_row_groups)
-        ]
-        sr = [
-            md.row_group(rg).column(cols["l_suppkey"]).statistics
-            for rg in range(md.num_row_groups)
-        ]
-        p_span = max(s.max for s in pr) - min(s.min for s in pr)
-        s_span = max(s.max for s in sr) - min(s.min for s in sr)
-        # a random layout would give every file ~the full span on both
-        # dims; z-order keeps at least one dimension well under that
-        if p_span <= 0.75 * stats["pmax"] or s_span <= 0.75 * stats["smax"]:
-            tight += 1
-    assert tight >= len(files) // 2, (tight, len(files))
-
-
-def test_count_min_sketch_bounds(spark):
-    """Per-day count-min sketches merged across days: estimate ≥ exact for
-    every term (one-sided guarantee) and within εN of exact for the head
-    terms (ε = e/width; assert the loose 4/width bound)."""
-    from ufc_data_warehouse_spark.extra_queries import _read
-    from ufc_data_warehouse_spark.operators.dedup import tokens
-    from ufc_data_warehouse_spark.operators.scale import (
-        cm_estimate,
-        cm_merge,
-        cm_partial_sketches,
-    )
-
-    depth, width = 4, 2048
-    docs = _read(spark, SF_DIR, "documents")
-    toks = docs.select(
-        (F.col("doc_id") % 7).alias("bucket"),
-        F.explode(tokens(F.col("text"))).alias("term"),
-    ).filter(F.col("term") != "")
-    n_total = toks.count()
-    sketches = cm_partial_sketches(toks, "term", "bucket", depth, width)
-    merged = cm_merge(sketches)
-
-    exact = toks.groupBy("term").agg(F.count("*").alias("n"))
-    head = exact.orderBy(F.desc("n"), F.asc("term")).limit(50)
-    est = {
-        r["value"]: r["est_count"]
-        for r in cm_estimate(
-            merged, head.select(F.col("term")), "term", depth, width
-        ).collect()
-    }
-    for r in head.collect():
-        e = est[r["term"]]
-        assert e >= r["n"], (r["term"], e, r["n"])
-        assert e - r["n"] <= max(2, 4.0 * n_total / width), (r["term"], e, r["n"])
-
-    # a value never seen estimates ≥ 0 and ≤ εN (usually 0)
-    ghost = spark.createDataFrame([("zz-never-a-token",)], ["term"])
-    g = cm_estimate(merged, ghost, "term", depth, width).collect()[0]
-    assert 0 <= g["est_count"] <= max(2, 4.0 * n_total / width)
 
 
 def test_interval_bucket_join_is_equi_join(spark):
@@ -569,125 +382,6 @@ def test_winnowing_guarantee_shared_substring_shares_fingerprint(spark):
     assert (100, 101) not in got
 
 
-def test_drop_frequent_shingles_bounds_join_fanout(spark):
-    """Stop-shingle removal must (a) be identity at an unreachable
-    threshold, (b) strictly shrink the candidate pair space when cutting
-    the Zipf head, and (c) never drop a rare shingle."""
-    from ufc_data_warehouse_spark.operators import dedup as dd
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    sh = dd.word_shingles(docs, n=3).persist()
-    try:
-        total = sh.count()
-        assert dd.drop_frequent_shingles(sh, max_doc_freq=10**9).count() == total
-
-        cut = dd.drop_frequent_shingles(sh, max_doc_freq=5)
-        assert cut.count() < total
-        # no shingle with doc_freq <= 5 was lost
-        freq = dd.shingle_doc_frequency(sh)
-        rare = freq.filter(F.col("doc_freq") <= 5).count()
-        assert (
-            dd.shingle_doc_frequency(cut).count() == rare
-        )
-        # pair fan-out shrinks: hot-key contribution is quadratic
-        pairs_all = dd.jaccard_pairs(sh, min_jaccard=0.0).count()
-        pairs_cut = dd.jaccard_pairs(cut, min_jaccard=0.0).count()
-        assert pairs_cut < pairs_all
-    finally:
-        sh.unpersist()
-
-
-def test_cbo_stats_flip_join_to_broadcast(spark):
-    """Catalog statistics + CBO must change the PLAN: with column stats,
-    the optimizer estimates the post-filter build side as small enough to
-    broadcast; without CBO the same query sort-merges. This is the
-    statistics-driven planning path (`analyze_tables`) a warehouse relies
-    on at 100 TB, demonstrated at the sf0.01-derived size boundary."""
-    import shutil
-
-    from ufc_data_warehouse_spark.operators.scale import analyze_tables
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("cbo_orders", "cbo_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-    sf01 = "/root/testdata/sf0.01"
-    spark.read.parquet(f"{sf01}/orders.parquet").write.saveAsTable("cbo_orders")
-    spark.read.parquet(f"{sf01}/lineitem.parquet").write.saveAsTable(
-        "cbo_lineitem"
-    )
-    analyze_tables(spark, "cbo_orders", columns=True)
-    analyze_tables(spark, "cbo_lineitem")
-
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.cbo.enabled",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # between the no-CBO estimate (~220 KB: filter assumed to keep
-        # everything) and the CBO estimate (~37 KB: selectivity from
-        # o_orderkey min/max stats)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(100 * 1024))
-
-        def executed(cbo: bool) -> str:
-            spark.conf.set("spark.sql.cbo.enabled", str(cbo).lower())
-            o = spark.table("cbo_orders").filter(F.col("o_orderkey") < 500)
-            li = spark.table("cbo_lineitem")
-            # no projection: keep the full-width build side so the size
-            # estimate difference is purely the filter-selectivity one
-            j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
-            return j._jdf.queryExecution().executedPlan().toString()
-
-        without = executed(False)
-        with_cbo = executed(True)
-        assert "SortMergeJoin" in without and "BroadcastHashJoin" not in without
-        assert "BroadcastHashJoin" in with_cbo
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        for t in ("cbo_orders", "cbo_lineitem"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_shuffle_hash_hint_skips_sorts(spark):
-    """`hinted_join(strategy='shuffle_hash')` must plan a ShuffledHashJoin
-    (no sort pass on either side) where the default above the broadcast
-    threshold is sort-merge."""
-    from ufc_data_warehouse_spark.operators.scale import hinted_join
-
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-
-        default = li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        dplan = default._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in dplan
-
-        hinted = hinted_join(
-            li, orders, li["l_orderkey"] == orders["o_orderkey"]
-        )
-        hplan = hinted._jdf.queryExecution().executedPlan().toString()
-        assert "ShuffledHashJoin" in hplan and "SortMergeJoin" not in hplan
-        assert hinted.count() == default.count()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-
-
 @pytest.mark.slow
 def test_ivf_recall_vs_brute_force(spark):
     """IVF probing (sublinear scale path) with k-means inverted lists:
@@ -738,46 +432,6 @@ def test_bucket_pruning_on_key_filter(spark, bucketed_tables):
         assert df.count() >= 1
     finally:
         spark.conf.set(conf, saved)
-
-
-def test_hll_rolling_7d_actives_within_bound_of_exact(spark):
-    """Scale path for rolling_active_users_7d: per-DAY HLL sketches stored
-    once, each 7-day window answered by unioning 7 sketches — no raw
-    event re-scan per window. Estimate must stay within 5% of the exact
-    rollup (lg_k=12 ⇒ ~1.6% std error)."""
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SF_DIR
-    from ufc_data_warehouse_spark.operators import scale
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-        "user_id", F.to_date(F.col("ts").cast("timestamp")).alias("day")
-    )
-    daily = scale.hll_partial_sketches(
-        ev, group_cols=[], value_col="user_id", bucket_col="day"
-    )
-    # window expansion over the ≤|days| sketch frame, never raw events
-    windows = daily.select(
-        F.explode(
-            F.expr("sequence(day, date_add(day, 6))")
-        ).alias("active_day"),
-        "sketch",
-    )
-    est = {
-        r["active_day"]: r["approx_distinct"]
-        for r in scale.hll_merged_estimate(windows, ["active_day"]).collect()
-    }
-    from ufc_data_warehouse_spark.analytics_queries import (
-        q_rolling_active_users_7d,
-    )
-
-    exact = {
-        r["active_day"]: r["active_users_7d"]
-        for r in q_rolling_active_users_7d(spark, SF_DIR).collect()
-    }
-    assert set(est) == set(exact)
-    for day, n in exact.items():
-        assert abs(est[day] - n) <= max(2, 0.05 * n), (day, est[day], n)
 
 
 def test_approx_percentile_rank_error_bounded(spark):
@@ -863,65 +517,6 @@ def test_salted_replicate_join_row_identical_and_salted_keys(spark):
         .toString()
     )
     assert "_salt" in plan
-
-
-def test_rollup_router_serves_subset_dims_from_rollup(spark, tmp_path):
-    """A (day, event_type) rollup must answer an event_type-only query
-    with fact-identical numbers while scanning the ROLLUP files, and a
-    non-covered query must fall back to the fact path."""
-    from pyspark.sql import functions as F
-
-    from ufc_data_warehouse_spark.extra_queries import _read
-    from ufc_data_warehouse_spark.operators.scale import RollupRouter
-
-    ev = _read(spark, SF_DIR, "events").select(
-        "event_type",
-        "user_id",
-        F.expr("unix_micros(ts::timestamp) div 86400000000").alias("day"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    rollup_path = str(tmp_path / "rollup_day_type")
-    ev.groupBy("day", "event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("cents")
-    ).write.parquet(rollup_path)
-
-    router = RollupRouter()
-    router.register(
-        spark.read.parquet(rollup_path),
-        dims=["day", "event_type"],
-        measures={"n": "sum", "cents": "sum"},
-    )
-
-    routed = router.route(
-        ["event_type"],
-        ["n", "cents"],
-        fact_path=lambda: ev.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("cents").alias("cents")
-        ),
-    )
-    direct = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("cents").alias("cents")
-    )
-    assert routed.exceptAll(direct).count() == 0
-    assert direct.exceptAll(routed).count() == 0
-    # plan strings elide paths — identify the scanned source by its
-    # ReadSchema: the rollup exposes pre-aggregated (n, cents) columns,
-    # the fact scan would expose raw (ts, value)
-    plan = routed._jdf.queryExecution().executedPlan().toString()
-    assert "n:bigint,cents:bigint" in plan.replace(" ", "")
-    assert "ts:timestamp" not in plan and "value:double" not in plan
-
-    # user_id is not in the rollup dims → fact fallback
-    fallback = router.route(
-        ["user_id"],
-        ["n"],
-        fact_path=lambda: ev.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n")
-        ),
-    )
-    plan_fb = fallback._jdf.queryExecution().executedPlan().toString()
-    assert "user_id:" in plan_fb.replace(" ", "")
-    assert "n:bigint,cents:bigint" not in plan_fb.replace(" ", "")
 
 
 def test_scan_budget_guard_blocks_and_passes(spark):

@@ -95,29 +95,6 @@ def test_parameterized_sql_and_session_variables(spark):
     assert ei[0]["v"] == 42
 
 
-def test_sql_macro_matches_column_expr(spark):
-    """The SQL TEMPORARY FUNCTION form of the reference's image-url macro
-    must be row-identical to the Column-expression form (exprs.X13), and
-    inline into the plan with no Python eval."""
-    from pyspark.sql import functions as F
-
-    from ufc_data_warehouse_spark import exprs
-
-    exprs.register_sql_macros(spark)
-    names = spark.createDataFrame(
-        [("Jon Jones",), ("Khabib - Nurmagomedov!",), ("",), (None,), ("ñ",)],
-        ["fighter"],
-    )
-    both = names.select(
-        exprs.image_slug_url("fighter").alias("col_form"),
-        F.expr("fighter_image_url(fighter)").alias("sql_form"),
-    )
-    rows = both.collect()
-    assert all(r["col_form"] == r["sql_form"] for r in rows), rows
-    plan = both._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 _CHAMP_ROUNDS = (
     "SELECT fighter, championship_rounds_fought "
     "FROM fighters_extracted_goat_status.mv_championship_rounds_fought "

@@ -77,33 +77,6 @@ def test_shuffled_is_permutation_and_deterministic(spark):
     assert by_pos != sorted(by_pos)
 
 
-def test_write_shards_roundtrip_one_file_per_shard(spark, tmp_path):
-    docs = _docs(spark)
-    out = str(tmp_path / "shards")
-    training.write_shards(docs, out, "doc_id", n_shards=8)
-
-    back = spark.read.parquet(out)
-    # lossless: same rows, same ids
-    assert back.count() == docs.count()
-    assert (
-        back.select("doc_id").exceptAll(docs.select("doc_id")).count() == 0
-    )
-    # shard column materialized as partition dirs, all 8 present
-    shards = {r["shard"] for r in back.select("shard").distinct().collect()}
-    assert shards == set(range(8))
-    # one data file per shard dir (repartition before partitioned write)
-    import glob
-
-    for k in range(8):
-        files = glob.glob(f"{out}/shard={k}/*.parquet")
-        assert len(files) == 1, f"shard {k} has {len(files)} files"
-    # assignment matches the pure-projection operator (stable layout)
-    assigned = training.shard_assignments(docs, "doc_id", 8).select(
-        "doc_id", "shard"
-    )
-    assert back.select("doc_id", "shard").exceptAll(assigned).count() == 0
-
-
 def test_quota_top_per_source_respects_quota_and_order(spark):
     docs = _docs(spark).select(
         F.col("doc_id").alias("id"), "source", F.col("n_chars").alias("score")

@@ -97,161 +97,9 @@ def run_pipeline(
     return result
 
 
-def incremental_overwrite(
-    spark: SparkSession,
-    df,
-    path: str,
-    partition_cols: list[str],
-) -> None:
-    """Incremental load: rewrite ONLY the partitions present in ``df``.
-
-    The reference reloads every table wholesale on each run
-    (dlt ``write_disposition="replace"``, /root/reference/dlt/load.py:35) —
-    fine at MBs, impossible at 100 TB. Dynamic partition overwrite is the
-    scale path: a daily/divisional increment touches just its own
-    partition directories, readers see other partitions untouched, and
-    the job's write cost is proportional to the increment, not the table.
-    """
-    apply_runtime_confs(spark)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def versioned_publish(df, table_dir: str) -> int:
-    """Atomic publish with retained history on plain parquet: write the
-    new snapshot to ``table_dir/v=<n+1>/``, then flip a one-line
-    ``_LATEST`` pointer file. Readers resolve the pointer and scan one
-    version directory — they NEVER observe a half-written snapshot
-    (the pointer flips only after the parquet job commits), and old
-    versions stay intact for audits/rollback (time-travel-lite without a
-    table format; prune old versions with retention policy out-of-band).
-
-    The pointer write is a single small file — effectively atomic on any
-    filesystem with atomic rename/create semantics. Returns the published
-    version number. Single-writer assumption: concurrent publishers race
-    on max(version)+1 (the loser fails on ``errorifexists`` rather than
-    corrupting — serialize publishes per table in the orchestrator).
-    """
-    import os
-
-    os.makedirs(table_dir, exist_ok=True)
-    existing = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    ]
-    version = max(existing, default=0) + 1
-    df.write.mode("errorifexists").parquet(f"{table_dir}/v={version}")
-    tmp = f"{table_dir}/_LATEST.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, f"{table_dir}/_LATEST")
-    return version
-
-
-def prune_versions(table_dir: str, keep: int = 3) -> list[int]:
-    """Retention (VACUUM-lite) for :func:`versioned_publish` history: drop
-    all but the newest ``keep`` snapshot directories, NEVER the one
-    ``_LATEST`` points at (even if it is older than the cutoff — a reader
-    pinned to the pointer must always resolve). Returns the pruned
-    version numbers.
-
-    Deletion order is safety-first: the pointer is read BEFORE listing,
-    and candidate directories are removed oldest-first, so a crash mid-
-    prune leaves a longer history, never a dangling pointer. Run it from
-    the orchestrator after a publish — same single-writer assumption as
-    the publish itself.
-    """
-    import os
-    import shutil
-
-    try:
-        with open(f"{table_dir}/_LATEST") as f:
-            latest = int(f.read().strip())
-    except FileNotFoundError:
-        latest = None
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    )
-    keep_set = set(versions[-keep:]) if keep > 0 else set()
-    if latest is not None:
-        keep_set.add(latest)
-    pruned = []
-    for v in versions:
-        if v not in keep_set:
-            shutil.rmtree(f"{table_dir}/v={v}")
-            pruned.append(v)
-    return pruned
-
-
-def read_published(spark: SparkSession, table_dir: str, version: int | None = None):
-    """Read a published snapshot: the ``_LATEST`` pointer by default, or a
-    pinned historical ``version`` (reproducibility: a training run records
-    the version it consumed and can re-read exactly that data later)."""
-    if version is None:
-        with open(f"{table_dir}/_LATEST") as f:
-            version = int(f.read().strip())
-    return spark.read.parquet(f"{table_dir}/v={version}")
-
-
-def write_audit_publish(
-    spark: SparkSession,
-    df,
-    table_dir: str,
-    not_null: list[str] | None = None,
-    accepted: dict[str, list[str]] | None = None,
-    unique: list[list[str]] | None = None,
-) -> tuple[int | None, dict[str, int]]:
-    """Write-Audit-Publish: stage the snapshot as the next version
-    directory, AUDIT the staged files (validation.run_checks re-reads
-    what was actually written — not the in-memory frame, so serialization
-    bugs are caught too), and flip the ``_LATEST`` pointer only when every
-    check passes. On violation the pointer stays on the last good
-    version; readers never see bad data, and the staged directory remains
-    on disk for debugging.
-
-    Returns (published_version | None, {check_name: n_violations}).
-    The pattern costs one extra read of the increment — nothing re-reads
-    the historical table — so it scales with the snapshot, not the
-    warehouse."""
-    import os
-
-    from . import validation
-
-    os.makedirs(table_dir, exist_ok=True)
-    existing = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(table_dir)
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit()
-    ]
-    version = max(existing, default=0) + 1
-    staged = f"{table_dir}/v={version}"
-    df.write.mode("errorifexists").parquet(staged)
-    audited = spark.read.parquet(staged)
-    results = {
-        r["check_name"]: r["n_violations"]
-        for r in validation.run_checks(
-            audited, not_null=not_null, accepted=accepted, unique=unique
-        ).collect()
-    }
-    if any(v > 0 for v in results.values()):
-        return None, results
-    tmp = f"{table_dir}/_LATEST.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, f"{table_dir}/_LATEST")
-    return version, results
-
-
 def snapshot_diff(old, new, keys: list[str], compare_cols: list[str]):
-    """Data-diff between two snapshots of the same table (e.g. two
-    ``versioned_publish`` versions): one row per changed key with
+    """Data-diff between two snapshots of the same table (e.g. yesterday's
+    and today's mart): one row per changed key with
     ``change_type`` ∈ {'added','removed','changed'} — the change-data-feed
     a plain-parquet warehouse can compute after the fact. Unchanged keys
     are filtered out BEFORE the result materializes.
@@ -297,8 +145,7 @@ def upsert(base, updates, keys: list[str], version_col: str | None = None):
     One union + one window (single shuffle on the key). With
     ``version_col`` the highest version wins within each side too
     (late-arriving duplicates). This is the compute half of an
-    incremental pipeline — compose with :func:`incremental_overwrite` to
-    write only the affected partitions.
+    incremental pipeline.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F

@@ -150,26 +150,3 @@ def image_slug_url(fighter: Column | str, base: str = "http://localhost:8888/") 
     return F.when(
         c.isNull() | (c == ""), F.lit(None).cast("string")
     ).otherwise(F.concat(F.lit(base), slug, F.lit(".png")))
-
-
-def register_sql_macros(spark) -> None:
-    """Register the reference's Jinja macro surface as SQL TEMPORARY
-    FUNCTIONs (Spark SQL-defined UDFs — declarative bodies, inlined into
-    the plan like any expression, NO Python worker). The dbt macro
-    ``fighter_image_url`` (ufc/macros/fighter_image_url.sql:1-15, SURVEY
-    X13) becomes callable from pure SQL; body mirrors
-    :func:`image_slug_url` exactly (pinned by
-    tests/test_sql_surface.py::test_sql_macro_matches_column_expr)."""
-    spark.sql(
-        """
-CREATE OR REPLACE TEMPORARY FUNCTION fighter_image_url(name STRING)
-RETURNS STRING
-RETURN CASE
-  WHEN name IS NULL OR name = '' THEN CAST(NULL AS STRING)
-  ELSE concat(
-    'http://localhost:8888/',
-    regexp_replace(regexp_replace(lower(name), '[^a-z0-9]+', '_'),
-                   '^_+|_+$', ''),
-    '.png')
-END"""
-    )

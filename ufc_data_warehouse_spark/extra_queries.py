@@ -2374,36 +2374,6 @@ def q_streaming_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFr
     return spark.read.parquet(target).orderBy("user_id")
 
 
-def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 transformWithStateInPandas (typed state handles) running the
-    same per-user totals as the other stateful paths; needs the RocksDB
-    state store provider, restored afterwards.
-
-    NOT registered in EXTRA_QUERIES: the TWS python driver worker requires
-    ``google.protobuf``, absent in this container (no pip allowed), so the
-    path is exercised by a protobuf-gated test instead
-    (tests/test_extra_queries.py::test_transform_with_state_totals)."""
-    from .streaming import events as se
-
-    apply_runtime_confs(spark)
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(
-        conf_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = se.read_events_stream(spark, sf_dir)
-        return se.run_available_now(
-            se.stateful_totals_tws(stream), output_mode="update"
-        ).orderBy("user_id")
-    finally:
-        if old is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, old)
-
-
 def q_streaming_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming import events as se
 

@@ -711,25 +711,6 @@ def shingle_doc_frequency(shingles: DataFrame) -> DataFrame:
     return shingles.groupBy("shingle").agg(F.count("*").alias("doc_freq"))
 
 
-def drop_frequent_shingles(
-    shingles: DataFrame, max_doc_freq: int
-) -> DataFrame:
-    """Stop-shingle removal: drop shingles appearing in more than
-    ``max_doc_freq`` documents before any inverted-index pair join.
-
-    The scale lever for every shingle-keyed join (near-dup verify,
-    contamination, winnow matching): shingle keys are Zipf-distributed,
-    and one corpus-wide shingle ("in the") alone contributes
-    O(doc_freq²) candidate pairs while carrying no dedup signal. Cutting
-    the head bounds the per-key join fan-out; the doc-frequency frame is
-    tiny relative to the corpus and broadcasts.
-    """
-    keep = shingle_doc_frequency(shingles).filter(
-        F.col("doc_freq") <= max_doc_freq
-    )
-    return shingles.join(F.broadcast(keep.select("shingle")), "shingle", "left_semi")
-
-
 def cross_corpus_jaccard(
     new_shingles: DataFrame,
     old_shingles: DataFrame,

@@ -1,17 +1,17 @@
 """Arrow-batched grouped-map operators: ``groupBy().applyInPandas`` and
-``cogroup().applyInPandas``.
+``groupBy().applyInArrow``.
 
 These complete the Python-UDF API surface (SURVEY §2.10 — the reference
 has no in-database UDFs at all; `operators/udafs.py` covers grouped-AGG
 pandas UDFs, `operators/multimodal.py` covers scalar/iterator pandas
-UDFs, this module covers the grouped-MAP and COGROUPED-MAP forms).
+UDFs, this module covers the grouped-MAP form).
 
-Both operators here exist as built-in-expressible queries too (window
-min/max; union-merge as-of) — they are implemented through the pandas
-API deliberately, as the pattern template for logic that genuinely needs
-per-group imperative code (model scoring, merge_asof with tolerance,
-per-group curve fitting). The semantics are pinned to engine-neutral
-definitions so a plain-SQL oracle can verify them bit-for-bit.
+``minmax_normalize`` exists as a built-in-expressible query too (window
+min/max) — it is implemented through the pandas API deliberately, as the
+pattern template for logic that genuinely needs per-group imperative code
+(model scoring, per-group curve fitting). The semantics are pinned to
+engine-neutral definitions so a plain-SQL oracle can verify them
+bit-for-bit.
 
 Scale posture: ``applyInPandas`` is ONE hash exchange on the group key;
 each group must fit in one executor's memory as a pandas/Arrow frame —
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["minmax_normalize", "cogroup_asof", "group_id_stats_arrow"]
+__all__ = ["minmax_normalize", "group_id_stats_arrow"]
 
 
 def minmax_normalize(df: DataFrame, key: str, value: str) -> DataFrame:
@@ -67,100 +67,6 @@ def minmax_normalize(df: DataFrame, key: str, value: str) -> DataFrame:
         df.select("event_id", key, value)
         .groupBy(key)
         .applyInPandas(normalize, schema=out_schema)
-    )
-
-
-def cogroup_asof(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str = "ts",
-) -> DataFrame:
-    """As-of join via ``cogroup().applyInPandas`` + ``pd.merge_asof``.
-
-    For every left row, attach the latest right row of the same ``key``
-    with ``right.ts < left.ts`` (strictly before — no exact matches),
-    or nulls when no such row exists. This is the cogrouped-map
-    formulation of the as-of join (`extra_queries.q_asof_orders_before_
-    events` is the pure-Column union-merge formulation of the same
-    operator; at 100 TB prefer that one — it is whole-stage codegen and
-    never materializes a group in Python).
-
-    One hash exchange per side on ``key``; each (left-group,
-    right-group) pair arrives as two pandas frames, merged with the
-    vectorized ``merge_asof`` (binary search per row, not a pair join).
-
-    Returns (key, left_event_id, left_ts, right_event_id, right_value).
-    """
-    import pandas as pd
-
-    out_schema = (
-        f"{key} long, left_event_id long, left_ts timestamp, "
-        "right_event_id long, right_value double"
-    )
-
-    def merge(lg: "pd.DataFrame", rg: "pd.DataFrame") -> "pd.DataFrame":
-        if lg.empty:
-            return pd.DataFrame(
-                columns=[
-                    key,
-                    "left_event_id",
-                    "left_ts",
-                    "right_event_id",
-                    "right_value",
-                ]
-            )
-        lg = lg.sort_values(ts, kind="mergesort")
-        if rg.empty:
-            # a key with left rows but no right rows: the cogroup hands an
-            # empty right frame — every left row null-completes
-            merged = lg.copy()
-            merged["right_event_id"] = pd.Series(dtype="float64")
-            merged["right_value"] = pd.Series(dtype="float64")
-        else:
-            rg = rg.rename(columns={"r_ts": ts}).sort_values(
-                ts, kind="mergesort"
-            )
-            merged = pd.merge_asof(
-                lg,
-                rg[[ts, "right_event_id", "right_value"]],
-                on=ts,
-                direction="backward",
-                allow_exact_matches=False,
-            )
-        return pd.DataFrame(
-            {
-                key: merged[key],
-                "left_event_id": merged["event_id"],
-                "left_ts": merged[ts],
-                "right_event_id": merged["right_event_id"].astype("Int64"),
-                "right_value": merged["right_value"],
-            }
-        )
-
-    # Pin an explicit keyed repartition on both sides: the shuffled data
-    # is small, so AQE would coalesce the exchange to ONE partition and
-    # serialize every group through a single Python worker (observed 8s
-    # for 1500 groups; per-group UDF invocation cost is milliseconds and
-    # parallelism is the only lever). An explicit numPartitions is
-    # exempt from AQE coalescing, restoring full-width fan-out.
-    spread = left.sparkSession.sparkContext.defaultParallelism
-    lsel = left.select(key, "event_id", ts).repartition(spread, key)
-    # Alias-rename EVERY right column: when left and right derive from the
-    # same base plan (self-cogroup), their attributes share expression IDs
-    # and Catalyst's column pruning — triggered by a downstream projection
-    # like count() — deduplicates the references and silently drops the
-    # right side's shared columns from the Arrow batch (observed: the
-    # right pdf arrived as [key, value] only). Fresh aliases get fresh
-    # expression IDs, making the right side's columns un-prunable.
-    rsel = right.select(
-        F.col(key).alias(key),
-        F.col("event_id").alias("right_event_id"),
-        F.col(ts).alias("r_ts"),
-        F.col("value").alias("right_value"),
-    ).repartition(spread, key)
-    return lsel.groupBy(key).cogroup(rsel.groupBy(key)).applyInPandas(
-        merge, schema=out_schema
     )
 
 

@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Treats media as opaque ``binary`` payloads + typed metadata, with
-decode/feature-extract/resize/frame-sample as Arrow-batched Pandas UDFs
+decode/feature-extract/frame-sample as Arrow-batched Pandas UDFs
 over ``mapInPandas`` — the real 100 TB shape: payload bytes never leave
 the executor, Python sees them as Arrow buffers (zero-copy), and the
 stages are embarrassingly parallel per partition.
@@ -1264,15 +1264,17 @@ def register_codecs_by_value(module: str | None = None) -> None:
     function bodies inside the task instead of an import-by-name that
     wheel-less executors cannot resolve (r6 ADVICE 2). Idempotent; a
     cloudpickle without the registry API degrades to the documented
-    "ship the wheel" fallback of contract point 6."""
-    try:
-        import sys as _sys
+    "ship the wheel" fallback of contract point 6. A ``module`` that is not
+    imported raises ``KeyError``."""
+    import sys as _sys
 
+    try:
         from pyspark import cloudpickle as _cp
 
-        _cp.register_pickle_by_value(_sys.modules[module or __name__])
-    except Exception:  # noqa: BLE001
-        pass
+        register = _cp.register_pickle_by_value
+    except (ImportError, AttributeError):
+        return
+    register(_sys.modules[module or __name__])
 
 
 def check_decode_conformance(decode_fn, samples=None) -> bool:
@@ -1409,28 +1411,6 @@ def sample_frames(decoded: DataFrame, every_n: int = 30) -> DataFrame:
     )
 
 
-def resize_plan(
-    decoded: DataFrame, max_side: int = 224
-) -> DataFrame:
-    """Resize planning for image rows: target dimensions preserving aspect
-    ratio, capped at ``max_side`` — pure integer Column math (the actual
-    pixel resample belongs in the codec UDF; this computes the schedule a
-    decode+resize fused kernel consumes)."""
-    scale_num = F.lit(max_side)
-    longest = F.greatest("width", "height")
-    needs = longest > max_side
-    new_w = F.when(needs, (F.col("width") * scale_num / longest).cast("int")).otherwise(
-        F.col("width")
-    )
-    new_h = F.when(needs, (F.col("height") * scale_num / longest).cast("int")).otherwise(
-        F.col("height")
-    )
-    return decoded.filter(F.col("kind") == "image").select(
-        "media_id", "width", "height",
-        new_w.alias("target_width"), new_h.alias("target_height"),
-    )
-
-
 def media_metadata(media: DataFrame) -> DataFrame:
     """JVM-side metadata extraction (no decode): byte length + md5 digest.
     Oracle-checkable — md5 over the payload bytes matches any engine's
@@ -1440,39 +1420,6 @@ def media_metadata(media: DataFrame) -> DataFrame:
         "kind",
         F.col("n_bytes"),
         F.md5("payload").alias("digest"),
-    )
-
-
-def attach_asset_metadata(assets: DataFrame) -> DataFrame:
-    """Bridge a ``binaryFile`` ingest (sources/ingest.py::
-    read_binary_assets: path, modification_time, length, content) into the
-    MEDIA_SCHEMA contract: sniff the container format from magic bytes —
-    pure Column logic (hex prefix compare), no decode, no Python — and
-    emit (media_id, kind, payload, n_bytes, source).
-
-    ``media_id`` is a deterministic 63-bit hash of the path (xxhash64
-    masked non-negative) so re-ingesting the same asset tree yields the
-    same ids. Unknown formats pass through as kind='binary' — a curation
-    filter decides their fate downstream, the ingest never drops bytes."""
-    prefix = F.upper(F.hex(F.substring(F.col("content"), 1, 4)))
-    kind = (
-        F.when(prefix.startswith("89504E47"), "image")      # PNG
-        .when(prefix.startswith("FFD8FF"), "image")         # JPEG
-        .when(prefix.startswith("47494638"), "image")       # GIF
-        .when(prefix.startswith("52494646"), "audio")       # RIFF/WAV
-        .when(prefix.startswith("494433"), "audio")         # ID3/MP3
-        .when(
-            F.upper(F.hex(F.substring(F.col("content"), 5, 4))) == "66747970",
-            "video",                                        # ....ftyp MP4
-        )
-        .otherwise("binary")
-    )
-    return assets.select(
-        (F.xxhash64("path").bitwiseAND(F.lit((1 << 63) - 1))).alias("media_id"),
-        kind.alias("kind"),
-        F.col("content").alias("payload"),
-        F.col("length").alias("n_bytes"),
-        F.col("path").alias("source"),
     )
 
 

@@ -18,9 +18,6 @@ AQE alone doesn't give you:
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -131,103 +128,14 @@ def salted_sum_count(
     return partial.groupBy(*key_cols).agg(*final_aggs)
 
 
-def hll_partial_sketches(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    bucket_col: str,
-    lg_k: int = 12,
-) -> DataFrame:
-    """Pre-aggregated mergeable distinct-count sketches (Apache DataSketches
-    HLL via `hll_sketch_agg`), one sketch per (group, bucket).
-
-    The incremental 100 TB pattern for COUNT(DISTINCT): an exact distinct
-    over a year of events re-shuffles the raw rows every query; instead
-    each daily/hourly bucket stores a KB-sized sketch once, and any query
-    window is answered by unioning sketches (`hll_merged_estimate`) —
-    mergeable partial aggregation, no raw-data re-scan, bounded memory."""
-    return df.groupBy(*group_cols, bucket_col).agg(
-        F.expr(f"hll_sketch_agg({value_col}, {lg_k})").alias("sketch")
-    )
-
-
-def hll_merged_estimate(sketches: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Union per-bucket sketches and estimate the distinct count per group."""
-    return sketches.groupBy(*group_cols).agg(
-        F.expr("hll_sketch_estimate(hll_union_agg(sketch, true))")
-        .cast("long")
-        .alias("approx_distinct")
-    )
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    num_files: int,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Cluster-on-write: range-partition by the cluster key, sort within
-    each output file, write parquet.
-
-    At 100 TB this is what makes selective reads cheap WITHOUT a partition
-    column: parquet stores per-row-group min/max for the sort columns, and
-    because each file covers a narrow, non-overlapping key range, a
-    point/range predicate on the cluster key prunes almost every row group
-    at scan time. (The single-dimension version of Z-ordering — right for
-    keys that are filtered as prefixes, e.g. (event_type, day).)"""
-    writer = (
-        df.repartitionByRange(num_files, *cluster_cols)
-        .sortWithinPartitions(*cluster_cols)
-        .write.mode("overwrite")
-    )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a parquet directory into ~target-sized files. Returns the
-    new file count.
-
-    The small-files problem is the chronic operational failure mode of a
-    long-lived warehouse: thousands of KB-sized files from incremental
-    appends turn every scan into a metadata storm (one task + one open per
-    file). Periodic compaction restores scan throughput. `coalesce` (not
-    `repartition`) merges partitions without a shuffle — correct here
-    because output order within a compacted table is immaterial."""
-    import math
-
-    src = Path(path)
-    total = sum(f.stat().st_size for f in src.glob("*.parquet"))
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = f"{path}__compact_tmp"
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    # atomic-ish swap: remove originals, move compacted files in
-    for f in list(src.glob("*.parquet")):
-        f.unlink()
-    moved = 0
-    for f in Path(tmp).glob("*.parquet"):
-        f.rename(src / f.name)
-        moved += 1
-    shutil.rmtree(tmp, ignore_errors=True)
-    return moved
-
-
 def z_value(col_a: Column, col_b: Column, bits: int = 16) -> Column:
     """Morton/Z-order value: interleave the low `bits` of two non-negative
     int columns (a in even positions, b in odd). Pure Column bit-math —
     JVM-side, codegen-friendly, no UDF.
 
     Sorting files by z_value gives BOTH dimensions row-group locality, so
-    parquet min/max stats prune selective filters on either column — the
-    multi-dimension upgrade of `write_clustered` for tables filtered by
-    two independent keys (e.g. (customer, date))."""
+    parquet min/max stats prune selective filters on either column, for
+    tables filtered by two independent keys (e.g. (customer, date))."""
     a = col_a.cast("long")
     b = col_b.cast("long")
     z = F.lit(0).cast("long")
@@ -238,84 +146,6 @@ def z_value(col_a: Column, col_b: Column, bits: int = 16) -> Column:
             F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         )
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    num_files: int,
-    bits: int = 16,
-) -> None:
-    """Cluster-on-write by the Z-value of two columns (see z_value)."""
-    (
-        df.withColumn("_z", z_value(F.col(col_a), F.col(col_b), bits))
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def _cm_slot(value: Column, row: Column, width: int) -> Column:
-    """Slot index for one count-min hash row: xxhash64 seeded by the row
-    index (an extra hashed column), reduced mod width."""
-    return F.pmod(F.xxhash64(value, row), F.lit(width))
-
-
-def cm_partial_sketches(
-    df: DataFrame,
-    value_col: str,
-    bucket_col: str,
-    depth: int = 4,
-    width: int = 2048,
-) -> DataFrame:
-    """Count-min sketch partials: (bucket, row, slot, cnt) — the mergeable
-    heavy-hitter/frequency sketch, the companion of the HLL rollups.
-
-    One scan: each value explodes into `depth` (row, slot) cells and the
-    groupBy partial-aggregates map-side, so the exchange carries at most
-    |buckets|·depth·width counter rows — KBs per bucket, independent of
-    input size. Incremental 100 TB pattern: store one sketch per
-    day/partition; any window's term-frequency query = sum cells across
-    buckets, then min across rows (`cm_estimate`) — no raw re-scan.
-    Guarantee: estimate ≥ true count; overestimate ≤ εN with
-    ε = e/width at probability 1-(1/e)^depth."""
-    rows = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("row")
-    cells = df.select(F.col(value_col).alias("_v"), F.col(bucket_col).alias("bucket"), rows)
-    return (
-        cells.withColumn("slot", _cm_slot(F.col("_v"), F.col("row"), width))
-        .groupBy("bucket", "row", "slot")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-
-def cm_merge(sketches: DataFrame) -> DataFrame:
-    """Merge per-bucket sketches into one: sum counters cell-wise."""
-    return sketches.groupBy("row", "slot").agg(F.sum("cnt").alias("cnt"))
-
-
-def cm_estimate(
-    merged: DataFrame,
-    queries: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 2048,
-) -> DataFrame:
-    """Point-estimate the frequency of each value in `queries`:
-    (value, est_count) with est = min over hash rows of the cell counter.
-    The query side is tiny (terms of interest) and broadcast; a missing
-    cell means a true count of 0."""
-    rows = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("row")
-    q = queries.select(F.col(value_col).alias("value"), rows).withColumn(
-        "slot", _cm_slot(F.col("value"), F.col("row"), width)
-    )
-    joined = merged.join(F.broadcast(q), ["row", "slot"], "right")
-    return joined.groupBy("value").agg(
-        F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est_count")
-    )
 
 
 def interval_bucket_join(
@@ -366,52 +196,11 @@ def interval_bucket_join(
     )
 
 
-def analyze_tables(
-    spark: SparkSession, *tables: str, columns: bool = False
-) -> None:
-    """Populate catalog statistics (``ANALYZE TABLE``) so the cost-based
-    optimizer can plan from data, not file sizes. With ``columns=True``
-    column-level stats (NDV, min/max, null counts) are collected too —
-    they are what lets CBO estimate FILTER selectivity, which in turn
-    flips join strategies: a post-filter build side CBO knows is small
-    gets broadcast; without stats Spark must assume the filter keeps
-    everything and falls back to a sort-merge join. At 100 TB this is the
-    difference between shipping KBs and shuffling the fact table —
-    re-run after large loads (stats are snapshot, not incremental)."""
-    for t in tables:
-        suffix = " FOR ALL COLUMNS" if columns else ""
-        spark.sql(f"ANALYZE TABLE {t} COMPUTE STATISTICS{suffix}")
-
-
-def hinted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    how: str = "inner",
-    strategy: str = "shuffle_hash",
-) -> DataFrame:
-    """Join with an explicit strategy hint on the RIGHT side:
-    ``broadcast`` | ``merge`` | ``shuffle_hash`` | ``shuffle_replicate_nl``.
-
-    When to override Catalyst (rarely — measure first):
-    - ``shuffle_hash``: big⋈medium where the build side fits in executor
-      memory per-partition but exceeds the broadcast threshold — skips
-      BOTH sort passes of sort-merge (no spillable sort of the 100 TB
-      probe side), the classic win for fact⋈mid-sized-dim;
-    - ``merge``: force sort-merge when the build side would OOM a hash
-      table (extreme per-partition skew);
-    - ``broadcast``: known-small side whose size ESTIMATE is inflated
-      (complex subquery output) — prefer fixing stats via
-      ``analyze_tables`` first.
-    """
-    return left.join(right.hint(strategy), on, how)
-
-
 def bitmap_distinct_rollup(
     df: DataFrame, group_cols: list[str], id_col: str
 ) -> DataFrame:
     """EXACT mergeable distinct counts via Spark's bitmap aggregates —
-    the precise counterpart of the HLL sketch rollup above: each integer
+    the precise counterpart of an HLL sketch rollup: each integer
     id maps to (bucket, bit position); per-(group, bucket) bitmaps are
     built with ``bitmap_construct_agg`` and distinct = Σ ``bitmap_count``.
 
@@ -991,53 +780,6 @@ def salted_replicate_join(
         F.explode(F.array(*[F.lit(i) for i in range(n_salts)])),
     )
     return salted_fact.join(salted_dim, [on, "_salt"], how).drop("_salt")
-
-
-class RollupRouter:
-    """Aggregate-aware materialized-view routing: serve a query whose
-    grouping dims are a SUBSET of a registered rollup's dims from the
-    (tiny) rollup instead of the fact table — the aggregate-navigator
-    every serving layer (Druid, BigQuery MVs, Snowflake query rewrite)
-    applies, done explicitly since Spark has no transparent MV rewrite.
-
-    Register rollups with ADDITIVE measures only (sum/count — re-
-    aggregating partial sums is exact; avg must be stored as sum+count
-    and divided at serve time; min/max are fine too but not under
-    deletes). ``route`` picks the registered rollup with the FEWEST
-    dims that still covers the query (cheapest valid source) and
-    re-aggregates it; if none covers, it falls back to the supplied
-    fact-path builder — the caller always gets a correct frame, routing
-    only changes the scan size (rollup rows ≪ fact rows at 100 TB)."""
-
-    def __init__(self) -> None:
-        self._rollups: list[tuple[list[str], dict[str, str], DataFrame]] = []
-
-    def register(
-        self, df: DataFrame, dims: list[str], measures: dict[str, str]
-    ) -> None:
-        """``measures`` maps column → merge fn ('sum' | 'min' | 'max')."""
-        for fn in measures.values():
-            if fn not in ("sum", "min", "max"):
-                raise ValueError(f"non-mergeable measure fn: {fn}")
-        self._rollups.append((list(dims), dict(measures), df))
-
-    def route(
-        self,
-        query_dims: list[str],
-        measures: list[str],
-        fact_path: "Callable[[], DataFrame]",
-    ) -> DataFrame:
-        candidates = [
-            (dims, mfns, df)
-            for dims, mfns, df in self._rollups
-            if set(query_dims) <= set(dims)
-            and set(measures) <= set(mfns)
-        ]
-        if not candidates:
-            return fact_path()
-        dims, mfns, df = min(candidates, key=lambda c: len(c[0]))
-        aggs = [getattr(F, mfns[m])(m).alias(m) for m in measures]
-        return df.groupBy(*query_dims).agg(*aggs)
 
 
 def two_phase_topk(

@@ -290,37 +290,6 @@ def redact_pii(
     return df.select(*out)
 
 
-def register_sql_udtfs(spark) -> None:
-    """SQL-callable table functions (Spark 4 Python UDTF).
-
-    ``chunk_udtf(text, chunk_chars, overlap)`` exposes the chunker to pure
-    SQL users via LATERAL join. It intentionally mirrors
-    :func:`chunk_documents` exactly (same stride/partial-chunk rules, same
-    normalization applied by the caller) — the Column version stays the
-    production path (JVM, no Python workers); the UDTF is the
-    escape-hatch surface for SQL-first tooling, and the test suite pins
-    the two to identical output.
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx int, chunk_text string, chunk_chars int")
-    class ChunkUdtf:
-        def eval(self, text: str, chunk_chars: int, overlap: int):
-            if text is None or len(text) == 0:
-                return
-            stride = chunk_chars - overlap
-            i, idx = 0, 0
-            while i < len(text):
-                piece = text[i : i + chunk_chars]
-                yield idx, piece, len(piece)
-                if i + chunk_chars >= len(text):
-                    break
-                i += stride
-                idx += 1
-
-    spark.udtf.register("chunk_udtf", ChunkUdtf)
-
-
 def tfidf_top_terms(
     df: DataFrame,
     text_col: str = "text",

@@ -38,7 +38,6 @@ __all__ = [
     "mixture_sample",
     "quota_top_per_source",
     "shard_assignments",
-    "write_shards",
 ]
 
 
@@ -275,27 +274,4 @@ def shard_assignments(
     bucket = F.conv(F.substring(_seeded_hash(F.col(id_col), seed), 1, 8), 16, 10)
     return df.withColumn(
         "shard", (bucket.cast("bigint") % n_shards).cast("int")
-    )
-
-
-def write_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    n_shards: int,
-    seed: int = 42,
-) -> None:
-    """Export as ``shard=K/`` parquet directories, rows ordered by id
-    within each shard. ``repartition(n, shard)`` puts each shard's rows in
-    one task before the partitioned write, so each shard directory gets
-    ONE file (not one-per-upstream-task: a 1000-executor job would
-    otherwise emit up to 1000 tiny files per shard).
-    """
-    out = shard_assignments(df, id_col, n_shards, seed)
-    (
-        out.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", id_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
     )

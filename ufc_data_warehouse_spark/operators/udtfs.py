@@ -1,13 +1,11 @@
 """SQL UDTFs over partitioned TABLE arguments (Spark 4).
 
-`text.register_sql_udtfs` covers the scalar-argument UDTF (LATERAL
-join); this module covers the TABLE-argument form with PARTITION BY /
-ORDER BY — the SQL-surface twin of ``applyInPandas``: the engine
-shuffles on the partition keys, orders rows within each partition, and
-feeds each group through its own UDTF instance (``eval`` per row,
-``terminate`` at group end). That makes arbitrary per-entity sequential
-logic — sessionization, pattern detection, state machines — callable
-from PURE SQL, no DataFrame code:
+The TABLE-argument form with PARTITION BY / ORDER BY is the SQL-surface
+twin of ``applyInPandas``: the engine shuffles on the partition keys,
+orders rows within each partition, and feeds each group through its own
+UDTF instance (``eval`` per row, ``terminate`` at group end). That makes
+arbitrary per-entity sequential logic — sessionization, pattern
+detection, state machines — callable from PURE SQL, no DataFrame code:
 
     SELECT * FROM session_count_udtf(
       TABLE(SELECT user_id, ts FROM events)

@@ -201,20 +201,5 @@ def write_jdbc(
     writer.write.mode(mode).options(**opts).jdbc(url, table)
 
 
-def jdbc_roundtrip(
-    spark,
-    df: DataFrame,
-    url: str,
-    table: str,
-    options: dict[str, str] | None = None,
-) -> DataFrame:
-    """Write ``df`` to ``table`` over JDBC and read it back — the
-    load-verification shape (dlt's post-load row-count check,
-    reference dlt/load.py)."""
-    write_jdbc(df, url, table, options=options, num_partitions=1)
-    reader = spark.read.options(**(options or {}))
-    return reader.jdbc(url, table)
-
-
 REGISTRY = Registry()
 model = REGISTRY.model

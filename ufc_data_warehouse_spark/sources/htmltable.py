@@ -28,7 +28,6 @@ from html.parser import HTMLParser
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
 )
 from pyspark.sql.types import StringType, StructField, StructType
@@ -140,69 +139,3 @@ class HtmlTableDataSource(DataSource):
 
 def register(spark) -> None:
     spark.dataSource.register(HtmlTableDataSource)
-
-
-class _Range(InputPartition):
-    def __init__(self, lo: int, hi: int) -> None:
-        self.lo, self.hi = lo, hi
-
-
-class SeqStreamReader(DataSourceStreamReader):
-    """Offset-tracked deterministic sequence stream: each micro-batch
-    advances the offset by ``rows_per_batch``; rows are (id, payload).
-
-    The offset contract is what makes a custom source exactly-once
-    replayable: ``latestOffset`` advances, ``partitions(start, end)``
-    deterministically re-derives the SAME rows for any (start, end) pair,
-    so a failed batch replays identically from the checkpoint — the same
-    guarantee Spark's built-in file/Kafka sources give, demonstrated in
-    ~30 lines of Python.
-    """
-
-    def __init__(self, options: dict) -> None:
-        self._rows_per_batch = int(options.get("rowsperbatch", 100))
-        self._max_rows = int(options.get("maxrows", 1000))
-        self._tasks = int(options.get("tasks", 4))
-
-    def initialOffset(self) -> dict:
-        return {"offset": 0}
-
-    def latestOffset(self) -> dict:
-        return {"offset": self._max_rows}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start["offset"], end["offset"]
-        step = max(1, (hi - lo + self._tasks - 1) // self._tasks)
-        return [
-            _Range(i, min(i + step, hi)) for i in range(lo, hi, step)
-        ]
-
-    def read(self, partition: _Range):
-        for i in range(partition.lo, partition.hi):
-            yield (i, f"row-{i}")
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class SeqStreamDataSource(DataSource):
-    """``spark.readStream.format("seqstream")`` — deterministic integer
-    stream for testing streaming topologies without Kafka."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "seqstream"
-
-    def schema(self) -> StructType:
-        from pyspark.sql.types import LongType
-
-        return StructType(
-            [StructField("id", LongType()), StructField("payload", StringType())]
-        )
-
-    def streamReader(self, schema: StructType) -> SeqStreamReader:
-        return SeqStreamReader(dict(self.options))
-
-
-def register_seqstream(spark) -> None:
-    spark.dataSource.register(SeqStreamDataSource)

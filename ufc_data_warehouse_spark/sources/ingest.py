@@ -206,67 +206,6 @@ def write_jsonl(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema=None,
-    glob_filter: str | None = "*.xml",
-) -> DataFrame:
-    """XML source — native in Spark 4 (``spark.read.format("xml")``), no
-    external package. ``row_tag`` names the repeated element that becomes
-    one row; headers are snake_case-normalized like every other raw source.
-
-    The reference's only non-CSV source is an HTML table scraper
-    (/root/reference/scripts/vacancy_and_strips_scraper/extract_vacancies.py:30-174);
-    XML is the same shape of semi-structured feed (sitemaps, API exports,
-    Wikipedia dumps) handled engine-side. Scale: files split per-row-tag
-    block; pass an explicit ``schema`` at scale — inference costs an extra
-    pass over every file. ``glob_filter`` (default ``*.xml``) prunes
-    non-XML files at listing time — a stray binary in the directory must
-    not fail the scan."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if glob_filter is not None:
-        reader = reader.option("pathGlobFilter", glob_filter)
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.load(path)
-    return df.select(
-        *[F.col(c).alias(normalize_identifier(c)) for c in df.columns]
-    )
-
-
-def write_xml(df: DataFrame, path: str, row_tag: str = "row") -> None:
-    """Full-replace XML sink (interchange export)."""
-    df.write.mode("overwrite").format("xml").option("rowTag", row_tag).save(path)
-
-
-def read_binary_assets(
-    spark: SparkSession, path: str, glob_filter: str | None = None
-) -> DataFrame:
-    """Opaque-asset source for multimodal pipelines: each file becomes one
-    row ``(path, modification_time, length, content: binary)`` via Spark's
-    ``binaryFile`` format. This is the ingest half of the multimodal column
-    contract (operators/multimodal.py) — image/audio/video bytes ride a
-    binary column with typed metadata alongside.
-
-    Scale: reading is parallel across files (one file = one task unit;
-    small files coalesce by maxPartitionBytes). Each row must fit in a
-    task — binaryFile is for MB-scale assets, not multi-GB video; chunk
-    those upstream. Use ``pathGlobFilter`` to prune non-asset files at the
-    listing step, before any bytes are read."""
-    reader = spark.read.format("binaryFile")
-    if glob_filter is not None:
-        reader = reader.option("pathGlobFilter", glob_filter)
-    df = reader.load(path)
-    return df.select(
-        F.col("path"),
-        F.col("modificationTime").alias("modification_time"),
-        F.col("length"),
-        F.col("content"),
-    )
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC source — columnar like parquet, with predicate pushdown and
     column pruning at the stripe level (check ``.explain`` for
@@ -277,16 +216,3 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 def write_orc(df: DataFrame, path: str) -> None:
     """Full-replace ORC sink for Hive/Trino-ecosystem interchange."""
     df.write.mode("overwrite").orc(path)
-
-
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution read: merge the schemas of every parquet file
-    under ``path`` (``mergeSchema``) — files written before a column was
-    added read as NULL for it, so incremental landing zones can evolve
-    without rewriting history.
-
-    Scale note: merging reads EVERY file's footer at planning time; for a
-    stable production table prefer an explicit schema (one source of
-    truth, zero planning I/O) and reserve mergeSchema for exploration or
-    one-time migration reads."""
-    return spark.read.option("mergeSchema", True).parquet(path)

@@ -21,8 +21,8 @@ commits):
   partial output visible.
 
 Readers that list only committed files (or gate on ``_SUCCESS``) see an
-all-or-nothing result. Scale honesty: one file per task; pair with
-`operators/scale.py::compact_small_files` if tasks are many and small.
+all-or-nothing result. Scale honesty: one file per task; coalesce the
+input first if tasks are many and small.
 """
 
 from __future__ import annotations

@@ -332,7 +332,7 @@ def run_foreach_batch_upsert(
     changed keys, which upsert-by-key applies safely any number of times.
     Scale: the swap rewrites the target, fine for compact aggregate marts;
     a 100 TB fact sink would partition the target and swap only affected
-    partitions (etl.incremental_overwrite) or use a MERGE-capable format.
+    partitions (dynamic partition overwrite) or use a MERGE-capable format.
     """
     import shutil
 
@@ -373,73 +373,6 @@ def user_value_totals(stream: DataFrame) -> DataFrame:
     return deduped.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
         F.sum(F.floor(F.col("value") * 100).cast("long")).alias("value_cents"),
-    )
-
-
-def stateful_totals_tws(stream: DataFrame) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-state API (successor to applyInPandasWithState:
-    typed state handles, timers, TTL, multiple state variables per key).
-
-    Semantics mirror :func:`user_value_totals` so the same batch oracle
-    validates both. State is one ValueState tuple per user — O(users),
-    partitioned by the grouping key like any keyed shuffle. Requires the
-    RocksDB state store provider (set by the caller); RocksDB is also the
-    right provider at 100 TB state — changelog checkpointing + native
-    memory instead of JVM-heap HDFSBackedStateStore.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("value_cents", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("cents", LongType())]
-    )
-
-    class TotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as _np
-            import pandas as _pd
-
-            n, cents = (
-                tuple(self._totals.get()) if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                if not len(pdf):
-                    continue
-                n += len(pdf)
-                # per-row floor → integer sum: accumulation-order-free
-                cents += int(
-                    _np.floor(pdf["value"].to_numpy() * 100).astype("int64").sum()
-                )
-            self._totals.update((n, cents))
-            yield _pd.DataFrame(
-                [{"user_id": key[0], "n_events": n, "value_cents": cents}]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=TotalsProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
     )
 
 
@@ -548,32 +481,6 @@ def read_events_stream_with_flush(
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def resumable_ingest_run(
-    spark: SparkSession, src_dir: str, sink_dir: str, ckpt_dir: str, schema
-) -> None:
-    """One AvailableNow run of a checkpointed file→parquet ingest.
-
-    Restart-resume semantics live entirely in the checkpoint: the file
-    source records which input files each committed micro-batch consumed,
-    so re-running with the SAME checkpoint processes only files that
-    appeared since the last run — exactly-once across process restarts,
-    the property that lets a 100 TB/day landing-zone ingest crash or be
-    redeployed mid-stream and simply be started again. Tested by
-    ``test_restart_resume_ingests_only_new_files``."""
-    q = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .load(src_dir)
-        .writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def windowed_distinct_users(stream: DataFrame) -> DataFrame:
     """EXACT distinct users per 15-minute window by CHAINING two stateful
     operators: watermarked dropDuplicates on (window, user_id) feeds a
@@ -594,56 +501,6 @@ def windowed_distinct_users(stream: DataFrame) -> DataFrame:
         .agg(F.count("*").alias("n_distinct_users"))
         .select(F.col("w.start").alias("window_start"), "n_distinct_users")
     )
-
-
-class ProgressCapture:
-    """Python ``StreamingQueryListener`` capturing per-batch progress —
-    the observability hook a production stream exports to metrics: rows
-    per batch, batch ids, and terminal state land in driver-side lists.
-
-    Use as a context manager so the listener is ALWAYS detached (a leaked
-    listener keeps firing for every later stream in the session)::
-
-        with ProgressCapture(spark) as cap:
-            run_available_now(stream_df)
-        assert sum(cap.rows_per_batch) == expected_rows
-    """
-
-    def __init__(self, spark) -> None:
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        capture = self
-
-        class _Listener(StreamingQueryListener):
-            def onQueryStarted(self, event) -> None:
-                capture.started.append(event.id)
-
-            def onQueryProgress(self, event) -> None:
-                p = event.progress
-                capture.rows_per_batch.append(int(p.numInputRows))
-                capture.batch_ids.append(int(p.batchId))
-
-            def onQueryIdle(self, event) -> None:  # pragma: no cover
-                pass
-
-            def onQueryTerminated(self, event) -> None:
-                capture.terminated.append(
-                    (event.id, event.exception is None)
-                )
-
-        self._spark = spark
-        self._listener = _Listener()
-        self.started: list = []
-        self.rows_per_batch: list[int] = []
-        self.batch_ids: list[int] = []
-        self.terminated: list = []
-
-    def __enter__(self) -> "ProgressCapture":
-        self._spark.streams.addListener(self._listener)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._spark.streams.removeListener(self._listener)
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
