@@ -344,48 +344,48 @@ def test_gap_audit_stitches_bucket_boundaries(spark):
 
 
 def test_graph_reliable_checkpoint_flag(spark, tmp_path):
-    """r8: the graph family's lineage truncation honors
-    ``spark.ufc.graph.reliableCheckpoint`` — with the flag on (and a
-    checkpoint dir set) every loop runs on directory-backed reliable
-    checkpoints and produces BIT-identical results to the default
-    localCheckpoint path; checkpoint files actually land in the dir."""
+    """Every iterative loop truncates lineage through ``cache.truncate``
+    and so honors ``spark.ufc.graph.reliableCheckpoint``: the graph loops,
+    ``dedup.duplicate_clusters`` and ``simsearch.kcenter_coreset``. With
+    the flag on, each call writes directory-backed reliable checkpoints
+    into its own checkpoint dir and produces BIT-identical results to the
+    default localCheckpoint path."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from ufc_data_warehouse_spark.operators import graph
+    from ufc_data_warehouse_spark import cache
+    from ufc_data_warehouse_spark.operators import dedup, graph, simsearch
 
     edges = spark.createDataFrame(
         [(a, b) for a in range(1, 30) for b in (a % 7 + 30, a % 5 + 40)],
         "src long, dst long",
     )
     seeds = spark.createDataFrame([(1,), (2,)], "node long")
-    base_pr = sorted(
-        (r["node"], r["rank"]) for r in graph.pagerank(edges, iterations=6).collect()
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6), (7, 5), (8, 7)], "id_a long, id_b long"
     )
-    base_bfs = sorted(
-        (r["node"], r["hops"])
-        for r in graph.bfs_hops(edges, seeds, rounds=3).collect()
+    emb = spark.createDataFrame(
+        [(i, [float((i * j) % 7 - 3) for j in range(8)]) for i in range(10)],
+        "vec_id long, embedding array<float>",
     )
-    ckpt_dir = str(tmp_path / "ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt_dir)
-    spark.conf.set(graph.RELIABLE_CHECKPOINT_CONF, "true")
+    calls = {
+        "pagerank": lambda: graph.pagerank(edges, iterations=6),
+        "bfs_hops": lambda: graph.bfs_hops(edges, seeds, rounds=3),
+        "duplicate_clusters": lambda: dedup.duplicate_clusters(
+            pairs, spark.range(1, 12)
+        ),
+        "kcenter_coreset": lambda: simsearch.kcenter_coreset(emb, k=3),
+    }
+    base = {name: sorted(map(tuple, call().collect())) for name, call in calls.items()}
+    spark.conf.set(cache.RELIABLE_CHECKPOINT_CONF, "true")
     try:
-        flag_pr = sorted(
-            (r["node"], r["rank"])
-            for r in graph.pagerank(edges, iterations=6).collect()
-        )
-        flag_bfs = sorted(
-            (r["node"], r["hops"])
-            for r in graph.bfs_hops(edges, seeds, rounds=3).collect()
-        )
+        for name, call in calls.items():
+            ckpt_dir = tmp_path / name
+            spark.sparkContext.setCheckpointDir(str(ckpt_dir))
+            assert sorted(map(tuple, call().collect())) == base[name], name
+            written = [f for _, _, files in os.walk(ckpt_dir) for f in files]
+            assert written, f"{name}: no reliable checkpoint files under its dir"
     finally:
-        spark.conf.unset(graph.RELIABLE_CHECKPOINT_CONF)
-    assert flag_pr == base_pr
-    assert flag_bfs == base_bfs
-    # reliable checkpoints must have been written to the configured dir
-    walked = [f for _, _, files in os.walk(ckpt_dir) for f in files]
-    assert walked, "no reliable checkpoint files written under the dir"
+        spark.conf.unset(cache.RELIABLE_CHECKPOINT_CONF)
 
 
 def test_graph_adjacency_loops_release_their_caches(spark):
@@ -405,6 +405,9 @@ def test_graph_adjacency_loops_release_their_caches(spark):
     graph.bfs_hops(edges, seeds, rounds=2).count()
     graph.sssp_bounded(
         edges.withColumn("w", F.lit(1).cast("long")), seeds, rounds=2
+    ).count()
+    graph.temporal_earliest_arrival(
+        edges.withColumn("t", F.col("src")), seeds, rounds=2
     ).count()
     graph.label_propagation(edges, rounds=2).count()
     after = {t.name() for t in spark.sparkContext._jsc.sc().getRDDStorageInfo()}

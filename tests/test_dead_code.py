@@ -1,14 +1,18 @@
-"""Every top-level definition in the package has a caller outside tests/.
+"""Every top-level definition in the package has a caller outside tests/,
+and every module-level import in the package is used.
 
-The scan is static and uses no Spark: it parses every non-test Python file
-(the package, ``bench.py``, ``__spark_entry__.py``, ``tools/`` and
-``perfbench/``) and collects the identifiers it names (``ast.Name``,
-``ast.Attribute`` and import aliases; strings and comments do not count).
-A top-level ``def``/``class`` of the package is live when it is named by
-module-level code, by a file outside the package, or by the body of
-another live definition.  Registry models (the ``@model`` functions) are
-reached through ``REGISTRY`` and count as live, as do the few public
-entry points in ``_KEPT``.
+The scans are static and use no Spark: they parse every non-test Python
+file (the package, ``bench.py``, ``__spark_entry__.py``, ``tools/`` and
+``perfbench/``).  Names are resolved to package-qualified names through
+imports: ``from .x import f [as g]`` makes ``g`` name ``x.f``; ``from .
+import x`` (or an absolute ``ufc_data_warehouse_spark`` import) makes
+``x.f`` name ``x.f``; a bare ``f`` in a package module names that module's
+own ``f``.  Strings and comments do not count.  A top-level ``def``/
+``class`` of the package is live when it is named by module-level code, by
+a file outside the package, or by the body of another live definition.
+Registry models (the ``@model`` functions) are reached through
+``REGISTRY`` and count as live, as do the few public entry points in
+``_KEPT``.
 """
 
 import ast
@@ -39,16 +43,73 @@ def _sources():
     return files
 
 
-def _names(node):
+def _module(path):
+    """Package-relative dotted name of ``path`` (``operators.graph``; a
+    package's ``__init__`` is the package itself), or None outside it."""
+    if not path.is_relative_to(PKG):
+        return None
+    parts = path.relative_to(PKG).with_suffix("").parts
+    return ".".join(p for p in parts if p != "__init__")
+
+
+def _join(*parts):
+    return ".".join(p for p in parts if p)
+
+
+def _aliases(tree, path):
+    """{local name: package-qualified targets} for every import of the
+    package anywhere in the file (function-local imports included)."""
+    inside = path.is_relative_to(PKG)
+    package = path.parent.relative_to(PKG).parts if inside else ()
+    out = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                top, _, rest = a.name.partition(".")
+                if top == PKG.name:
+                    local = a.asname or top
+                    out.setdefault(local, set()).add(rest if a.asname else "")
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                if not inside:
+                    continue
+                base = _join(*package[:len(package) - node.level + 1],
+                             node.module or "")
+            elif (node.module or "").split(".")[0] == PKG.name:
+                base = node.module.partition(".")[2]
+            else:
+                continue
+            for a in node.names:
+                out.setdefault(a.asname or a.name, set()).add(
+                    _join(base, a.name))
+    return out
+
+
+def _chain(node):
+    """``a.b.c`` → ("a", ["b", "c"]), or None when the base is no Name."""
+    attrs = []
+    while isinstance(node, ast.Attribute):
+        attrs.append(node.attr)
+        node = node.value
+    if isinstance(node, ast.Name):
+        return node.id, attrs[::-1]
+    return None
+
+
+def _names(node, aliases, mod):
+    """Package-qualified names that ``node`` refers to."""
     for n in ast.walk(node):
-        if isinstance(n, ast.Name):
-            yield n.id
-        elif isinstance(n, ast.Attribute):
-            yield n.attr
-        elif isinstance(n, ast.alias):
-            yield from n.name.split(".")
-            if n.asname:
-                yield n.asname
+        if not isinstance(n, (ast.Name, ast.Attribute)):
+            continue
+        chain = _chain(n)
+        if chain is None:
+            continue
+        base, attrs = chain
+        if base in aliases:
+            for target in aliases[base]:
+                yield _join(target, *attrs)
+        elif mod is not None and isinstance(n, ast.Name):
+            yield _join(mod, base)
 
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -64,17 +125,17 @@ def _is_model(node):
 
 
 def _scan():
-    """Return ({qualified name: identifiers its body names} for the package
-    definitions, identifiers named by everything else)."""
+    """Return ({qualified name: qualified names its body names} for the
+    package definitions, qualified names named by everything else)."""
     defs, named = {}, set()
     for path in _sources():
         tree = ast.parse(path.read_text(), filename=str(path))
-        mod = (".".join(path.relative_to(PKG).with_suffix("").parts)
-               if path.is_relative_to(PKG) else None)
+        mod = _module(path)
+        aliases = _aliases(tree, path)
         for stmt in tree.body:
-            names = set(_names(stmt))
-            if mod and isinstance(stmt, _DEFS) and not _is_model(stmt):
-                defs[f"{mod}.{stmt.name}"] = names
+            names = set(_names(stmt, aliases, mod))
+            if mod is not None and isinstance(stmt, _DEFS) and not _is_model(stmt):
+                defs[_join(mod, stmt.name)] = names
             else:
                 named |= names
     return defs, named
@@ -89,7 +150,7 @@ def _unreached(defs, named):
     grew = True
     while grew:
         grew = False
-        for q in [q for q in pending if q.rsplit(".", 1)[1] in named]:
+        for q in [q for q in pending if q in named]:
             named |= pending.pop(q)
             grew = True
     return sorted(pending)
@@ -106,3 +167,47 @@ def test_kept_names_still_exist():
     defs, _ = _scan()
     missing = sorted(set(_KEPT) - set(defs))
     assert not missing, f"_KEPT names with no definition: {missing}"
+
+
+def _annotations(tree):
+    """String annotations parsed as expressions: pandas UDF type hints
+    such as ``"Iterator[pd.DataFrame]"`` are evaluated at run time against
+    the module's globals, so the names in them are uses."""
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            args = n.args.posonlyargs + n.args.args + n.args.kwonlyargs
+            for ann in [a.annotation for a in args] + [n.returns]:
+                if isinstance(ann, ast.Constant) and isinstance(ann.value, str):
+                    yield ast.parse(ann.value, mode="eval")
+
+
+def _unused_imports(path):
+    """``path:line name`` for each module-level import the module never
+    names; ``__future__``, ``noqa: F401`` lines and ``__all__`` are exempt."""
+    src = path.read_text()
+    tree = ast.parse(src, filename=str(path))
+    lines = src.splitlines()
+    used = {n.id for t in [tree, *_annotations(tree)] for n in ast.walk(t)
+            if isinstance(n, ast.Name)}
+    for stmt in tree.body:
+        if (isinstance(stmt, ast.Assign)
+                and any(isinstance(t, ast.Name) and t.id == "__all__"
+                        for t in stmt.targets)):
+            used |= set(ast.literal_eval(stmt.value))
+    for stmt in tree.body:
+        if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+            continue
+        if "noqa: F401" in lines[stmt.lineno - 1]:
+            continue
+        for a in stmt.names:
+            name = a.asname or a.name.partition(".")[0]
+            if name not in used:
+                yield f"{path.relative_to(PKG)}:{stmt.lineno} {name}"
+
+
+def test_package_modules_use_every_import():
+    unused = [u for p in sorted(PKG.rglob("*.py")) for u in _unused_imports(p)]
+    assert not unused, (
+        "module-level imports the module never names:\n  " + "\n  ".join(unused))

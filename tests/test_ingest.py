@@ -105,45 +105,6 @@ def test_permissive_ingest_quarantines_malformed_rows(spark, tmp_path):
     assert "_corrupt_record" not in plain.columns
 
 
-def test_htmltable_python_datasource(spark, tmp_path):
-    """Custom Python Data Source (Spark 4): the reference's out-of-engine
-    HTML-table scrape becomes an in-engine partition-parallel scan."""
-    from ufc_data_warehouse_spark.sources import htmltable
-
-    (tmp_path / "a.html").write_text(
-        """<html><body><h1>Championship history</h1>
-        <table>
-          <tr><th>Date</th><th>Fighter</th><th>Weight Category</th><th>Reason</th></tr>
-          <tr><td>Jan 5, 2020</td><td>A&amp;lpha One</td><td>UFC Lightweight
-              Championship</td><td>vacated   (injury)</td></tr>
-          <tr><td>Mar 9, 2021</td><td>Beta Two</td><td>Heavyweight</td><td>stripped</td></tr>
-        </table>
-        <table><tr><th>Ignored</th></tr><tr><td>second table skipped</td></tr></table>
-        </body></html>"""
-    )
-    (tmp_path / "b.html").write_text(
-        """<table>
-          <tr><th>Date</th><th>Fighter</th><th>Weight Category</th><th>Reason</th></tr>
-          <tr><td>Jul 1, 2022</td><td>Gamma Three</td><td>Flyweight</td><td>retired</td></tr>
-        </table>"""
-    )
-    htmltable.register(spark)
-    df = (
-        spark.read.format("htmltable")
-        .option("path", str(tmp_path / "*.html"))
-        .load()
-    )
-    assert df.columns == ["date", "fighter", "weight_category", "reason"]
-    rows = {tuple(r) for r in df.collect()}
-    assert ("Mar 9, 2021", "Beta Two", "Heavyweight", "stripped") in rows
-    assert ("Jul 1, 2022", "Gamma Three", "Flyweight", "retired") in rows
-    # whitespace collapsed inside cells; second table ignored
-    assert any("vacated (injury)" == r[3] for r in rows)
-    assert len(rows) == 3
-    # partition-parallel: one scan task per file
-    assert df.rdd.getNumPartitions() == 2
-
-
 def test_jsonl_roundtrip_and_corrupt_quarantine(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -195,44 +156,3 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters" in plan and "doc_id" in plan
-
-
-def test_jsonlsink_python_datasource_writer(spark, tmp_path):
-    """Custom Python Data Source WRITER (Arrow form): staged write +
-    atomic commit; round-trip equals the source; _SUCCESS manifest
-    carries the committed row count; staging is cleaned up."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ufc_data_warehouse_spark.sources import pysink
-
-    pysink.register(spark)
-    src = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 7).alias("bucket"),
-        F.concat(F.lit("row-"), F.col("id")).alias("label"),
-    )
-    out = str(tmp_path / "sink")
-    os.makedirs(out)
-    src.write.format("jsonlsink").option("path", out).mode("append").save()
-
-    assert os.path.exists(os.path.join(out, "_SUCCESS"))
-    manifest = json.load(open(os.path.join(out, "_SUCCESS")))
-    assert manifest["rows"] == 1000
-    assert not os.path.exists(os.path.join(out, "_staging"))
-
-    back = spark.read.schema("id long, bucket long, label string").json(
-        f"{out}/*.jsonl"
-    )
-    assert back.count() == 1000
-    assert back.agg(F.sum("id")).collect()[0][0] == 999 * 1000 // 2
-
-    # overwrite drops prior parts, second manifest still exact
-    src.limit(10).write.format("jsonlsink").option("path", out).mode(
-        "overwrite"
-    ).save()
-    back2 = spark.read.schema("id long, bucket long, label string").json(
-        f"{out}/*.jsonl"
-    )
-    assert back2.count() == 10

@@ -186,6 +186,48 @@ def test_triangle_count_matches_bruteforce(spark, edge_list):
 )
 @given(
     st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)),
+        min_size=1,
+        max_size=25,
+    )
+)
+def test_pagerank_matches_integer_replay(spark, edge_list):
+    """Fixed-point PageRank == a pure-Python replay of its integer update
+    rule on arbitrary small digraphs (self-loops kept, duplicate edges
+    counted once, dangling mass dropped). Six iterations cross the
+    mid-loop lineage truncation after the fifth."""
+    from ufc_data_warehouse_spark.operators import graph
+
+    scale, damping, iterations = 10**12, 85, 6
+    out: dict[int, set[int]] = {}
+    for a, b in edge_list:
+        out.setdefault(a, set()).add(b)
+    nodes = {x for e in edge_list for x in e}
+    rank = dict.fromkeys(nodes, scale)
+    for _ in range(iterations):
+        mass = dict.fromkeys(nodes, 0)
+        for a, dsts in out.items():
+            for b in dsts:
+                mass[b] += rank[a] // len(dsts)
+        rank = {
+            n: (100 - damping) * scale // 100 + damping * mass[n] // 100
+            for n in nodes
+        }
+    df = spark.createDataFrame(edge_list, "src long, dst long")
+    got = {
+        r["node"]: r["rank"]
+        for r in graph.pagerank(df, iterations=iterations).collect()
+    }
+    assert got == rank
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(
         st.tuples(st.integers(0, 12), st.integers(0, 12)),
         min_size=1,
         max_size=30,

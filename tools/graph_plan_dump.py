@@ -3,8 +3,8 @@
 The graph operators truncate lineage per round (localCheckpoint /
 checkpoint), so their .explain() output collapses to `Scan ExistingRDD`
 and hides the per-iteration plan shape. This tool patches
-``DataFrame.localCheckpoint`` (and the r8 ``_truncate`` helper when
-present) to identity, builds each graph query's full lazy plan, and
+``DataFrame.localCheckpoint`` and ``DataFrame.checkpoint`` (which
+``cache.truncate`` calls) to identity, builds each graph query's full lazy plan, and
 writes .explain("formatted") to plans/r08/<name>_loop_<tag>.txt — the
 judge-checkable evidence for per-iteration Exchange counts. Plans only;
 nothing is executed (the untruncated plan would be slow to run, which is
@@ -47,10 +47,6 @@ def main() -> None:
 
     DataFrame.localCheckpoint = lambda self, eager=True: self  # type: ignore[assignment]
     DataFrame.checkpoint = lambda self, eager=True: self  # type: ignore[assignment]
-    from ufc_data_warehouse_spark.operators import graph
-
-    if hasattr(graph, "_truncate"):
-        graph._truncate = lambda df, eager=False: df  # type: ignore[assignment]
 
     import __spark_entry__ as entry_mod
     from ufc_data_warehouse_spark.session import get_spark

@@ -7,6 +7,11 @@ persisted ``api._PERSISTED`` frames per sf_dir, the dedup shingles and LSH
 candidates per sf_dir, and the ``spread_single_split`` partition probes
 per plan. :func:`release` is the only invalidation.
 
+It also owns the lineage-truncation policy: :func:`truncate` is the one
+place the package calls ``localCheckpoint``/``checkpoint``, so every
+iterative loop (the graph operators, ``dedup.duplicate_clusters``,
+``simsearch.kcenter_coreset``) honours ``RELIABLE_CHECKPOINT_CONF`` alike.
+
 Leaf module (imports only pyspark/py4j) so ``operators/`` can use it
 without an import cycle.
 """
@@ -20,6 +25,10 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
+
+# Session conf that swaps executor-local lineage truncation for reliable,
+# directory-backed checkpoints (see :func:`truncate`).
+RELIABLE_CHECKPOINT_CONF = "spark.ufc.graph.reliableCheckpoint"
 
 _memo: dict[tuple[str, Hashable], object] = {}
 
@@ -58,3 +67,27 @@ def release(spark: SparkSession) -> None:
         spark.catalog.clearCache()
     except Py4JError:  # JVM side already stopped: nothing held
         pass
+
+
+def truncate(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Truncate lineage inside an iterative loop.
+
+    Default: ``localCheckpoint`` — blocks live on executor storage only,
+    which is exactly right on ``local[N]`` (no executor can be lost
+    without losing the driver too) and cheapest everywhere. On a real
+    cluster an executor loss AFTER truncation is unrecoverable, so at
+    100 TB scale set the session conf
+    ``spark.ufc.graph.reliableCheckpoint=true`` AND a checkpoint
+    directory (``spark.sparkContext.setCheckpointDir(...)`` on reliable
+    storage): every loop truncation then uses directory-backed
+    ``checkpoint()`` instead. Both forms cut the plan identically; only
+    the storage/recovery story differs, so results are unchanged.
+    """
+    flag = "false"
+    try:
+        flag = df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false")
+    except Py4JError:  # conf service unavailable: local default
+        pass
+    if str(flag).lower() == "true":
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import truncate
+
 # ---------------------------------------------------------------------------
 # normalization + shingling
 # ---------------------------------------------------------------------------
@@ -411,12 +413,12 @@ def duplicate_clusters(pairs: DataFrame, all_ids: DataFrame) -> DataFrame:
     documented exception to the no-driver-loops rule for iterative
     algorithms (GraphX-style Pregel does exactly this under the hood).
 
-    Each round's labels are eagerly ``localCheckpoint``-ed: without the
-    truncation the plan deepens by one join per round and round k replays
-    rounds 1..k-1 (O(k²) total work, and eventually a planner blow-up);
-    with it every round is O(edges) flat. On a real cluster prefer
-    ``checkpoint()`` to reliable storage when executor loss mid-iteration
-    must be recoverable.
+    Each round's labels are eagerly truncated (:func:`cache.truncate`):
+    without the truncation the plan deepens by one join per round and
+    round k replays rounds 1..k-1 (O(k²) total work, and eventually a
+    planner blow-up); with it every round is O(edges) flat. On a real
+    cluster set ``cache.RELIABLE_CHECKPOINT_CONF`` when executor loss
+    mid-iteration must be recoverable.
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -425,25 +427,26 @@ def duplicate_clusters(pairs: DataFrame, all_ids: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    edges = edges.localCheckpoint(eager=True)
-    labels = all_ids.select(
-        F.col("id"), F.col("id").alias("cluster_id")
-    ).localCheckpoint(eager=True)
+    edges = truncate(edges, eager=True)
+    labels = truncate(
+        all_ids.select(F.col("id"), F.col("id").alias("cluster_id")), eager=True
+    )
     for _ in range(20):  # diameter bound; near-dup clusters are shallow
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["id"])
             .groupBy("src")
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        updated = (
+        updated = truncate(
             labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
             .select(
                 "id",
                 F.least(
                     F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))
                 ).alias("cluster_id"),
-            )
-        ).localCheckpoint(eager=True)
+            ),
+            eager=True,
+        )
         changed = (
             updated.alias("u")
             .join(labels.alias("l"), "id")

@@ -28,7 +28,6 @@ operators. Arrow transfers batches columnar; no per-row Python.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 __all__ = ["minmax_normalize", "group_id_stats_arrow"]
 

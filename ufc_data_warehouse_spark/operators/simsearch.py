@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import truncate
+
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
     """Sequential-accumulation dot product via ``aggregate``/``zip_with``.
@@ -1036,14 +1038,13 @@ def kcenter_coreset(embeddings: DataFrame, k: int = 4) -> DataFrame:
     """
     codes = quantize_int8(embeddings).select("vec_id", "codes")
     pts = codes.withColumn("sq", _int_dot(F.col("codes"), F.col("codes")))
-    center = (
-        pts.filter(F.col("vec_id") == 0)
-        .select(
+    center = truncate(
+        pts.filter(F.col("vec_id") == 0).select(
             F.col("vec_id").alias("c_id"),
             F.col("codes").alias("c_codes"),
             F.col("sq").alias("c_sq"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     chosen = [(1, center, F.lit(0).cast("long"))]
     d2_to_center = (
@@ -1051,13 +1052,13 @@ def kcenter_coreset(embeddings: DataFrame, k: int = 4) -> DataFrame:
         + F.col("c_sq")
         - F.lit(2) * _int_dot(F.col("codes"), F.col("c_codes"))
     )
-    state = (
+    state = truncate(
         pts.crossJoin(F.broadcast(center))
-        .select("vec_id", "codes", "sq", d2_to_center.alias("mind"))
-        .localCheckpoint(eager=True)
+        .select("vec_id", "codes", "sq", d2_to_center.alias("mind")),
+        eager=True,
     )
     for rank in range(2, k + 1):
-        center = (
+        center = truncate(
             state.orderBy(F.desc("mind"), F.asc("vec_id"))
             .limit(1)
             .select(
@@ -1065,19 +1066,18 @@ def kcenter_coreset(embeddings: DataFrame, k: int = 4) -> DataFrame:
                 F.col("codes").alias("c_codes"),
                 F.col("sq").alias("c_sq"),
                 F.col("mind").alias("c_mind"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         chosen.append((rank, center, F.col("c_mind")))
-        state = (
-            state.crossJoin(F.broadcast(center.drop("c_mind")))
-            .select(
+        state = truncate(
+            state.crossJoin(F.broadcast(center.drop("c_mind"))).select(
                 "vec_id",
                 "codes",
                 "sq",
                 F.least(F.col("mind"), d2_to_center).alias("mind"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     out = None
     for rank, center, d2 in chosen:
