@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ufc_data_warehouse_spark.api import build_model  # noqa: E402
 from ufc_data_warehouse_spark.oracle import model_names, oracle_for  # noqa: E402
+from ufc_data_warehouse_spark import registry  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -274,28 +275,13 @@ def _rotated(
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name in model_names():
-        out[name] = _model_query(name)
-    try:
-        from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
-
-        out.update(EXTRA_QUERIES)
-    except ImportError:
-        pass
+    out = {name: _model_query(name) for name in model_names()}
+    out.update((name, q.fn) for name, q in registry.queries().items())
     return {name: out[name] for name in _rotated(list(out))}
 
 
 def oracle_sql() -> dict[str, str]:
     out = {name: oracle_for(name) for name in model_names()}
-    try:
-        from ufc_data_warehouse_spark.extra_queries import EXTRA_ORACLES
-
-        out.update(EXTRA_ORACLES)
-    except ImportError:
-        pass
-    # mirror queries()' rotation exactly so both dicts iterate in the
-    # same order regardless of their own insertion histories
-    order = [n for n in queries() if n in out]
-    order += [n for n in out if n not in set(order)]
-    return {name: out[name] for name in order}
+    out.update((name, q.oracle) for name, q in registry.queries().items())
+    # the same names in the same order as queries(), so both rotate alike
+    return {name: out[name] for name in _rotated(list(out))}

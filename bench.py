@@ -39,6 +39,81 @@ RAW_TABLES = [
     "title_status_changes_outside_octagon",
 ]
 
+# Heavier extra queries worth timing at sf0.1
+BENCH_EXTRA = [
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "ann_cosine_topk",
+    "ann_ivf_topk",
+    "tpch_q1",
+    "tpch_q3",
+    "tpch_q5",
+    "tpch_q9_product_profit",
+    "tpch_q10_returned_revenue",
+    "sessionization",
+    "asof_orders_before_events",
+    # statistical / pandas-API / fuzzy families (one representative each)
+    "ts_zscore_outliers",
+    "cogroup_asof_view_purchase",
+    "fuzzy_part_name_pairs",
+    # iterative graph, Arrow bulk-inference, and the composed curation DAG
+    "graph_pagerank_top100",
+    "ann_cosine_scores_arrow",
+    "curation_pipeline_e2e",
+    # feature-store point-in-time assembly (one keyed window over events)
+    "pit_feature_assembly",
+    # grid-join spatial family and frontier-only BFS (bounded outputs)
+    "spatial_nn_customers",
+    "graph_bfs_hops",
+    # bucket-grid range join (the no-shared-key interval containment)
+    "interval_overlap_counts",
+    # lexical + hybrid retrieval, distributed prefix-sum sampling, and
+    # the weighted iterative-graph path
+    "bm25_doc_ranking",
+    "rrf_hybrid_search",
+    "pps_systematic_sample",
+    "graph_sssp_bounded",
+    # late-interaction retrieval (Arrow einsum path), greedy coreset
+    # selection, video scene cuts, and iterative LPA communities
+    "ann_maxsim_arrow",
+    "coreset_kcenter_selection",
+    "multimodal_scene_cuts",
+    "graph_label_propagation",
+    # round-2 scale paths: banded simhash pairing at production width
+    # (the 24-bit demo config's 3-bit bands degenerate on this
+    # near-identical synthetic corpus — quadratic candidates, like the
+    # un-benched prefix_filter; 48-bit/4096-way buckets is the config a
+    # deployment runs), the incremental batch-vs-corpus index probe, and
+    # PQ/ADC retrieval (time is dominated by one-time codebook learning —
+    # 4 subspace k-means; the ADC scan itself is map-only lookups)
+    "dedup_simhash48_pairs",
+    "dedup_incremental_batch",
+    "ann_pq_adc_topk",
+    # round-3 scale paths, base-scale rows so the 10× scale tier has
+    # same-session ratios: full-width 64-bit simhash (16-bit bands), the
+    # candidate-restricted embedding dedup (banded hyperplane LSH → two
+    # hash joins → exact cosine verify), and one AvailableNow streaming
+    # pass (fresh checkpoint per run, so each timing re-processes all
+    # input files — the replayable-batch cost, not a warm no-op)
+    "dedup_simhash64_pairs",
+    "dedup_embedding_lsh90",
+    "streaming_tumbling_counts",
+    # cross-doc verbatim-span coverage: one gram-keyed exchange + per-doc
+    # window — the substring-dedup audit, linear in corpus size
+    "dedup_repeated_spans",
+    # r7 real-codec paths: PNG (zlib inflate + unfilter per payload) and
+    # baseline JPEG (the heaviest — real Huffman+DCT encode AND decode
+    # per row, both inside Arrow UDFs); per-payload CPU cost is the
+    # design point, the bench pins the per-row constant
+    "png_codec_decode_audit",
+    "jpeg_codec_decode_audit",
+]
+# NOT benchmarked: dedup_prefix_filter / graph_triangle_census — on this
+# synthetic corpus (5000 near-identical docs; a 91%-dense co-purchase
+# graph) their OUTPUT is quadratic (~millions of qualifying pairs /
+# ~1.5e8 real triangles), so wall time measures result size, not plan
+# quality. Both stay correctness-gated at sf0.01 via their oracles.
+
 # the 10×-scale tier (VERDICT r2 tasks 3–4): iterative graph loops, PQ
 # codebook training, lexical/hybrid retrieval, banded SimHash at both
 # production widths, the candidate-restricted embedding dedup, and one
@@ -244,7 +319,6 @@ def main() -> None:
         # ---- beyond-parity queries on the native tables ----
         import __spark_entry__ as entry_mod
         from ufc_data_warehouse_spark.extra_queries import (
-            BENCH_EXTRA,
             _lsh_candidates,
             _shingles,
         )

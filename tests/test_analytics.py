@@ -391,7 +391,8 @@ def test_graph_reliable_checkpoint_flag(spark, tmp_path):
 def test_graph_adjacency_loops_release_their_caches(spark):
     """r8: the adjacency-list graph loops persist their loop invariant and
     must unpersist it before returning — a second call must not see (or
-    time against) a cached frame from the first (no cross-run caching)."""
+    time against) a cached frame from the first (no cross-run caching).
+    triangle_count releases its two persisted intermediates the same way."""
     from pyspark.sql import functions as F
 
     from ufc_data_warehouse_spark.operators import graph
@@ -410,6 +411,7 @@ def test_graph_adjacency_loops_release_their_caches(spark):
         edges.withColumn("t", F.col("src")), seeds, rounds=2
     ).count()
     graph.label_propagation(edges, rounds=2).count()
+    graph.triangle_count(edges).count()
     after = {t.name() for t in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
     leaked = {
         n for n in (after - before) if "localCheckpoint" not in str(n)

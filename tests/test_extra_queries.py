@@ -6,15 +6,20 @@ import pytest
 
 from tests.conftest import SF_DIR, assert_frames_match
 
-from ufc_data_warehouse_spark.extra_queries import EXTRA_ORACLES, EXTRA_QUERIES
+from ufc_data_warehouse_spark.registry import queries
+
+QUERIES = queries()
 
 
-@pytest.mark.parametrize("name", sorted(EXTRA_QUERIES))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_extra_query_matches_oracle(spark, duck, name):
-    assert name in EXTRA_ORACLES, f"{name} missing oracle"
-    spark_df = EXTRA_QUERIES[name](spark, SF_DIR)
-    duck_df = duck.execute(EXTRA_ORACLES[name]).df()
+    """Rows equal the oracle's, and the query leaves the session conf as
+    it found it (no hidden global side effect)."""
+    conf = spark.conf.getAll
+    spark_df = QUERIES[name].fn(spark, SF_DIR)
+    duck_df = duck.execute(QUERIES[name].oracle).df()
     assert_frames_match(spark_df, duck_df, label=name)
+    assert spark.conf.getAll == conf, f"{name} changed the session conf"
 
 
 def test_stateful_query_on_rocksdb_state_store(spark):

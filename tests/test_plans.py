@@ -8,7 +8,9 @@ import pytest
 from tests.conftest import SF_DIR
 
 from ufc_data_warehouse_spark.api import build_model
-from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
+from ufc_data_warehouse_spark.registry import queries
+
+QUERIES = queries()
 
 
 def _plan(df) -> str:
@@ -36,12 +38,12 @@ def test_warm_dashboard_card_runs_no_shuffle(spark, card, jobs):
     fighter unpivot is one stack pass that broadcasts the events dim once:
     best record is one job, the three cards that join the events dim are
     that broadcast plus one."""
-    EXTRA_QUERIES["card_title_reigns_days_top200"](spark, SF_DIR).collect()
+    QUERIES["card_title_reigns_days_top200"].fn(spark, SF_DIR).collect()
     sc = spark.sparkContext
     group = f"job-count-{card}"
     sc.setJobGroup(group, card)
     try:
-        EXTRA_QUERIES[card](spark, SF_DIR).collect()
+        QUERIES[card].fn(spark, SF_DIR).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -62,7 +64,7 @@ def test_title_reigns_all_joins_broadcast(spark):
 
 
 def test_tpch_q1_scan_prunes_columns(spark):
-    plan = _plan(EXTRA_QUERIES["tpch_q1"](spark, SF_DIR))
+    plan = _plan(QUERIES["tpch_q1"].fn(spark, SF_DIR))
     # only the 6 referenced columns reach the scan, not all 11
     read = plan.split("ReadSchema: ")[1].splitlines()[0]
     assert "l_shipdate" not in read and "l_partkey" not in read
@@ -70,12 +72,12 @@ def test_tpch_q1_scan_prunes_columns(spark):
 
 
 def test_predicate_pushdown_reaches_scan(spark):
-    plan = _plan(EXTRA_QUERIES["tpch_q3"](spark, SF_DIR))
+    plan = _plan(QUERIES["tpch_q3"].fn(spark, SF_DIR))
     assert "PushedFilters: [IsNotNull(c_mktsegment), EqualTo(c_mktsegment,BUILDING)" in plan
 
 
 def test_tpch_q6_filters_pushed_to_scan(spark):
-    plan = _plan(EXTRA_QUERIES["tpch_q6_pushdown"](spark, SF_DIR))
+    plan = _plan(QUERIES["tpch_q6_pushdown"].fn(spark, SF_DIR))
     pushed = plan.split("PushedFilters: ")[1].splitlines()[0]
     # the shipdate range reaches parquet (toString truncates the filter
     # list, so assert the leading entries: all 3 columns + the range start)
@@ -87,19 +89,19 @@ def test_tpch_q6_filters_pushed_to_scan(spark):
 
 
 def test_tpch_q4_uses_semi_join(spark):
-    plan = _plan(EXTRA_QUERIES["tpch_q4_semijoin"](spark, SF_DIR))
+    plan = _plan(QUERIES["tpch_q4_semijoin"].fn(spark, SF_DIR))
     assert "LeftSemi" in plan
 
 
 def test_antijoin_builds_on_filtered_orders(spark):
-    plan = _plan(EXTRA_QUERIES["antijoin_dormant_customers"](spark, SF_DIR))
+    plan = _plan(QUERIES["antijoin_dormant_customers"].fn(spark, SF_DIR))
     assert "LeftAnti" in plan
     # the o_orderdate filter is pushed into the anti-join build side scan
     assert "GreaterThanOrEqual(o_orderdate" in plan
 
 
 def test_rollup_is_single_shuffle_expand(spark):
-    plan = _plan(EXTRA_QUERIES["rollup_order_totals"](spark, SF_DIR))
+    plan = _plan(QUERIES["rollup_order_totals"].fn(spark, SF_DIR))
     assert "Expand" in plan
     # one hash exchange for the agg + one range for the sort — no per-level re-agg
     assert plan.count("Exchange hashpartitioning") == 1
@@ -157,7 +159,7 @@ def test_bm25_rank_window_rides_the_limited_frame(spark):
     # the ranking must be TakeOrderedAndProject(top-50) feeding a 50-row
     # window — a partition-less window over the FULL corpus reappearing
     # means the top-k rewrite regressed
-    plan = _plan(EXTRA_QUERIES["bm25_doc_ranking"](spark, SF_DIR))
+    plan = _plan(QUERIES["bm25_doc_ranking"].fn(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -165,7 +167,7 @@ def test_maxsim_broadcasts_query_side_no_python(spark):
     # the late-interaction scorer must stay a broadcast nested-loop over
     # the int8 codes with JVM HOF scoring — a SortMergeJoin or any
     # Python/Arrow eval node means the hot path regressed off the JVM
-    plan = _plan(EXTRA_QUERIES["ann_maxsim_multivector"](spark, SF_DIR))
+    plan = _plan(QUERIES["ann_maxsim_multivector"].fn(spark, SF_DIR))
     assert "Broadcast" in plan
     assert "SortMergeJoin" not in plan
     assert "PythonUDF" not in plan and "ArrowEvalPython" not in plan
@@ -175,7 +177,7 @@ def test_scene_cuts_filter_cuts_nonvideo_before_explode(spark):
     # the kind filter must run BEFORE the frame explode (300× fan-out);
     # Generate appearing under an unfiltered scan would blow up the row
     # count 3× for rows that are then discarded
-    df = EXTRA_QUERIES["multimodal_scene_cuts"](spark, SF_DIR)
+    df = QUERIES["multimodal_scene_cuts"].fn(spark, SF_DIR)
     plan = _plan(df)
     gen_pos = plan.find("Generate")
     filt_pos = plan.find("kind")
@@ -189,7 +191,7 @@ def test_ivf_partitioned_probe_prunes_partitions(spark):
     # the probed read must show PartitionFilters on the label partition
     # column — a post-scan Filter over all partitions means the layout
     # win regressed to a full index scan
-    df = EXTRA_QUERIES["ann_ivf_partition_pruned"](spark, SF_DIR)
+    df = QUERIES["ann_ivf_partition_pruned"].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     # at least one scan carries a label IN (...) partition filter
@@ -206,7 +208,7 @@ def test_embedding_lsh_dedup_is_candidate_first_hash_joins(spark):
     CartesianProduct anywhere in the plan (VERDICT r2 item 2)."""
     for name in ("dedup_embedding_lsh", "dedup_embedding_lsh90",
                  "dedup_embedding_incremental"):
-        plan = _plan(EXTRA_QUERIES[name](spark, SF_DIR))
+        plan = _plan(QUERIES[name].fn(spark, SF_DIR))
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "CartesianProduct" not in plan, name
         assert "BroadcastHashJoin" in plan, name
@@ -215,7 +217,7 @@ def test_embedding_lsh_dedup_is_candidate_first_hash_joins(spark):
 def test_embedding_incremental_broadcasts_the_batch(spark):
     """The batch side (daily increment) must broadcast so the stored
     corpus index streams map-side and is never shuffled for the probe."""
-    plan = _plan(EXTRA_QUERIES["dedup_embedding_incremental"](spark, SF_DIR))
+    plan = _plan(QUERIES["dedup_embedding_incremental"].fn(spark, SF_DIR))
     assert plan.count("BroadcastHashJoin") >= 1
 
 
@@ -238,7 +240,7 @@ def test_bloom_probe_is_map_side_only(spark):
     1-row bitmap broadcast (BroadcastNestedLoopJoin of a single row) and
     one broadcast dim join for the exact flag — never an explode, a
     per-row shuffle, or a sort-merge join on the probe side."""
-    plan = _plan(EXTRA_QUERIES["bloom_join_prune"](spark, SF_DIR))
+    plan = _plan(QUERIES["bloom_join_prune"].fn(spark, SF_DIR))
     assert "SortMergeJoin" not in plan
     # the probe never explodes: the ONLY Generate in the whole plan is
     # the tiny build side's pre-agg position explode (checking the full
@@ -254,7 +256,7 @@ def test_bloom_filter_has_no_false_negatives_and_bounded_fp(spark):
     (1 - e^{-kn/m})^k for k=3 hashes, m=16384 bits."""
     import math
 
-    row = EXTRA_QUERIES["bloom_join_prune"](spark, SF_DIR).collect()[0]
+    row = QUERIES["bloom_join_prune"].fn(spark, SF_DIR).collect()[0]
     assert row["n_false_neg"] == 0
     assert row["n_bloom_pass"] >= row["n_exact"]
     # n = distinct BUILDING-segment build keys AT THE SF UNDER TEST —

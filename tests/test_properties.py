@@ -866,7 +866,7 @@ def test_partitioning_invariance_of_tie_sensitive_queries(spark):
     different shuffle-partition counts — the invariant that makes local
     results transfer to a 1000-executor cluster. shuffle.partitions is a
     runtime conf, so one session can check both settings."""
-    from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
+    from ufc_data_warehouse_spark.registry import queries
 
     from tests.conftest import SF_DIR
 
@@ -893,7 +893,7 @@ def test_partitioning_invariance_of_tie_sensitive_queries(spark):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             for n in names:
                 rows = sorted(
-                    tuple(r) for r in EXTRA_QUERIES[n](spark, SF_DIR).collect()
+                    tuple(r) for r in queries()[n].fn(spark, SF_DIR).collect()
                 )
                 results.setdefault(n, []).append(rows)
     finally:
@@ -1360,11 +1360,11 @@ def test_equidepth_buckets_are_balanced(spark):
     """Equi-depth histogram invariant: bucket populations differ by at
     most 1 (ntile over a total order guarantees it; this guards the
     total-order tie-break from regressing)."""
-    from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
+    from ufc_data_warehouse_spark.registry import queries
 
     from tests.conftest import SF_DIR
 
-    rows = EXTRA_QUERIES["equidepth_histogram_price"](spark, SF_DIR).collect()
+    rows = queries()["equidepth_histogram_price"].fn(spark, SF_DIR).collect()
     counts = [r["n"] for r in rows]
     assert max(counts) - min(counts) <= 1, counts
 
@@ -1375,11 +1375,11 @@ def test_pack_token_bins_capacity_bound(spark):
     only by (its largest doc − 1) tokens — the straddle bound."""
     from pyspark.sql import functions as F
 
-    from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
+    from ufc_data_warehouse_spark.registry import queries
 
     from tests.conftest import SF_DIR
 
-    df = EXTRA_QUERIES["pack_token_bins"](spark, SF_DIR)
+    df = queries()["pack_token_bins"].fn(spark, SF_DIR)
     rows = (
         df.groupBy("lang", "bin")
         .agg(F.sum("tokens").alias("total"), F.max("tokens").alias("mx"))

@@ -63,38 +63,53 @@ def test_materialize_layout(spark, tmp_path):
 
 
 def test_registries_complete_under_any_import_order():
-    """Regression: importing analytics_queries BEFORE extra_queries used
-    to trip a circular import that silently snapshotted the analytics
-    registries half-filled — every query registered after the cycle
-    point vanished from EXTRA_QUERIES and one oracle went missing.
-    Run both orders in fresh interpreters and require identical,
-    oracle-complete registries."""
+    """The query registry does not depend on import order: with each query
+    module imported first, in a fresh interpreter, ``queries()`` holds all
+    341 queries, each with an oracle, in one and the same order."""
+    import hashlib
     import json
     import subprocess
     import sys
 
+    from ufc_data_warehouse_spark.registry import QUERY_MODULES, queries
+
     prog = """
-import json, sys
-order = sys.argv[1]
-if order == "analytics_first":
-    import ufc_data_warehouse_spark.analytics_queries  # noqa: F401
-from ufc_data_warehouse_spark.extra_queries import EXTRA_ORACLES, EXTRA_QUERIES
-missing = [k for k in EXTRA_QUERIES
-           if k not in EXTRA_ORACLES and not k.startswith("streaming")]
-print(json.dumps({"n": len(EXTRA_QUERIES), "missing": missing}))
+import hashlib, importlib, json, sys
+importlib.import_module("ufc_data_warehouse_spark." + sys.argv[1])
+from ufc_data_warehouse_spark.registry import queries
+qs = queries()
+print(json.dumps({
+    "n": len(qs),
+    "no_oracle": [n for n, q in qs.items() if not q.oracle.strip()],
+    "order": hashlib.md5("\\n".join(qs).encode()).hexdigest(),
+}))
 """
     results = {}
-    for order in ("extra_first", "analytics_first"):
+    for first in QUERY_MODULES:
         out = subprocess.run(
-            [sys.executable, "-c", prog, order],
+            [sys.executable, "-c", prog, first],
             capture_output=True,
             text=True,
             check=True,
         )
-        results[order] = json.loads(out.stdout.strip().splitlines()[-1])
-    assert results["extra_first"]["missing"] == []
-    assert results["analytics_first"]["missing"] == []
-    assert results["extra_first"]["n"] == results["analytics_first"]["n"]
+        results[first] = json.loads(out.stdout.strip().splitlines()[-1])
+    order = hashlib.md5("\n".join(queries()).encode()).hexdigest()
+    for first, r in results.items():
+        assert r["n"] == 341, (first, r["n"])
+        assert r["no_oracle"] == [], (first, r["no_oracle"])
+        assert r["order"] == order, first
+
+
+def test_query_name_registers_once():
+    """A second ``query(...)`` under a taken name raises instead of
+    replacing the first registration."""
+    from ufc_data_warehouse_spark.registry import QUERIES, query, queries
+
+    first = next(iter(queries()))
+    before = QUERIES[first]
+    with pytest.raises(ValueError, match=first):
+        query(first, before.fn, before.oracle)
+    assert QUERIES[first] is before
 
 
 def test_coverage_doc_mentions_every_query():
@@ -117,11 +132,10 @@ def test_bench_lists_are_registered_queries():
     import bench
 
     import __spark_entry__ as entry_mod
-    from ufc_data_warehouse_spark.extra_queries import BENCH_EXTRA
     from ufc_data_warehouse_spark.oracle import model_names
 
     qs = set(entry_mod.queries())
-    missing_extra = [n for n in BENCH_EXTRA if n not in qs]
+    missing_extra = [n for n in bench.BENCH_EXTRA if n not in qs]
     assert not missing_extra, missing_extra
     models = set(model_names())
     missing_models = [n for n in bench.MODEL_HEADLINE if n not in models]
@@ -241,10 +255,10 @@ def test_large_staging_frames_keep_their_layout(spark):
     with that set to one byte, stg_fight_results keeps AQE's layout, is
     still read from the cache, and a card returns the same rows."""
     from ufc_data_warehouse_spark import api
-    from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
+    from ufc_data_warehouse_spark.registry import queries
 
     key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    card = EXTRA_QUERIES["card_best_record_top25"]
+    card = queries()["card_best_record_top25"].fn
 
     def stg_fight_results() -> DataFrame:
         return api.build_model(spark, SF_DIR, "stg_fight_results")
@@ -302,39 +316,20 @@ def test_persisted_frames_chain_in_dag_order(spark):
 
 
 def test_queries_leave_session_conf_alone(spark):
-    """Queries have no hidden global side effects: a sample from every
-    query module (events readers included), a model build and a
-    streaming query leave ``spark.conf`` exactly as they found it."""
-    from ufc_data_warehouse_spark import (
-        analytics_queries,
-        api,
-        curation_queries,
-        extra_queries,
-        pipeline_queries,
-        tpch_extra,
-    )
+    """``api.sql`` has no hidden global side effect: a SQL card leaves
+    ``spark.conf`` exactly as it found it. (Every query and model gets
+    the same check in its oracle test.)"""
+    from ufc_data_warehouse_spark import api
 
-    sf = SF_DIR
-    sample = [
-        extra_queries.q_json_props_stats,
-        analytics_queries.q_ts_ols_trend,
-        pipeline_queries.q_bigram_lm_quality,
-        curation_queries.q_text_pii_redaction,
-        tpch_extra.q_tpch_q8_market_share,
-        lambda s, d: api.build_model(s, d, "title_reigns"),
-        extra_queries.q_streaming_tumbling_counts,
-        lambda s, d: api.sql(
-            s,
-            d,
-            "SELECT fighter, championship_rounds_fought FROM "
-            "fighters_extracted_goat_status.mv_championship_rounds_fought "
-            "ORDER BY championship_rounds_fought DESC, fighter LIMIT :k",
-            args={"k": 5},
-        ),
-    ]
     before = spark.conf.getAll
-    for q in sample:
-        q(spark, sf).collect()
+    api.sql(
+        spark,
+        SF_DIR,
+        "SELECT fighter, championship_rounds_fought FROM "
+        "fighters_extracted_goat_status.mv_championship_rounds_fought "
+        "ORDER BY championship_rounds_fought DESC, fighter LIMIT :k",
+        args={"k": 5},
+    ).collect()
     assert spark.conf.getAll == before
 
 

@@ -152,9 +152,9 @@ def test_z_value_matches_reference_bit_interleave(spark):
 def test_interval_bucket_join_is_equi_join(spark):
     """The point-in-interval join must compile to a hash/merge EQUI-join on
     (key, bucket) — never a nested-loop over the cross product."""
-    from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
+    from ufc_data_warehouse_spark.registry import queries
 
-    df = EXTRA_QUERIES["range_join_order_window_events"](spark, SF_DIR)
+    df = queries()["range_join_order_window_events"].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan

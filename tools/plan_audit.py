@@ -37,7 +37,6 @@ EXPECTED_NLJ = {
     "tpch_q11_important_stock",  # 1-row global-total broadcast cross
     "embedding_quantize_int8",  # 1-row [min,max] stats broadcast cross
     "ann_incremental_topk",  # two cosine_topk broadcast query-batch crosses
-    "graph_triangle_census",  # final stat assembly: cross of three 1-row aggs
     "chi_square_source_lang",  # tiny dim×dim category cross + 1-row total
     "rfm_customer_segments",  # 1-row data-derived as-of date broadcast cross
     "pareto_abc_customers",  # 1-row grand-total broadcast cross

@@ -42,7 +42,7 @@ def main() -> None:
     args = ap.parse_intermixed_args()
 
     import __spark_entry__ as entry_mod
-    from ufc_data_warehouse_spark.extra_queries import BENCH_EXTRA
+    from bench import BENCH_EXTRA
     from ufc_data_warehouse_spark.session import get_spark
 
     names = args.names or list(BENCH_EXTRA)

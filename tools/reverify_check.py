@@ -87,17 +87,16 @@ def _fn_fingerprint(fn) -> str:
 
 def compute_fps() -> dict[str, str]:
     import __spark_entry__ as entry
-    from ufc_data_warehouse_spark.registry import REGISTRY
+    from ufc_data_warehouse_spark.registry import REGISTRY, queries
 
     oracles = entry.oracle_sql()
+    registered = queries()
     fps: dict[str, str] = {}
     for name in entry.queries():
         if name in REGISTRY.models:
             body = _fn_fingerprint(REGISTRY.models[name].fn)
         else:
-            from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
-
-            body = _fn_fingerprint(EXTRA_QUERIES[name])
+            body = _fn_fingerprint(registered[name].fn)
         body += "\n-- oracle --\n" + oracles.get(name, "<no oracle>")
         fps[name] = hashlib.md5(body.encode()).hexdigest()
     return fps

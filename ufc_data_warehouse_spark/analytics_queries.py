@@ -15,16 +15,13 @@ single-expression projections, so cross-engine hashes match bit-for-bit.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import dedup, grouped, patterns, timeseries
 from .operators.scale import spread_single_split as _spread
+from .registry import query
 from .sources.ingest import read_table as _read
-
-Query = Callable[[SparkSession, str], DataFrame]
 
 
 # ---------------------------------------------------------------------------
@@ -95,9 +92,8 @@ def q_cogroup_asof_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r8 (VERDICT r7 item 5, guide §4): rewritten from cogrouped-map
     ``applyInPandas``+``merge_asof`` (the last heavy Python stage in the
-    headline bench; the template operator lives on in
-    ``operators/grouped.cogroup_asof``) to the native union-merge as-of
-    pattern already proven in ``asof_orders_before_events``: interleave
+    headline bench) to the native union-merge as-of pattern already
+    proven in ``asof_orders_before_events``: interleave
     views and purchases sorted by (ts, is_view) per user — views sort
     AFTER purchases at equal ts, so the prefix ``last(ignorenulls)``
     carries only STRICTLY-earlier views — one exchange, whole-stage
@@ -167,19 +163,70 @@ def q_fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_1", "id_2")
 
 
-ANALYTICS_QUERIES: dict[str, Query] = {
-    "ts_ols_trend": q_ts_ols_trend,
-    "ts_zscore_outliers": q_ts_zscore_outliers,
-    "ts_time_weighted_avg": q_ts_time_weighted_avg,
-    "ts_value_histogram": q_ts_value_histogram,
-    "ts_interpolate_linear": q_ts_interpolate_linear,
-    "grouped_minmax_norm": q_grouped_minmax_norm,
-    "cogroup_asof_view_purchase": q_cogroup_asof_view_purchase,
-    "fuzzy_part_name_pairs": q_fuzzy_part_name_pairs,
-}
-
-ANALYTICS_ORACLES: dict[str, str] = {
-    "ts_interpolate_linear": """
+query("ts_ols_trend", q_ts_ols_trend, """
+WITH base AS (
+  SELECT event_type,
+         (epoch_us(ts) // 86400000000) AS x,
+         value::DECIMAL(18,4) AS y
+  FROM events
+),
+m AS (
+  SELECT event_type, count(*) AS n,
+         sum(x)::BIGINT AS sx,
+         sum(y)::DECIMAL(20,4) AS sy,
+         sum((y * x::DECIMAL(9,0))::DECIMAL(28,4))::DECIMAL(28,4) AS sxy,
+         sum(x * x)::BIGINT AS sxx
+  FROM base GROUP BY event_type
+)
+SELECT event_type, n,
+  (n::DECIMAL(6,0) * sxy - sx::DECIMAL(10,0) * sy)::DOUBLE
+    / (n * sxx - sx * sx)::DOUBLE AS slope,
+  (sy::DOUBLE
+     - ((n::DECIMAL(6,0) * sxy - sx::DECIMAL(10,0) * sy)::DOUBLE
+        / (n * sxx - sx * sx)::DOUBLE) * sx::DOUBLE) / n::DOUBLE AS intercept
+FROM m ORDER BY event_type""")
+query("ts_zscore_outliers", q_ts_zscore_outliers, """
+-- operand casts are WIDER here than Spark's (20 vs 16/17 digits): DuckDB
+-- executes a decimal multiply in the operands' physical type, so width
+-- <= 18 operands multiply in int64 and overflow; the VALUES are exact
+-- and identical on both engines either way.
+WITH t AS (
+  SELECT event_type, value::DECIMAL(12,4) AS x FROM events
+),
+w AS (
+  SELECT event_type, x,
+    (count(*) OVER (PARTITION BY event_type))::DECIMAL(20,0) AS n,
+    (sum(x) OVER (PARTITION BY event_type))::DECIMAL(20,4) AS s1,
+    (sum(x * x) OVER (PARTITION BY event_type))::DECIMAL(24,8) AS s2
+  FROM t
+)
+SELECT event_type,
+  count(*) FILTER (
+    WHERE ((n * x - s1)::DECIMAL(20,4) * (n * x - s1)::DECIMAL(20,4))::DOUBLE
+      > 9.0 * ((n * s2)::DECIMAL(33,8) - (s1 * s1)::DECIMAL(33,8))::DOUBLE
+  ) AS n_outliers,
+  count(*) AS n
+FROM w GROUP BY event_type ORDER BY event_type""")
+query("ts_time_weighted_avg", q_ts_time_weighted_avg, """
+WITH s AS (
+  SELECT user_id, value::DECIMAL(18,4) AS v,
+    lead(epoch_us(ts) // 1000000)
+      OVER (PARTITION BY user_id ORDER BY ts, event_id)
+      - (epoch_us(ts) // 1000000) AS dt
+  FROM events
+),
+f AS (SELECT * FROM s WHERE dt IS NOT NULL)
+SELECT user_id,
+  sum((v * dt::DECIMAL(20,0))::DECIMAL(31,4))::DOUBLE
+    / sum(dt)::DOUBLE AS twa,
+  sum(dt)::BIGINT AS total_secs,
+  count(*) AS n_intervals
+FROM f GROUP BY user_id ORDER BY user_id""")
+query("ts_value_histogram", q_ts_value_histogram, """
+SELECT floor(value / 25.0)::BIGINT AS bucket, count(*) AS n,
+  sum(value::DECIMAL(18,4))::DOUBLE AS sum_value
+FROM events GROUP BY 1 ORDER BY 1""")
+query("ts_interpolate_linear", q_ts_interpolate_linear, """
 WITH obs AS (
   SELECT user_id, CAST(ts AS DATE) AS day, MAX(value) AS v
   FROM events GROUP BY user_id, CAST(ts AS DATE)
@@ -218,71 +265,8 @@ SELECT user_id, day,
   CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END AS is_observed
 FROM w
 ORDER BY user_id, day
-""",
-    "ts_ols_trend": """
-WITH base AS (
-  SELECT event_type,
-         (epoch_us(ts) // 86400000000) AS x,
-         value::DECIMAL(18,4) AS y
-  FROM events
-),
-m AS (
-  SELECT event_type, count(*) AS n,
-         sum(x)::BIGINT AS sx,
-         sum(y)::DECIMAL(20,4) AS sy,
-         sum((y * x::DECIMAL(9,0))::DECIMAL(28,4))::DECIMAL(28,4) AS sxy,
-         sum(x * x)::BIGINT AS sxx
-  FROM base GROUP BY event_type
-)
-SELECT event_type, n,
-  (n::DECIMAL(6,0) * sxy - sx::DECIMAL(10,0) * sy)::DOUBLE
-    / (n * sxx - sx * sx)::DOUBLE AS slope,
-  (sy::DOUBLE
-     - ((n::DECIMAL(6,0) * sxy - sx::DECIMAL(10,0) * sy)::DOUBLE
-        / (n * sxx - sx * sx)::DOUBLE) * sx::DOUBLE) / n::DOUBLE AS intercept
-FROM m ORDER BY event_type""",
-    "ts_zscore_outliers": """
--- operand casts are WIDER here than Spark's (20 vs 16/17 digits): DuckDB
--- executes a decimal multiply in the operands' physical type, so width
--- <= 18 operands multiply in int64 and overflow; the VALUES are exact
--- and identical on both engines either way.
-WITH t AS (
-  SELECT event_type, value::DECIMAL(12,4) AS x FROM events
-),
-w AS (
-  SELECT event_type, x,
-    (count(*) OVER (PARTITION BY event_type))::DECIMAL(20,0) AS n,
-    (sum(x) OVER (PARTITION BY event_type))::DECIMAL(20,4) AS s1,
-    (sum(x * x) OVER (PARTITION BY event_type))::DECIMAL(24,8) AS s2
-  FROM t
-)
-SELECT event_type,
-  count(*) FILTER (
-    WHERE ((n * x - s1)::DECIMAL(20,4) * (n * x - s1)::DECIMAL(20,4))::DOUBLE
-      > 9.0 * ((n * s2)::DECIMAL(33,8) - (s1 * s1)::DECIMAL(33,8))::DOUBLE
-  ) AS n_outliers,
-  count(*) AS n
-FROM w GROUP BY event_type ORDER BY event_type""",
-    "ts_time_weighted_avg": """
-WITH s AS (
-  SELECT user_id, value::DECIMAL(18,4) AS v,
-    lead(epoch_us(ts) // 1000000)
-      OVER (PARTITION BY user_id ORDER BY ts, event_id)
-      - (epoch_us(ts) // 1000000) AS dt
-  FROM events
-),
-f AS (SELECT * FROM s WHERE dt IS NOT NULL)
-SELECT user_id,
-  sum((v * dt::DECIMAL(20,0))::DECIMAL(31,4))::DOUBLE
-    / sum(dt)::DOUBLE AS twa,
-  sum(dt)::BIGINT AS total_secs,
-  count(*) AS n_intervals
-FROM f GROUP BY user_id ORDER BY user_id""",
-    "ts_value_histogram": """
-SELECT floor(value / 25.0)::BIGINT AS bucket, count(*) AS n,
-  sum(value::DECIMAL(18,4))::DOUBLE AS sum_value
-FROM events GROUP BY 1 ORDER BY 1""",
-    "grouped_minmax_norm": """
+""")
+query("grouped_minmax_norm", q_grouped_minmax_norm, """
 SELECT event_id, user_id, value,
   CASE WHEN max(value) OVER w = min(value) OVER w THEN value * 0.0
        ELSE (value - min(value) OVER w)
@@ -290,22 +274,21 @@ SELECT event_id, user_id, value,
   END AS norm_value
 FROM events
 WINDOW w AS (PARTITION BY user_id)
-ORDER BY event_id""",
-    "cogroup_asof_view_purchase": """
+ORDER BY event_id""")
+query("cogroup_asof_view_purchase", q_cogroup_asof_view_purchase, """
 SELECT p.user_id, p.event_id AS left_event_id, p.ts AS left_ts,
        v.event_id AS right_event_id, v.value AS right_value
 FROM (SELECT * FROM events WHERE event_type = 'purchase') p
 ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
   ON p.user_id = v.user_id AND p.ts > v.ts
-ORDER BY p.user_id, left_event_id""",
-    "fuzzy_part_name_pairs": """
+ORDER BY p.user_id, left_event_id""")
+query("fuzzy_part_name_pairs", q_fuzzy_part_name_pairs, """
 SELECT a.p_partkey AS id_1, b.p_partkey AS id_2,
        levenshtein(a.p_name, b.p_name)::BIGINT AS dist
 FROM part a
 JOIN part b ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
 WHERE levenshtein(a.p_name, b.p_name) <= 4
-ORDER BY id_1, id_2""",
-}
+ORDER BY id_1, id_2""")
 
 
 def q_arrow_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,20 +344,11 @@ def q_map_props_key_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES.update(
-    {
-        "arrow_group_stats": q_arrow_group_stats,
-        "nullsafe_join_counts": q_nullsafe_join_counts,
-        "map_props_key_stats": q_map_props_key_stats,
-    }
-)
-ANALYTICS_ORACLES.update(
-    {
-        "arrow_group_stats": """
+query("arrow_group_stats", q_arrow_group_stats, """
 SELECT user_id, count(*) AS n, min(event_id) AS min_id,
   max(event_id) AS max_id
-FROM events GROUP BY user_id ORDER BY user_id""",
-        "nullsafe_join_counts": """
+FROM events GROUP BY user_id ORDER BY user_id""")
+query("nullsafe_join_counts", q_nullsafe_join_counts, """
 WITH l AS (
   SELECT CASE WHEN event_id % 7 != 0 THEN user_id END AS k, event_id
   FROM events
@@ -386,20 +360,14 @@ r AS (
 )
 SELECT l.k, count(*) AS n_joined, max(r.r_n) AS r_n
 FROM l JOIN r ON l.k IS NOT DISTINCT FROM r.k
-GROUP BY l.k ORDER BY l.k ASC NULLS LAST""",
-        # json_each (table function) is unavailable in this DuckDB build;
-        # the testdata props carry exactly one key ('k', verified across
-        # all SFs), so per-key explode stats reduce to json_extract stats
-        # keyed by that literal.
-        "map_props_key_stats": """
+GROUP BY l.k ORDER BY l.k ASC NULLS LAST""")
+query("map_props_key_stats", q_map_props_key_stats, """
 SELECT 'k' AS key, count(*) AS n,
   sum(json_extract(props, '$.k')::BIGINT)::BIGINT AS sum_val,
   min(json_extract(props, '$.k')::BIGINT) AS min_val,
   max(json_extract(props, '$.k')::BIGINT) AS max_val
 FROM events WHERE json_extract(props, '$.k') IS NOT NULL
-GROUP BY 1 ORDER BY key""",
-    }
-)
+GROUP BY 1 ORDER BY key""")
 
 
 def q_max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,8 +419,7 @@ def q_max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["max_concurrent_sessions"] = q_max_concurrent_sessions
-ANALYTICS_ORACLES["max_concurrent_sessions"] = """
+query("max_concurrent_sessions", q_max_concurrent_sessions, """
 WITH p AS (
   SELECT user_id, ts AS start_ts, event_id
   FROM events WHERE event_type = 'purchase'
@@ -470,7 +437,7 @@ swept AS (
 )
 SELECT user_id, max(open_now)::BIGINT AS max_concurrent,
   (count(*) / 2)::BIGINT AS n_intervals
-FROM swept GROUP BY user_id ORDER BY user_id"""
+FROM swept GROUP BY user_id ORDER BY user_id""")
 
 
 def q_forward_fill_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,15 +496,7 @@ def q_mode_event_type_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES.update(
-    {
-        "forward_fill_values": q_forward_fill_values,
-        "mode_event_type_per_user": q_mode_event_type_per_user,
-    }
-)
-ANALYTICS_ORACLES.update(
-    {
-        "forward_fill_values": """
+query("forward_fill_values", q_forward_fill_values, """
 WITH gapped AS (
   SELECT user_id, event_id, ts,
     CASE WHEN event_id % 5 != 0 THEN value END AS v_gapped
@@ -547,8 +506,8 @@ SELECT user_id, event_id, v_gapped,
   last_value(v_gapped IGNORE NULLS) OVER (
     PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
-FROM gapped ORDER BY user_id, event_id""",
-        "mode_event_type_per_user": """
+FROM gapped ORDER BY user_id, event_id""")
+query("mode_event_type_per_user", q_mode_event_type_per_user, """
 WITH counts AS (
   SELECT user_id, event_type, count(*) AS cnt
   FROM events GROUP BY user_id, event_type
@@ -560,9 +519,7 @@ ranked AS (
   FROM counts
 )
 SELECT user_id, event_type AS mode_type, cnt
-FROM ranked WHERE rk = 1 ORDER BY user_id""",
-    }
-)
+FROM ranked WHERE rk = 1 ORDER BY user_id""")
 
 
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -576,8 +533,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id", "rk")
 
 
-ANALYTICS_QUERIES["tfidf_top_terms"] = q_tfidf_top_terms
-ANALYTICS_ORACLES["tfidf_top_terms"] = """
+query("tfidf_top_terms", q_tfidf_top_terms, """
 WITH toks AS (
   SELECT doc_id AS id,
     unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term
@@ -598,7 +554,7 @@ ranked AS (
   FROM scored
 )
 SELECT id, term, tf, df, score, rk FROM ranked WHERE rk <= 5
-ORDER BY id, rk"""
+ORDER BY id, rk""")
 
 
 def q_pearson_corr_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -686,15 +642,7 @@ def q_full_outer_user_reconciliation(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-ANALYTICS_QUERIES.update(
-    {
-        "pearson_corr_per_type": q_pearson_corr_per_type,
-        "full_outer_user_reconciliation": q_full_outer_user_reconciliation,
-    }
-)
-ANALYTICS_ORACLES.update(
-    {
-        "pearson_corr_per_type": """
+query("pearson_corr_per_type", q_pearson_corr_per_type, """
 WITH base AS (
   SELECT event_type,
     (epoch_us(ts) // 1000000 - (epoch_us(ts) // 86400000000) * 86400) AS x,
@@ -714,8 +662,8 @@ SELECT event_type, n,
     / sqrt((n * sxx - sx * sx)::DOUBLE
          * (n::DECIMAL(8,0) * syy - sy * sy)::DOUBLE)
   AS corr_value_timeofday
-FROM m ORDER BY event_type""",
-        "full_outer_user_reconciliation": """
+FROM m ORDER BY event_type""")
+query("full_outer_user_reconciliation", q_full_outer_user_reconciliation, """
 WITH ev_users AS (
   SELECT user_id AS ek, count(*) AS n_events FROM events GROUP BY user_id
 ),
@@ -729,9 +677,7 @@ SELECT CASE WHEN ek IS NOT NULL AND ck IS NOT NULL THEN 'both'
             WHEN ek IS NOT NULL THEN 'events_only'
             ELSE 'customers_only' END AS status,
   count(*) AS n_keys, sum(n_events)::BIGINT AS total_events
-FROM joined GROUP BY 1 ORDER BY status""",
-    }
-)
+FROM joined GROUP BY 1 ORDER BY status""")
 
 
 def q_udtf_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -810,10 +756,8 @@ def q_text_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["text_token_rarity"] = q_text_token_rarity
-# tokenization inlined (matches extra_queries._TOKS_SQL; module-level import
-# would cycle — extra_queries imports this module)
-ANALYTICS_ORACLES["text_token_rarity"] = r"""
+# tokenization spelled out: the same SQL as sqlfrag._TOKS_SQL
+query("text_token_rarity", q_text_token_rarity, r"""
 WITH toks AS (
   SELECT doc_id AS id,
     unnest(string_split(
@@ -830,7 +774,7 @@ ranked AS (
 SELECT id, count(*) AS n_tokens, sum(rarity_rank)::BIGINT AS rarity_sum
 FROM tf JOIN ranked USING (term)
 GROUP BY id ORDER BY id
-"""
+""")
 
 
 def q_ts_minmax_decimation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,12 +795,11 @@ def q_ts_minmax_decimation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["ts_minmax_decimation"] = q_ts_minmax_decimation
-ANALYTICS_ORACLES["ts_minmax_decimation"] = """
+query("ts_minmax_decimation", q_ts_minmax_decimation, """
 SELECT user_id, (epoch_us(ts) // 1000) // 21600000 AS bucket6h,
   count(*) AS n_points, min(value) AS v_min, max(value) AS v_max
 FROM events GROUP BY 1, 2 ORDER BY user_id, bucket6h
-"""
+""")
 
 
 def q_epoch_shuffle_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -883,8 +826,7 @@ def q_epoch_shuffle_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("epoch", "pos")
 
 
-ANALYTICS_QUERIES["epoch_shuffle_orders"] = q_epoch_shuffle_orders
-ANALYTICS_ORACLES["epoch_shuffle_orders"] = """
+query("epoch_shuffle_orders", q_epoch_shuffle_orders, """
 WITH e AS (SELECT 1 AS epoch UNION ALL SELECT 2)
 SELECT epoch, doc_id AS id,
   row_number() OVER (
@@ -892,7 +834,7 @@ SELECT epoch, doc_id AS id,
     ORDER BY md5(epoch::VARCHAR || ':' || doc_id::VARCHAR), doc_id) AS pos
 FROM documents, e
 ORDER BY epoch, pos
-"""
+""")
 
 
 def q_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -919,8 +861,7 @@ def q_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cal_date")
 
 
-ANALYTICS_QUERIES["calendar_dim"] = q_calendar_dim
-ANALYTICS_ORACLES["calendar_dim"] = """
+query("calendar_dim", q_calendar_dim, """
 WITH span AS (
   SELECT min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1 FROM events
 ),
@@ -935,7 +876,7 @@ SELECT d AS cal_date,
   CASE WHEN isodow(d) >= 6 THEN 1 ELSE 0 END AS is_weekend,
   date_trunc('month', d)::DATE AS month_start
 FROM days ORDER BY cal_date
-"""
+""")
 
 
 def q_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -967,8 +908,7 @@ def q_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["debounce_events"] = q_debounce_events
-ANALYTICS_ORACLES["debounce_events"] = """
+query("debounce_events", q_debounce_events, """
 WITH b AS (
   SELECT user_id, event_type, ts, event_id,
     (epoch_us(ts) // 1000) // 60000 AS bucket,
@@ -980,7 +920,7 @@ WITH b AS (
 SELECT user_id, event_type, count(*) AS n_kept
 FROM b WHERE rn = 1
 GROUP BY 1, 2 ORDER BY user_id, event_type
-"""
+""")
 
 
 def q_cooccurrence_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1020,8 +960,7 @@ def q_cooccurrence_event_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["cooccurrence_event_pairs"] = q_cooccurrence_event_pairs
-ANALYTICS_ORACLES["cooccurrence_event_pairs"] = """
+query("cooccurrence_event_pairs", q_cooccurrence_event_pairs, """
 WITH ut AS (SELECT DISTINCT user_id, event_type FROM events),
 pairs AS (
   SELECT a.event_type AS type_a, b.event_type AS type_b, count(*) AS n_both
@@ -1034,7 +973,7 @@ FROM pairs p
 JOIN singles sa ON p.type_a = sa.event_type
 JOIN singles sb ON p.type_b = sb.event_type
 ORDER BY type_a, type_b
-"""
+""")
 
 
 def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1055,8 +994,7 @@ def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["event_transition_matrix"] = q_event_transition_matrix
-ANALYTICS_ORACLES["event_transition_matrix"] = """
+query("event_transition_matrix", q_event_transition_matrix, """
 WITH seq AS (
   SELECT event_type AS from_type,
     lead(event_type) OVER (
@@ -1066,7 +1004,7 @@ WITH seq AS (
 SELECT from_type, to_type, count(*) AS n
 FROM seq WHERE to_type IS NOT NULL
 GROUP BY 1, 2 ORDER BY from_type, to_type
-"""
+""")
 
 
 def q_pseudonymize_user_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1086,12 +1024,11 @@ def q_pseudonymize_user_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["pseudonymize_user_ids"] = q_pseudonymize_user_ids
-ANALYTICS_ORACLES["pseudonymize_user_ids"] = """
+query("pseudonymize_user_ids", q_pseudonymize_user_ids, """
 SELECT sha256('pepper42:' || user_id::VARCHAR) AS user_token,
   count(*) AS n_events
 FROM events GROUP BY 1 ORDER BY user_token
-"""
+""")
 
 
 def q_text_nfc_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1121,8 +1058,7 @@ def q_text_nfc_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id")
 
 
-ANALYTICS_QUERIES["text_nfc_normalization"] = q_text_nfc_normalization
-ANALYTICS_ORACLES["text_nfc_normalization"] = """
+query("text_nfc_normalization", q_text_nfc_normalization, """
 WITH seeded AS (
   SELECT doc_id AS id,
     text || CASE WHEN doc_id % 9 = 0 THEN ' cafe' || chr(769) ELSE '' END AS t
@@ -1133,7 +1069,7 @@ SELECT id,
   length(nfc_normalize(t)) AS nfc_chars,
   md5(nfc_normalize(t)) AS nfc_hash
 FROM seeded ORDER BY id
-"""
+""")
 
 
 def q_pandas_api_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1159,12 +1095,11 @@ def q_pandas_api_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-ANALYTICS_QUERIES["pandas_api_event_stats"] = q_pandas_api_event_stats
-ANALYTICS_ORACLES["pandas_api_event_stats"] = """
+query("pandas_api_event_stats", q_pandas_api_event_stats, """
 SELECT event_type, count(*) AS n_events,
   sum(floor(value * 100)::BIGINT)::BIGINT AS cents
 FROM events GROUP BY event_type ORDER BY event_type
-"""
+""")
 
 
 def q_snapshot_diff_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1200,8 +1135,7 @@ def q_snapshot_diff_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["snapshot_diff_user_state"] = q_snapshot_diff_user_state
-ANALYTICS_ORACLES["snapshot_diff_user_state"] = """
+query("snapshot_diff_user_state", q_snapshot_diff_user_state, """
 WITH mid AS (
   SELECT sum(epoch_us(ts) // 1000) // count(*) AS mm FROM events
 ),
@@ -1228,7 +1162,7 @@ FROM old_state o FULL OUTER JOIN new_state n ON o.user_id = n.user_id
 WHERE (o.user_id IS NULL OR n.user_id IS NULL
        OR o.event_type IS DISTINCT FROM n.event_type)
 ORDER BY user_id
-"""
+""")
 
 
 def q_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1240,8 +1174,7 @@ def q_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scale.key_skew_report(li, ["l_suppkey"], top_k=10)
 
 
-ANALYTICS_QUERIES["key_skew_report"] = q_key_skew_report
-ANALYTICS_ORACLES["key_skew_report"] = """
+query("key_skew_report", q_key_skew_report, """
 WITH c AS (
   SELECT l_suppkey, count(*) AS n_rows FROM lineitem GROUP BY l_suppkey
 ),
@@ -1249,7 +1182,7 @@ t AS (SELECT count(*) AS total FROM lineitem)
 SELECT l_suppkey, n_rows,
   (n_rows * 10000) // total AS share_bps
 FROM c, t ORDER BY n_rows DESC, l_suppkey LIMIT 10
-"""
+""")
 
 
 def q_url_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1284,14 +1217,13 @@ def q_url_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["url_host_stats"] = q_url_host_stats
-ANALYTICS_ORACLES["url_host_stats"] = """
+query("url_host_stats", q_url_host_stats, """
 SELECT source || '.example.com' AS host,
   count(*) AS n_urls,
   count(DISTINCT '/docs/' || doc_id::VARCHAR) AS n_paths,
   count(DISTINCT lang) AS n_refs
 FROM documents GROUP BY 1 ORDER BY host
-"""
+""")
 
 
 def q_user_journey_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1323,8 +1255,7 @@ FROM journey_first5 GROUP BY user_id"""
     )
 
 
-ANALYTICS_QUERIES["user_journey_paths"] = q_user_journey_paths
-ANALYTICS_ORACLES["user_journey_paths"] = """
+query("user_journey_paths", q_user_journey_paths, """
 WITH r AS (
   SELECT user_id, event_type, ts, event_id,
     row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
@@ -1337,7 +1268,7 @@ p AS (
 )
 SELECT prefix, count(*) AS n_users
 FROM p GROUP BY prefix ORDER BY n_users DESC, prefix LIMIT 25
-"""
+""")
 
 
 def q_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1352,11 +1283,10 @@ def q_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["bitmap_distinct_users"] = q_bitmap_distinct_users
-ANALYTICS_ORACLES["bitmap_distinct_users"] = """
+query("bitmap_distinct_users", q_bitmap_distinct_users, """
 SELECT event_type, count(DISTINCT user_id) AS n_distinct
 FROM events GROUP BY event_type ORDER BY event_type
-"""
+""")
 
 
 def q_approx_topk_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1375,11 +1305,10 @@ def q_approx_topk_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["approx_topk_event_types"] = q_approx_topk_event_types
-ANALYTICS_ORACLES["approx_topk_event_types"] = """
+query("approx_topk_event_types", q_approx_topk_event_types, """
 SELECT event_type AS item, count(*) AS n
 FROM events GROUP BY event_type ORDER BY n DESC, item ASC LIMIT 10
-"""
+""")
 
 
 def q_rolling_median_values(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1398,14 +1327,13 @@ def q_rolling_median_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["rolling_median_values"] = q_rolling_median_values
-ANALYTICS_ORACLES["rolling_median_values"] = """
+query("rolling_median_values", q_rolling_median_values, """
 SELECT user_id, event_id,
   median(value) OVER (
     PARTITION BY user_id ORDER BY ts, event_id
     ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS rolling_median
 FROM events ORDER BY user_id, event_id
-"""
+""")
 
 
 def q_try_cast_safe_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1445,8 +1373,7 @@ def q_try_cast_safe_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["try_cast_safe_parsing"] = q_try_cast_safe_parsing
-ANALYTICS_ORACLES["try_cast_safe_parsing"] = """
+query("try_cast_safe_parsing", q_try_cast_safe_parsing, """
 WITH parsed AS (
   SELECT event_type,
     TRY_CAST(CASE WHEN event_id % 4 = 0 THEN event_type
@@ -1460,7 +1387,7 @@ SELECT event_type, count(*) AS n_rows,
   count(num) AS n_parsed_num, sum(num)::BIGINT AS sum_parsed_num,
   count(d) AS n_parsed_date, min(d) AS min_date
 FROM parsed GROUP BY event_type ORDER BY event_type
-"""
+""")
 
 
 def q_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1498,8 +1425,7 @@ def q_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     return out.orderBy("user_id")
 
 
-ANALYTICS_QUERIES["incremental_agg_maintenance"] = q_incremental_agg_maintenance
-ANALYTICS_ORACLES["incremental_agg_maintenance"] = """
+query("incremental_agg_maintenance", q_incremental_agg_maintenance, """
 WITH base AS (SELECT * FROM events WHERE event_id % 3 <> 0),
 ins AS (SELECT * FROM events WHERE event_id % 3 = 0),
 final_rows AS (
@@ -1510,7 +1436,7 @@ final_rows AS (
 )
 SELECT user_id, count(*)::BIGINT AS n_events, sum(cents)::BIGINT AS cents
 FROM final_rows GROUP BY user_id ORDER BY user_id
-"""
+""")
 
 
 def q_udtf_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1531,8 +1457,7 @@ ORDER BY user_id"""
     )
 
 
-ANALYTICS_QUERIES["udtf_ewma"] = q_udtf_ewma
-ANALYTICS_ORACLES["udtf_ewma"] = """
+query("udtf_ewma", q_udtf_ewma, """
 WITH RECURSIVE o AS (
   SELECT user_id, value,
          row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
@@ -1546,10 +1471,9 @@ r AS (
   FROM o JOIN r ON o.user_id = r.user_id AND o.rn = r.rn + 1
 )
 SELECT user_id, n::INT AS n_events, ewma FROM r WHERE rn = n ORDER BY user_id
-"""
+""")
 
-ANALYTICS_QUERIES["udtf_session_counts"] = q_udtf_session_counts
-ANALYTICS_ORACLES["udtf_session_counts"] = """
+query("udtf_session_counts", q_udtf_session_counts, """
 WITH g AS (
   SELECT user_id, ts,
     lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
@@ -1563,7 +1487,7 @@ f AS (
   FROM g
 )
 SELECT user_id, sum(new_s)::INT AS n_sessions, count(*)::INT AS n_events
-FROM f GROUP BY user_id ORDER BY user_id"""
+FROM f GROUP BY user_id ORDER BY user_id""")
 
 
 def q_dynamic_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1606,8 +1530,7 @@ def q_dynamic_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["dynamic_session_windows"] = q_dynamic_session_windows
-ANALYTICS_ORACLES["dynamic_session_windows"] = """
+query("dynamic_session_windows", q_dynamic_session_windows, """
 WITH base AS (
   SELECT user_id, ts, event_id, value,
     epoch_us(ts) AS ts_us,
@@ -1635,7 +1558,7 @@ SELECT user_id,
   count(*) AS n_events,
   sum(value::DECIMAL(18,4))::DOUBLE AS sum_value
 FROM sessions GROUP BY user_id, sid
-ORDER BY user_id, session_start"""
+ORDER BY user_id, session_start""")
 
 
 def q_sdp_daily_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1674,11 +1597,10 @@ def q_sdp_daily_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return results["sdp_daily_type_rollup"].orderBy("event_type", "epoch_day")
 
 
-ANALYTICS_QUERIES["sdp_daily_type_rollup"] = q_sdp_daily_type_rollup
-ANALYTICS_ORACLES["sdp_daily_type_rollup"] = """
+query("sdp_daily_type_rollup", q_sdp_daily_type_rollup, """
 SELECT event_type, (epoch_us(ts) // 86400000000) AS epoch_day,
   count(*) AS n, sum(value::DECIMAL(18,4))::DOUBLE AS sum_value
-FROM events GROUP BY 1, 2 ORDER BY event_type, epoch_day"""
+FROM events GROUP BY 1, 2 ORDER BY event_type, epoch_day""")
 
 
 def q_chi_square_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1729,8 +1651,7 @@ def q_chi_square_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source", "lang")
 
 
-ANALYTICS_QUERIES["chi_square_source_lang"] = q_chi_square_source_lang
-ANALYTICS_ORACLES["chi_square_source_lang"] = """
+query("chi_square_source_lang", q_chi_square_source_lang, """
 WITH obs AS (
   SELECT source, lang, count(*) AS n_obs FROM documents GROUP BY 1, 2
 ),
@@ -1749,7 +1670,7 @@ SELECT source, lang, n_obs,
    * (n_obs * n - n_row * n_col))::DOUBLE AS chi_num,
   (n::HUGEINT * n_row * n_col)::DOUBLE AS chi_den
 FROM cells ORDER BY source, lang
-"""
+""")
 
 
 def q_rank_family_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1794,8 +1715,7 @@ def q_rank_family_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderpriority", "rnk")
 
 
-ANALYTICS_QUERIES["rank_family_orders"] = q_rank_family_orders
-ANALYTICS_ORACLES["rank_family_orders"] = """
+query("rank_family_orders", q_rank_family_orders, """
 SELECT o_orderpriority, o_orderkey,
   rank() OVER w AS rnk,
   percent_rank() OVER w AS pct_rank,
@@ -1806,7 +1726,7 @@ WINDOW w AS (
   PARTITION BY o_orderpriority ORDER BY o_totalprice ASC, o_orderkey ASC
 )
 ORDER BY o_orderpriority, rnk
-"""
+""")
 
 
 def q_table_checksum_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1829,8 +1749,7 @@ def q_table_checksum_reconciliation(spark: SparkSession, sf_dir: str) -> DataFra
     return a.unionByName(b).orderBy("tbl")
 
 
-ANALYTICS_QUERIES["table_checksum_reconciliation"] = q_table_checksum_reconciliation
-ANALYTICS_ORACLES["table_checksum_reconciliation"] = """
+query("table_checksum_reconciliation", q_table_checksum_reconciliation, """
 SELECT 'orders' AS tbl, count(*) AS n_rows,
   (sum(('0x' || substr(md5(concat_ws('|', o_orderkey, o_custkey,
     o_orderstatus, o_orderpriority, o_orderdate, o_totalprice)),
@@ -1842,7 +1761,7 @@ SELECT 'customer', count(*),
     c_acctbal)), 1, 15))::BIGINT)::HUGEINT % 1152921504606846976)::BIGINT
 FROM customer
 ORDER BY tbl
-"""
+""")
 
 
 def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1904,8 +1823,7 @@ def q_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["last_touch_attribution"] = q_last_touch_attribution
-ANALYTICS_ORACLES["last_touch_attribution"] = """
+query("last_touch_attribution", q_last_touch_attribution, """
 WITH t AS (
   SELECT user_id, ts, event_id, event_type, value,
     last_value(CASE WHEN event_type IN ('click','view','signup')
@@ -1930,7 +1848,7 @@ p AS (
 )
 SELECT channel, count(*) AS n_purchases, sum(cents)::BIGINT AS revenue_cents
 FROM p GROUP BY channel ORDER BY channel
-"""
+""")
 
 
 def q_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1971,8 +1889,7 @@ def q_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-ANALYTICS_QUERIES["target_encoding_loo"] = q_target_encoding_loo
-ANALYTICS_ORACLES["target_encoding_loo"] = """
+query("target_encoding_loo", q_target_encoding_loo, """
 WITH base AS (
   SELECT event_id, event_type, floor(value * 100)::BIGINT AS cents,
     sum(floor(value * 100)::BIGINT) OVER (PARTITION BY event_type) AS cat_sum,
@@ -1983,7 +1900,7 @@ SELECT event_id, event_type, cents,
   CASE WHEN cat_n > 1 THEN cat_sum - cents END::BIGINT AS loo_num,
   CASE WHEN cat_n > 1 THEN cat_n - 1 END::BIGINT AS loo_den
 FROM base ORDER BY event_id
-"""
+""")
 
 
 def q_winsorized_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2022,8 +1939,7 @@ def q_winsorized_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["winsorized_value_stats"] = q_winsorized_value_stats
-ANALYTICS_ORACLES["winsorized_value_stats"] = """
+query("winsorized_value_stats", q_winsorized_value_stats, """
 WITH base AS (
   SELECT event_type, floor(value * 100)::BIGINT AS cents FROM events
 ),
@@ -2039,7 +1955,7 @@ SELECT b.event_type, count(*) AS n, min(lo)::BIGINT AS lo, min(hi)::BIGINT AS hi
   sum(greatest(least(cents, hi), lo))::BIGINT AS winsorized_cents
 FROM base b JOIN bounds USING (event_type)
 GROUP BY b.event_type ORDER BY b.event_type
-"""
+""")
 
 
 def q_rolling_active_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2069,8 +1985,7 @@ def q_rolling_active_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["rolling_active_users_7d"] = q_rolling_active_users_7d
-ANALYTICS_ORACLES["rolling_active_users_7d"] = """
+query("rolling_active_users_7d", q_rolling_active_users_7d, """
 WITH ud AS (
   SELECT DISTINCT user_id, ts::TIMESTAMP::DATE AS day FROM events
 ),
@@ -2080,7 +1995,7 @@ pairs AS (
 )
 SELECT active_day, count(*) AS active_users_7d
 FROM pairs GROUP BY active_day ORDER BY active_day
-"""
+""")
 
 
 def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2121,8 +2036,7 @@ def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("r_name", "n_name")
 
 
-ANALYTICS_QUERIES["nation_revenue_share"] = q_nation_revenue_share
-ANALYTICS_ORACLES["nation_revenue_share"] = """
+query("nation_revenue_share", q_nation_revenue_share, """
 WITH per_nation AS (
   SELECT r_name, n_name,
     sum((l_extendedprice::DECIMAL(18,4)
@@ -2139,7 +2053,7 @@ SELECT r_name, n_name, revenue::DOUBLE AS revenue,
   (revenue::DOUBLE / (sum(revenue) OVER (PARTITION BY r_name))::DOUBLE)
     AS region_share
 FROM per_nation ORDER BY r_name, n_name
-"""
+""")
 
 
 def q_set_ops_customer_years(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2172,8 +2086,7 @@ def q_set_ops_customer_years(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["set_ops_customer_years"] = q_set_ops_customer_years
-ANALYTICS_ORACLES["set_ops_customer_years"] = """
+query("set_ops_customer_years", q_set_ops_customer_years, """
 WITH y96 AS (
   SELECT DISTINCT o_custkey FROM orders
   WHERE year(o_orderdate::TIMESTAMP) = 1996
@@ -2195,7 +2108,7 @@ labeled AS (
 SELECT cohort, count(*) AS n_customers,
   min(o_custkey) AS min_custkey, max(o_custkey) AS max_custkey
 FROM labeled GROUP BY cohort ORDER BY cohort
-"""
+""")
 
 
 def q_argmax_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2229,8 +2142,7 @@ def q_argmax_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["argmax_latest_event"] = q_argmax_latest_event
-ANALYTICS_ORACLES["argmax_latest_event"] = """
+query("argmax_latest_event", q_argmax_latest_event, """
 WITH ranked AS (
   SELECT user_id, event_id, event_type,
     floor(value * 100)::BIGINT AS cents,
@@ -2242,7 +2154,7 @@ WITH ranked AS (
 SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
   cents AS last_cents
 FROM ranked WHERE rk = 1 ORDER BY user_id
-"""
+""")
 
 
 def q_grouping_sets_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2266,8 +2178,7 @@ ORDER BY gid, o_orderpriority, o_orderstatus
     )
 
 
-ANALYTICS_QUERIES["grouping_sets_order_stats"] = q_grouping_sets_order_stats
-ANALYTICS_ORACLES["grouping_sets_order_stats"] = """
+query("grouping_sets_order_stats", q_grouping_sets_order_stats, """
 SELECT o_orderpriority, o_orderstatus,
   grouping(o_orderpriority, o_orderstatus) AS gid,
   count(*) AS n_orders,
@@ -2275,7 +2186,7 @@ SELECT o_orderpriority, o_orderstatus,
 FROM orders
 GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
 ORDER BY gid, o_orderpriority, o_orderstatus
-"""
+""")
 
 
 def q_pit_feature_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2317,8 +2228,7 @@ def q_pit_feature_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-ANALYTICS_QUERIES["pit_feature_assembly"] = q_pit_feature_assembly
-ANALYTICS_ORACLES["pit_feature_assembly"] = """
+query("pit_feature_assembly", q_pit_feature_assembly, """
 WITH ev AS (
   SELECT user_id, event_id, event_type, ts::TIMESTAMP AS ts,
     floor(value * 100)::BIGINT AS cents
@@ -2341,7 +2251,7 @@ SELECT user_id, event_id, prior_events::BIGINT AS prior_events,
   coalesce(prior_cents, 0)::BIGINT AS prior_cents,
   prior_purchases::BIGINT AS prior_purchases, last_prior_type
 FROM feats WHERE event_type = 'purchase' ORDER BY event_id
-"""
+""")
 
 
 def q_grouped_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2363,8 +2273,7 @@ def q_grouped_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bucket")
 
 
-ANALYTICS_QUERIES["grouped_roc_auc"] = q_grouped_roc_auc
-ANALYTICS_ORACLES["grouped_roc_auc"] = """
+query("grouped_roc_auc", q_grouped_roc_auc, """
 WITH scored AS (
   SELECT user_id % 10 AS bucket,
     floor(value * 100)::BIGINT AS score,
@@ -2391,7 +2300,7 @@ SELECT bucket, n_pos, n_neg,
     (s2 - n_pos * (n_pos + 1))::DOUBLE / (2 * n_pos * n_neg)::DOUBLE
   END AS auc
 FROM agg ORDER BY bucket
-"""
+""")
 
 
 def q_sequence_pattern_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2423,8 +2332,7 @@ def q_sequence_pattern_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-ANALYTICS_QUERIES["sequence_pattern_counts"] = q_sequence_pattern_counts
-ANALYTICS_ORACLES["sequence_pattern_counts"] = """
+query("sequence_pattern_counts", q_sequence_pattern_counts, """
 WITH ev AS (
   SELECT user_id, ts::TIMESTAMP AS ts, event_id,
     CASE event_type WHEN 'click' THEN 'C' WHEN 'view' THEN 'V'
@@ -2438,7 +2346,7 @@ seqs AS (
 SELECT user_id, length(seq)::BIGINT AS seq_len,
   len(regexp_extract_all(seq, '[CV]+P'))::BIGINT AS n_matches
 FROM seqs ORDER BY user_id
-"""
+""")
 
 
 def q_basket_cooccurrence_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2454,13 +2362,12 @@ def q_basket_cooccurrence_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
     ).orderBy("item_a", "item_b")
 
 
-ANALYTICS_QUERIES["basket_cooccurrence_suppliers"] = q_basket_cooccurrence_suppliers
-ANALYTICS_ORACLES["basket_cooccurrence_suppliers"] = """
+query("basket_cooccurrence_suppliers", q_basket_cooccurrence_suppliers, """
 WITH d AS (SELECT DISTINCT l_orderkey AS b, l_suppkey AS i FROM lineitem)
 SELECT a.i AS item_a, b.i AS item_b, count(*) AS n_baskets
 FROM d a JOIN d b ON a.b = b.b AND a.i < b.i
 GROUP BY a.i, b.i ORDER BY item_a, item_b
-"""
+""")
 
 
 def q_profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2475,8 +2382,7 @@ def q_profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("column_name")
 
 
-ANALYTICS_QUERIES["profile_orders_columns"] = q_profile_orders_columns
-ANALYTICS_ORACLES["profile_orders_columns"] = """
+query("profile_orders_columns", q_profile_orders_columns, """
 SELECT * FROM (
   SELECT 'o_orderkey' AS column_name, count(o_orderkey) AS n_nonnull,
     count(DISTINCT o_orderkey) AS n_distinct,
@@ -2493,7 +2399,7 @@ SELECT * FROM (
     count(DISTINCT o_orderpriority),
     min(o_orderpriority), max(o_orderpriority) FROM orders
 ) ORDER BY column_name
-"""
+""")
 
 
 def q_daily_event_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2522,8 +2428,7 @@ def q_daily_event_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "day")
 
 
-ANALYTICS_QUERIES["daily_event_growth"] = q_daily_event_growth
-ANALYTICS_ORACLES["daily_event_growth"] = """
+query("daily_event_growth", q_daily_event_growth, """
 WITH daily AS (
   SELECT event_type, ts::TIMESTAMP::DATE AS day, count(*) AS n_events
   FROM events GROUP BY event_type, day
@@ -2534,7 +2439,7 @@ SELECT event_type, day, n_events,
 FROM daily
 WINDOW w AS (PARTITION BY event_type ORDER BY day)
 ORDER BY event_type, day
-"""
+""")
 
 
 def q_fulfillment_latency_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2557,14 +2462,13 @@ def q_fulfillment_latency_histogram(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-ANALYTICS_QUERIES["fulfillment_latency_histogram"] = q_fulfillment_latency_histogram
-ANALYTICS_ORACLES["fulfillment_latency_histogram"] = """
+query("fulfillment_latency_histogram", q_fulfillment_latency_histogram, """
 SELECT date_diff('day', o_orderdate::TIMESTAMP::DATE,
                  l_shipdate::TIMESTAMP::DATE) AS latency_days,
   count(*) AS n_lineitems
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY latency_days ORDER BY latency_days
-"""
+""")
 
 
 def q_user_engagement_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2591,14 +2495,13 @@ def q_user_engagement_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["user_engagement_ratio"] = q_user_engagement_ratio
-ANALYTICS_ORACLES["user_engagement_ratio"] = """
+query("user_engagement_ratio", q_user_engagement_ratio, """
 SELECT user_id,
   count(DISTINCT ts::TIMESTAMP::DATE) AS n_active_days,
   (date_diff('day', min(ts::TIMESTAMP::DATE), max(ts::TIMESTAMP::DATE))
    + 1)::BIGINT AS span_days
 FROM events GROUP BY user_id ORDER BY user_id
-"""
+""")
 
 
 def q_rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2675,8 +2578,7 @@ def q_rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["rfm_customer_segments"] = q_rfm_customer_segments
-ANALYTICS_ORACLES["rfm_customer_segments"] = """
+query("rfm_customer_segments", q_rfm_customer_segments, """
 WITH per_cust AS (
   SELECT o_custkey,
     max(o_orderdate::TIMESTAMP::DATE) AS last_order,
@@ -2694,7 +2596,7 @@ SELECT o_custkey,
   ntile(5) OVER (ORDER BY monetary_cents DESC, o_custkey ASC) AS m_score
 FROM per_cust CROSS JOIN asof_d
 ORDER BY o_custkey
-"""
+""")
 
 
 def q_market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2745,8 +2647,7 @@ def q_market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["market_concentration_hhi"] = q_market_concentration_hhi
-ANALYTICS_ORACLES["market_concentration_hhi"] = """
+query("market_concentration_hhi", q_market_concentration_hhi, """
 WITH rev AS (
   SELECT n_name, s_suppkey,
     sum(floor((l_extendedprice::DECIMAL(18,4)
@@ -2761,7 +2662,7 @@ SELECT n_name, count(*) AS n_suppliers,
   sum(dollars * dollars)::BIGINT AS hhi_num,
   (sum(dollars)::BIGINT * sum(dollars)::BIGINT)::BIGINT AS hhi_den
 FROM rev GROUP BY n_name ORDER BY n_name
-"""
+""")
 
 
 def q_pareto_abc_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2805,8 +2706,7 @@ def q_pareto_abc_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy(F.desc("cents"), F.asc("o_custkey"))
 
 
-ANALYTICS_QUERIES["pareto_abc_customers"] = q_pareto_abc_customers
-ANALYTICS_ORACLES["pareto_abc_customers"] = """
+query("pareto_abc_customers", q_pareto_abc_customers, """
 WITH per_cust AS (
   SELECT o_custkey,
     (sum(o_totalprice::DECIMAL(18,4)) * 100)::BIGINT AS cents
@@ -2825,7 +2725,7 @@ SELECT o_custkey, cents, cum_cents,
        ELSE 'C' END AS abc_class
 FROM ranked CROSS JOIN tot
 ORDER BY cents DESC, o_custkey ASC
-"""
+""")
 
 
 def q_gini_lang_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2862,8 +2762,7 @@ def q_gini_lang_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["gini_lang_diversity"] = q_gini_lang_diversity
-ANALYTICS_ORACLES["gini_lang_diversity"] = """
+query("gini_lang_diversity", q_gini_lang_diversity, """
 WITH by_lang AS (
   SELECT source, lang, count(*) AS c
   FROM documents WHERE lang IS NOT NULL
@@ -2875,7 +2774,7 @@ SELECT source,
   (sum(c)::BIGINT * sum(c)::BIGINT - sum(c * c)::BIGINT)::BIGINT AS gini_num,
   (sum(c)::BIGINT * sum(c)::BIGINT)::BIGINT AS gini_den
 FROM by_lang GROUP BY source ORDER BY source
-"""
+""")
 
 
 def q_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2924,8 +2823,7 @@ def q_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["interarrival_burstiness"] = q_interarrival_burstiness
-ANALYTICS_ORACLES["interarrival_burstiness"] = """
+query("interarrival_burstiness", q_interarrival_burstiness, """
 WITH gaps AS (
   SELECT user_id,
     (epoch_us(ts) // 1000000) - (epoch_us(lag(ts) OVER (
@@ -2941,7 +2839,7 @@ SELECT user_id,
 FROM gaps WHERE gap_s IS NOT NULL
 GROUP BY user_id HAVING count(*) >= 3
 ORDER BY user_id
-"""
+""")
 
 
 def q_seasonal_dow_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2982,8 +2880,7 @@ def q_seasonal_dow_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["seasonal_dow_deviation"] = q_seasonal_dow_deviation
-ANALYTICS_ORACLES["seasonal_dow_deviation"] = """
+query("seasonal_dow_deviation", q_seasonal_dow_deviation, """
 WITH daily AS (
   SELECT event_type, ts::DATE AS day, isodow(ts)::INT AS isodow,
          count(*) AS cnt
@@ -2998,7 +2895,7 @@ SELECT d.event_type, d.day, d.isodow, d.cnt,
        (2 * b.n_days * d.cnt > 3 * b.total) AS is_spike
 FROM daily d JOIN baseline b USING (event_type, isodow)
 ORDER BY d.event_type, d.day
-"""
+""")
 
 
 def q_collated_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3030,8 +2927,7 @@ def q_collated_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["collated_type_counts"] = q_collated_type_counts
-ANALYTICS_ORACLES["collated_type_counts"] = """
+query("collated_type_counts", q_collated_type_counts, """
 WITH noisy AS (
   SELECT CASE WHEN event_id % 2 = 0 THEN upper(event_type)
               ELSE event_type END AS raw_type, value
@@ -3041,7 +2937,7 @@ SELECT lower(raw_type) AS event_type,
   count(*) AS n_events,
   sum(floor(value * 100)::BIGINT)::BIGINT AS value_cents
 FROM noisy GROUP BY lower(raw_type) ORDER BY event_type
-"""
+""")
 
 
 def q_interval_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3077,8 +2973,7 @@ def q_interval_overlap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["interval_overlap_counts"] = q_interval_overlap_counts
-ANALYTICS_ORACLES["interval_overlap_counts"] = """
+query("interval_overlap_counts", q_interval_overlap_counts, """
 WITH iv AS (
   SELECT user_id AS iv_user, ts::DATE AS day,
          min(epoch_us(ts)) AS start_us
@@ -3091,7 +2986,7 @@ FROM iv2 JOIN events e
   ON epoch_us(e.ts) >= iv2.start_us AND epoch_us(e.ts) < iv2.end_us
 GROUP BY iv_user, day
 ORDER BY iv_user, day
-"""
+""")
 
 
 def q_fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3130,8 +3025,7 @@ def q_fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["fk_orphan_audit"] = q_fk_orphan_audit
-ANALYTICS_ORACLES["fk_orphan_audit"] = """
+query("fk_orphan_audit", q_fk_orphan_audit, """
 SELECT * FROM (
   SELECT 'lineitem->orders' AS relationship,
     (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
@@ -3153,7 +3047,7 @@ SELECT * FROM (
       (SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)),
     (SELECT count(*) FROM customer)
 ) ORDER BY relationship
-"""
+""")
 
 
 def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3197,8 +3091,7 @@ def q_weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["weighted_median_price"] = q_weighted_median_price
-ANALYTICS_ORACLES["weighted_median_price"] = """
+query("weighted_median_price", q_weighted_median_price, """
 WITH per_price AS (
   SELECT p_brand,
     floor((l_extendedprice::DECIMAL(18,4) * 100)
@@ -3218,7 +3111,7 @@ SELECT p_brand, min(price_cents) AS weighted_median_cents
 FROM cum JOIN tot USING (p_brand)
 WHERE 2 * cum_qty >= total_qty
 GROUP BY p_brand ORDER BY p_brand
-"""
+""")
 
 
 def q_skyline_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3237,8 +3130,7 @@ def q_skyline_price_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     return patterns.skyline_2d(pts, "size", "price_cents").orderBy("size")
 
 
-ANALYTICS_QUERIES["skyline_price_size"] = q_skyline_price_size
-ANALYTICS_ORACLES["skyline_price_size"] = """
+query("skyline_price_size", q_skyline_price_size, """
 WITH m AS (
   SELECT p_size AS size,
          min(floor(p_retailprice * 100)::BIGINT) AS price_cents
@@ -3251,7 +3143,7 @@ WHERE NOT EXISTS (
     AND (b.size < a.size OR b.price_cents < a.price_cents)
 )
 ORDER BY size
-"""
+""")
 
 
 def q_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3330,8 +3222,7 @@ def q_position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["position_attribution"] = q_position_attribution
-ANALYTICS_ORACLES["position_attribution"] = """
+query("position_attribution", q_position_attribution, """
 WITH base AS (
   SELECT user_id, ts, event_id, event_type,
          floor(value * 100)::BIGINT AS cents
@@ -3375,7 +3266,7 @@ credited AS (
 SELECT event_type, count(*) AS n_touches,
        sum(credit_cents)::BIGINT AS credited_cents
 FROM credited GROUP BY event_type ORDER BY event_type
-"""
+""")
 
 
 def q_udtf_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3411,8 +3302,7 @@ ORDER BY user_id"""
     )
 
 
-ANALYTICS_QUERIES["udtf_clamped_balance"] = q_udtf_clamped_balance
-ANALYTICS_ORACLES["udtf_clamped_balance"] = """
+query("udtf_clamped_balance", q_udtf_clamped_balance, """
 WITH RECURSIVE o AS (
   SELECT user_id,
     CASE WHEN event_type = 'purchase' THEN floor(value * 100)::BIGINT
@@ -3437,7 +3327,7 @@ r AS (
 )
 SELECT user_id, n::INT AS n_steps, bal AS final_cents, clamps::INT AS n_clamps
 FROM r WHERE rn = n ORDER BY user_id
-"""
+""")
 
 
 def q_spatial_nn_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3471,8 +3361,7 @@ def q_spatial_nn_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id")
 
 
-ANALYTICS_QUERIES["spatial_nn_customers"] = q_spatial_nn_customers
-ANALYTICS_ORACLES["spatial_nn_customers"] = """
+query("spatial_nn_customers", q_spatial_nn_customers, """
 WITH pts AS (
   SELECT c_custkey AS id,
     ('0x' || substr(md5('x:' || c_custkey), 1, 7))::BIGINT % 1000000 AS x,
@@ -3492,7 +3381,7 @@ ranked AS (
   FROM pairs
 )
 SELECT id, nn_id, d2 FROM ranked WHERE rn = 1 ORDER BY id
-"""
+""")
 
 
 def q_spatial_density_cores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3522,8 +3411,7 @@ def q_spatial_density_cores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id")
 
 
-ANALYTICS_QUERIES["spatial_density_cores"] = q_spatial_density_cores
-ANALYTICS_ORACLES["spatial_density_cores"] = """
+query("spatial_density_cores", q_spatial_density_cores, """
 WITH pts AS (
   SELECT c_custkey AS id,
     ('0x' || substr(md5('x:' || c_custkey), 1, 7))::BIGINT % 1000000 AS x,
@@ -3541,7 +3429,7 @@ SELECT p.id, coalesce(c.n_neighbors, 0)::BIGINT AS n_neighbors,
        coalesce(c.n_neighbors, 0) >= 3 AS is_core
 FROM pts p LEFT JOIN cnt c USING (id)
 ORDER BY p.id
-"""
+""")
 
 
 def q_tvd_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3620,8 +3508,7 @@ def q_tvd_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["tvd_drift_weekly"] = q_tvd_drift_weekly
-ANALYTICS_ORACLES["tvd_drift_weekly"] = """
+query("tvd_drift_weekly", q_tvd_drift_weekly, """
 WITH wk AS (
   SELECT weekofyear(ts)::INT AS week, event_type, count(*) AS c
   FROM events GROUP BY 1, 2
@@ -3645,7 +3532,7 @@ SELECT week_a, week_b,
   (2 * n_a * n_b)::BIGINT AS tvd_den
 FROM types GROUP BY week_a, week_b, n_a, n_b
 ORDER BY week_a
-"""
+""")
 
 
 def q_entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3667,8 +3554,7 @@ def q_entity_resolution_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.duplicate_clusters(pairs, ids).orderBy("id")
 
 
-ANALYTICS_QUERIES["entity_resolution_parts"] = q_entity_resolution_parts
-ANALYTICS_ORACLES["entity_resolution_parts"] = """
+query("entity_resolution_parts", q_entity_resolution_parts, """
 WITH RECURSIVE dup_pairs AS (
   SELECT a.p_partkey AS id_a, b.p_partkey AS id_b
   FROM part a JOIN part b
@@ -3694,7 +3580,7 @@ SELECT p.p_partkey AS id,
        THEN 1 ELSE 0 END AS is_canonical
 FROM part p LEFT JOIN comp c ON p.p_partkey = c.id
 ORDER BY id
-"""
+""")
 
 
 def q_time_to_convert_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3755,8 +3641,7 @@ def q_time_to_convert_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["time_to_convert_median"] = q_time_to_convert_median
-ANALYTICS_ORACLES["time_to_convert_median"] = """
+query("time_to_convert_median", q_time_to_convert_median, """
 WITH firsts AS (
   SELECT user_id,
     min(CASE WHEN event_type = 'signup'
@@ -3785,7 +3670,7 @@ SELECT signup_week, n_users::BIGINT AS n_users,
        min(lat_s)::BIGINT AS median_latency_s
 FROM cum WHERE 2 * cum_n >= n_users
 GROUP BY signup_week, n_users ORDER BY signup_week
-"""
+""")
 
 
 def q_embedding_hygiene_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3830,8 +3715,7 @@ def q_embedding_hygiene_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["embedding_hygiene_audit"] = q_embedding_hygiene_audit
-ANALYTICS_ORACLES["embedding_hygiene_audit"] = """
+query("embedding_hygiene_audit", q_embedding_hygiene_audit, """
 SELECT label,
   count(*) AS n_vectors,
   min(len(embedding))::INT AS min_dim,
@@ -3846,7 +3730,7 @@ SELECT label,
   sum(CASE WHEN embedding IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_null_rows
 FROM embeddings
 GROUP BY label ORDER BY label
-"""
+""")
 
 
 def q_association_rules_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3894,8 +3778,7 @@ def q_association_rules_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-ANALYTICS_QUERIES["association_rules_suppliers"] = q_association_rules_suppliers
-ANALYTICS_ORACLES["association_rules_suppliers"] = """
+query("association_rules_suppliers", q_association_rules_suppliers, """
 WITH bi AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
 ic AS (SELECT l_suppkey, count(*)::BIGINT AS cnt FROM bi GROUP BY 1),
 nb AS (SELECT count(DISTINCT l_orderkey)::BIGINT AS n_baskets FROM bi),
@@ -3914,7 +3797,7 @@ JOIN ic ca ON ca.l_suppkey = p.item_a
 JOIN ic cb ON cb.l_suppkey = p.item_b
 CROSS JOIN nb
 ORDER BY p.item_a, p.item_b
-"""
+""")
 
 
 def q_benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3962,8 +3845,7 @@ def q_benford_price_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("digit")
 
 
-ANALYTICS_QUERIES["benford_price_audit"] = q_benford_price_audit
-ANALYTICS_ORACLES["benford_price_audit"] = """
+query("benford_price_audit", q_benford_price_audit, """
 WITH c AS (
   SELECT CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR),
                         1, 1) AS INT) AS digit,
@@ -3980,7 +3862,7 @@ SELECT b.digit, coalesce(c.cnt, 0)::BIGINT AS cnt, t.total,
   (1000 * b.p_mille * t.total)::BIGINT AS chi_den
 FROM b LEFT JOIN c ON b.digit = c.digit CROSS JOIN t
 ORDER BY b.digit
-"""
+""")
 
 
 def q_ab_test_two_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4036,8 +3918,7 @@ def q_ab_test_two_proportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["ab_test_two_proportion"] = q_ab_test_two_proportion
-ANALYTICS_ORACLES["ab_test_two_proportion"] = """
+query("ab_test_two_proportion", q_ab_test_two_proportion, """
 WITH pu AS (
   SELECT user_id,
          max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
@@ -4062,7 +3943,7 @@ SELECT x_a, n_a, x_b, n_b,
        * (n_a + n_b - x_a - x_b)::DOUBLE)
   END AS z_squared
 FROM r
-"""
+""")
 
 
 def q_mad_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4129,8 +4010,7 @@ def q_mad_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["mad_value_outliers"] = q_mad_value_outliers
-ANALYTICS_ORACLES["mad_value_outliers"] = """
+query("mad_value_outliers", q_mad_value_outliers, """
 WITH vals AS (
   SELECT event_type, value, count(*)::BIGINT AS c
   FROM events GROUP BY 1, 2),
@@ -4165,7 +4045,7 @@ SELECT d.event_type, d.med, m.mad,
 FROM dev d JOIN mad m ON d.event_type = m.event_type
 GROUP BY 1, 2, 3
 ORDER BY d.event_type
-"""
+""")
 
 
 def q_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4201,8 +4081,7 @@ def q_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["seasonal_naive_backtest"] = q_seasonal_naive_backtest
-ANALYTICS_ORACLES["seasonal_naive_backtest"] = """
+query("seasonal_naive_backtest", q_seasonal_naive_backtest, """
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d, count(*)::BIGINT AS c
   FROM events GROUP BY 1, 2),
@@ -4215,7 +4094,7 @@ SELECT daily.event_type,
 FROM daily JOIN prev
   ON daily.event_type = prev.event_type AND daily.d = prev.d
 GROUP BY 1 ORDER BY 1
-"""
+""")
 
 
 def gap_audit(keys: DataFrame, key: str, bucket_size: int = 4096) -> DataFrame:
@@ -4278,8 +4157,7 @@ def q_orderkey_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gap_audit(_read(spark, sf_dir, "orders"), "o_orderkey")
 
 
-ANALYTICS_QUERIES["orderkey_gap_audit"] = q_orderkey_gap_audit
-ANALYTICS_ORACLES["orderkey_gap_audit"] = """
+query("orderkey_gap_audit", q_orderkey_gap_audit, """
 WITH k AS (SELECT DISTINCT o_orderkey::BIGINT AS k FROM orders),
 g AS (SELECT k, lead(k) OVER (ORDER BY k) AS nk FROM k)
 SELECT count(*)::BIGINT AS n_keys,
@@ -4291,7 +4169,7 @@ SELECT count(*)::BIGINT AS n_keys,
   coalesce(max(CASE WHEN nk > k + 1 THEN nk - k - 1 END), 0)::BIGINT
     AS max_gap_len
 FROM g
-"""
+""")
 
 
 def q_nation_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4320,15 +4198,14 @@ def q_nation_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["nation_segment_rollup"] = q_nation_segment_rollup
-ANALYTICS_ORACLES["nation_segment_rollup"] = """
+query("nation_segment_rollup", q_nation_segment_rollup, """
 SELECT n_name AS nation,
   count(*)::BIGINT AS n_customers,
   string_agg(DISTINCT c_mktsegment, ',' ORDER BY c_mktsegment)
     AS segments
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 GROUP BY 1 ORDER BY 1
-"""
+""")
 
 
 def q_rank_movers_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4372,8 +4249,7 @@ def q_rank_movers_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["rank_movers_weekly"] = q_rank_movers_weekly
-ANALYTICS_ORACLES["rank_movers_weekly"] = """
+query("rank_movers_weekly", q_rank_movers_weekly, """
 WITH weekly AS (
   SELECT date_trunc('week', ts)::DATE AS week, event_type,
     count(*)::BIGINT AS cnt
@@ -4386,7 +4262,7 @@ SELECT week, event_type, cnt, rnk,
   (lag(rnk) OVER (PARTITION BY event_type ORDER BY week) - rnk)::INT
     AS rank_delta
 FROM ranked ORDER BY week, rnk
-"""
+""")
 
 
 def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4441,8 +4317,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["cusum_changepoint"] = q_cusum_changepoint
-ANALYTICS_ORACLES["cusum_changepoint"] = """
+query("cusum_changepoint", q_cusum_changepoint, """
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS d, count(*)::BIGINT AS c
   FROM events GROUP BY 1, 2),
@@ -4463,7 +4338,7 @@ SELECT event_type, d AS changepoint_day,
   n_days::BIGINT AS n_days,
   total::BIGINT AS total
 FROM scored WHERE rn = 1 ORDER BY event_type
-"""
+""")
 
 
 def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4510,9 +4385,6 @@ def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bucket")
 
 
-ANALYTICS_QUERIES["vocab_growth_curve"] = q_vocab_growth_curve
-
-
 def _vocab_growth_oracle() -> str:
     from .sqlfrag import _TOKS_SQL
 
@@ -4539,7 +4411,7 @@ FROM j ORDER BY bucket
 """
 
 
-ANALYTICS_ORACLES["vocab_growth_curve"] = _vocab_growth_oracle()
+query("vocab_growth_curve", q_vocab_growth_curve, _vocab_growth_oracle())
 
 
 def q_event_disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4586,8 +4458,7 @@ def q_event_disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["event_disorder_audit"] = q_event_disorder_audit
-ANALYTICS_ORACLES["event_disorder_audit"] = """
+query("event_disorder_audit", q_event_disorder_audit, """
 WITH e AS (
   SELECT event_type, event_id, epoch_us(ts) AS us FROM events),
 r AS (
@@ -4600,7 +4471,7 @@ SELECT event_type,
   count(CASE WHEN mx - us > 3600000000 THEN 1 END)::BIGINT AS n_late_1h,
   (max(mx - us) // 1000000)::BIGINT AS max_lateness_s
 FROM r GROUP BY 1 ORDER BY 1
-"""
+""")
 
 
 def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4641,8 +4512,7 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["k_anonymity_audit"] = q_k_anonymity_audit
-ANALYTICS_ORACLES["k_anonymity_audit"] = """
+query("k_anonymity_audit", q_k_anonymity_audit, """
 WITH classes AS (
   SELECT c_nationkey,
     (CAST(c_acctbal * 100 AS BIGINT) // 100000) AS bal_band,
@@ -4655,7 +4525,7 @@ SELECT count(*)::BIGINT AS n_classes,
   count(CASE WHEN sz < 5 THEN 1 END)::BIGINT AS n_classes_lt5,
   coalesce(sum(CASE WHEN sz < 5 THEN sz END), 0)::BIGINT AS rows_at_risk
 FROM classes
-"""
+""")
 
 
 def q_phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4694,8 +4564,7 @@ def q_phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["phrase_search_positional"] = q_phrase_search_positional
-ANALYTICS_ORACLES["phrase_search_positional"] = """
+query("phrase_search_positional", q_phrase_search_positional, """
 WITH toks AS (
   SELECT source,
     string_split(trim(regexp_replace(lower(text), '[^a-z]+', ' ', 'g')), ' ')
@@ -4710,7 +4579,7 @@ occ AS (
 SELECT source, count(CASE WHEN occ > 0 THEN 1 END)::BIGINT AS docs_matched,
   sum(occ)::BIGINT AS occurrences
 FROM occ GROUP BY source ORDER BY source
-"""
+""")
 
 
 def q_equidepth_histogram_price(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4744,8 +4613,7 @@ def q_equidepth_histogram_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["equidepth_histogram_price"] = q_equidepth_histogram_price
-ANALYTICS_ORACLES["equidepth_histogram_price"] = """
+query("equidepth_histogram_price", q_equidepth_histogram_price, """
 WITH b AS (
   SELECT floor(o_totalprice::DECIMAL(18,4) * 100)::BIGINT AS c, o_orderkey,
     ntile(10) OVER (ORDER BY floor(o_totalprice::DECIMAL(18,4) * 100)::BIGINT,
@@ -4754,7 +4622,7 @@ WITH b AS (
 SELECT decile::INT AS decile, count(*)::BIGINT AS n, min(c)::BIGINT AS lo_cents,
   max(c)::BIGINT AS hi_cents, sum(c)::BIGINT AS sum_cents
 FROM b GROUP BY decile ORDER BY decile
-"""
+""")
 
 
 def q_prorate_order_total_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4808,8 +4676,7 @@ def q_prorate_order_total_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["prorate_order_total_cents"] = q_prorate_order_total_cents
-ANALYTICS_ORACLES["prorate_order_total_cents"] = """
+query("prorate_order_total_cents", q_prorate_order_total_cents, """
 WITH lines AS (
   SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
     floor(l_extendedprice::DECIMAL(18,4) * 100)::BIGINT AS w
@@ -4835,7 +4702,7 @@ SELECT count(DISTINCT l_orderkey)::BIGINT AS n_orders,
   sum(CASE WHEN rk = 1 THEN total END)::BIGINT AS sum_total_cents,
   sum(CASE WHEN rk <= rem THEN 1 ELSE 0 END)::BIGINT AS n_bumped_lines
 FROM r
-"""
+""")
 
 
 def q_hll_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4869,12 +4736,11 @@ def q_hll_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["hll_accuracy_audit"] = q_hll_accuracy_audit
-ANALYTICS_ORACLES["hll_accuracy_audit"] = """
+query("hll_accuracy_audit", q_hll_accuracy_audit, """
 SELECT event_type, count(DISTINCT user_id)::BIGINT AS exact_users,
   TRUE AS within_5pct
 FROM events GROUP BY event_type ORDER BY event_type
-"""
+""")
 
 
 def q_pps_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4925,8 +4791,7 @@ def q_pps_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["pps_systematic_sample"] = q_pps_systematic_sample
-ANALYTICS_ORACLES["pps_systematic_sample"] = """
+query("pps_systematic_sample", q_pps_systematic_sample, """
 WITH c AS (
   SELECT o_orderkey,
     floor(o_totalprice::DECIMAL(18,4) * 100)::BIGINT AS w,
@@ -4946,7 +4811,7 @@ x AS (
       - (m_lo // 2) + 1)::BIGINT AS mult
   FROM m)
 SELECT o_orderkey, w, mult FROM x WHERE mult > 0 ORDER BY o_orderkey
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -5089,14 +4954,14 @@ def q_bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-ANALYTICS_QUERIES["bm25_doc_ranking"] = q_bm25_doc_ranking
-ANALYTICS_ORACLES["bm25_doc_ranking"] = (
+query(
+    "bm25_doc_ranking", q_bm25_doc_ranking,
     _BM25_SCORE_SQL
     + """
 SELECT doc_id, dl, score,
   row_number() OVER (ORDER BY score DESC, doc_id)::INT AS rank
 FROM bm25 ORDER BY score DESC, doc_id LIMIT 50
-"""
+""",
 )
 
 
@@ -5149,10 +5014,7 @@ def q_rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(30)
 
 
-ANALYTICS_QUERIES["rrf_hybrid_search"] = q_rrf_hybrid_search
-ANALYTICS_ORACLES["rrf_hybrid_search"] = (
-    _BM25_SCORE_SQL
-    + """,
+_RRF_ORACLE = _BM25_SCORE_SQL + """,
 lex AS (
   SELECT doc_id,
     row_number() OVER (ORDER BY score DESC, doc_id)::INT AS lex_rank
@@ -5176,7 +5038,7 @@ fused AS (
 SELECT doc_id, lex_rank, vec_rank, rrf FROM fused
 ORDER BY rrf DESC, doc_id LIMIT 30
 """
-)
+query("rrf_hybrid_search", q_rrf_hybrid_search, _RRF_ORACLE)
 
 
 def q_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5225,8 +5087,7 @@ def q_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["interval_union_coverage"] = q_interval_union_coverage
-ANALYTICS_ORACLES["interval_union_coverage"] = """
+query("interval_union_coverage", q_interval_union_coverage, """
 WITH iv AS (
   SELECT user_id, event_id,
     epoch_us(ts) // 1000000 AS s,
@@ -5249,7 +5110,7 @@ g AS (
 SELECT user_id, sum(n)::BIGINT AS n_events, count(*)::BIGINT AS n_islands,
   sum(en - st)::BIGINT AS covered_sec
 FROM g GROUP BY user_id ORDER BY user_id
-"""
+""")
 
 
 def q_zorder_clustering_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5305,8 +5166,7 @@ def _zvalue_sql(k1: str, k2: str, bits: int = 8) -> str:
     return " + ".join(terms)
 
 
-ANALYTICS_QUERIES["zorder_clustering_audit"] = q_zorder_clustering_audit
-ANALYTICS_ORACLES["zorder_clustering_audit"] = f"""
+query("zorder_clustering_audit", q_zorder_clustering_audit, f"""
 WITH k AS (
   SELECT o_custkey % 256 AS k1, o_orderkey % 256 AS k2 FROM orders),
 z AS (
@@ -5320,7 +5180,7 @@ g AS (
 SELECT file_id, n_rows, min_k1, max_k1, min_k2, max_k2,
   max_k1 - min_k1 AS span_k1, max_k2 - min_k2 AS span_k2
 FROM g ORDER BY file_id
-"""
+""")
 
 
 def q_salted_join_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5354,14 +5214,13 @@ def q_salted_join_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-ANALYTICS_QUERIES["salted_join_supplier_revenue"] = q_salted_join_supplier_revenue
-ANALYTICS_ORACLES["salted_join_supplier_revenue"] = """
+query("salted_join_supplier_revenue", q_salted_join_supplier_revenue, """
 SELECT s_nationkey, count(*)::BIGINT AS n_items,
   sum(floor(l_extendedprice::DECIMAL(18,4) * 100)::BIGINT)::BIGINT
     AS revenue_cents
 FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
 GROUP BY s_nationkey ORDER BY s_nationkey
-"""
+""")
 
 
 def q_ts_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5428,8 +5287,7 @@ def q_ts_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "lag")
 
 
-ANALYTICS_QUERIES["ts_autocorr_daily"] = q_ts_autocorr_daily
-ANALYTICS_ORACLES["ts_autocorr_daily"] = """
+query("ts_autocorr_daily", q_ts_autocorr_daily, """
 WITH daily AS (
   SELECT event_type, epoch_us(ts) // 86400000000 AS day,
     sum(floor(value::DECIMAL(12,4) * 100)::BIGINT)::BIGINT AS x
@@ -5458,7 +5316,7 @@ SELECT event_type, lag, n AS n_pairs,
     / sqrt((n::HUGEINT * saa - sa::HUGEINT * sa::HUGEINT)::DOUBLE
            * (n::HUGEINT * sbb - sb::HUGEINT * sb::HUGEINT)::DOUBLE) AS acf
 FROM m ORDER BY event_type, lag
-"""
+""")
 
 
 def q_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5496,8 +5354,7 @@ def q_join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["join_cardinality_estimate"] = q_join_cardinality_estimate
-ANALYTICS_ORACLES["join_cardinality_estimate"] = """
+query("join_cardinality_estimate", q_join_cardinality_estimate, """
 WITH l AS (SELECT user_id AS k, count(*)::BIGINT AS n_left FROM events GROUP BY user_id),
 r AS (SELECT o_custkey AS k, count(*)::BIGINT AS n_right FROM orders GROUP BY o_custkey),
 c AS (
@@ -5507,7 +5364,7 @@ t AS (SELECT sum(contrib)::BIGINT AS est_join_rows FROM c)
 SELECT k, n_left, n_right, contrib, t.est_join_rows,
   contrib * 10000 // t.est_join_rows AS share_bps
 FROM c, t ORDER BY contrib DESC, k LIMIT 15
-"""
+""")
 
 
 def q_langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5535,9 +5392,6 @@ def q_langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("actual", "predicted")
     )
-
-
-ANALYTICS_QUERIES["langid_confusion_matrix"] = q_langid_confusion_matrix
 
 
 def _langid_confusion_oracle() -> str:
@@ -5568,7 +5422,7 @@ ORDER BY cells.actual, predicted
 """
 
 
-ANALYTICS_ORACLES["langid_confusion_matrix"] = _langid_confusion_oracle()
+query("langid_confusion_matrix", q_langid_confusion_matrix, _langid_confusion_oracle())
 
 
 def q_array_hof_order_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5606,8 +5460,7 @@ def q_array_hof_order_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["array_hof_order_top3"] = q_array_hof_order_top3
-ANALYTICS_ORACLES["array_hof_order_top3"] = """
+query("array_hof_order_top3", q_array_hof_order_top3, """
 WITH arr AS (
   SELECT l_orderkey,
     list_sort(list(floor(l_extendedprice::DECIMAL(18,4) * 100)::BIGINT),
@@ -5617,7 +5470,7 @@ SELECT l_orderkey, len(a)::INT AS n_items,
   list_aggregate(a[1:3], 'sum')::BIGINT AS top3_cents,
   len(list_filter(a, x -> x > 200000)) > 0 AS has_big_item
 FROM arr WHERE len(a) >= 4 ORDER BY l_orderkey
-"""
+""")
 
 
 def q_multimodal_patch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5635,8 +5488,7 @@ def q_multimodal_patch_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.patchify_plan(decoded, patch=16).orderBy("media_id")
 
 
-ANALYTICS_QUERIES["multimodal_patch_grid"] = q_multimodal_patch_grid
-ANALYTICS_ORACLES["multimodal_patch_grid"] = """
+query("multimodal_patch_grid", q_multimodal_patch_grid, """
 WITH h AS (
   SELECT doc_id AS media_id,
     ('0x' || substr(md5(text), 1, 8))::BIGINT AS hv
@@ -5656,7 +5508,7 @@ SELECT media_id, width, height, n_patches_x, n_patches_y,
   n_patches_y * 16 - height AS pad_y,
   n_patches_x * n_patches_y + 1 AS n_tokens
 FROM grid ORDER BY media_id
-"""
+""")
 
 
 def q_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5685,8 +5537,7 @@ def q_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["new_vs_returning_daily"] = q_new_vs_returning_daily
-ANALYTICS_ORACLES["new_vs_returning_daily"] = """
+query("new_vs_returning_daily", q_new_vs_returning_daily, """
 WITH active AS (
   SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
 first AS (
@@ -5696,7 +5547,7 @@ SELECT day,
   sum(CASE WHEN day != first_day THEN 1 ELSE 0 END)::BIGINT AS returning_users
 FROM active JOIN first USING (user_id)
 GROUP BY day ORDER BY day
-"""
+""")
 
 
 def q_revenue_bridge_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5759,8 +5610,7 @@ def q_revenue_bridge_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["revenue_bridge_mom"] = q_revenue_bridge_mom
-ANALYTICS_ORACLES["revenue_bridge_mom"] = """
+query("revenue_bridge_mom", q_revenue_bridge_mom, """
 WITH cm AS (
   SELECT o_custkey,
     date_part('year', o_orderdate)::BIGINT * 12
@@ -5784,7 +5634,7 @@ SELECT month,
       THEN greatest(prev_rev - curr_rev, 0) ELSE 0 END)::BIGINT AS contraction,
   sum(CASE WHEN curr_rev IS NULL THEN coalesce(prev_rev, 0) ELSE 0 END)::BIGINT AS churned_rev
 FROM both_m GROUP BY month ORDER BY month
-"""
+""")
 
 
 def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5859,8 +5709,7 @@ def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merges.orderBy("iter")
 
 
-ANALYTICS_QUERIES["bpe_learn_merges"] = q_bpe_learn_merges
-ANALYTICS_ORACLES["bpe_learn_merges"] = """
+query("bpe_learn_merges", q_bpe_learn_merges, """
 WITH toks AS (
   SELECT unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS w
   FROM documents),
@@ -5896,7 +5745,7 @@ SELECT 1 AS iter, pair, cnt AS weighted_count FROM t1
 UNION ALL SELECT 2, pair, cnt FROM t2
 UNION ALL SELECT 3, pair, cnt FROM t3
 ORDER BY iter
-"""
+""")
 
 
 def q_topk_events_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5920,8 +5769,7 @@ def q_topk_events_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "rk")
 
 
-ANALYTICS_QUERIES["topk_events_two_phase"] = q_topk_events_two_phase
-ANALYTICS_ORACLES["topk_events_two_phase"] = """
+query("topk_events_two_phase", q_topk_events_two_phase, """
 WITH ranked AS (
   SELECT event_type, event_id,
     floor(value::DECIMAL(12,4) * 100)::BIGINT AS cents,
@@ -5931,7 +5779,7 @@ WITH ranked AS (
   FROM events)
 SELECT event_type, event_id, cents, rk::BIGINT AS rk
 FROM ranked WHERE rk <= 3 ORDER BY event_type, rk
-"""
+""")
 
 
 def q_global_median_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5950,8 +5798,7 @@ def q_global_median_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return distributed_kth_smallest(li, "cents")
 
 
-ANALYTICS_QUERIES["global_median_selection"] = q_global_median_selection
-ANALYTICS_ORACLES["global_median_selection"] = """
+query("global_median_selection", q_global_median_selection, """
 WITH t AS (
   SELECT floor(l_extendedprice::DECIMAL(18,4) * 100)::BIGINT AS v
   FROM lineitem),
@@ -5959,7 +5806,7 @@ s AS (SELECT count(*)::BIGINT AS n, (count(*) + 1) // 2 AS k FROM t),
 r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM t)
 SELECT s.n, s.k::BIGINT AS k, r.v AS kth_value
 FROM r, s WHERE r.rn = s.k
-"""
+""")
 
 
 def q_weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6002,8 +5849,7 @@ def q_weighted_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["weighted_priority_sample"] = q_weighted_priority_sample
-ANALYTICS_ORACLES["weighted_priority_sample"] = """
+query("weighted_priority_sample", q_weighted_priority_sample, """
 WITH o AS (
   SELECT o_orderkey,
     floor(o_totalprice::DECIMAL(18,4) * 100)::BIGINT AS w,
@@ -6012,7 +5858,7 @@ WITH o AS (
   FROM orders)
 SELECT o_orderkey, w, w::DOUBLE / h1::DOUBLE AS priority
 FROM o ORDER BY priority DESC, o_orderkey LIMIT 20
-"""
+""")
 
 
 def q_events_hour_dow_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6044,14 +5890,13 @@ def q_events_hour_dow_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["events_hour_dow_heatmap"] = q_events_hour_dow_heatmap
-ANALYTICS_ORACLES["events_hour_dow_heatmap"] = """
+query("events_hour_dow_heatmap", q_events_hour_dow_heatmap, """
 SELECT (epoch_us(ts) // 86400000000 + 3) % 7 + 1 AS iso_dow,
   (epoch_us(ts) // 1000000 % 86400) // 3600 AS hour,
   count(*)::BIGINT AS n_events,
   sum(floor(value::DECIMAL(12,4) * 100)::BIGINT)::BIGINT AS cents
 FROM events GROUP BY 1, 2 ORDER BY iso_dow, hour
-"""
+""")
 
 
 def q_asof_nearest_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6131,8 +5976,7 @@ def q_asof_nearest_order_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-ANALYTICS_QUERIES["asof_nearest_order_events"] = q_asof_nearest_order_events
-ANALYTICS_ORACLES["asof_nearest_order_events"] = """
+query("asof_nearest_order_events", q_asof_nearest_order_events, """
 WITH o_rows AS (
   SELECT o_custkey AS user_id, o_orderdate AS t, 1 AS is_order,
     o_orderkey, NULL::BIGINT AS event_id
@@ -6165,7 +6009,7 @@ SELECT event_id, user_id,
   CASE WHEN bk IS NOT NULL AND (fk IS NULL OR (tsec - bt) <= (ft - tsec))
        THEN bt - tsec ELSE ft - tsec END AS delta_sec
 FROM merged WHERE is_order = 0 ORDER BY event_id
-"""
+""")
 
 
 def q_multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6181,8 +6025,7 @@ def q_multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.audio_window_plan(media).orderBy("media_id")
 
 
-ANALYTICS_QUERIES["multimodal_audio_frames"] = q_multimodal_audio_frames
-ANALYTICS_ORACLES["multimodal_audio_frames"] = """
+query("multimodal_audio_frames", q_multimodal_audio_frames, """
 WITH media AS (
   SELECT doc_id AS media_id,
     octet_length(encode(text))::BIGINT AS n_bytes
@@ -6191,7 +6034,7 @@ SELECT media_id, n_bytes, n_bytes // 2 AS n_samples,
   400 AS win_samples, 160 AS hop_samples,
   greatest(0, 1 + (n_bytes // 2 - 400) // 160)::BIGINT AS n_frames
 FROM media ORDER BY media_id
-"""
+""")
 
 
 def q_order_header_detail_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6255,8 +6098,7 @@ def q_order_header_detail_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["order_header_detail_recon"] = q_order_header_detail_recon
-ANALYTICS_ORACLES["order_header_detail_recon"] = """
+query("order_header_detail_recon", q_order_header_detail_recon, """
 WITH detail AS (
   SELECT l_orderkey,
     sum(floor((l_extendedprice::DECIMAL(18,4)
@@ -6279,7 +6121,7 @@ SELECT bucket, count(*)::BIGINT AS n_orders,
   sum(delta)::BIGINT AS total_delta_cents,
   min(delta) AS min_delta, max(delta) AS max_delta
 FROM b GROUP BY bucket ORDER BY bucket
-"""
+""")
 
 
 def q_source_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6337,8 +6179,7 @@ def q_source_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.orderBy("source", "rk")
 
 
-ANALYTICS_QUERIES["source_distinctive_terms"] = q_source_distinctive_terms
-ANALYTICS_ORACLES["source_distinctive_terms"] = """
+query("source_distinctive_terms", q_source_distinctive_terms, """
 WITH toks AS (
   SELECT source,
     unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS term
@@ -6359,7 +6200,7 @@ ranked AS (
   JOIN (SELECT * FROM t WHERE n_t >= 50) t USING (term), tot)
 SELECT source, term, n_st, share_bps, lift_bps, rk::BIGINT AS rk
 FROM ranked WHERE rk <= 3 ORDER BY source, rk
-"""
+""")
 
 
 def q_lsh_design_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6411,9 +6252,6 @@ def q_lsh_design_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bucket")
 
 
-ANALYTICS_QUERIES["lsh_design_curve"] = q_lsh_design_curve
-
-
 def _lsh_design_oracle() -> str:
     from .sqlfrag import (
         _BANDS_SQL,
@@ -6455,7 +6293,7 @@ FROM curve ORDER BY bucket
 """
 
 
-ANALYTICS_ORACLES["lsh_design_curve"] = _lsh_design_oracle()
+query("lsh_design_curve", q_lsh_design_curve, _lsh_design_oracle())
 
 
 def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6526,8 +6364,7 @@ def q_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["text_bpe_encode"] = q_text_bpe_encode
-ANALYTICS_ORACLES["text_bpe_encode"] = """
+query("text_bpe_encode", q_text_bpe_encode, """
 WITH dtoks AS (
   SELECT doc_id AS id,
     unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS w
@@ -6570,7 +6407,7 @@ SELECT id, count(*)::BIGINT AS n_words, sum(wt.n_bpe)::BIGINT AS n_bpe_tokens,
   sum(length(dt.w))::BIGINT AS n_char_tokens
 FROM dt JOIN wt USING (w)
 GROUP BY id ORDER BY id
-"""
+""")
 
 
 def q_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6627,8 +6464,7 @@ def q_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ANALYTICS_QUERIES["bloom_join_prune"] = q_bloom_join_prune
-ANALYTICS_ORACLES["bloom_join_prune"] = """
+query("bloom_join_prune", q_bloom_join_prune, """
 WITH dim AS (
   SELECT DISTINCT c_custkey AS k FROM customer
   WHERE c_mktsegment = 'BUILDING'),
@@ -6667,4 +6503,4 @@ SELECT count(*)::BIGINT AS n_probe,
      // nullif(count(*) - sum(CASE WHEN exact THEN 1 ELSE 0 END), 0)
   )::BIGINT AS fp_ppm
 FROM flags
-"""
+""")

@@ -12,15 +12,13 @@ and integer outputs only, so cross-engine hash comparison is exact.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import dedup, simsearch, text, training
+from .registry import query
 from .sources.ingest import read_table as _read
-
-Query = Callable[[SparkSession, str], DataFrame]
+from .sqlfrag import _NORM_SQL, _SHINGLES_SQL, _TOKS_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -199,15 +197,15 @@ def q_quota_top_docs_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.select("source", "rk", "id", "score").orderBy("source", "rk")
 
 
-def _quota_oracle(norm_sql: str, toks_sql: str) -> str:
+def _quota_oracle() -> str:
     return f"""
 WITH q AS (
   SELECT doc_id AS id, source,
-    (CASE WHEN length({norm_sql}) BETWEEN 100 AND 20000 THEN 1 ELSE 0 END
-     + CASE WHEN len(list_distinct({toks_sql})) * 5 >= len({toks_sql})
+    (CASE WHEN length({_NORM_SQL}) BETWEEN 100 AND 20000 THEN 1 ELSE 0 END
+     + CASE WHEN len(list_distinct({_TOKS_SQL})) * 5 >= len({_TOKS_SQL})
             THEN 1 ELSE 0 END
-     + CASE WHEN length(regexp_replace({norm_sql}, '[^a-z]', '', 'g')) * 5
-              >= length({norm_sql}) * 3 THEN 1 ELSE 0 END) AS score
+     + CASE WHEN length(regexp_replace({_NORM_SQL}, '[^a-z]', '', 'g')) * 5
+              >= length({_NORM_SQL}) * 3 THEN 1 ELSE 0 END) AS score
   FROM documents
 ),
 ranked AS (
@@ -696,21 +694,21 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pipeline_oracle(norm_sql: str, toks_sql: str) -> str:
+def _pipeline_oracle() -> str:
     from .extra_queries import _split_case_sql, _STOPLIST_SQL
 
     return f"""
 WITH scored AS (
   SELECT doc_id AS id, source, md5(text) AS text_hash,
-    len({toks_sql})::INT AS n_tokens,
-    CASE WHEN len(list_filter({toks_sql},
+    len({_TOKS_SQL})::INT AS n_tokens,
+    CASE WHEN len(list_filter({_TOKS_SQL},
                    t -> list_contains({_STOPLIST_SQL}, t))) * 20
-              >= len({toks_sql}) THEN 'en' ELSE 'und' END AS lang_guess,
-    (CASE WHEN length({norm_sql}) BETWEEN 100 AND 20000 THEN 1 ELSE 0 END
-     + CASE WHEN len(list_distinct({toks_sql})) * 5 >= len({toks_sql})
+              >= len({_TOKS_SQL}) THEN 'en' ELSE 'und' END AS lang_guess,
+    (CASE WHEN length({_NORM_SQL}) BETWEEN 100 AND 20000 THEN 1 ELSE 0 END
+     + CASE WHEN len(list_distinct({_TOKS_SQL})) * 5 >= len({_TOKS_SQL})
             THEN 1 ELSE 0 END
-     + CASE WHEN length(regexp_replace({norm_sql}, '[^a-z]', '', 'g')) * 5
-              >= length({norm_sql}) * 3 THEN 1 ELSE 0 END) AS quality
+     + CASE WHEN length(regexp_replace({_NORM_SQL}, '[^a-z]', '', 'g')) * 5
+              >= length({_NORM_SQL}) * 3 THEN 1 ELSE 0 END) AS quality
   FROM documents
 ),
 filtered AS (
@@ -737,67 +735,6 @@ SELECT source, split, count(*) AS n_docs,
   sum(n_tokens)::BIGINT AS total_tokens,
   sum(quality)::BIGINT AS total_quality
 FROM labeled GROUP BY source, split ORDER BY source, split"""
-
-
-def build_registry(
-    shingles_sql: str, norm_sql: str, toks_sql: str
-) -> tuple[dict[str, Query], dict[str, str]]:
-    queries: dict[str, Query] = {
-        "text_pii_redaction": q_text_pii_redaction,
-        "decontaminate_ngram_overlap": q_decontaminate_ngram_overlap,
-        "quota_top_docs_per_source": q_quota_top_docs_per_source,
-        "stratified_fixed_n_sample": q_stratified_fixed_n_sample,
-        "feature_hashing_sparse": q_feature_hashing,
-        "shard_assignment_counts": q_shard_assignment_counts,
-        "kmeans_clusters": q_kmeans_clusters,
-        "semantic_dedup_pairs": q_semantic_dedup_pairs,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "winnow_match_pairs": q_winnow_match_pairs,
-        "udaf_robust_value_stats": q_udaf_robust_value_stats,
-        "scd2_user_status_versions": q_scd2_user_status_versions,
-        "cdc_user_state": q_cdc_user_state,
-        "incremental_dedup_pairs": q_incremental_dedup_pairs,
-        "shingle_df_histogram": q_shingle_df_histogram,
-        "curation_pipeline_e2e": q_curation_pipeline_e2e,
-        "scd2_point_in_time_join": q_scd2_point_in_time_join,
-        "pii_column_scan": q_pii_column_scan,
-        "blocklist_domain_filter": q_blocklist_domain_filter,
-    }
-    oracles: dict[str, str] = {
-        "text_pii_redaction": _pii_oracle(),
-        "decontaminate_ngram_overlap": _DECONTAM_ORACLE_TMPL.format(
-            shingles=shingles_sql.strip().lstrip(",")
-        ),
-        "quota_top_docs_per_source": _quota_oracle(norm_sql, toks_sql),
-        "stratified_fixed_n_sample": _STRATIFIED_SAMPLE_ORACLE,
-        "feature_hashing_sparse": _FEATURE_HASH_ORACLE,
-        "shard_assignment_counts": _SHARD_ORACLE,
-        "kmeans_clusters": _KMEANS_ORACLE,
-        "semantic_dedup_pairs": _SEMANTIC_DEDUP_ORACLE,
-        "winnow_fingerprints": f"""
-WITH {_WINNOW_CTES.format(norm=norm_sql).strip()}
-SELECT id, pos, fp FROM fps ORDER BY id, pos, fp""",
-        "winnow_match_pairs": f"""
-WITH {_WINNOW_CTES.format(norm=norm_sql).strip()}
-SELECT a.id AS id_a, b.id AS id_b, count(DISTINCT a.fp) AS shared_fps
-FROM fps a JOIN fps b ON a.fp = b.fp AND a.id < b.id
-GROUP BY a.id, b.id HAVING count(DISTINCT a.fp) >= 30
-ORDER BY id_a, id_b""",
-        "udaf_robust_value_stats": _UDAF_ORACLE,
-        "scd2_user_status_versions": _SCD2_ORACLE,
-        "cdc_user_state": _CDC_ORACLE,
-        "incremental_dedup_pairs": _INCR_DEDUP_ORACLE_TMPL.format(
-            shingles=shingles_sql.strip().lstrip(",")
-        ),
-        "shingle_df_histogram": _SHINGLE_DF_ORACLE_TMPL.format(
-            shingles=shingles_sql.strip().lstrip(",")
-        ),
-        "curation_pipeline_e2e": _pipeline_oracle(norm_sql, toks_sql),
-        "scd2_point_in_time_join": _SCD2_PIT_ORACLE,
-        "pii_column_scan": _pii_scan_oracle(),
-        "blocklist_domain_filter": _BLOCKLIST_ORACLE,
-    }
-    return queries, oracles
 
 
 # Domain blocklist with registrable-domain semantics: an entry blocks the
@@ -911,3 +848,42 @@ SELECT id, ('0x' || substr(md5(token), 1, 7))::BIGINT % 64 AS bucket,
   count(*) AS n_tokens
 FROM tok GROUP BY id, bucket ORDER BY id, bucket
 """
+
+
+query("text_pii_redaction", q_text_pii_redaction, _pii_oracle())
+query(
+    "decontaminate_ngram_overlap", q_decontaminate_ngram_overlap,
+    _DECONTAM_ORACLE_TMPL.format(shingles=_SHINGLES_SQL.strip().lstrip(",")),
+)
+query("quota_top_docs_per_source", q_quota_top_docs_per_source, _quota_oracle())
+query(
+    "stratified_fixed_n_sample", q_stratified_fixed_n_sample, _STRATIFIED_SAMPLE_ORACLE
+)
+query("feature_hashing_sparse", q_feature_hashing, _FEATURE_HASH_ORACLE)
+query("shard_assignment_counts", q_shard_assignment_counts, _SHARD_ORACLE)
+query("kmeans_clusters", q_kmeans_clusters, _KMEANS_ORACLE)
+query("semantic_dedup_pairs", q_semantic_dedup_pairs, _SEMANTIC_DEDUP_ORACLE)
+query("winnow_fingerprints", q_winnow_fingerprints, f"""
+WITH {_WINNOW_CTES.format(norm=_NORM_SQL).strip()}
+SELECT id, pos, fp FROM fps ORDER BY id, pos, fp""")
+query("winnow_match_pairs", q_winnow_match_pairs, f"""
+WITH {_WINNOW_CTES.format(norm=_NORM_SQL).strip()}
+SELECT a.id AS id_a, b.id AS id_b, count(DISTINCT a.fp) AS shared_fps
+FROM fps a JOIN fps b ON a.fp = b.fp AND a.id < b.id
+GROUP BY a.id, b.id HAVING count(DISTINCT a.fp) >= 30
+ORDER BY id_a, id_b""")
+query("udaf_robust_value_stats", q_udaf_robust_value_stats, _UDAF_ORACLE)
+query("scd2_user_status_versions", q_scd2_user_status_versions, _SCD2_ORACLE)
+query("cdc_user_state", q_cdc_user_state, _CDC_ORACLE)
+query(
+    "incremental_dedup_pairs", q_incremental_dedup_pairs,
+    _INCR_DEDUP_ORACLE_TMPL.format(shingles=_SHINGLES_SQL.strip().lstrip(",")),
+)
+query(
+    "shingle_df_histogram", q_shingle_df_histogram,
+    _SHINGLE_DF_ORACLE_TMPL.format(shingles=_SHINGLES_SQL.strip().lstrip(",")),
+)
+query("curation_pipeline_e2e", q_curation_pipeline_e2e, _pipeline_oracle())
+query("scd2_point_in_time_join", q_scd2_point_in_time_join, _SCD2_PIT_ORACLE)
+query("pii_column_scan", q_pii_column_scan, _pii_scan_oracle())
+query("blocklist_domain_filter", q_blocklist_domain_filter, _BLOCKLIST_ORACLE)

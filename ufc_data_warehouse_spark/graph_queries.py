@@ -12,14 +12,11 @@ iteration order-free and hence engine-exact.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import graph
-
-Query = Callable[[SparkSession, str], DataFrame]
+from .registry import query
 
 _SUPP_OFFSET = 10_000_000
 _ITERATIONS = 3
@@ -222,19 +219,10 @@ def _bfs_oracle() -> str:
     )
 
 
-GRAPH_QUERIES: dict[str, Query] = {
-    "graph_pagerank_top100": q_graph_pagerank,
-    "graph_triangle_census": q_graph_triangles,
-    "graph_kcore_nodes": q_graph_kcore,
-    "graph_bfs_hops": q_graph_bfs_hops,
-}
-
-GRAPH_ORACLES: dict[str, str] = {
-    "graph_pagerank_top100": _pagerank_oracle(),
-    "graph_triangle_census": _TRIANGLE_ORACLE,
-    "graph_kcore_nodes": _kcore_oracle(),
-    "graph_bfs_hops": _bfs_oracle(),
-}
+query("graph_pagerank_top100", q_graph_pagerank, _pagerank_oracle())
+query("graph_triangle_census", q_graph_triangles, _TRIANGLE_ORACLE)
+query("graph_kcore_nodes", q_graph_kcore, _kcore_oracle())
+query("graph_bfs_hops", q_graph_bfs_hops, _bfs_oracle())
 
 
 def q_graph_sssp_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,8 +283,7 @@ def _sssp_oracle() -> str:
     )
 
 
-GRAPH_QUERIES["graph_sssp_bounded"] = q_graph_sssp_bounded
-GRAPH_ORACLES["graph_sssp_bounded"] = _sssp_oracle()
+query("graph_sssp_bounded", q_graph_sssp_bounded, _sssp_oracle())
 
 
 def q_graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -362,5 +349,4 @@ def _temporal_oracle() -> str:
     )
 
 
-GRAPH_QUERIES["graph_temporal_reachability"] = q_graph_temporal_reachability
-GRAPH_ORACLES["graph_temporal_reachability"] = _temporal_oracle()
+query("graph_temporal_reachability", q_graph_temporal_reachability, _temporal_oracle())

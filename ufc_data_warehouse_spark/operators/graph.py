@@ -244,9 +244,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         .crossJoin(closed.agg(F.count(F.lit(1)).alias("n_triangles")))
         .select("n_nodes", "n_edges", "n_triangles")
     )
-    # e/directed stay persisted for the session (each is referenced by
-    # two downstream paths); returning the lazy plan keeps execution in
-    # the caller's hands and the plan visible to audits
+    # e and directed are each read by two downstream paths, so they are
+    # persisted while the count runs; the 1-row result is materialized
+    # here so both can be released before returning, as _fixpoint does
+    out = truncate(out, eager=True)
+    e.unpersist()
+    directed.unpersist()
     return out
 
 

@@ -15,19 +15,255 @@ higher-order functions (no Python in the hot path), and make every
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators import simsearch, text
+from .analytics_queries import _RRF_ORACLE
+from .extra_queries import q_dedup_clusters, q_dedup_minhash_lsh, q_dedup_simhash_pairs
+from .operators import dedup, simsearch, text
 from .operators.scale import spread_single_split as _spread
+from .registry import QUERIES, query
+from .session import apply_runtime_confs
 from .sources.ingest import read_table as _read
+from .sqlfrag import (
+    _BANDS_SQL,
+    _JACCARD_CORE_SQL,
+    _MINHASH_SQL,
+    _SHINGLES_SQL,
+    _TOKS_SQL,
+)
 
-Query = Callable[[SparkSession, str], DataFrame]
 
-PIPELINE_QUERIES: dict[str, Query] = {}
-PIPELINE_ORACLES: dict[str, str] = {}
+# ---------------------------------------------------------------------------
+# Arrow cosine scoring, outer-join flush, recursive CTE, VARIANT paths,
+# containment dedup
+# ---------------------------------------------------------------------------
+
+
+def q_ann_cosine_scores_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full-corpus cosine scoring against one probe vector via mapInArrow
+    (zero-copy Arrow batches + one numpy matmul per batch). The probe is
+    the corpus's first vector — ONE driver-side row fetch, documented:
+    the scoring pass itself is map-only and fully distributed."""
+    emb = _read(spark, sf_dir, "embeddings")
+    probe = emb.filter(F.col("vec_id") == 0).select("embedding").head()
+    if probe is None:
+        # empty corpus / missing probe id: empty result, stable schema
+        return emb.select(
+            "vec_id", F.lit(0.0).alias("cosine")
+        ).limit(0)
+    scored = simsearch.cosine_scores_arrow(emb, list(probe["embedding"]))
+    return (
+        scored.filter(F.col("vec_id") != 0)
+        .select("vec_id", "cosine")
+        .orderBy("vec_id")
+    )
+
+
+# float64 throughout (list_cosine_similarity computes in float32 and
+# lands on the wrong side of the 6-dp comparison rounding for ~1% of rows)
+query("ann_cosine_scores_arrow", q_ann_cosine_scores_arrow, """
+WITH q AS (SELECT embedding AS e FROM embeddings WHERE vec_id = 0),
+p AS (
+  SELECT vec_id, unnest(embedding)::DOUBLE AS x, unnest(q.e)::DOUBLE AS y
+  FROM embeddings, q
+  WHERE vec_id <> 0
+),
+s AS (
+  SELECT vec_id, SUM(x * y) AS dot,
+         sqrt(SUM(x * x)) AS nx, sqrt(SUM(y * y)) AS ny
+  FROM p GROUP BY vec_id
+)
+SELECT vec_id, dot / (nx * ny) AS cosine FROM s ORDER BY vec_id
+""")
+
+
+def q_streaming_outer_join_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Watermarked stream-stream LEFT OUTER join with flush sentinels:
+    every signup with its purchases within 1 hour, null-completed once
+    the watermark proves no match can arrive.
+
+    Two subtleties this query pins down (both discovered empirically,
+    verified via StreamingQueryProgress):
+
+    1. The global watermark is min() across BOTH sides' watermark
+       nodes, computed from rows that REACH those nodes. A finite
+       replay therefore withholds null-completion for the tail of the
+       stream (here: everything within 1h10m of the last signup) —
+       correct streaming semantics, but it makes end-of-stream results
+       partial. The flush sentinels (user_id −1, ts one day past the
+       data, one per join role) raise both sides' max event time so the
+       AvailableNow cleanup batch evicts — and null-completes — every
+       real row, restoring an exact batch oracle.
+    2. The sentinel filter must be applied to the BATCH result, not the
+       streaming plan: a `user_id >= 0` predicate on the join output is
+       pushed below the EventTimeWatermark operator, silently dropping
+       the sentinels before they can advance the watermark.
+    """
+    from .streaming import events as se
+
+    apply_runtime_confs(spark)
+    joined = se.stream_stream_signup_purchase_outer(
+        se.read_events_stream_with_flush(spark, sf_dir),
+        se.read_events_stream_with_flush(spark, sf_dir),
+    )
+    out = se.run_available_now(joined, output_mode="append")
+    return out.filter(F.col("user_id") >= 0).orderBy(
+        "user_id", "signup_id", "purchase_id"
+    )
+
+
+query("streaming_outer_join_flush", q_streaming_outer_join_flush, """
+WITH s AS (
+  SELECT user_id, event_id AS signup_id, ts AS signup_ts
+  FROM events WHERE event_type = 'signup'
+),
+p AS (
+  SELECT user_id AS p_user, event_id AS purchase_id, ts AS purchase_ts, value
+  FROM events WHERE event_type = 'purchase'
+),
+m AS (
+  SELECT s.user_id, s.signup_id, s.signup_ts,
+         p.purchase_id, p.purchase_ts, p.value
+  FROM s JOIN p ON s.user_id = p.p_user
+   AND p.purchase_ts >= s.signup_ts
+   AND p.purchase_ts <= s.signup_ts + INTERVAL 1 HOUR
+)
+SELECT * FROM m
+UNION ALL
+SELECT s.user_id, s.signup_id, s.signup_ts, NULL, NULL, NULL
+FROM s
+WHERE s.signup_id NOT IN (SELECT signup_id FROM m)
+ORDER BY user_id, signup_id, purchase_id""")
+
+
+def q_recursive_ancestor_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recursive CTE (Spark 4 WITH RECURSIVE): transitive ancestor
+    closure of a synthetic binary-tree hierarchy over customers
+    (parent(k) = k DIV 2 — deterministic, engine-neutral). Output is the
+    full (node, ancestor, depth) closure — the iterative-fixpoint query
+    shape (org charts, BOM explosion, graph reachability) that, before
+    Spark 4, needed a driver-side loop.
+
+    Scale note: closure size is N·log N for a balanced hierarchy (depth
+    ≤ 21 at 1.5M customers); each iteration is one self-join stage and
+    Spark unions the per-iteration results — the plan is the same
+    repeated-join DAG a hand-rolled loop would build, minus the driver
+    round-trips.
+    """
+    apply_runtime_confs(spark)
+    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
+        "customer_rec_src"
+    )
+    return spark.sql(
+        """
+WITH RECURSIVE anc AS (
+  SELECT c_custkey AS node, c_custkey AS ancestor, 0 AS depth
+  FROM customer_rec_src
+  UNION ALL
+  SELECT node, ancestor DIV 2 AS ancestor, depth + 1 AS depth
+  FROM anc WHERE ancestor > 1
+)
+SELECT node, ancestor, depth FROM anc ORDER BY node, depth
+"""
+    )
+
+
+def q_variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured VARIANT path (Spark 4): the events `props` JSON is
+    parsed ONCE into the binary variant encoding (`parse_json`), then
+    fields are extracted with `variant_get` path expressions. Unlike the
+    typed `from_json` path (q_json_props_stats), variant is
+    schema-flexible — new keys need no schema migration — while still
+    avoiding per-field string re-parsing (`get_json_object` re-parses
+    the JSON for every extracted path)."""
+    ev = _read(spark, sf_dir, "events")
+    v = F.parse_json("props")
+    parsed = ev.select(
+        "event_type",
+        F.try_variant_get(v, "$.k", "long").alias("k"),
+    )
+    return (
+        parsed.groupBy("event_type")
+        .agg(
+            F.count("*").alias("n"),
+            F.count("k").alias("n_with_k"),
+            F.sum("k").alias("sum_k"),
+            F.max("k").alias("max_k"),
+        )
+        .orderBy("event_type")
+    )
+
+
+query("recursive_ancestor_closure", q_recursive_ancestor_closure, """
+WITH RECURSIVE anc AS (
+  SELECT c_custkey AS node, c_custkey AS ancestor, 0 AS depth
+  FROM customer
+  UNION ALL
+  SELECT node, ancestor // 2 AS ancestor, depth + 1 AS depth
+  FROM anc WHERE ancestor > 1
+)
+SELECT node, ancestor, depth FROM anc ORDER BY node, depth""")
+
+query("variant_props_stats", q_variant_props_stats, """
+SELECT event_type, count(*) AS n,
+  count(json_extract(props, '$.k')) AS n_with_k,
+  sum(json_extract(props, '$.k')::BIGINT)::BIGINT AS sum_k,
+  max(json_extract(props, '$.k')::BIGINT) AS max_k
+FROM events GROUP BY event_type ORDER BY event_type""")
+
+
+def q_dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric containment dedup: ordered pairs where ≥90% of doc A's
+    distinct tokens appear in doc B — the subset/quote-expansion case
+    Jaccard misses (a short doc embedded in a long one scores low
+    symmetric Jaccard but 100% containment). Integer threshold
+    (100·shared ≥ 90·|A|) keeps the boundary engine-exact. Scale path:
+    restrict to LSH/prefix-filter candidates exactly as jaccard_pairs
+    does — the exhaustive token join here is the oracle-sized verify."""
+    docs = _read(spark, sf_dir, "documents")
+    tok = docs.select(
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(dedup.tokens(F.col("text")))).alias("token"),
+    ).where(F.col("token") != "")
+    sizes = tok.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = tok.alias("a"), tok.alias("b")
+    shared = (
+        a.join(
+            b,
+            (F.col("a.token") == F.col("b.token"))
+            & (F.col("a.id") != F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    return (
+        shared.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
+        .where(F.lit(100) * F.col("shared") >= F.lit(90) * F.col("n_a"))
+        .select("id_a", "id_b", "shared", "n_a")
+        .orderBy("id_a", "id_b")
+    )
+
+
+query("dedup_containment_pairs", q_dedup_containment_pairs, f"""
+WITH tok AS (
+  SELECT DISTINCT doc_id AS id, t.tok AS token
+  FROM (SELECT doc_id, {_TOKS_SQL} AS toks FROM documents) d,
+       unnest(toks) AS t(tok)
+  WHERE t.tok <> ''
+),
+sizes AS (SELECT id, count(*) AS n FROM tok GROUP BY id),
+shared AS (
+  SELECT a.id AS id_a, b.id AS id_b, count(*) AS shared
+  FROM tok a JOIN tok b ON a.token = b.token AND a.id <> b.id
+  GROUP BY a.id, b.id
+)
+SELECT s.id_a, s.id_b, s.shared, z.n AS n_a
+FROM shared s JOIN sizes z ON s.id_a = z.id
+WHERE 100 * s.shared >= 90 * z.n
+ORDER BY id_a, id_b
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -92,8 +328,7 @@ def q_ann_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["ann_maxsim_multivector"] = q_ann_maxsim_multivector
-PIPELINE_ORACLES["ann_maxsim_multivector"] = f"""
+query("ann_maxsim_multivector", q_ann_maxsim_multivector, f"""
 WITH stats AS (
   SELECT min(u.x)::DOUBLE AS qmin, max(u.x)::DOUBLE AS qmax
   FROM embeddings, unnest(embedding) AS u(x)
@@ -121,7 +356,7 @@ SELECT query_id, neighbor_id, rank::INT AS rank, score FROM (
                        ORDER BY score DESC, neighbor_id) AS rank
   FROM scored
 ) WHERE rank <= 5 ORDER BY query_id, rank
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -172,10 +407,8 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _recall_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    exact = EXTRA_ORACLES["ann_cosine_topk"].strip()
-    ivf = EXTRA_ORACLES["ann_ivf_topk"].strip()
+    exact = QUERIES["ann_cosine_topk"].oracle.strip()
+    ivf = QUERIES["ann_ivf_topk"].oracle.strip()
     return f"""
 WITH exact_t AS ({exact}),
 ivf_t AS ({ivf}),
@@ -191,7 +424,7 @@ FROM hits GROUP BY qid ORDER BY query_id
 """
 
 
-PIPELINE_QUERIES["ann_recall_audit"] = q_ann_recall_audit
+query("ann_recall_audit", q_ann_recall_audit, _recall_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -249,8 +482,7 @@ def q_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["bigram_lm_quality"] = q_bigram_lm_quality
-PIPELINE_ORACLES["bigram_lm_quality"] = """
+query("bigram_lm_quality", q_bigram_lm_quality, """
 WITH d AS (
   SELECT doc_id, source,
     string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')
@@ -277,7 +509,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
   min(avg_bigram_freq) AS min_freq, max(avg_bigram_freq) AS max_freq,
   (sum(avg_bigram_freq) // count(*))::BIGINT AS mean_freq
 FROM per_doc GROUP BY source ORDER BY source
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -346,9 +578,7 @@ def q_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curriculum_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    quality = EXTRA_ORACLES["text_quality_score"].strip()
+    quality = QUERIES["text_quality_score"].oracle.strip()
     return f"""
 WITH qual AS ({quality}),
 scored AS (
@@ -362,7 +592,7 @@ FROM scored GROUP BY lang, phase ORDER BY lang, phase
 """
 
 
-PIPELINE_QUERIES["curriculum_phases"] = q_curriculum_phases
+query("curriculum_phases", q_curriculum_phases, _curriculum_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -423,8 +653,7 @@ def q_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["bootstrap_mean_ci"] = q_bootstrap_mean_ci
-PIPELINE_ORACLES["bootstrap_mean_ci"] = f"""
+query("bootstrap_mean_ci", q_bootstrap_mean_ci, f"""
 WITH o AS (
   SELECT o_orderkey, floor(o_totalprice * 100)::BIGINT AS cents FROM orders
 ),
@@ -449,32 +678,7 @@ SELECT {_B_REPS}::BIGINT AS n_replicates,
   (SELECT mean_cents FROM ranked WHERE rk = {_B_REPS - 1}) AS hi_mean_cents,
   full_mean_cents
 FROM full_m
-"""
-
-
-def build_late_oracles() -> dict[str, str]:
-    """Oracles that compose other modules' oracle SQL — resolved lazily
-    by extra_queries AFTER its own oracle dict is fully populated (the
-    same import-order trap sqlfrag.py exists to avoid)."""
-    return {
-        "ann_recall_audit": _recall_oracle(),
-        "curriculum_phases": _curriculum_oracle(),
-        "hard_negative_mining": _hard_negative_oracle(),
-        "preference_pair_construction": _preference_oracle(),
-        "dedup_cluster_size_histogram": _cluster_histogram_oracle(),
-        "ann_mrr_audit": _mrr_oracle(),
-        "positive_pair_mining": _positive_pair_oracle(),
-        "ann_probe_sweep": _probe_sweep_oracle(),
-        "ann_ivf_partition_pruned": _ivf_pruned_oracle(),
-        "dedup_method_agreement": _method_agreement_oracle(),
-        "ann_ivf_incremental_append": _ivf_incremental_oracle(),
-        "dedup_canonical_by_quality": _canonical_quality_oracle(),
-        "ann_ndcg_audit": _ndcg_oracle(),
-        "knn_label_purity": _knn_purity_oracle(),
-        "graph_modularity_score": _modularity_oracle(),
-        "fusion_weight_sweep": _fusion_sweep_oracle(),
-        "dedup_pipeline_yield": _pipeline_yield_oracle(),
-    }
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -534,8 +738,7 @@ def q_ks_two_sample_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["ks_two_sample_drift"] = q_ks_two_sample_drift
-PIPELINE_ORACLES["ks_two_sample_drift"] = """
+query("ks_two_sample_drift", q_ks_two_sample_drift, """
 WITH ev AS (
   SELECT floor(value * 100)::BIGINT AS v,
     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_a
@@ -558,7 +761,7 @@ SELECT n_a, n_b,
   max(abs(cum_a * n_b - cum_b * n_a))::BIGINT AS d_scaled,
   (max(abs(cum_a * n_b - cum_b * n_a)) * 10000 // (n_a * n_b))::BIGINT AS d_bps
 FROM cum, tot GROUP BY n_a, n_b
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -621,8 +824,7 @@ def q_calibration_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-PIPELINE_QUERIES["calibration_reliability_bins"] = q_calibration_reliability_bins
-PIPELINE_ORACLES["calibration_reliability_bins"] = """
+query("calibration_reliability_bins", q_calibration_reliability_bins, """
 WITH ev AS (
   SELECT event_id, floor(value * 100)::BIGINT AS score,
     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
@@ -634,7 +836,7 @@ binned AS (
 SELECT bin::INT AS bin, count(*)::BIGINT AS n, sum(pos)::BIGINT AS n_pos,
   (sum(pos) * 10000 // count(*))::BIGINT AS pos_rate_bps
 FROM binned GROUP BY bin ORDER BY bin
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -657,8 +859,7 @@ def q_multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal.scene_cut_stats(decoded).orderBy("media_id")
 
 
-PIPELINE_QUERIES["multimodal_scene_cuts"] = q_multimodal_scene_cuts
-PIPELINE_ORACLES["multimodal_scene_cuts"] = """
+query("multimodal_scene_cuts", q_multimodal_scene_cuts, """
 WITH decoded AS (
   SELECT doc_id AS media_id,
     (1 + ('0x' || substr(md5(text), 1, 8))::BIGINT % 300)::INT AS n_frames
@@ -681,7 +882,7 @@ cuts AS (
 )
 SELECT media_id, max(n_frames)::INT AS n_frames, sum(cut)::BIGINT AS n_cuts
 FROM cuts GROUP BY media_id ORDER BY media_id
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -718,8 +919,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["graph_label_propagation"] = q_graph_label_propagation
-PIPELINE_ORACLES["graph_label_propagation"] = f"""
+query("graph_label_propagation", q_graph_label_propagation, f"""
 WITH e0 AS (
   SELECT DISTINCT l_partkey AS src,
     l_suppkey + {_LPA_SUPP_OFFSET} AS dst
@@ -755,7 +955,7 @@ l2 AS (
 )
 SELECT label, count(*)::BIGINT AS community_size
 FROM l2 GROUP BY label ORDER BY label
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -771,8 +971,7 @@ def q_coreset_kcenter_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simsearch.kcenter_coreset(emb, k=4).orderBy("rank")
 
 
-PIPELINE_QUERIES["coreset_kcenter_selection"] = q_coreset_kcenter_selection
-PIPELINE_ORACLES["coreset_kcenter_selection"] = """
+query("coreset_kcenter_selection", q_coreset_kcenter_selection, """
 WITH stats AS (
   SELECT min(u.x)::DOUBLE AS qmin, max(u.x)::DOUBLE AS qmax
   FROM embeddings, unnest(embedding) AS u(x)
@@ -818,7 +1017,7 @@ UNION ALL SELECT 2::INT, vec_id, mind FROM c1
 UNION ALL SELECT 3::INT, vec_id, mind FROM c2
 UNION ALL SELECT 4::INT, vec_id, mind FROM c3
 ORDER BY rank
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -865,7 +1064,6 @@ def q_annotator_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kappa_oracle() -> str:
-    from .sqlfrag import _TOKS_SQL
     from .operators.text import EN_STOPWORDS
 
     stoplist = "[" + ", ".join(f"'{s}'" for s in EN_STOPWORDS) + "]"
@@ -893,8 +1091,7 @@ FROM agg
 """
 
 
-PIPELINE_QUERIES["annotator_agreement_kappa"] = q_annotator_agreement_kappa
-PIPELINE_ORACLES["annotator_agreement_kappa"] = _kappa_oracle()
+query("annotator_agreement_kappa", q_annotator_agreement_kappa, _kappa_oracle())
 
 
 def q_ann_maxsim_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -926,8 +1123,7 @@ def q_ann_maxsim_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["ann_maxsim_arrow"] = q_ann_maxsim_arrow
-PIPELINE_ORACLES["ann_maxsim_arrow"] = PIPELINE_ORACLES["ann_maxsim_multivector"]
+query("ann_maxsim_arrow", q_ann_maxsim_arrow, QUERIES["ann_maxsim_multivector"].oracle)
 
 
 # ---------------------------------------------------------------------------
@@ -965,9 +1161,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hard_negative_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    exact = EXTRA_ORACLES["ann_cosine_topk"].strip()
+    exact = QUERIES["ann_cosine_topk"].oracle.strip()
     return f"""
 WITH topk AS ({exact})
 SELECT t.query_id, t.neighbor_id, t.rank, n.label AS n_label
@@ -979,7 +1173,7 @@ ORDER BY t.query_id, t.rank
 """
 
 
-PIPELINE_QUERIES["hard_negative_mining"] = q_hard_negative_mining
+query("hard_negative_mining", q_hard_negative_mining, _hard_negative_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1027,10 +1221,7 @@ def q_contrastive_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-PIPELINE_QUERIES["contrastive_negative_sampling"] = (
-    q_contrastive_negative_sampling
-)
-PIPELINE_ORACLES["contrastive_negative_sampling"] = f"""
+query("contrastive_negative_sampling", q_contrastive_negative_sampling, f"""
 WITH anchors AS (
   SELECT vec_id AS anchor_id, label AS a_label FROM embeddings
   WHERE vec_id % 25 = 0
@@ -1045,7 +1236,7 @@ SELECT anchor_id, neg_id, rk::INT AS rk, n_label FROM (
     row_number() OVER (PARTITION BY anchor_id ORDER BY h, neg_id) AS rk
   FROM scored
 ) WHERE rk <= {_NEG_K} ORDER BY anchor_id, rk
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1088,8 +1279,7 @@ def q_embedding_class_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["embedding_class_scatter"] = q_embedding_class_scatter
-PIPELINE_ORACLES["embedding_class_scatter"] = """
+query("embedding_class_scatter", q_embedding_class_scatter, """
 WITH stats AS (
   SELECT min(u.x)::DOUBLE AS qmin, max(u.x)::DOUBLE AS qmax
   FROM embeddings, unnest(embedding) AS u(x)
@@ -1115,7 +1305,7 @@ SELECT t2.label, n, t2.t2, s_dot_s,
   (n * n * t2.t2 - n * s_dot_s)::BIGINT AS scatter_num
 FROM t2 JOIN s2 ON t2.label = s2.label
 ORDER BY t2.label
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1144,8 +1334,7 @@ def q_fairness_parity_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["fairness_parity_gap"] = q_fairness_parity_gap
-PIPELINE_ORACLES["fairness_parity_gap"] = """
+query("fairness_parity_gap", q_fairness_parity_gap, """
 WITH rates AS (
   SELECT user_id % 5 AS cohort,
     (sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) * 10000
@@ -1156,7 +1345,7 @@ SELECT count(*)::BIGINT AS n_cohorts,
   min(rate_bps) AS min_rate_bps, max(rate_bps) AS max_rate_bps,
   (max(rate_bps) - min(rate_bps))::BIGINT AS gap_bps
 FROM rates
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1214,8 +1403,7 @@ def q_padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["padding_waste_audit"] = q_padding_waste_audit
-PIPELINE_ORACLES["padding_waste_audit"] = f"""
+query("padding_waste_audit", q_padding_waste_audit, f"""
 WITH toks AS (
   SELECT len(string_split(
     trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS n_tokens
@@ -1227,7 +1415,7 @@ SELECT bucket::INT AS bucket, count(*)::BIGINT AS n_docs,
   sum(bucket - n_tokens)::BIGINT AS sum_waste,
   (sum(bucket - n_tokens) * 10000 // (count(*) * bucket))::BIGINT AS waste_bps
 FROM binned GROUP BY bucket ORDER BY bucket
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1285,10 +1473,7 @@ def q_multimodal_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-PIPELINE_QUERIES["multimodal_audio_vad_segments"] = (
-    q_multimodal_audio_vad_segments
-)
-PIPELINE_ORACLES["multimodal_audio_vad_segments"] = """
+query("multimodal_audio_vad_segments", q_multimodal_audio_vad_segments, """
 WITH plan AS (
   SELECT doc_id AS media_id,
     greatest(0, 1 + (octet_length(encode(text)) // 2 - 400) // 160) AS n_frames
@@ -1326,7 +1511,7 @@ SELECT p.media_id, p.n_frames::BIGINT AS n_frames,
 FROM plan p LEFT JOIN per_media m ON p.media_id = m.media_id
 WHERE p.n_frames > 0
 ORDER BY p.media_id
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1361,8 +1546,7 @@ def q_groupwise_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["groupwise_kfold_assignment"] = q_groupwise_kfold_assignment
-PIPELINE_ORACLES["groupwise_kfold_assignment"] = """
+query("groupwise_kfold_assignment", q_groupwise_kfold_assignment, """
 WITH ev AS (
   SELECT (user_id * 2654435761) % 5 AS fold, user_id FROM events
 ),
@@ -1371,7 +1555,7 @@ SELECT fold, count(DISTINCT user_id)::BIGINT AS n_users,
   count(*)::BIGINT AS n_events,
   (count(*) * 10000 // n_total)::BIGINT AS share_bps
 FROM ev, tot GROUP BY fold, n_total ORDER BY fold
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1433,9 +1617,7 @@ def q_preference_pair_construction(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _preference_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    quality = EXTRA_ORACLES["text_quality_score"].strip()
+    quality = QUERIES["text_quality_score"].oracle.strip()
     return f"""
 WITH qual AS ({quality}),
 scored AS (
@@ -1459,8 +1641,8 @@ ORDER BY hi.source
 """
 
 
-PIPELINE_QUERIES["preference_pair_construction"] = (
-    q_preference_pair_construction
+query(
+    "preference_pair_construction", q_preference_pair_construction, _preference_oracle()
 )
 
 
@@ -1503,8 +1685,7 @@ def q_tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-PIPELINE_QUERIES["tokenizer_fertility_by_lang"] = q_tokenizer_fertility_by_lang
-PIPELINE_ORACLES["tokenizer_fertility_by_lang"] = """
+query("tokenizer_fertility_by_lang", q_tokenizer_fertility_by_lang, """
 WITH base AS (
   SELECT doc_id AS id, lang,
     trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
@@ -1522,7 +1703,7 @@ SELECT lang, count(*)::BIGINT AS n_docs, sum(est_tokens)::BIGINT AS sum_bpe,
   sum(ws_tokens)::BIGINT AS sum_ws,
   (sum(est_tokens) * 10000 // sum(ws_tokens))::BIGINT AS fertility_bps
 FROM est GROUP BY lang ORDER BY lang
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1610,8 +1791,7 @@ def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["span_corruption_plan"] = q_span_corruption_plan
-PIPELINE_ORACLES["span_corruption_plan"] = f"""
+query("span_corruption_plan", q_span_corruption_plan, f"""
 WITH base AS (
   SELECT doc_id, source,
     len(string_split(
@@ -1649,7 +1829,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
   sum(n_sentinels)::BIGINT AS sum_sentinels,
   (sum(n_masked) * 10000 // sum(n_tokens))::BIGINT AS corruption_bps
 FROM per_doc GROUP BY source ORDER BY source
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1683,8 +1863,7 @@ def q_lang_upsampling_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["lang_upsampling_factors"] = q_lang_upsampling_factors
-PIPELINE_ORACLES["lang_upsampling_factors"] = """
+query("lang_upsampling_factors", q_lang_upsampling_factors, """
 WITH counts AS (
   SELECT lang, count(*)::BIGINT AS n_docs FROM documents GROUP BY lang
 ),
@@ -1693,7 +1872,7 @@ SELECT lang, n_docs,
   least(4, greatest(1, max_n // n_docs))::BIGINT AS factor,
   (n_docs * least(4, greatest(1, max_n // n_docs)))::BIGINT AS upsampled_n
 FROM counts, mx ORDER BY lang
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1735,8 +1914,7 @@ def q_multimodal_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-PIPELINE_QUERIES["multimodal_image_neardup"] = q_multimodal_image_neardup
-PIPELINE_ORACLES["multimodal_image_neardup"] = f"""
+query("multimodal_image_neardup", q_multimodal_image_neardup, f"""
 WITH feats AS (
   SELECT doc_id AS media_id,
     list_transform(range(0, 8), i ->
@@ -1750,7 +1928,7 @@ FROM feats a JOIN feats b ON a.media_id < b.media_id
 WHERE list_sum(list_transform(range(1, 9),
     k -> (a.fi[k] - b.fi[k]) * (a.fi[k] - b.fi[k]))) <= {_IMG_D2_MAX}
 ORDER BY id_a, id_b
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1812,8 +1990,7 @@ def q_multimodal_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["multimodal_video_keyframes"] = q_multimodal_video_keyframes
-PIPELINE_ORACLES["multimodal_video_keyframes"] = """
+query("multimodal_video_keyframes", q_multimodal_video_keyframes, """
 WITH decoded AS (
   SELECT doc_id AS media_id,
     (1 + ('0x' || substr(md5(text), 1, 8))::BIGINT % 300)::INT AS n_frames
@@ -1838,7 +2015,7 @@ FROM (
                                ORDER BY delta DESC, frame_idx) AS rn
   FROM deltas
 ) WHERE rn = 1 ORDER BY media_id, bucket
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -1853,9 +2030,7 @@ def q_dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     removed = Σ (size−1)·n_clusters. Composes the clusters query, so the
     audit tracks the real pipeline output.
     """
-    from .extra_queries import EXTRA_QUERIES
-
-    clusters = EXTRA_QUERIES["dedup_clusters"](spark, sf_dir)
+    clusters = q_dedup_clusters(spark, sf_dir)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -1874,9 +2049,7 @@ def q_dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _cluster_histogram_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    clusters = EXTRA_ORACLES["dedup_clusters"].strip()
+    clusters = QUERIES["dedup_clusters"].oracle.strip()
     return f"""
 WITH clusters_t AS (SELECT * FROM ({clusters}) raw),
 sizes AS (
@@ -1889,8 +2062,9 @@ FROM sizes GROUP BY cluster_size ORDER BY cluster_size
 """
 
 
-PIPELINE_QUERIES["dedup_cluster_size_histogram"] = (
-    q_dedup_cluster_size_histogram
+query(
+    "dedup_cluster_size_histogram", q_dedup_cluster_size_histogram,
+    _cluster_histogram_oracle(),
 )
 
 
@@ -1935,10 +2109,8 @@ def q_ann_mrr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mrr_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    exact = EXTRA_ORACLES["ann_cosine_topk"].strip()
-    ivf = EXTRA_ORACLES["ann_ivf_topk"].strip()
+    exact = QUERIES["ann_cosine_topk"].oracle.strip()
+    ivf = QUERIES["ann_ivf_topk"].oracle.strip()
     return f"""
 WITH exact_t AS ({exact}),
 ivf_t AS ({ivf}),
@@ -1953,7 +2125,7 @@ ORDER BY e.query_id
 """
 
 
-PIPELINE_QUERIES["ann_mrr_audit"] = q_ann_mrr_audit
+query("ann_mrr_audit", q_ann_mrr_audit, _mrr_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -2044,8 +2216,7 @@ def q_ann_cascade_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["ann_cascade_rerank"] = q_ann_cascade_rerank
-PIPELINE_ORACLES["ann_cascade_rerank"] = f"""
+query("ann_cascade_rerank", q_ann_cascade_rerank, f"""
 WITH stats AS (
   SELECT min(u.x)::DOUBLE AS qmin, max(u.x)::DOUBLE AS qmax
   FROM embeddings, unnest(embedding) AS u(x)
@@ -2091,7 +2262,7 @@ SELECT query_id, neighbor_id, rank::INT AS rank FROM (
                        ORDER BY cosine DESC, neighbor_id) AS rank
   FROM rer
 ) WHERE rank <= {_CASCADE_K} ORDER BY query_id, rank
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2150,13 +2321,6 @@ def q_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_accuracy_oracle() -> str:
-    from .sqlfrag import (
-        _BANDS_SQL,
-        _JACCARD_CORE_SQL,
-        _MINHASH_SQL,
-        _SHINGLES_SQL,
-    )
-
     matched = " + ".join(
         f"CASE WHEN a.sig_{i} = b.sig_{i} THEN 1 ELSE 0 END"
         for i in range(16)
@@ -2185,8 +2349,9 @@ FROM pairs GROUP BY matched_sigs ORDER BY matched_sigs
 """
 
 
-PIPELINE_QUERIES["minhash_estimate_accuracy"] = q_minhash_estimate_accuracy
-PIPELINE_ORACLES["minhash_estimate_accuracy"] = _minhash_accuracy_oracle()
+query(
+    "minhash_estimate_accuracy", q_minhash_estimate_accuracy, _minhash_accuracy_oracle()
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2246,8 +2411,7 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["t_closeness_audit"] = q_t_closeness_audit
-PIPELINE_ORACLES["t_closeness_audit"] = f"""
+query("t_closeness_audit", q_t_closeness_audit, f"""
 WITH cust AS (
   SELECT c_nationkey,
     (c_acctbal * 100)::BIGINT // 100000 AS bal_band, c_mktsegment
@@ -2280,7 +2444,7 @@ SELECT count(*)::BIGINT AS n_classes, max(t_bps) AS max_t_bps,
   count(CASE WHEN t_bps > {_TCLOSE_ALERT_BPS} THEN 1 END)::BIGINT
     AS n_classes_over_t
 FROM per_class
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2315,8 +2479,7 @@ def q_graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["graph_degree_distribution"] = q_graph_degree_distribution
-PIPELINE_ORACLES["graph_degree_distribution"] = """
+query("graph_degree_distribution", q_graph_degree_distribution, """
 WITH e0 AS (
   SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst
   FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -2325,7 +2488,7 @@ und AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
 deg AS (SELECT src, count(*)::BIGINT AS degree FROM und GROUP BY src)
 SELECT degree, count(*)::BIGINT AS n_nodes
 FROM deg GROUP BY degree ORDER BY degree
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2366,8 +2529,7 @@ def q_event_rate_spike_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["event_rate_spike_audit"] = q_event_rate_spike_audit
-PIPELINE_ORACLES["event_rate_spike_audit"] = """
+query("event_rate_spike_audit", q_event_rate_spike_audit, """
 WITH hourly AS (
   SELECT epoch(ts)::BIGINT // 3600 AS hour, count(*)::BIGINT AS c
   FROM events GROUP BY 1
@@ -2385,7 +2547,7 @@ SELECT count(*)::BIGINT AS n_hours,
   sum(CASE WHEN is_spike THEN 1 ELSE 0 END)::BIGINT AS n_spike_hours,
   max(CASE WHEN is_spike THEN c END) AS max_spike_count
 FROM flagged
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2427,8 +2589,7 @@ def q_order_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["order_backlog_aging"] = q_order_backlog_aging
-PIPELINE_ORACLES["order_backlog_aging"] = """
+query("order_backlog_aging", q_order_backlog_aging, """
 WITH asof_t AS (SELECT max(o_orderdate) AS asof_d FROM orders),
 aged AS (
   SELECT datediff('day', o_orderdate, asof_d)::BIGINT AS age_days,
@@ -2441,7 +2602,7 @@ SELECT CASE WHEN age_days <= 30 THEN '0-30'
             ELSE '90+' END AS bucket,
   count(*)::BIGINT AS n_orders, sum(cents)::BIGINT AS value_cents
 FROM aged GROUP BY 1 ORDER BY bucket
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2493,8 +2654,7 @@ def q_bigram_successor_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["bigram_successor_topk"] = q_bigram_successor_topk
-PIPELINE_ORACLES["bigram_successor_topk"] = """
+query("bigram_successor_topk", q_bigram_successor_topk, """
 WITH d AS (
   SELECT string_split(
     trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
@@ -2516,7 +2676,7 @@ FROM (
   FROM succ s JOIN top_ctx t ON s.w1 = t.w1
 ) s(w1, w2, n, n_ctx, rk)
 WHERE rk <= 3 ORDER BY w1, rk
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2562,9 +2722,7 @@ def q_positive_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _positive_pair_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    exact = EXTRA_ORACLES["ann_cosine_topk"].strip()
+    exact = QUERIES["ann_cosine_topk"].oracle.strip()
     return f"""
 WITH topk AS ({exact})
 SELECT query_id, positive_id, retriever_rank, label FROM (
@@ -2579,7 +2737,7 @@ SELECT query_id, positive_id, retriever_rank, label FROM (
 """
 
 
-PIPELINE_QUERIES["positive_pair_mining"] = q_positive_pair_mining
+query("positive_pair_mining", q_positive_pair_mining, _positive_pair_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -2616,10 +2774,7 @@ def q_embedding_dim_variance_audit(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-PIPELINE_QUERIES["embedding_dim_variance_audit"] = (
-    q_embedding_dim_variance_audit
-)
-PIPELINE_ORACLES["embedding_dim_variance_audit"] = """
+query("embedding_dim_variance_audit", q_embedding_dim_variance_audit, """
 WITH stats AS (
   SELECT min(u.x)::DOUBLE AS qmin, max(u.x)::DOUBLE AS qmax
   FROM embeddings, unnest(embedding) AS u(x)
@@ -2640,7 +2795,7 @@ per_dim AS (
 mx AS (SELECT max(var_num)::BIGINT AS max_var FROM per_dim)
 SELECT d::INT AS d, var_num, var_num * 100 < max_var AS is_dead
 FROM per_dim, mx ORDER BY d
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2681,10 +2836,8 @@ def q_ann_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _probe_sweep_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    exact = EXTRA_ORACLES["ann_cosine_topk"].strip()
-    ivf2 = EXTRA_ORACLES["ann_ivf_topk"].strip()
+    exact = QUERIES["ann_cosine_topk"].oracle.strip()
+    ivf2 = QUERIES["ann_ivf_topk"].oracle.strip()
     arms = []
     for p in (1, 2, 3):
         ivf_p = ivf2.replace("WHERE pr <= 2", f"WHERE pr <= {p}")
@@ -2701,7 +2854,7 @@ SELECT * FROM ({union}) ORDER BY n_probe
 """
 
 
-PIPELINE_QUERIES["ann_probe_sweep"] = q_ann_probe_sweep
+query("ann_probe_sweep", q_ann_probe_sweep, _probe_sweep_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -2731,12 +2884,10 @@ def q_ann_ivf_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_pruned_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    return EXTRA_ORACLES["ann_ivf_topk"]
+    return QUERIES["ann_ivf_topk"].oracle
 
 
-PIPELINE_QUERIES["ann_ivf_partition_pruned"] = q_ann_ivf_partition_pruned
+query("ann_ivf_partition_pruned", q_ann_ivf_partition_pruned, _ivf_pruned_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -2753,12 +2904,10 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition of both production paths + one full-outer join on pair
     keys.
     """
-    from .extra_queries import EXTRA_QUERIES
-
-    mh = EXTRA_QUERIES["dedup_minhash_lsh"](spark, sf_dir).select(
+    mh = q_dedup_minhash_lsh(spark, sf_dir).select(
         "id_a", "id_b", F.lit(1).alias("in_mh")
     )
-    sh = EXTRA_QUERIES["dedup_simhash_pairs"](spark, sf_dir).select(
+    sh = q_dedup_simhash_pairs(spark, sf_dir).select(
         "id_a", "id_b", F.lit(1).alias("in_sh")
     )
     both = mh.join(sh, ["id_a", "id_b"], "full_outer").select(
@@ -2773,10 +2922,8 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _method_agreement_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    mh = EXTRA_ORACLES["dedup_minhash_lsh"].strip()
-    sh = EXTRA_ORACLES["dedup_simhash_pairs"].strip()
+    mh = QUERIES["dedup_minhash_lsh"].oracle.strip()
+    sh = QUERIES["dedup_simhash_pairs"].oracle.strip()
     return f"""
 WITH mh_t AS (SELECT id_a, id_b FROM ({mh})),
 sh_t AS (SELECT id_a, id_b FROM ({sh})),
@@ -2793,7 +2940,7 @@ FROM j
 """
 
 
-PIPELINE_QUERIES["dedup_method_agreement"] = q_dedup_method_agreement
+query("dedup_method_agreement", q_dedup_method_agreement, _method_agreement_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -2829,10 +2976,9 @@ def q_quantization_error_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["quantization_error_bound"] = q_quantization_error_bound
-PIPELINE_ORACLES["quantization_error_bound"] = """
+query("quantization_error_bound", q_quantization_error_bound, """
 SELECT count(*)::BIGINT AS n_vectors, TRUE AS within_bound FROM embeddings
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2894,8 +3040,7 @@ def q_grouped_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["grouped_quartiles"] = q_grouped_quartiles
-PIPELINE_ORACLES["grouped_quartiles"] = """
+query("grouped_quartiles", q_grouped_quartiles, """
 WITH ev AS (
   SELECT event_type, event_id, floor(value * 100)::BIGINT AS cents
   FROM events
@@ -2914,7 +3059,7 @@ SELECT event_type, max(n)::BIGINT AS n,
 FROM ranked
 WHERE rn = (n + 3) // 4 OR rn = (n + 1) // 2 OR rn = (3 * n + 3) // 4
 GROUP BY event_type ORDER BY event_type
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -2958,8 +3103,7 @@ ORDER BY model, dependency
 """
 
 
-PIPELINE_QUERIES["model_lineage_edges"] = q_model_lineage_edges
-PIPELINE_ORACLES["model_lineage_edges"] = _lineage_oracle()
+query("model_lineage_edges", q_model_lineage_edges, _lineage_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -3032,15 +3176,14 @@ def q_federated_multiformat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["federated_multiformat_join"] = q_federated_multiformat_join
-PIPELINE_ORACLES["federated_multiformat_join"] = """
+query("federated_multiformat_join", q_federated_multiformat_join, """
 SELECT n_name, event_type, count(*)::BIGINT AS n_events,
   sum(floor(value * 100)::BIGINT)::BIGINT AS sum_cents
 FROM events e
 JOIN customer c ON e.user_id = c.c_custkey
 JOIN nation n ON c.c_nationkey = n.n_nationkey
 GROUP BY n_name, event_type ORDER BY n_name, event_type
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3080,12 +3223,13 @@ def q_ann_ivf_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_incremental_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    return EXTRA_ORACLES["ann_ivf_topk"]
+    return QUERIES["ann_ivf_topk"].oracle
 
 
-PIPELINE_QUERIES["ann_ivf_incremental_append"] = q_ann_ivf_incremental_append
+query(
+    "ann_ivf_incremental_append", q_ann_ivf_incremental_append,
+    _ivf_incremental_oracle(),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3134,14 +3278,13 @@ def q_sql_udf_order_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["sql_udf_order_tiers"] = q_sql_udf_order_tiers
-PIPELINE_ORACLES["sql_udf_order_tiers"] = """
+query("sql_udf_order_tiers", q_sql_udf_order_tiers, """
 WITH cents AS (SELECT floor(o_totalprice * 100)::BIGINT AS cents FROM orders)
 SELECT CASE WHEN cents >= 20000000 THEN 3
             WHEN cents >= 10000000 THEN 2 ELSE 1 END::BIGINT AS tier,
   count(*)::BIGINT AS n_orders, sum(cents)::BIGINT AS sum_cents
 FROM cents GROUP BY 1 ORDER BY tier
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3175,13 +3318,12 @@ def q_udtf_polymorphic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["udtf_polymorphic_stats"] = q_udtf_polymorphic_stats
-PIPELINE_ORACLES["udtf_polymorphic_stats"] = """
+query("udtf_polymorphic_stats", q_udtf_polymorphic_stats, """
 SELECT user_id, min(cents) AS min_cents, max(cents) AS max_cents,
   sum(cents)::BIGINT AS sum_cents
 FROM (SELECT user_id, floor(value * 100)::BIGINT AS cents FROM events)
 GROUP BY user_id ORDER BY user_id
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3210,13 +3352,12 @@ def q_sql_pipe_syntax_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["sql_pipe_syntax_revenue"] = q_sql_pipe_syntax_revenue
-PIPELINE_ORACLES["sql_pipe_syntax_revenue"] = """
+query("sql_pipe_syntax_revenue", q_sql_pipe_syntax_revenue, """
 SELECT o_orderpriority, count(*)::BIGINT AS n_orders,
   sum(floor(o_totalprice * 100)::BIGINT)::BIGINT AS sum_cents
 FROM orders WHERE o_orderstatus <> 'F'
 GROUP BY o_orderpriority ORDER BY o_orderpriority
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3232,9 +3373,7 @@ def q_dedup_canonical_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup stage actually ships downstream. Pure composition of the
     production clustering and quality scorer.
     """
-    from .extra_queries import EXTRA_QUERIES
-
-    clusters = EXTRA_QUERIES["dedup_clusters"](spark, sf_dir).select(
+    clusters = q_dedup_clusters(spark, sf_dir).select(
         "id", "cluster_id"
     )
     quality = text.quality_score(_read(spark, sf_dir, "documents")).select(
@@ -3259,10 +3398,8 @@ def q_dedup_canonical_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _canonical_quality_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    clusters = EXTRA_ORACLES["dedup_clusters"].strip()
-    quality = EXTRA_ORACLES["text_quality_score"].strip()
+    clusters = QUERIES["dedup_clusters"].oracle.strip()
+    quality = QUERIES["text_quality_score"].oracle.strip()
     return f"""
 WITH clusters_t AS (SELECT id, cluster_id FROM ({clusters}) c),
 qual AS (SELECT id, quality FROM ({quality}) q),
@@ -3280,7 +3417,10 @@ FROM ranked GROUP BY cluster_id ORDER BY cluster_id
 """
 
 
-PIPELINE_QUERIES["dedup_canonical_by_quality"] = q_dedup_canonical_by_quality
+query(
+    "dedup_canonical_by_quality", q_dedup_canonical_by_quality,
+    _canonical_quality_oracle(),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3328,8 +3468,7 @@ def q_lexicon_filter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["lexicon_filter_rate"] = q_lexicon_filter_rate
-PIPELINE_ORACLES["lexicon_filter_rate"] = f"""
+query("lexicon_filter_rate", q_lexicon_filter_rate, f"""
 WITH toks AS (
   SELECT source,
     string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')
@@ -3349,7 +3488,7 @@ SELECT source, count(*)::BIGINT AS n_docs,
   sum(hit_tokens)::BIGINT AS n_hit_tokens,
   (sum(flagged) * 10000 // count(*))::BIGINT AS flag_rate_bps
 FROM per_doc GROUP BY source ORDER BY source
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3396,13 +3535,6 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_leakage_oracle() -> str:
-    from .sqlfrag import (
-        _BANDS_SQL,
-        _JACCARD_CORE_SQL,
-        _MINHASH_SQL,
-        _SHINGLES_SQL,
-    )
-
     return f"""
 WITH {_SHINGLES_SQL.strip().lstrip(',')},
 sigs AS ({_MINHASH_SQL}),
@@ -3434,8 +3566,7 @@ FROM flagged
 """
 
 
-PIPELINE_QUERIES["split_leakage_audit"] = q_split_leakage_audit
-PIPELINE_ORACLES["split_leakage_audit"] = _split_leakage_oracle()
+query("split_leakage_audit", q_split_leakage_audit, _split_leakage_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -3510,9 +3641,7 @@ def q_ann_ndcg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ndcg_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    ivf = EXTRA_ORACLES["ann_ivf_topk"].strip()
+    ivf = QUERIES["ann_ivf_topk"].oracle.strip()
     disc = ", ".join(str(int(w)) for w in _NDCG_W_E9)
     idcg_prefix = [0]
     for w in _NDCG_W_E9:
@@ -3539,7 +3668,7 @@ FROM per_q ORDER BY query_id
 """
 
 
-PIPELINE_QUERIES["ann_ndcg_audit"] = q_ann_ndcg_audit
+query("ann_ndcg_audit", q_ann_ndcg_audit, _ndcg_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -3588,8 +3717,7 @@ def q_oov_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["oov_rate_by_lang"] = q_oov_rate_by_lang
-PIPELINE_ORACLES["oov_rate_by_lang"] = f"""
+query("oov_rate_by_lang", q_oov_rate_by_lang, f"""
 WITH toks AS (
   SELECT lang, t.tok
   FROM (SELECT lang, string_split(
@@ -3610,7 +3738,7 @@ flagged AS (
 SELECT lang, count(*)::BIGINT AS n_tokens, sum(oov)::BIGINT AS n_oov,
   (sum(oov) * 10000 // count(*))::BIGINT AS oov_bps
 FROM flagged GROUP BY lang ORDER BY lang
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3670,8 +3798,7 @@ def q_neyman_allocation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["neyman_allocation_counts"] = q_neyman_allocation_counts
-PIPELINE_ORACLES["neyman_allocation_counts"] = f"""
+query("neyman_allocation_counts", q_neyman_allocation_counts, f"""
 WITH ev AS (
   SELECT event_type, floor(value * 100)::BIGINT AS cents FROM events
 ),
@@ -3692,7 +3819,7 @@ SELECT event_type, n,
   (base + CASE WHEN row_number() OVER (ORDER BY rem DESC, event_type)
                     <= extra THEN 1 ELSE 0 END)::BIGINT AS allocated
 FROM based, leftover ORDER BY event_type
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3732,8 +3859,7 @@ def q_rate_limit_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["rate_limit_events"] = q_rate_limit_events
-PIPELINE_ORACLES["rate_limit_events"] = f"""
+query("rate_limit_events", q_rate_limit_events, f"""
 WITH ev AS (
   SELECT user_id, event_id, ts,
     epoch_ms(ts)::BIGINT // 86400000 AS day
@@ -3750,7 +3876,7 @@ SELECT day, count(*)::BIGINT AS n_events,
   sum(admitted)::BIGINT AS n_admitted,
   sum(1 - admitted)::BIGINT AS n_dropped
 FROM flagged GROUP BY day ORDER BY day
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3817,8 +3943,7 @@ def q_time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["time_decay_attribution"] = q_time_decay_attribution
-PIPELINE_ORACLES["time_decay_attribution"] = """
+query("time_decay_attribution", q_time_decay_attribution, """
 WITH ev AS (
   SELECT user_id, ts, event_id, event_type,
     floor(value * 100)::BIGINT AS cents,
@@ -3847,7 +3972,7 @@ weighted AS (
 SELECT channel, count(*)::BIGINT AS n_purchases,
   sum(wt * cents)::BIGINT AS weighted_credit
 FROM weighted GROUP BY channel ORDER BY channel
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -3895,9 +4020,7 @@ def q_knn_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_purity_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    exact = EXTRA_ORACLES["ann_cosine_topk"].strip()
+    exact = QUERIES["ann_cosine_topk"].oracle.strip()
     return f"""
 WITH topk AS ({exact})
 SELECT t.query_id, q.label,
@@ -3911,7 +4034,7 @@ GROUP BY t.query_id, q.label ORDER BY t.query_id
 """
 
 
-PIPELINE_QUERIES["knn_label_purity"] = q_knn_label_purity
+query("knn_label_purity", q_knn_label_purity, _knn_purity_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -4005,8 +4128,7 @@ LEFT JOIN (
     return f"SELECT * FROM ({union}) ORDER BY window_hours"
 
 
-PIPELINE_QUERIES["funnel_window_sweep"] = q_funnel_window_sweep
-PIPELINE_ORACLES["funnel_window_sweep"] = _funnel_sweep_oracle()
+query("funnel_window_sweep", q_funnel_window_sweep, _funnel_sweep_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -4071,8 +4193,7 @@ def q_dataset_card_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["dataset_card_summary"] = q_dataset_card_summary
-PIPELINE_ORACLES["dataset_card_summary"] = f"""
+query("dataset_card_summary", q_dataset_card_summary, f"""
 WITH base AS (
   SELECT doc_id, lang, source, n_chars,
     len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')),
@@ -4104,7 +4225,7 @@ SELECT n_docs, n_langs, n_sources, total_tokens,
   (n_flagged * 10000 // n_docs)::BIGINT AS flag_rate_bps,
   n_dup_groups, n_removable
 FROM summary, dups
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -4159,9 +4280,7 @@ def q_graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _modularity_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    lpa = EXTRA_ORACLES["graph_label_propagation"].strip()
+    lpa = QUERIES["graph_label_propagation"].oracle.strip()
     # reuse the LPA oracle's CTE chain up to l2 by swapping its final SELECT
     final = "SELECT label, count(*)::BIGINT AS community_size\nFROM l2 GROUP BY label ORDER BY label"
     assert final in lpa
@@ -4185,7 +4304,7 @@ FROM per_c, d_tot
 """
 
 
-PIPELINE_QUERIES["graph_modularity_score"] = q_graph_modularity_score
+query("graph_modularity_score", q_graph_modularity_score, _modularity_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -4286,9 +4405,7 @@ def q_fusion_weight_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fusion_sweep_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    rrf = EXTRA_ORACLES["rrf_hybrid_search"]
+    rrf = _RRF_ORACLE
     cut = rrf.index("fused AS (")
     prefix = rrf[:cut].rstrip().rstrip(",")
     arms = []
@@ -4315,7 +4432,7 @@ SELECT * FROM ({union}) ORDER BY lex_weight, rk
 """
 
 
-PIPELINE_QUERIES["fusion_weight_sweep"] = q_fusion_weight_sweep
+query("fusion_weight_sweep", q_fusion_weight_sweep, _fusion_sweep_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -4357,8 +4474,7 @@ def q_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["cohort_ltv_curve"] = q_cohort_ltv_curve
-PIPELINE_ORACLES["cohort_ltv_curve"] = """
+query("cohort_ltv_curve", q_cohort_ltv_curve, """
 WITH ev AS (
   SELECT user_id, event_type, floor(value * 100)::BIGINT AS cents,
     epoch_ms(ts)::BIGINT // 604800000 AS week
@@ -4378,7 +4494,7 @@ SELECT cohort_week, age_weeks, week_cents,
   sum(week_cents) OVER (PARTITION BY cohort_week ORDER BY age_weeks
                         ROWS UNBOUNDED PRECEDING)::BIGINT AS cum_cents
 FROM rev ORDER BY cohort_week, age_weeks
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -4393,15 +4509,13 @@ def q_dedup_pipeline_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages use the production operators; the survivor rule (min id) is a
     total order, so the pipeline is replayable.
     """
-    from .extra_queries import EXTRA_QUERIES
-
     docs = _read(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     base = docs.select("doc_id", F.md5(norm).alias("digest"))
     exact_canon = base.groupBy("digest").agg(
         F.min("doc_id").alias("doc_id")
     )
-    clusters = EXTRA_QUERIES["dedup_clusters"](spark, sf_dir).select(
+    clusters = q_dedup_clusters(spark, sf_dir).select(
         F.col("id").alias("doc_id"), "is_canonical"
     )
     survivors2 = exact_canon.join(clusters, "doc_id").filter(
@@ -4423,9 +4537,7 @@ def q_dedup_pipeline_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pipeline_yield_oracle() -> str:
-    from .extra_queries import EXTRA_ORACLES
-
-    clusters = EXTRA_ORACLES["dedup_clusters"].strip()
+    clusters = QUERIES["dedup_clusters"].oracle.strip()
     return f"""
 WITH base AS (
   SELECT doc_id,
@@ -4448,7 +4560,7 @@ SELECT (SELECT count(*) FROM base)::BIGINT AS n_input,
 """
 
 
-PIPELINE_QUERIES["dedup_pipeline_yield"] = q_dedup_pipeline_yield
+query("dedup_pipeline_yield", q_dedup_pipeline_yield, _pipeline_yield_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -4504,8 +4616,7 @@ def q_temporal_split_embargo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["temporal_split_embargo"] = q_temporal_split_embargo
-PIPELINE_ORACLES["temporal_split_embargo"] = """
+query("temporal_split_embargo", q_temporal_split_embargo, """
 WITH ev AS (
   SELECT user_id, epoch_ms(ts)::BIGINT // 604800000 AS week FROM events
 ),
@@ -4534,7 +4645,7 @@ straddle AS (
 )
 SELECT segment, n_events, n_users, n_straddling_users
 FROM per_seg, straddle ORDER BY segment
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -4611,8 +4722,7 @@ GROUP BY fence ORDER BY fence
 """
 
 
-PIPELINE_QUERIES["spatial_geofence_counts"] = q_spatial_geofence_counts
-PIPELINE_ORACLES["spatial_geofence_counts"] = _geofence_oracle()
+query("spatial_geofence_counts", q_spatial_geofence_counts, _geofence_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -4664,8 +4774,7 @@ def q_recency_weighted_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["recency_weighted_retention"] = q_recency_weighted_retention
-PIPELINE_ORACLES["recency_weighted_retention"] = """
+query("recency_weighted_retention", q_recency_weighted_retention, """
 WITH ev AS (
   SELECT event_id, epoch_ms(ts)::BIGINT // 604800000 AS week FROM events
 ),
@@ -4684,7 +4793,7 @@ kept AS (
 SELECT week, count(*)::BIGINT AS n_events, sum(kept)::BIGINT AS n_kept,
   (sum(kept) * 10000 // count(*))::BIGINT AS kept_bps
 FROM kept GROUP BY week ORDER BY week
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -4737,13 +4846,12 @@ def q_keyset_pagination_page3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderdate", "o_orderkey")
 
 
-PIPELINE_QUERIES["keyset_pagination_page3"] = q_keyset_pagination_page3
-PIPELINE_ORACLES["keyset_pagination_page3"] = f"""
+query("keyset_pagination_page3", q_keyset_pagination_page3, f"""
 SELECT o_orderkey, o_orderdate, floor(o_totalprice * 100)::BIGINT AS cents
 FROM orders
 ORDER BY o_orderdate, o_orderkey
 LIMIT {_PAGE_SIZE} OFFSET {2 * _PAGE_SIZE}
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -4782,13 +4890,10 @@ def q_file_provenance_partition_counts(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-PIPELINE_QUERIES["file_provenance_partition_counts"] = (
-    q_file_provenance_partition_counts
-)
-PIPELINE_ORACLES["file_provenance_partition_counts"] = """
+query("file_provenance_partition_counts", q_file_provenance_partition_counts, """
 SELECT label, count(*)::BIGINT AS n_rows
 FROM embeddings GROUP BY label ORDER BY label
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -4841,8 +4946,7 @@ def q_pattern_negation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["pattern_negation_counts"] = q_pattern_negation_counts
-PIPELINE_ORACLES["pattern_negation_counts"] = """
+query("pattern_negation_counts", q_pattern_negation_counts, """
 WITH ev AS (
   SELECT user_id, ts, event_type,
     last_value(CASE WHEN event_type = 'signup' THEN ts END IGNORE NULLS)
@@ -4862,7 +4966,7 @@ purchases AS (
 )
 SELECT outcome, count(*)::BIGINT AS n_purchases
 FROM purchases GROUP BY outcome ORDER BY outcome
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -4911,8 +5015,7 @@ def q_markov_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["markov_next_event_accuracy"] = q_markov_next_event_accuracy
-PIPELINE_ORACLES["markov_next_event_accuracy"] = """
+query("markov_next_event_accuracy", q_markov_next_event_accuracy, """
 WITH pairs AS (
   SELECT event_type AS cur,
     lead(event_type) OVER (PARTITION BY user_id
@@ -4934,7 +5037,7 @@ SELECT p2.cur, count(*)::BIGINT AS n_transitions,
    // count(*))::BIGINT AS acc_bps
 FROM p2 JOIN pred ON p2.cur = pred.cur
 GROUP BY p2.cur ORDER BY p2.cur
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -4994,8 +5097,7 @@ def q_asof_tolerance_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["asof_tolerance_buckets"] = q_asof_tolerance_buckets
-PIPELINE_ORACLES["asof_tolerance_buckets"] = """
+query("asof_tolerance_buckets", q_asof_tolerance_buckets, """
 WITH merged AS (
   SELECT o_custkey AS user_id, o_orderdate::TIMESTAMP AS t, 1 AS is_order,
     o_orderkey
@@ -5017,7 +5119,7 @@ SELECT CASE WHEN o_t IS NULL THEN 'no_prior_order'
   count(*)::BIGINT AS n_events
 FROM carried WHERE is_order = 0
 GROUP BY 1 ORDER BY bucket
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -5057,13 +5159,6 @@ def q_jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jaccard_sweep_oracle() -> str:
-    from .sqlfrag import (
-        _BANDS_SQL,
-        _JACCARD_CORE_SQL,
-        _MINHASH_SQL,
-        _SHINGLES_SQL,
-    )
-
     sums = ", ".join(
         f"sum(CASE WHEN 100 * j.shared >= {p} * j.union_size THEN 1 ELSE 0 END)::BIGINT AS pairs_ge_{p}"
         for p in _JACCARD_SWEEP_PCTS
@@ -5083,8 +5178,7 @@ FROM jac j JOIN cand c ON j.id_a = c.id_a AND j.id_b = c.id_b
 """
 
 
-PIPELINE_QUERIES["jaccard_threshold_sweep"] = q_jaccard_threshold_sweep
-PIPELINE_ORACLES["jaccard_threshold_sweep"] = _jaccard_sweep_oracle()
+query("jaccard_threshold_sweep", q_jaccard_threshold_sweep, _jaccard_sweep_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -5120,8 +5214,7 @@ def q_churn_definition_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return aged.agg(F.count(F.lit(1)).cast("long").alias("n_users"), *aggs)
 
 
-PIPELINE_QUERIES["churn_definition_sweep"] = q_churn_definition_sweep
-PIPELINE_ORACLES["churn_definition_sweep"] = f"""
+query("churn_definition_sweep", q_churn_definition_sweep, f"""
 WITH ev AS (
   SELECT user_id, epoch_ms(ts)::BIGINT // 86400000 AS day FROM events
 ),
@@ -5130,7 +5223,7 @@ asof_t AS (SELECT max(day) AS as_of_day FROM ev)
 SELECT count(*)::BIGINT AS n_users,
   {", ".join(f"sum(CASE WHEN as_of_day - last_day >= {d} THEN 1 ELSE 0 END)::BIGINT AS churned_{d}d" for d in _CHURN_DAYS)}
 FROM last_seen, asof_t
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -5192,8 +5285,7 @@ def q_price_realization_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["price_realization_by_brand"] = q_price_realization_by_brand
-PIPELINE_ORACLES["price_realization_by_brand"] = """
+query("price_realization_by_brand", q_price_realization_by_brand, """
 WITH joined AS (
   SELECT p.p_brand,
     floor((l.l_extendedprice::DECIMAL(18,4)
@@ -5208,7 +5300,7 @@ SELECT p_brand, count(*)::BIGINT AS n_lines,
   sum(retail_cents)::BIGINT AS sum_retail_cents,
   (sum(net_cents) * 10000 // sum(retail_cents))::BIGINT AS realization_bps
 FROM joined GROUP BY p_brand ORDER BY p_brand
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -5263,8 +5355,7 @@ def q_effective_tax_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["effective_tax_by_flag"] = q_effective_tax_by_flag
-PIPELINE_ORACLES["effective_tax_by_flag"] = """
+query("effective_tax_by_flag", q_effective_tax_by_flag, """
 WITH base AS (
   SELECT l_returnflag, l_linestatus,
     floor(((l_extendedprice::DECIMAL(18,4)
@@ -5281,7 +5372,7 @@ SELECT l_returnflag, l_linestatus, count(*)::BIGINT AS n_lines,
   (sum(tax_cents) * 10000 // sum(net_cents))::BIGINT AS eff_tax_bps
 FROM base GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
-"""
+""")
 
 
 # ---------------------------------------------------------------------------
@@ -5396,15 +5487,14 @@ _PQ_ALL_CTES = ",\n".join(
     for s in range(_PQ_M)
 )
 
-PIPELINE_QUERIES["ann_pq_codes"] = q_ann_pq_codes
-PIPELINE_ORACLES["ann_pq_codes"] = f"""
+query("ann_pq_codes", q_ann_pq_codes, f"""
 WITH {_PQ_ALL_CTES}
 SELECT a2_0.id,
   a2_0.cluster::INT AS code_0, a2_1.cluster::INT AS code_1,
   a2_2.cluster::INT AS code_2, a2_3.cluster::INT AS code_3
 FROM a2_0 JOIN a2_1 USING (id) JOIN a2_2 USING (id) JOIN a2_3 USING (id)
 ORDER BY id
-"""
+""")
 
 _PQ_ADC_TERMS = " + ".join(f"dm_{s}.d{s}" for s in range(_PQ_M))
 _PQ_ADC_JOINS = "\n".join(
@@ -5421,8 +5511,7 @@ _PQ_DM_CTES = ",\n".join(
     for s in range(_PQ_M)
 )
 
-PIPELINE_QUERIES["ann_pq_adc_topk"] = q_ann_pq_adc_topk
-PIPELINE_ORACLES["ann_pq_adc_topk"] = f"""
+query("ann_pq_adc_topk", q_ann_pq_adc_topk, f"""
 WITH {_PQ_ALL_CTES},
 probe AS (
   SELECT list_transform(embedding, x -> x::DOUBLE) AS p
@@ -5437,7 +5526,7 @@ FROM (
   WHERE a2_0.id <> 0
 )
 ORDER BY adc_dist ASC, id ASC LIMIT 10
-"""
+""")
 
 
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5509,8 +5598,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-PIPELINE_QUERIES["ann_ivfpq_topk"] = q_ann_ivfpq_topk
-PIPELINE_ORACLES["ann_ivfpq_topk"] = f"""
+query("ann_ivfpq_topk", q_ann_ivfpq_topk, f"""
 WITH {_PQ_ALL_CTES},
 probe AS (
   SELECT list_transform(embedding, x -> x::DOUBLE) AS p
@@ -5548,7 +5636,7 @@ FROM (
   JOIN cand ON cand.id = a2_0.id
 )
 ORDER BY adc_dist ASC, id ASC LIMIT 10
-"""
+""")
 
 
 def q_ann_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5586,8 +5674,7 @@ def q_ann_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_QUERIES["ann_pq_recall_audit"] = q_ann_pq_recall_audit
-PIPELINE_ORACLES["ann_pq_recall_audit"] = f"""
+query("ann_pq_recall_audit", q_ann_pq_recall_audit, f"""
 WITH {_PQ_ALL_CTES},
 probe AS (
   SELECT list_transform(embedding, x -> x::DOUBLE) AS p
@@ -5615,7 +5702,7 @@ SELECT count(*)::BIGINT AS n_exact,
   (sum(CASE WHEN a.id IS NULL THEN 0 ELSE 1 END) * 10000 // count(*))::BIGINT
     AS recall_bps
 FROM exact LEFT JOIN adc a ON exact.nid = a.id
-"""
+""")
 
 
 def q_ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5668,8 +5755,7 @@ _IVFADC_JOINS = "\n".join(
     f"JOIN dm_{s} ON dm_{s}.id = dm_0.id" for s in range(1, _PQ_M)
 )
 
-PIPELINE_QUERIES["ann_ivfadc_topk"] = q_ann_ivfadc_topk
-PIPELINE_ORACLES["ann_ivfadc_topk"] = f"""
+query("ann_ivfadc_topk", q_ann_ivfadc_topk, f"""
 WITH qv AS (
   SELECT vec_id, label,
     list_transform(embedding, x -> floor(x::DOUBLE * 1000000)::BIGINT) AS q
@@ -5713,4 +5799,640 @@ FROM (
   WHERE dm_0.id <> 0
 )
 ORDER BY adc_dist ASC, id ASC LIMIT 10
-"""
+""")
+
+
+# ---------------------------------------------------------------------------
+# streaming dedup and sketches, real-codec decode audits
+# ---------------------------------------------------------------------------
+
+
+def q_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming ingestion dedup against the historical corpus: arriving
+    documents (doc_id % 10 == 0 as the stream) band-key entirely
+    stateless per micro-batch via the row-local minhash, stream-static
+    join the stored corpus LSH index, emit distinct collision candidates
+    (streaming/events.py::streaming_lsh_dedup_probe). Candidates match
+    dedup_incremental_batch's candidate stage exactly; the Jaccard verify
+    stays a batch job downstream."""
+    from .streaming import events as se
+
+    apply_runtime_confs(spark)
+    docs = _read(spark, sf_dir, "documents")
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+    corpus_index = dedup.lsh_band_keys(
+        dedup.minhash_signatures(dedup.word_shingles(corpus, n=3), num_hashes=16)
+    )
+    stream = se.read_documents_stream(spark, sf_dir).filter(
+        F.col("doc_id") % 10 == 0
+    )
+    return se.run_available_now(
+        se.streaming_lsh_dedup_probe(stream, corpus_index),
+        output_mode="append",
+    ).orderBy("batch_id", "corpus_id")
+
+
+query("streaming_lsh_dedup", q_streaming_lsh_dedup, f"""
+WITH {_SHINGLES_SQL.strip().lstrip(',')},
+sigs AS ({_MINHASH_SQL}),
+buckets AS ({_BANDS_SQL})
+SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id
+FROM buckets b JOIN buckets c
+  ON b.band = c.band AND b.bucket = c.bucket
+WHERE b.id % 10 = 0 AND c.id % 10 <> 0
+ORDER BY batch_id, corpus_id
+""")
+
+
+def q_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate COUNT(DISTINCT) under streaming: per event_type, an
+    Apache DataSketches HLL (``hll_sketch_agg``, a true mergeable
+    aggregate, so it runs as a streaming stateful agg in update mode)
+    accumulates user_id sketches; the emitted estimate is then gated
+    against the exact batch distinct — the output pins the within-5%
+    boolean (lg_k=12 ≈ 1.6% typical error), so sketch drift FAILS the
+    hash gate. Bounded state per key at any throughput, no raw-row
+    retention."""
+    from .streaming import events as se
+
+    apply_runtime_confs(spark)
+    stream = se.read_events_stream(spark, sf_dir)
+    sketched = stream.groupBy("event_type").agg(
+        F.expr("hll_sketch_agg(user_id, 12)").alias("sketch")
+    )
+    out = se.run_available_now(sketched, output_mode="update").select(
+        "event_type",
+        F.expr("hll_sketch_estimate(sketch)").cast("long").alias("approx"),
+    )
+    exact = (
+        _read(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.countDistinct("user_id").alias("n_exact"))
+    )
+    return (
+        out.join(exact, "event_type")
+        .select(
+            "event_type",
+            "n_exact",
+            (
+                F.abs(F.col("approx") - F.col("n_exact")) * 100
+                <= F.col("n_exact") * 5
+            ).alias("within_5pct"),
+        )
+        .orderBy("event_type")
+    )
+
+
+query("streaming_hll_distinct", q_streaming_hll_distinct, """
+SELECT event_type, count(DISTINCT user_id)::BIGINT AS n_exact,
+  TRUE AS within_5pct
+FROM events GROUP BY event_type ORDER BY event_type
+""")
+
+# The codec audits below are registered LAST on purpose (the end of the
+# last of registry.QUERY_MODULES): the rotation sorts unverified names by
+# registration position, so a new name appended at the END joins the BACK
+# of the never-verified tail instead of shifting the staged driver window
+# (VERDICT r5 task 1: "don't let new names shift it").
+
+
+def q_real_codec_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REAL uncompressed codec (r6, ``numpy_uncompressed_decode``)
+    under the driver's cross-engine gate — not the fake stand-in.
+
+    Each sampled doc becomes a genuine 4×4 binary PPM whose 48 pixel
+    bytes are md5(doc_id) tiled ×3; the codec header-parses and decodes
+    it for real (the same code path a production PPM corpus takes), and
+    the audit emits EXACT integers only: width/height/n_frames plus
+    ``pixel_sum`` recovered from the float32 feature means
+    ((f_r+f_g+f_b)·16·255, absolute float error ≤ ~7e-4 ≪ the 0.5
+    rounding margin, so the round-trip is integer-exact). The oracle
+    recomputes the same sum arithmetically from DuckDB's own md5 — two
+    engines, two decoding paths, one exact answer. Compressed formats
+    remain the documented seam (operators/multimodal.py)."""
+    from .operators import multimodal as mm
+
+    docs = _read(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % 10 == 0
+    )
+    digest = F.unhex(F.md5(F.col("doc_id").cast("string")))
+    payload = F.concat(
+        F.lit(b"P6\n4 4\n255\n"), digest, digest, digest
+    )
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("image").alias("kind"),
+        payload.alias("payload"),
+        F.octet_length(payload).cast("long").alias("n_bytes"),
+        "source",
+    )
+    decoded = mm.decode_media(
+        media, decode_fn=mm.numpy_uncompressed_decode
+    )
+    f = F.col("features")
+    return decoded.select(
+        "media_id",
+        "width",
+        "height",
+        "n_frames",
+        F.round((f[0] + f[1] + f[2]) * 16 * 255)
+        .cast("bigint")
+        .alias("pixel_sum"),
+    ).orderBy("media_id")
+
+
+query("real_codec_decode_audit", q_real_codec_decode_audit, """
+SELECT doc_id AS media_id, 4 AS width, 4 AS height, 1 AS n_frames,
+  3 * SUM(
+    16 * (strpos('0123456789abcdef',
+                 substr(md5(doc_id::VARCHAR), 2 * t.i + 1, 1)) - 1)
+      + strpos('0123456789abcdef',
+               substr(md5(doc_id::VARCHAR), 2 * t.i + 2, 1)) - 1
+  )::BIGINT AS pixel_sum
+FROM documents, range(16) t(i)
+WHERE doc_id % 10 = 0
+GROUP BY doc_id ORDER BY media_id""")
+
+
+def _dbyte_sql(idx_expr: str, md5_arg: str = "doc_id::VARCHAR") -> str:
+    """DuckDB expression for byte value ``idx_expr`` (0-based) of
+    md5(``md5_arg``) — the digest bytes the Spark side packs into the
+    synthesized media payloads."""
+    return (
+        f"16 * (strpos('0123456789abcdef', substr(md5({md5_arg}), "
+        f"2 * ({idx_expr}) + 1, 1)) - 1) "
+        f"+ strpos('0123456789abcdef', substr(md5({md5_arg}), "
+        f"2 * ({idx_expr}) + 2, 1)) - 1"
+    )
+
+
+def q_png_codec_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REAL PNG decoder (r7, ``numpy_png_decode`` — stdlib zlib +
+    numpy) under the driver's cross-engine gate, on fully VALID PNGs
+    synthesized in pure Column expressions.
+
+    Each sampled doc becomes a 4×4 RGB8 PNG: scanline 0 carries filter
+    None with md5(doc_id) bytes 0-11 as pixels; scanlines 1-3 carry
+    filter Up (type 2) with further tiled digest bytes as deltas, so the
+    decoder's unfilter pass does real mod-256 reconstruction work. The
+    container is genuine end-to-end: zlib stream with a stored-DEFLATE
+    block whose adler32 is computed ARITHMETICALLY from the digest bytes
+    (precomputed position coefficients, mod 65521), chunk CRCs via
+    Spark's built-in ``crc32`` (JVM-side), constant IHDR/IEND CRCs as
+    literals. The decoder verifies every CRC and the adler (via
+    zlib.decompress) before unfiltering — a wrong byte anywhere rows out
+    as NULL, failing the audit. The oracle replays the Up-filter
+    accumulation arithmetically from DuckDB's own md5: two engines, one
+    decode answer, no shared code."""
+    import struct as _st
+    import zlib as _zl
+
+    from .operators import multimodal as mm
+
+    # r7: _spread() A/B'd and REVERTED here — the 4×4 PNG decode is so
+    # cheap that 32 Python decode workers cost more than they save
+    # (interleaved A/B in OPTIMIZATION_r07.md); the 32×32 JPEG audit keeps
+    # its spread (real Huffman+DCT work per row)
+    docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 5)
+    hexstr = F.md5(F.col("doc_id").cast("string"))
+    digest = F.unhex(hexstr)
+    tiled = F.concat(digest, digest, digest)  # 48 pixel/delta bytes
+
+    # digest byte values as ints, for the arithmetic adler32
+    dbytes = [
+        F.conv(F.substring(hexstr, 2 * i + 1, 2), 16, 10).cast("long")
+        for i in range(16)
+    ]
+    # raw scanlines: [0x00 | t0..t11] [0x02 | t12..t23] ×3 → 52 bytes
+    raw = F.concat(
+        F.lit(b"\x00"), F.substring(tiled, 1, 12),
+        F.lit(b"\x02"), F.substring(tiled, 13, 12),
+        F.lit(b"\x02"), F.substring(tiled, 25, 12),
+        F.lit(b"\x02"), F.substring(tiled, 37, 12),
+    )
+    # adler32 over the 52 raw bytes: s1 = 1 + Σb, s2 = n + Σ(n-k)·b_k
+    # (0-indexed k, mod 65521). Filter bytes contribute 6 to s1 and 156
+    # to s2; tiled byte j sits at position j + 1 + j//12, so its s2
+    # coefficient is 51 - j - j//12 — folded per digest byte below.
+    coeff = [0] * 16
+    for j in range(48):
+        coeff[j % 16] += 51 - j - j // 12
+    s1 = (sum(dbytes[1:], dbytes[0]) * 3 + F.lit(7)) % 65521
+    s2_terms = dbytes[0] * coeff[0]
+    for i in range(1, 16):
+        s2_terms = s2_terms + dbytes[i] * coeff[i]
+    s2 = (s2_terms + F.lit(52 + 156)) % 65521
+    adler = F.unhex(F.lpad(F.hex(s2 * 65536 + s1), 8, "0"))
+    # zlib hdr 0x78 0x01 + stored-block hdr (final, LEN=52, NLEN=~52)
+    idat_data = F.concat(F.lit(b"\x78\x01\x01\x34\x00\xcb\xff"), raw, adler)
+    idat_crc = F.unhex(
+        F.lpad(F.hex(F.crc32(F.concat(F.lit(b"IDAT"), idat_data))), 8, "0")
+    )
+    ihdr_data = _st.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0)
+    ihdr_chunk = (
+        _st.pack(">I", 13) + b"IHDR" + ihdr_data
+        + _st.pack(">I", _zl.crc32(b"IHDR" + ihdr_data) & 0xFFFFFFFF)
+    )
+    iend_chunk = b"\x00\x00\x00\x00IEND" + _st.pack(
+        ">I", _zl.crc32(b"IEND") & 0xFFFFFFFF
+    )
+    payload = F.concat(
+        F.lit(b"\x89PNG\r\n\x1a\n" + ihdr_chunk),
+        F.lit(_st.pack(">I", 63) + b"IDAT"),  # 2+5+52+4 zlib bytes
+        idat_data,
+        idat_crc,
+        F.lit(iend_chunk),
+    )
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("image").alias("kind"),
+        payload.alias("payload"),
+        F.octet_length(payload).cast("long").alias("n_bytes"),
+        "source",
+    )
+    decoded = mm.decode_media(media, decode_fn=mm.stdlib_decode)
+    f = F.col("features")
+    return decoded.select(
+        "media_id",
+        "width",
+        "height",
+        "n_frames",
+        F.round((f[0] + f[1] + f[2]) * 16 * 255)
+        .cast("bigint")
+        .alias("pixel_sum"),
+    ).orderBy("media_id")
+
+
+# Replays q_png_codec_decode_audit's expected pixels without touching a
+# single PNG byte: scanline 0 is digest bytes 0-11 verbatim (filter
+# None); scanlines 1-3 add tiled digest deltas mod 256 (filter Up), so
+# the oracle accumulates r0..r3 per column x exactly as the decoder's
+# unfilter pass must.
+query("png_codec_decode_audit", q_png_codec_decode_audit, f"""
+WITH b AS (
+  SELECT doc_id, t.x,
+    {_dbyte_sql("t.x")} AS b0,
+    {_dbyte_sql("(12 + t.x) % 16")} AS b1,
+    {_dbyte_sql("(24 + t.x) % 16")} AS b2,
+    {_dbyte_sql("(36 + t.x) % 16")} AS b3
+  FROM documents, range(12) t(x)
+  WHERE doc_id % 10 = 5
+), r AS (
+  SELECT doc_id,
+    b0 AS r0,
+    (b0 + b1) % 256 AS r1,
+    ((b0 + b1) % 256 + b2) % 256 AS r2,
+    (((b0 + b1) % 256 + b2) % 256 + b3) % 256 AS r3
+  FROM b
+)
+SELECT doc_id AS media_id, 4 AS width, 4 AS height, 1 AS n_frames,
+  SUM(r0 + r1 + r2 + r3)::BIGINT AS pixel_sum
+FROM r GROUP BY doc_id ORDER BY media_id""")
+
+
+def q_wav_codec_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The real PCM WAV decode path (``numpy_uncompressed_decode``'s
+    ``_wav``) under the driver's cross-engine gate — the audio analog of
+    the PPM/PNG audits (r7; previously unit-tested only).
+
+    Each sampled doc becomes a valid 16-bit mono 8 kHz WAV whose 8
+    samples are md5(doc_id) interpreted as little-endian int16; the RIFF/
+    fmt/data framing is constant so the whole header is a literal and
+    only the sample bytes vary. The audit recovers EXACT integers from
+    the float feature vector: sample_sum = round(mean·n·32768) (|sum| ≤
+    2^18, float32 abs error ~0.02 ≪ 0.5), min/max samples directly from
+    features 2/3. The oracle rebuilds the int16 values arithmetically
+    from DuckDB's md5 (lo + 256·hi, two's complement)."""
+    import struct as _st
+
+    from .operators import multimodal as mm
+
+    docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 2)
+    digest = F.unhex(F.md5(F.col("doc_id").cast("string")))  # 16 B = 8 samples
+    fmt = _st.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    header = (
+        b"RIFF" + _st.pack("<I", 4 + 8 + len(fmt) + 8 + 16) + b"WAVE"
+        + b"fmt " + _st.pack("<I", len(fmt)) + fmt
+        + b"data" + _st.pack("<I", 16)
+    )
+    payload = F.concat(F.lit(header), digest)
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("audio").alias("kind"),
+        payload.alias("payload"),
+        F.octet_length(payload).cast("long").alias("n_bytes"),
+        "source",
+    )
+    decoded = mm.decode_media(media, decode_fn=mm.stdlib_decode)
+    f = F.col("features")
+    return decoded.select(
+        "media_id",
+        F.col("width").alias("n_channels"),
+        F.col("height").alias("sample_rate"),
+        F.col("n_frames").alias("n_samples"),
+        F.round(f[0] * 8 * 32768).cast("bigint").alias("sample_sum"),
+        F.round(f[2] * 32768).cast("bigint").alias("min_sample"),
+        F.round(f[3] * 32768).cast("bigint").alias("max_sample"),
+    ).orderBy("media_id")
+
+
+# Rebuilds the 8 little-endian int16 samples (lo + 256·hi, two's
+# complement) from DuckDB's md5 — the WAV bytes never exist oracle-side.
+query("wav_codec_decode_audit", q_wav_codec_decode_audit, f"""
+WITH s AS (
+  SELECT doc_id,
+    CASE WHEN raw >= 32768 THEN raw - 65536 ELSE raw END AS smp
+  FROM (
+    SELECT doc_id,
+      {_dbyte_sql("2 * t.i")} + 256 * ({_dbyte_sql("2 * t.i + 1")}) AS raw
+    FROM documents, range(8) t(i)
+    WHERE doc_id % 10 = 2
+  )
+)
+SELECT doc_id AS media_id, 1 AS n_channels, 8000 AS sample_rate,
+  8 AS n_samples,
+  SUM(smp)::BIGINT AS sample_sum,
+  MIN(smp)::BIGINT AS min_sample,
+  MAX(smp)::BIGINT AS max_sample
+FROM s GROUP BY doc_id ORDER BY media_id""")
+
+
+def q_bmp_codec_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The real 24-bit BMP decode path (``_bmp``) under the driver's
+    cross-engine gate (r7). The 4×4 pixel array is md5(doc_id) ∥
+    md5(doc_id·'x') ∥ md5(doc_id) — two DIFFERENT digests, so the three
+    per-channel sums differ and the decoder's BGR→RGB reorder is
+    actually verified (a uniform 3× tiling makes all channel sums
+    collapse to Σdigest because gcd(3,16)=1, hiding a swapped-channel
+    bug). BMP stores byte j as the {B,G,R}[j%3] of pixel j//3, bottom-up
+    (row order cancels in sums; the flip is ground-truth unit-tested).
+    The oracle walks the same 48 stored positions from DuckDB's md5."""
+    import struct as _st
+
+    from .operators import multimodal as mm
+
+    docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 7)
+    d1 = F.unhex(F.md5(F.col("doc_id").cast("string")))
+    d2 = F.unhex(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("x"))))
+    pixels = F.concat(d1, d2, d1)  # 48 B: 4 rows × 4 px × BGR
+    header = _st.pack("<2sIHHI", b"BM", 54 + 48, 0, 0, 54) + _st.pack(
+        "<IiiHHIIiiII", 40, 4, 4, 1, 24, 0, 48, 2835, 2835, 0, 0
+    )
+    payload = F.concat(F.lit(header), pixels)
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("image").alias("kind"),
+        payload.alias("payload"),
+        F.octet_length(payload).cast("long").alias("n_bytes"),
+        "source",
+    )
+    decoded = mm.decode_media(media, decode_fn=mm.stdlib_decode)
+    f = F.col("features")
+    return decoded.select(
+        "media_id",
+        "width",
+        "height",
+        "n_frames",
+        F.round(f[0] * 16 * 255).cast("bigint").alias("r_sum"),
+        F.round(f[1] * 16 * 255).cast("bigint").alias("g_sum"),
+        F.round(f[2] * 16 * 255).cast("bigint").alias("b_sum"),
+    ).orderBy("media_id")
+
+
+# Walks the 48 stored BMP bytes (d1 ∥ d2 ∥ d1, BGR interleaved) and
+# groups by j % 3 — channel sums differ because the two digests differ.
+query("bmp_codec_decode_audit", q_bmp_codec_decode_audit, f"""
+WITH bytes AS (
+  SELECT doc_id, t.j,
+    CASE WHEN t.j < 16 THEN {_dbyte_sql("t.j")}
+         WHEN t.j < 32 THEN {_dbyte_sql("t.j - 16", "doc_id::VARCHAR || 'x'")}
+         ELSE {_dbyte_sql("t.j - 32")} END AS v
+  FROM documents, range(48) t(j)
+  WHERE doc_id % 10 = 7
+)
+SELECT doc_id AS media_id, 4 AS width, 4 AS height, 1 AS n_frames,
+  SUM(CASE WHEN j % 3 = 2 THEN v ELSE 0 END)::BIGINT AS r_sum,
+  SUM(CASE WHEN j % 3 = 1 THEN v ELSE 0 END)::BIGINT AS g_sum,
+  SUM(CASE WHEN j % 3 = 0 THEN v ELSE 0 END)::BIGINT AS b_sum
+FROM bytes GROUP BY doc_id ORDER BY media_id""")
+
+
+def q_jpeg_codec_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full baseline-JPEG codec (r7: ``jpeg_encode_baseline`` →
+    ``numpy_jpeg_decode``, pure numpy Huffman + DCT) under the driver's
+    cross-engine gate — encode AND decode both run distributed inside
+    Arrow-batched UDFs; DuckDB never sees a JPEG byte.
+
+    JPEG is lossy, so the audit is built on the one exactly-recoverable
+    case: each sampled doc becomes a 32×32 grayscale image of sixteen
+    CONSTANT 8×8 blocks (one md5 byte each, Kronecker-expanded). A
+    constant block's DCT has only a DC coefficient; with quant=1 that
+    integer survives quantize→Huffman→dequantize→IDCT bit-exactly, so
+    gray_sum/min_byte/max_byte recovered from the decoded features are
+    EXACT integers the oracle recomputes from its own md5. The entropy
+    path does real work: 16 DC Huffman symbols + EOBs per image, byte
+    stuffing, canonical table reconstruction from DHT."""
+    from .operators import multimodal as mm
+
+    mm.register_codecs_by_value()  # closures capture the encoder fn
+    docs = _spread(
+        _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 3)
+    )
+    seeds = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.unhex(F.md5(F.col("doc_id").cast("string"))).alias("seed"),
+        "source",
+    )
+    encode_fn = mm.jpeg_encode_baseline
+
+    def encode(batches):
+        import numpy as _np
+        import pandas as _pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            payloads = []
+            for seed in pdf["seed"]:
+                d = _np.frombuffer(bytes(seed), dtype=_np.uint8)
+                arr = _np.kron(
+                    d.reshape(4, 4), _np.ones((8, 8), dtype=_np.uint8)
+                ).astype(_np.uint8)
+                payloads.append(encode_fn(arr, quant=1))
+            yield _pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "kind": "image",
+                    "payload": payloads,
+                    "n_bytes": [len(p) for p in payloads],
+                    "source": pdf["source"],
+                }
+            )
+
+    media = seeds.mapInPandas(encode, schema=mm.MEDIA_SCHEMA)
+    decoded = mm.decode_media(media, decode_fn=mm.stdlib_decode)
+    f = F.col("features")
+    return decoded.select(
+        "media_id",
+        "width",
+        "height",
+        "n_frames",
+        F.round(f[0] * 1024 * 255).cast("bigint").alias("gray_sum"),
+        F.round(f[4] * 255).cast("bigint").alias("min_byte"),
+        F.round(f[5] * 255).cast("bigint").alias("max_byte"),
+    ).orderBy("media_id")
+
+
+# The JPEG audit's 16 constant blocks are md5 bytes; the oracle never
+# builds a JPEG — the constant-block DC path is exact, so plain digest
+# arithmetic IS the decoded answer.
+query("jpeg_codec_decode_audit", q_jpeg_codec_decode_audit, f"""
+SELECT doc_id AS media_id, 32 AS width, 32 AS height, 1 AS n_frames,
+  (64 * SUM(b))::BIGINT AS gray_sum,
+  MIN(b)::BIGINT AS min_byte,
+  MAX(b)::BIGINT AS max_byte
+FROM (
+  SELECT doc_id, {_dbyte_sql("t.i")} AS b
+  FROM documents, range(16) t(i)
+  WHERE doc_id % 10 = 3
+)
+GROUP BY doc_id ORDER BY media_id""")
+
+
+def q_gif_codec_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The real GIF codec (r7: LZW in pure Python, ``gif_encode_gray`` →
+    ``numpy_gif_decode``) under the driver's cross-engine gate. Each
+    sampled doc's md5 becomes a 4×4 index image over the identity
+    grayscale palette, LZW-compressed into a genuine GIF87a in one Arrow
+    UDF and decoded by the full container walk (sub-block reassembly,
+    variable-width LSB-first codes, clear/KwKwK handling) in another.
+    GIF is lossless, so the decoded gray sums equal plain digest
+    arithmetic — which is exactly what the DuckDB oracle computes,
+    having never seen a GIF byte."""
+    from .operators import multimodal as mm
+
+    mm.register_codecs_by_value()
+    docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 8)
+    seeds = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.unhex(F.md5(F.col("doc_id").cast("string"))).alias("seed"),
+        "source",
+    )
+    encode_fn = mm.gif_encode_gray
+
+    def encode(batches):
+        import numpy as _np
+        import pandas as _pd
+
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            payloads = [
+                encode_fn(
+                    _np.frombuffer(bytes(seed), dtype=_np.uint8).reshape(4, 4)
+                )
+                for seed in pdf["seed"]
+            ]
+            yield _pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "kind": "image",
+                    "payload": payloads,
+                    "n_bytes": [len(p) for p in payloads],
+                    "source": pdf["source"],
+                }
+            )
+
+    media = seeds.mapInPandas(encode, schema=mm.MEDIA_SCHEMA)
+    decoded = mm.decode_media(media, decode_fn=mm.stdlib_decode)
+    f = F.col("features")
+    return decoded.select(
+        "media_id",
+        "width",
+        "height",
+        "n_frames",
+        F.round(f[0] * 16 * 255).cast("bigint").alias("gray_sum"),
+        F.round(f[4] * 255).cast("bigint").alias("min_byte"),
+        F.round(f[5] * 255).cast("bigint").alias("max_byte"),
+    ).orderBy("media_id")
+
+
+# GIF is lossless over an identity-gray palette: decoded gray sums ARE
+# digest sums. Same arithmetic shape as the JPEG audit, different sample.
+query("gif_codec_decode_audit", q_gif_codec_decode_audit, f"""
+SELECT doc_id AS media_id, 4 AS width, 4 AS height, 1 AS n_frames,
+  SUM(b)::BIGINT AS gray_sum,
+  MIN(b)::BIGINT AS min_byte,
+  MAX(b)::BIGINT AS max_byte
+FROM (
+  SELECT doc_id, {_dbyte_sql("t.i")} AS b
+  FROM documents, range(16) t(i)
+  WHERE doc_id % 10 = 8
+)
+GROUP BY doc_id ORDER BY media_id""")
+
+
+def q_ulaw_codec_decode_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """G.711 µ-law companded audio (r7: WAV fmt 7 in ``_wav``) under the
+    driver's cross-engine gate. The µ-law expansion is CLOSED-FORM
+    integer arithmetic — complement, mantissa·8 + 132 bias, shift by the
+    segment, re-bias, sign — so while Spark runs the real vectorized
+    decoder over genuine WAV bytes, DuckDB evaluates the same formula
+    symbolically per digest byte. Sixteen companded samples per doc;
+    sample_sum/min/max recovered exactly from the feature floats
+    (|linear| ≤ 8031 ≪ the float32 margin)."""
+    import struct as _st
+
+    from .operators import multimodal as mm
+
+    docs = _read(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 9)
+    digest = F.unhex(F.md5(F.col("doc_id").cast("string")))  # 16 µ-law bytes
+    fmt = _st.pack("<HHIIHH", 7, 1, 8000, 8000, 1, 8)
+    header = (
+        b"RIFF" + _st.pack("<I", 4 + 8 + len(fmt) + 8 + 16) + b"WAVE"
+        + b"fmt " + _st.pack("<I", len(fmt)) + fmt
+        + b"data" + _st.pack("<I", 16)
+    )
+    payload = F.concat(F.lit(header), digest)
+    media = docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.lit("audio").alias("kind"),
+        payload.alias("payload"),
+        F.octet_length(payload).cast("long").alias("n_bytes"),
+        "source",
+    )
+    decoded = mm.decode_media(media, decode_fn=mm.stdlib_decode)
+    f = F.col("features")
+    return decoded.select(
+        "media_id",
+        F.col("width").alias("n_channels"),
+        F.col("height").alias("sample_rate"),
+        F.col("n_frames").alias("n_samples"),
+        F.round(f[0] * 16 * 32768).cast("bigint").alias("sample_sum"),
+        F.round(f[2] * 32768).cast("bigint").alias("min_sample"),
+        F.round(f[3] * 32768).cast("bigint").alias("max_sample"),
+    ).orderBy("media_id")
+
+
+# The G.711 µ-law expansion evaluated symbolically: u = 255-b;
+# linear = ±(((u mod 16)·8 + 132) · 2^((u div 16) mod 8) − 132).
+query("ulaw_codec_decode_audit", q_ulaw_codec_decode_audit, f"""
+WITH s AS (
+  SELECT doc_id,
+    CASE WHEN u >= 128 THEN 132 - t ELSE t - 132 END AS smp
+  FROM (
+    SELECT doc_id, u,
+      ((u % 16) * 8 + 132) * (1 << ((u // 16) % 8)) AS t
+    FROM (
+      SELECT doc_id, 255 - ({_dbyte_sql("t.i")}) AS u
+      FROM documents, range(16) t(i)
+      WHERE doc_id % 10 = 9
+    )
+  )
+)
+SELECT doc_id AS media_id, 1 AS n_channels, 8000 AS sample_rate,
+  16 AS n_samples,
+  SUM(smp)::BIGINT AS sample_sum,
+  MIN(smp)::BIGINT AS min_sample,
+  MAX(smp)::BIGINT AS max_sample
+FROM s GROUP BY doc_id ORDER BY media_id""")

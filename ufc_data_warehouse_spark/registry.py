@@ -17,17 +17,23 @@ for free — SURVEY §4).
 to partitioned parquet. At the 100 TB design point only the marts are
 materialized; intermediate models stay as logical-plan views so no shuffle
 or scan is paid twice.
+
+The non-model queries have one registry too: each query module declares
+each of its queries once, with ``query(name, fn, oracle)`` after the
+function, and ``queries()`` lists them in ``QUERY_MODULES`` order.
 """
 
 from __future__ import annotations
 
+import importlib
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ModelFn = Callable[[dict[str, DataFrame]], DataFrame]
+Query = Callable[[SparkSession, str], DataFrame]
 
 
 @dataclass
@@ -203,3 +209,41 @@ def write_jdbc(
 
 REGISTRY = Registry()
 model = REGISTRY.model
+
+
+class QueryDef(NamedTuple):
+    fn: Query
+    oracle: str  # DuckDB SQL computing the same rows
+
+
+# The order of queries(): module by module, each in its source order. A
+# query belongs to the module that defines its function.
+QUERY_MODULES = (
+    "extra_queries",
+    "tpch_extra",
+    "curation_queries",
+    "analytics_queries",
+    "graph_queries",
+    "pipeline_queries",
+)
+QUERIES: dict[str, QueryDef] = {}
+
+
+def query(name: str, fn: Query, oracle: str) -> None:
+    """Register the non-model query ``name``: ``fn(spark, sf_dir)`` and
+    the oracle SQL its rows must equal. A name registers once."""
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+    QUERIES[name] = QueryDef(fn, oracle)
+
+
+def queries() -> dict[str, QueryDef]:
+    """Every query of ``QUERY_MODULES``, importing them; the order does not
+    depend on which module a process imported first."""
+    rank = {
+        importlib.import_module(f"{__package__}.{mod}").__name__: i
+        for i, mod in enumerate(QUERY_MODULES)
+    }
+    return dict(
+        sorted(QUERIES.items(), key=lambda kv: rank[kv[1].fn.__module__])
+    )

@@ -1,20 +1,16 @@
 """Shared DuckDB-oracle SQL fragments.
 
-A LEAF module (imports nothing from this package) so every query module
-can use the canonical normalization/tokenization fragments without
-creating import cycles. The circular-import failure mode this prevents:
-``analytics_queries`` needing a fragment from ``extra_queries`` while
-``extra_queries`` imports ``analytics_queries``' registries at its
-bottom — whichever imported first would snapshot the other's dicts
-half-filled and silently drop every query registered after the cycle
-point (regression-tested in tests/test_registry.py)."""
+A leaf module (it imports nothing from this package): the normalization,
+tokenization and MinHash/LSH fragments that several query modules'
+oracles share live here once, so a query module needs no other query
+module to build its oracle text."""
 
 from __future__ import annotations
 
 _NORM_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
 _TOKS_SQL = f"string_split({_NORM_SQL}, ' ')"
 
-# --- MinHash/LSH pipeline fragments (shared by extra_queries + analytics) ---
+# --- MinHash/LSH pipeline fragments ---
 
 _SHINGLES_SQL = f"""
 doc_toks AS (

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .registry import query
 from .sources.ingest import read_table as _read
 
 
@@ -267,17 +268,7 @@ def q_tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TPCH_EXTRA_QUERIES = {
-    "tpch_q2_min_cost_supplier": q_tpch_q2_min_cost_supplier,
-    "tpch_q8_market_share": q_tpch_q8_market_share,
-    "tpch_q9_product_profit": q_tpch_q9_product_profit,
-    "tpch_q10_returned_revenue": q_tpch_q10_returned_revenue,
-    "tpch_q11_important_stock": q_tpch_q11_important_stock,
-    "tpch_q16_supplier_cnt": q_tpch_q16_supplier_cnt,
-}
-
-TPCH_EXTRA_ORACLES = {
-    "tpch_q2_min_cost_supplier": """
+query("tpch_q2_min_cost_supplier", q_tpch_q2_min_cost_supplier, """
 WITH eur_sup AS (
   SELECT s_suppkey, s_name, s_acctbal, n_name
   FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -301,8 +292,8 @@ FROM eur_offers e
 JOIN min_per_part m ON e.l_partkey = m.l_partkey AND e.offer_price = m.min_price
 JOIN part p ON e.l_partkey = p.p_partkey
 WHERE p.p_size <= 5
-ORDER BY e.s_acctbal DESC, e.n_name, e.s_name, partkey LIMIT 100""",
-    "tpch_q8_market_share": f"""
+ORDER BY e.s_acctbal DESC, e.n_name, e.s_name, partkey LIMIT 100""")
+query("tpch_q8_market_share", q_tpch_q8_market_share, f"""
 SELECT year(o_orderdate) AS o_year,
   sum(CASE WHEN n2.n_name = 'NATION_3' THEN {_REV_SQL} ELSE 0::DECIMAL(38,8) END)::DOUBLE
     / sum({_REV_SQL})::DOUBLE AS mkt_share
@@ -314,8 +305,8 @@ JOIN region ON n1.n_regionkey = r_regionkey
 JOIN supplier ON l_suppkey = s_suppkey
 JOIN nation n2 ON s_nationkey = n2.n_nationkey
 WHERE r_name = 'EUROPE'
-GROUP BY o_year ORDER BY o_year""",
-    "tpch_q9_product_profit": f"""
+GROUP BY o_year ORDER BY o_year""")
+query("tpch_q9_product_profit", q_tpch_q9_product_profit, f"""
 SELECT n_name AS nation, year(l_shipdate) AS o_year,
   sum({_REV_SQL} - (p_retailprice::DECIMAL(18,4) * l_quantity::DECIMAL(18,4))::DECIMAL(38,8))::DOUBLE AS sum_profit
 FROM lineitem
@@ -323,8 +314,8 @@ JOIN part ON l_partkey = p_partkey
 JOIN supplier ON l_suppkey = s_suppkey
 JOIN nation ON s_nationkey = n_nationkey
 WHERE p_name LIKE '%red%'
-GROUP BY n_name, year(l_shipdate) ORDER BY nation, o_year DESC""",
-    "tpch_q10_returned_revenue": f"""
+GROUP BY n_name, year(l_shipdate) ORDER BY nation, o_year DESC""")
+query("tpch_q10_returned_revenue", q_tpch_q10_returned_revenue, f"""
 SELECT c_custkey, c_name, c_acctbal, n_name,
   sum({_REV_SQL})::DOUBLE AS revenue
 FROM lineitem
@@ -333,8 +324,8 @@ JOIN customer ON o_custkey = c_custkey
 JOIN nation ON c_nationkey = n_nationkey
 WHERE l_returnflag = 'R'
 GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY revenue DESC, c_custkey LIMIT 20""",
-    "tpch_q11_important_stock": """
+ORDER BY revenue DESC, c_custkey LIMIT 20""")
+query("tpch_q11_important_stock", q_tpch_q11_important_stock, """
 WITH asia_sup AS (
   SELECT s_suppkey FROM supplier
   JOIN nation ON s_nationkey = n_nationkey
@@ -349,8 +340,8 @@ per_part AS (
 SELECT l_partkey AS partkey, value_dec::DOUBLE AS value
 FROM per_part
 WHERE value_dec::DOUBLE > (SELECT sum(value_dec) FROM per_part)::DOUBLE * 0.001
-ORDER BY value DESC, partkey""",
-    "tpch_q16_supplier_cnt": """
+ORDER BY value DESC, partkey""")
+query("tpch_q16_supplier_cnt", q_tpch_q16_supplier_cnt, """
 SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -358,5 +349,4 @@ WHERE p_brand <> 'Brand#1' AND p_type <> 'PROMO'
   AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
   AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
 GROUP BY p_brand, p_type, p_size
-ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-}
+ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""")
