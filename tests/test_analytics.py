@@ -401,7 +401,28 @@ def test_graph_adjacency_loops_release_their_caches(spark):
         [(a, (a * 3) % 11 + 20) for a in range(1, 40)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    before = {t.name() for t in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+    jsc = spark.sparkContext._jsc
+
+    def cached():
+        """{id: name} of the RDDs holding cached blocks, less local
+        checkpoints: each operator returns its result as one, and it
+        belongs to the caller. On Spark 4.1 they are named
+        ``MapPartitionsRDD``, so neither names nor a name filter tell them
+        apart from a leak; ids and the RDD's own local-checkpoint mark do
+        (``isCheckpointed`` alone is not enough: it turns true only once
+        the checkpoint has been written, which can lag the job)."""
+        persistent = jsc.getPersistentRDDs()
+
+        def local_checkpoint(i):
+            rdd = persistent.get(i)
+            return rdd is not None and rdd.rdd().isLocallyCheckpointed()
+
+        return {
+            t.id(): t.name() for t in jsc.sc().getRDDStorageInfo()
+            if not local_checkpoint(t.id())
+        }
+
+    before = cached()
     graph.pagerank(edges, iterations=3).count()
     graph.bfs_hops(edges, seeds, rounds=2).count()
     graph.sssp_bounded(
@@ -412,8 +433,5 @@ def test_graph_adjacency_loops_release_their_caches(spark):
     ).count()
     graph.label_propagation(edges, rounds=2).count()
     graph.triangle_count(edges).count()
-    after = {t.name() for t in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-    leaked = {
-        n for n in (after - before) if "localCheckpoint" not in str(n)
-    }
+    leaked = {n for i, n in cached().items() if i not in before}
     assert not leaked, f"graph loop leaked persisted frames: {leaked}"

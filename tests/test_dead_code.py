@@ -1,5 +1,6 @@
 """Every top-level definition in the package has a caller outside tests/,
-and every module-level import in the package is used.
+every module-level import in the package is used, and no run of code
+lines is written twice outside the query modules.
 
 The scans are static and use no Spark: they parse every non-test Python
 file (the package, ``bench.py``, ``__spark_entry__.py``, ``tools/`` and
@@ -16,7 +17,12 @@ Registry models (the ``@model`` functions) are reached through
 """
 
 import ast
+import io
+import tokenize
+from collections import defaultdict
 from pathlib import Path
+
+from ufc_data_warehouse_spark.registry import QUERY_MODULES
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "ufc_data_warehouse_spark"
@@ -211,3 +217,43 @@ def test_package_modules_use_every_import():
     unused = [u for p in sorted(PKG.rglob("*.py")) for u in _unused_imports(p)]
     assert not unused, (
         "module-level imports the module never names:\n  " + "\n  ".join(unused))
+
+
+# Tokens that carry no code: a copy that differs only in them is a copy.
+_NOT_CODE = {tokenize.COMMENT, tokenize.STRING, tokenize.NL, tokenize.NEWLINE,
+             tokenize.INDENT, tokenize.DEDENT, tokenize.ENDMARKER}
+_COPY_LINES = 8
+
+
+def _code_lines(path):
+    """``[(line number, normalized text)]`` of ``path``: comments, string
+    literals and indentation dropped, tokens joined by one space, and
+    lines left with no name or number (blank lines, bare brackets, SQL
+    text) skipped."""
+    by_line = defaultdict(list)
+    for tok in tokenize.generate_tokens(io.StringIO(path.read_text()).readline):
+        if tok.type not in _NOT_CODE:
+            by_line[tok.start[0]].append(tok)
+    return [(n, " ".join(t.string for t in toks))
+            for n, toks in sorted(by_line.items())
+            if any(t.type in (tokenize.NAME, tokenize.NUMBER) for t in toks)]
+
+
+def test_no_copied_blocks_outside_query_modules():
+    """A run of ``_COPY_LINES`` normalized code lines written twice is an
+    operator step with two bodies: give it one helper both call. The query
+    modules are exempt — folding a copy there moves the query's
+    fingerprint."""
+    seen = defaultdict(list)
+    for path in sorted(PKG.rglob("*.py")):
+        if path.stem in QUERY_MODULES:
+            continue
+        lines = _code_lines(path)
+        for i in range(len(lines) - _COPY_LINES + 1):
+            run = tuple(text for _, text in lines[i:i + _COPY_LINES])
+            seen[run].append(f"{path.relative_to(PKG)}:{lines[i][0]}")
+    copies = sorted({tuple(at) for at in seen.values() if len(at) > 1})
+    modules = sorted({a.partition(":")[0] for at in copies for a in at})
+    assert not copies, (
+        f"runs of {_COPY_LINES} code lines written more than once, in "
+        f"{modules}:\n  " + "\n  ".join(" = ".join(at) for at in copies))

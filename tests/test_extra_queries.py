@@ -22,6 +22,23 @@ def test_extra_query_matches_oracle(spark, duck, name):
     assert spark.conf.getAll == conf, f"{name} changed the session conf"
 
 
+def test_flush_stream_leaves_no_temp_dir(spark):
+    """Writing the flush-sentinel file goes through a Spark write into a
+    scratch dir; only its part file is kept, so every call must remove
+    the scratch dir (and its _SUCCESS/.crc files) again."""
+    import glob
+    import os
+    import tempfile
+
+    from ufc_data_warehouse_spark.streaming import events as ev
+
+    pattern = os.path.join(tempfile.gettempdir(), "events_flush_row_*")
+    before = set(glob.glob(pattern))
+    stream = ev.read_events_stream_with_flush(spark, SF_DIR)
+    assert stream.isStreaming
+    assert set(glob.glob(pattern)) <= before
+
+
 def test_stateful_query_on_rocksdb_state_store(spark):
     """The watermarked dedup must run unchanged on the RocksDB state
     store provider — the disk-backed store that holds 100 TB-scale

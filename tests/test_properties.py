@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -1835,3 +1835,47 @@ def test_lsh_bucket_signatures_skips_leading_null_vectors(spark):
     )
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == ["id", "bucket"]
+
+
+_POINTS = st.lists(
+    st.tuples(st.integers(-20, 20), st.integers(-20, 20)), max_size=25
+)
+
+
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(_POINTS, st.integers(1, 8), st.sampled_from([1, 3]), st.integers(0, 3))
+@example([], 3, 1, 1)  # no points
+@example([(4, -4)], 3, 1, 0)  # one point: no neighbor, count 0
+@example([(2, 2), (2, 2), (2, 2), (-7, 5)], 3, 3, 2)  # duplicate coordinates
+@example([(0, 0), (1, 5), (6, 6), (9, 2)], 10, 3, 1)  # all in one cell
+def test_grid_join_matches_all_pairs(spark, pts, radius, n_parts, min_pts):
+    """``nn_within_radius`` and ``density_core_points`` (one shared 3×3
+    grid join) == an all-pairs scan, on degenerate point sets: empty,
+    single, duplicated, single-cell, negative coordinates, one partition."""
+    from ufc_data_warehouse_spark.operators import spatial
+
+    df = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pts)], "id long, x long, y long"
+    ).repartition(n_parts)
+    within = {
+        i: [
+            ((x - nx) ** 2 + (y - ny) ** 2, j)
+            for j, (nx, ny) in enumerate(pts)
+            if j != i and (x - nx) ** 2 + (y - ny) ** 2 <= radius * radius
+        ]
+        for i, (x, y) in enumerate(pts)
+    }
+    nn = spatial.nn_within_radius(df, id_col="id", x="x", y="y", radius=radius)
+    assert {(r["id"], r["d2"], r["nn_id"]) for r in nn.collect()} == {
+        (i, *min(ds)) for i, ds in within.items() if ds
+    }
+    core = spatial.density_core_points(
+        df, id_col="id", x="x", y="y", eps=radius, min_pts=min_pts
+    )
+    assert {
+        (r["id"], r["n_neighbors"], r["is_core"]) for r in core.collect()
+    } == {(i, len(ds), len(ds) >= min_pts) for i, ds in within.items()}

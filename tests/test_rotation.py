@@ -10,6 +10,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
@@ -352,3 +354,26 @@ def test_no_driver_verified_query_has_changed_implementation():
         "rewritten but still rotation-verified (append to REVERIFY.txt + "
         f"refresh QUERY_FPS.json): {stale_verified}"
     )
+
+
+def test_fingerprint_refuses_source_edited_since_import(tmp_path, monkeypatch):
+    """``inspect.getsource`` reads today's file at import-time line
+    numbers: after a line is inserted above a function, it returns the
+    function above it. The fingerprint must refuse, not hash that text."""
+    import importlib
+
+    monkeypatch.syspath_prepend(os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools"))
+    from reverify_check import _fn_fingerprint
+
+    mod = tmp_path / "fp_edited_mod.py"
+    mod.write_text("def first():\n    return 1\n\n\ndef second():\n    return 2\n")
+    monkeypatch.syspath_prepend(str(tmp_path))
+    m = importlib.import_module("fp_edited_mod")
+    try:
+        assert "def second" in _fn_fingerprint(m.second)
+        mod.write_text("X = 0\n" + mod.read_text())
+        with pytest.raises(RuntimeError, match="re-run in a fresh process"):
+            _fn_fingerprint(m.second)
+    finally:
+        sys.modules.pop("fp_edited_mod", None)

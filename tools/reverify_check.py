@@ -69,12 +69,29 @@ def _cell_repr(value, depth: int = 0) -> str:
     return _ADDR.sub("", repr(value))
 
 
+_DEF = re.compile(r"\s*(?:async\s+)?def\s+(\w+)")
+
+
 def _fn_fingerprint(fn) -> str:
     parts = []
     try:
-        parts.append(inspect.getsource(fn))
+        source = inspect.getsource(fn)
     except (OSError, TypeError):
         parts.append(_ADDR.sub("", repr(fn)))
+    else:
+        # getsource reads the file as it is now at the line numbers of the
+        # code loaded at import: after an edit above ``fn`` it returns
+        # another function's text. ``co_name`` survives a ``__name__``
+        # rename (the metabase cards rename their ``run``).
+        defs = (_DEF.match(line) for line in source.splitlines())
+        first = next((m.group(1) for m in defs if m), None)
+        name = getattr(getattr(fn, "__code__", None), "co_name", None)
+        if name not in (None, "<lambda>") and first != name:
+            raise RuntimeError(
+                f"source of {name} changed since import (its lines now hold "
+                f"{first!r}); re-run in a fresh process"
+            )
+        parts.append(source)
     closure = getattr(fn, "__closure__", None)
     if closure:
         for cell in closure:

@@ -13,7 +13,9 @@ against synthesized real files. :func:`numpy_png_decode` (r7) decodes
 real PNGs via stdlib zlib, and :func:`numpy_jpeg_decode` /
 :func:`jpeg_encode_baseline` (r7) implement baseline sequential JPEG
 (Huffman + DCT, 4:4:4/4:2:2/4:2:0, restart intervals) in pure numpy,
-and :func:`numpy_gif_decode` (r7) decodes GIF via real LZW. The
+and :func:`numpy_gif_decode` (r7) decodes GIF via real LZW. Every
+image codec returns its result through the one ``_image_record``, so
+the digest, size fields and 8-float feature vector are built once. The
 remaining seam is formats whose decoders genuinely need external
 libraries (progressive JPEG, MP3, MP4/video): ``decode_media``
 without a ``decode_fn`` raises ``NotImplementedError`` unless
@@ -119,6 +121,35 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
 # executable specification.
 
 
+def _image_record(payload: bytes, w: int, h: int, rgb) -> dict:
+    """The image record every image codec emits: ``payload``'s md5 digest,
+    the size, one frame, and the fixed 8-float feature vector (RGB channel
+    means, gray std/min/max, aspect shares) of the ``h×w×3`` uint8 ``rgb``
+    array."""
+    import hashlib as _hl
+
+    import numpy as _np
+
+    gray = rgb.astype(_np.float64).mean(axis=2)
+    feats = [
+        float(rgb[:, :, 0].mean() / 255.0),
+        float(rgb[:, :, 1].mean() / 255.0),
+        float(rgb[:, :, 2].mean() / 255.0),
+        float(gray.std() / 255.0),
+        float(gray.min() / 255.0),
+        float(gray.max() / 255.0),
+        float(w / (w + h)),
+        float(h / (w + h)),
+    ]
+    return {
+        "digest": _hl.md5(payload).hexdigest(),
+        "width": int(w),
+        "height": int(h),
+        "n_frames": 1,
+        "features": feats,
+    }
+
+
 def numpy_uncompressed_decode(payload: bytes, kind: str) -> dict | None:
     """A REAL codec for the uncompressed container formats that need no
     external library — binary PPM (P6) and 24-bit BI_RGB BMP images,
@@ -147,26 +178,6 @@ def numpy_uncompressed_decode(payload: bytes, kind: str) -> dict | None:
     import zlib as _zl
 
     import numpy as _np
-
-    def _img_record(w: int, h: int, rgb: "_np.ndarray") -> dict:
-        gray = rgb.astype(_np.float64).mean(axis=2)
-        feats = [
-            float(rgb[:, :, 0].mean() / 255.0),
-            float(rgb[:, :, 1].mean() / 255.0),
-            float(rgb[:, :, 2].mean() / 255.0),
-            float(gray.std() / 255.0),
-            float(gray.min() / 255.0),
-            float(gray.max() / 255.0),
-            float(w / (w + h)),
-            float(h / (w + h)),
-        ]
-        return {
-            "digest": _hl.md5(payload).hexdigest(),
-            "width": int(w),
-            "height": int(h),
-            "n_frames": 1,
-            "features": feats,
-        }
 
     def _ppm() -> dict | None:
         # header: "P6"/"P5" <ws> width <ws> height <ws> maxval <single
@@ -200,7 +211,7 @@ def numpy_uncompressed_decode(payload: bytes, kind: str) -> dict | None:
             return None
         px = _np.frombuffer(data, dtype=_np.uint8).reshape(h, w, nch)
         rgb = px if nch == 3 else _np.repeat(px, 3, axis=2)
-        return _img_record(w, h, rgb)
+        return _image_record(payload, w, h, rgb)
 
     def _bmp() -> dict | None:
         if len(payload) < 54:
@@ -222,7 +233,7 @@ def numpy_uncompressed_decode(payload: bytes, kind: str) -> dict | None:
             rows = rows[::-1]
         # BMP stores BGR; reorder so features are true RGB channel means
         rgb = rows[:, :, ::-1]
-        return _img_record(w, h, rgb)
+        return _image_record(payload, w, h, rgb)
 
     def _wav() -> dict | None:
         if len(payload) < 44 or payload[8:12] != b"WAVE":
@@ -343,31 +354,10 @@ def numpy_png_decode(payload: bytes, kind: str) -> dict | None:
     aspect shares); gray expands to 3 channels, alpha is dropped for
     features (transparency is metadata, not luminance).
     """
-    import hashlib as _hl
     import struct as _st
     import zlib as _zl
 
     import numpy as _np
-
-    def _img_record(w: int, h: int, rgb: "_np.ndarray") -> dict:
-        gray = rgb.astype(_np.float64).mean(axis=2)
-        feats = [
-            float(rgb[:, :, 0].mean() / 255.0),
-            float(rgb[:, :, 1].mean() / 255.0),
-            float(rgb[:, :, 2].mean() / 255.0),
-            float(gray.std() / 255.0),
-            float(gray.min() / 255.0),
-            float(gray.max() / 255.0),
-            float(w / (w + h)),
-            float(h / (w + h)),
-        ]
-        return {
-            "digest": _hl.md5(payload).hexdigest(),
-            "width": int(w),
-            "height": int(h),
-            "n_frames": 1,
-            "features": feats,
-        }
 
     try:
         if kind != "image" or payload[:8] != _PNG_SIG:
@@ -463,7 +453,7 @@ def numpy_png_decode(payload: bytes, kind: str) -> dict | None:
             rgb = _np.repeat(px[:, :, :1], 3, axis=2)
         else:  # RGB as-is / RGBA drops alpha
             rgb = px[:, :, :3]
-        return _img_record(w, h, rgb)
+        return _image_record(payload, w, h, rgb)
     except Exception:  # noqa: BLE001 — contract point 3: never raise
         return None
 
@@ -726,30 +716,9 @@ def numpy_jpeg_decode(payload: bytes, kind: str) -> dict | None:
     features as the other image codecs) or None for anything out of
     scope — progressive (SOF2), 12-bit, arithmetic coding — per
     contract point 3."""
-    import hashlib as _hl
     import struct as _st
 
     import numpy as _np
-
-    def _img_record(w: int, h: int, rgb: "_np.ndarray") -> dict:
-        gray = rgb.astype(_np.float64).mean(axis=2)
-        feats = [
-            float(rgb[:, :, 0].mean() / 255.0),
-            float(rgb[:, :, 1].mean() / 255.0),
-            float(rgb[:, :, 2].mean() / 255.0),
-            float(gray.std() / 255.0),
-            float(gray.min() / 255.0),
-            float(gray.max() / 255.0),
-            float(w / (w + h)),
-            float(h / (w + h)),
-        ]
-        return {
-            "digest": _hl.md5(payload).hexdigest(),
-            "width": int(w),
-            "height": int(h),
-            "n_frames": 1,
-            "features": feats,
-        }
 
     try:
         if kind != "image" or payload[:2] != b"\xff\xd8":
@@ -980,7 +949,7 @@ def numpy_jpeg_decode(payload: bytes, kind: str) -> dict | None:
             rgb = _np.clip(
                 _np.round(_np.stack([r, g, b], axis=2)), 0, 255
             ).astype(_np.uint8)
-        return _img_record(w, h, rgb)
+        return _image_record(payload, w, h, rgb)
     except EOFError:
         return None
     except Exception:  # noqa: BLE001 — contract point 3: never raise
@@ -1135,7 +1104,6 @@ def numpy_gif_decode(payload: bytes, kind: str) -> dict | None:
     (n_frames is 1 by the image contract; animation frames beyond the
     first are parsed past, not decoded). Returns None out of scope per
     contract point 3."""
-    import hashlib as _hl
     import struct as _st
 
     import numpy as _np
@@ -1220,24 +1188,7 @@ def numpy_gif_decode(payload: bytes, kind: str) -> dict | None:
             w, h = iw, ih
         if rgb is None:
             return None
-        gray = rgb.astype(_np.float64).mean(axis=2)
-        feats = [
-            float(rgb[:, :, 0].mean() / 255.0),
-            float(rgb[:, :, 1].mean() / 255.0),
-            float(rgb[:, :, 2].mean() / 255.0),
-            float(gray.std() / 255.0),
-            float(gray.min() / 255.0),
-            float(gray.max() / 255.0),
-            float(w / (w + h)),
-            float(h / (w + h)),
-        ]
-        return {
-            "digest": _hl.md5(payload).hexdigest(),
-            "width": int(w),
-            "height": int(h),
-            "n_frames": 1,
-            "features": feats,
-        }
+        return _image_record(payload, w, h, rgb)
     except Exception:  # noqa: BLE001 — contract point 3: never raise
         return None
 

@@ -60,22 +60,48 @@ def cosine_topk(
     ``queries`` is broadcast; ranking ties broken by neighbor id for
     cross-engine determinism.
     """
-    # Norms are per-row constants: compute them ONCE per side before the
-    # join (N + N_q sqrt-aggregates) instead of inside the pair expression
-    # (2 × N × N_q) — at 100 TB the pair space dwarfs both inputs.
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("vnorm"),
+    pairs = _corpus_side(embeddings, id_col, vec_col).join(
+        F.broadcast(_query_side(queries, id_col, vec_col)),
+        F.col("neighbor_id") != F.col("query_id"),
     )
-    qs = queries.select(
+    return _rank_by_cosine(pairs, k)
+
+
+def _query_side(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qvec, qnorm). Norms are per-row constants: computed ONCE
+    per side before the join (N + N_q sqrt-aggregates) instead of inside
+    the pair expression (2 × N × N_q) — at 100 TB the pair space dwarfs
+    both inputs."""
+    return queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         _norm(F.col(vec_col)).alias("qnorm"),
     )
-    scored = (
-        corpus.join(F.broadcast(qs), F.col("neighbor_id") != F.col("query_id"))
-        .select(
+
+
+def _corpus_side(
+    corpus: DataFrame, id_col: str, vec_col: str, *extra: F.Column
+) -> DataFrame:
+    """(neighbor_id, vec, vnorm, *extra): the candidate side of a cosine
+    ranking, normed once per row like :func:`_query_side`."""
+    return corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("vec"),
+        _norm(F.col(vec_col)).alias("vnorm"),
+        *extra,
+    )
+
+
+def _rank_by_cosine(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cosine): the ``k`` best neighbors per
+    query among ``pairs`` (a :func:`_corpus_side` × :func:`_query_side`
+    join), one window per query; ties break by neighbor id for
+    cross-engine determinism."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        pairs.select(
             "query_id",
             "neighbor_id",
             (
@@ -83,12 +109,7 @@ def cosine_topk(
                 / (F.col("vnorm") * F.col("qnorm"))
             ).alias("cosine"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
@@ -169,22 +190,33 @@ def ivf_topk(
     candidate scan touches |corpus| × n_probe/n_lists rows — the sublinear
     path; final top-k is one window per query over candidates only.
     """
+    probes = _ivf_probes(embeddings, queries, n_probe, id_col, vec_col, list_col)
+    return _ivf_rank(embeddings, probes, k, id_col, vec_col, list_col)
+
+
+def _ivf_probes(
+    corpus: DataFrame,
+    queries: DataFrame,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    list_col: str,
+) -> DataFrame:
+    """(query_id, qvec, qnorm, probe_list): each query's ``n_probe`` lists
+    with the most cosine-similar representative — the list's minimum-id
+    member, broadcast (one row per list); ties break by list id."""
     w_rep = Window.partitionBy(list_col).orderBy(F.asc(id_col))
     reps = (
-        embeddings.withColumn("_rn", F.row_number().over(w_rep))
+        corpus.withColumn("_rn", F.row_number().over(w_rep))
         .filter(F.col("_rn") == 1)
         .select(F.col(list_col).alias("rep_list"), F.col(vec_col).alias("rep_vec"))
-    )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
     )
     probe_rank = Window.partitionBy("query_id").orderBy(
         F.desc("rep_cos"), F.asc("rep_list")
     )
-    probes = (
-        qs.join(F.broadcast(reps))
+    return (
+        _query_side(queries, id_col, vec_col)
+        .join(F.broadcast(reps))
         .select(
             "query_id",
             "qvec",
@@ -199,27 +231,24 @@ def ivf_topk(
         .filter(F.col("_pr") <= n_probe)
         .select("query_id", "qvec", "qnorm", F.col("rep_list").alias("probe_list"))
     )
-    cands = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("vnorm"),
-        F.col(list_col).alias("probe_list"),
+
+
+def _ivf_rank(
+    corpus: DataFrame,
+    probes: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    list_col: str,
+) -> DataFrame:
+    """(query_id, neighbor_id, rank): exact cosine top-``k`` per query over
+    the members of its probed lists, self-matches excluded."""
+    cands = _corpus_side(
+        corpus, id_col, vec_col, F.col(list_col).alias("probe_list")
     ).join(F.broadcast(probes), "probe_list")
-    w_k = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cands.filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("vec"), F.col("qvec"))
-                / (F.col("vnorm") * F.col("qnorm"))
-            ).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_by_cosine(
+        cands.filter(F.col("neighbor_id") != F.col("query_id")), k
+    ).drop("cosine")
 
 
 def hyperplane_weight(plane: F.Column, dim: F.Column) -> F.Column:
@@ -448,41 +477,70 @@ def kmeans(
     centroids = [[qi / _KM_SCALE for qi in r["q"]] for r in init_rows]
     # degenerate corpora (n < k, incl. n = 0) clamp to the vectors that
     # exist — graceful behavior only, outside any oracle-checked regime
-    k = min(k, len(centroids))
-    if k == 0:
+    if not centroids:
         return q.select("id", F.lit(0).cast("int").alias("cluster")), []
 
-    def assign(frame: DataFrame) -> DataFrame:
-        dists = [_sq_dist_to("q", c) for c in centroids]
-        best_d, best_j = dists[0], F.lit(0)
-        for j in range(1, k):
-            cond = dists[j] < best_d
-            best_j = F.when(cond, j).otherwise(best_j)
-            best_d = F.when(cond, dists[j]).otherwise(best_d)
-        return frame.withColumn("cluster", best_j.cast("int"))
+    assigned, (centroids,) = _lloyd(
+        q.withColumn("sub", F.lit(0)), [centroids], n_assign
+    )
+    return assigned.select("id", "cluster"), centroids
 
-    assigned = assign(q)
+
+def _lloyd(
+    melted: DataFrame, books: list[list[list[float]]], n_assign: int
+) -> tuple[DataFrame, list[list[list[float]]]]:
+    """Fixed-point Lloyd's iterations over ``melted`` (id, sub, q) rows,
+    one independent codebook ``books[sub]`` of k initial centroids per
+    subspace: returns (``melted`` with its int ``cluster``, final books).
+
+    Assignment is a per-sub CASE ladder over driver-literal centroids
+    (zero shuffle; argmin ties break to the lowest cluster index). Each of
+    the ``n_assign − 1`` updates is one groupBy(sub, cluster, dim) job of
+    exact integer sums, collected to the driver (m×k×d rows) and divided
+    once; an empty cluster keeps its previous centroid."""
+    k = len(books[0])
+
+    def assign() -> DataFrame:
+        per_sub = []
+        for book in books:
+            dists = [_sq_dist_to("q", c) for c in book]
+            best_d, best_j = dists[0], F.lit(0)
+            for j in range(1, k):
+                cond = dists[j] < best_d
+                best_j = F.when(cond, j).otherwise(best_j)
+                best_d = F.when(cond, dists[j]).otherwise(best_d)
+            per_sub.append(best_j)
+        expr = F.when(F.col("sub") == 0, per_sub[0])
+        for mm in range(1, len(books)):
+            expr = expr.when(F.col("sub") == mm, per_sub[mm])
+        return melted.withColumn("cluster", expr.cast("int"))
+
+    assigned = assign()
     for _ in range(n_assign - 1):
         sums = (
-            assigned.select("cluster", F.posexplode("q").alias("dim", "qx"))
-            .groupBy("cluster", "dim")
+            assigned.select("sub", "cluster", F.posexplode("q").alias("dim", "qx"))
+            .groupBy("sub", "cluster", "dim")
             .agg(F.sum("qx").alias("s"), F.count("*").alias("cnt"))
             .collect()
         )
-        by_cluster: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in sums:
-            by_cluster.setdefault(r["cluster"], {})[r["dim"]] = (r["s"], r["cnt"])
-        centroids = [
+        by_key = {
+            (r["sub"], r["cluster"], r["dim"]): (r["s"], r["cnt"]) for r in sums
+        }
+        books = [
             [
-                float(by_cluster[j][i][0]) / (by_cluster[j][i][1] * float(_KM_SCALE))
-                for i in range(len(centroids[j]))
+                [
+                    float(by_key[(mm, j, i)][0])
+                    / (by_key[(mm, j, i)][1] * float(_KM_SCALE))
+                    for i in range(len(book[j]))
+                ]
+                if (mm, j, 0) in by_key
+                else book[j]
+                for j in range(k)
             ]
-            if j in by_cluster
-            else centroids[j]
-            for j in range(k)
+            for mm, book in enumerate(books)
         ]
-        assigned = assign(q)
-    return assigned.select("id", "cluster"), centroids
+        assigned = assign()
+    return assigned, books
 
 
 def pq_encode(
@@ -545,55 +603,14 @@ def pq_encode(
     ]
     # degenerate corpora (n < k, incl. n = 0) clamp to the vectors that
     # exist — graceful behavior only, outside any oracle-checked regime
-    k = min(k, len(init_rows))
-    if k == 0:
+    if not init_rows:
         empty_codes = embeddings.select(
             F.col(id_col).alias("id"),
             *[F.lit(0).cast("int").alias(f"code_{mm}") for mm in range(m)],
         ).limit(0)
         return empty_codes, [[] for _ in range(m)]
 
-    def assign(frame: DataFrame) -> DataFrame:
-        per_sub = []
-        for mm in range(m):
-            dists = [_sq_dist_to("q", c) for c in books[mm]]
-            best_d, best_j = dists[0], F.lit(0)
-            for j in range(1, k):
-                cond = dists[j] < best_d
-                best_j = F.when(cond, j).otherwise(best_j)
-                best_d = F.when(cond, dists[j]).otherwise(best_d)
-            per_sub.append(best_j)
-        expr = F.when(F.col("sub") == 0, per_sub[0])
-        for mm in range(1, m):
-            expr = expr.when(F.col("sub") == mm, per_sub[mm])
-        return frame.withColumn("cluster", expr.cast("int"))
-
-    assigned = assign(melted)
-    for _ in range(n_assign - 1):
-        sums = (
-            assigned.select("sub", "cluster", F.posexplode("q").alias("dim", "qx"))
-            .groupBy("sub", "cluster", "dim")
-            .agg(F.sum("qx").alias("s"), F.count("*").alias("cnt"))
-            .collect()
-        )
-        by_key = {
-            (r["sub"], r["cluster"], r["dim"]): (r["s"], r["cnt"]) for r in sums
-        }
-        books = [
-            [
-                [
-                    float(by_key[(mm, j, i)][0])
-                    / (by_key[(mm, j, i)][1] * float(_KM_SCALE))
-                    for i in range(d_sub)
-                ]
-                if (mm, j, 0) in by_key
-                else books[mm][j]  # empty cluster keeps its previous centroid
-                for j in range(k)
-            ]
-            for mm in range(m)
-        ]
-        assigned = assign(melted)
-
+    assigned, books = _lloyd(melted, books, n_assign)
     codes = assigned.groupBy("id").agg(
         *[
             F.max(F.when(F.col("sub") == mm, F.col("cluster")))
@@ -649,14 +666,22 @@ def pq_adc_topk(
             F.col(f"code_{mm}") + 1,
         )
         dist = lookup if dist is None else dist + lookup
-    out = codes.select("id", dist.alias("adc_dist"))
+    return _adc_topk(codes.select("id", dist.alias("adc_dist")), k_top, exclude_id)
+
+
+def _adc_topk(
+    scored: DataFrame, k_top: int, exclude_id: int | None
+) -> DataFrame:
+    """(id, adc_dist, rank): the ``k_top`` smallest ADC distances of
+    ``scored`` (id, adc_dist), ``exclude_id`` dropped, ties by id.
+    Global top-k in the TakeOrderedAndProject shape (limit pushes the
+    sort to per-partition top-k + a k-row merge), not a full global
+    sort."""
     if exclude_id is not None:
-        out = out.filter(F.col("id") != exclude_id)
+        scored = scored.filter(F.col("id") != exclude_id)
     w = Window.orderBy(F.asc("adc_dist"), F.asc("id"))
-    # global top-k: TakeOrderedAndProject shape (limit pushes the sort to
-    # per-partition top-k + a k-row merge), not a full global sort
     return (
-        out.orderBy(F.asc("adc_dist"), F.asc("id"))
+        scored.orderBy(F.asc("adc_dist"), F.asc("id"))
         .limit(k_top)
         .withColumn("rank", F.row_number().over(w))
     )
@@ -778,14 +803,8 @@ def ivfadc_topk(
                 lookup
             )
         dist = lookup if dist is None else dist + lookup
-    out = labeled.select("id", dist.alias("adc_dist"))
-    if exclude_id is not None:
-        out = out.filter(F.col("id") != exclude_id)
-    w = Window.orderBy(F.asc("adc_dist"), F.asc("id"))
-    return (
-        out.orderBy(F.asc("adc_dist"), F.asc("id"))
-        .limit(k_top)
-        .withColumn("rank", F.row_number().over(w))
+    return _adc_topk(
+        labeled.select("id", dist.alias("adc_dist")), k_top, exclude_id
     )
 
 
@@ -1196,63 +1215,11 @@ def ivf_topk_from_partitioned(
     """
     reader = spark.read.schema(schema) if schema is not None else spark.read
     full = reader.parquet(path)
-    w_rep = Window.partitionBy(list_col).orderBy(F.asc(id_col))
-    reps = (
-        full.withColumn("_rn", F.row_number().over(w_rep))
-        .filter(F.col("_rn") == 1)
-        .select(F.col(list_col).alias("rep_list"), F.col(vec_col).alias("rep_vec"))
-    )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
-    )
-    probe_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("rep_cos"), F.asc("rep_list")
-    )
-    probes = (
-        qs.join(F.broadcast(reps))
-        .select(
-            "query_id",
-            "qvec",
-            "qnorm",
-            "rep_list",
-            (
-                _dot(F.col("rep_vec"), F.col("qvec"))
-                / (_norm(F.col("rep_vec")) * F.col("qnorm"))
-            ).alias("rep_cos"),
-        )
-        .withColumn("_pr", F.row_number().over(probe_rank))
-        .filter(F.col("_pr") <= n_probe)
-        .select("query_id", "qvec", "qnorm", F.col("rep_list").alias("probe_list"))
-    )
+    probes = _ivf_probes(full, queries, n_probe, id_col, vec_col, list_col)
     probe_lists = sorted(
         {r["probe_list"] for r in probes.select("probe_list").distinct().collect()}
     )
-    cands = (
-        full.filter(F.col(list_col).isin(probe_lists))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-            F.col(list_col).alias("probe_list"),
-        )
-        .join(F.broadcast(probes), "probe_list")
-    )
-    w_k = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        cands.filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("vec"), F.col("qvec"))
-                / (F.col("vnorm") * F.col("qnorm"))
-            ).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+    return _ivf_rank(
+        full.filter(F.col(list_col).isin(probe_lists)),
+        probes, k, id_col, vec_col, list_col,
     )

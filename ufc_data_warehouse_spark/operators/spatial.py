@@ -32,54 +32,16 @@ def nn_within_radius(
     d2)`` with ``d2 = dx² + dy² ≤ radius²`` (points with no in-range
     neighbor are absent).
 
-    Grid join: cell size = ``radius``, so a point's nearest in-range
-    neighbor is ALWAYS within its 3×3 cell neighborhood — the 9-offset
-    explode on the probe side turns the spatial predicate into a HASH
-    equi-join on (cell_x, cell_y), then the exact integer residual
-    filters, then ``min(struct(d2, nn_id))`` argmins per point
-    (order-free, deterministic ties by neighbor id). Candidate space is
+    Grid join (``_grid_pairs``, cell size = ``radius``): a point's
+    nearest in-range neighbor is ALWAYS within its 3×3 cell neighborhood,
+    so the spatial predicate becomes a HASH equi-join on the cell, then
+    ``min(struct(d2, nn_id))`` argmins per point (order-free,
+    deterministic ties by neighbor id). Candidate space is
     Σ 9·|cell|·|cell-density| — never |P|², and skew is bounded by the
     densest cell, which the radius itself caps physically.
     """
-    pts = points.select(
-        F.col(id_col).cast("long").alias("pid"),
-        F.col(x).cast("long").alias("px"),
-        F.col(y).cast("long").alias("py"),
-    )
-    r = int(radius)
-    probe = pts.select(
-        "pid",
-        "px",
-        "py",
-        F.explode(
-            F.array(*[F.lit(d) for d in (-1, 0, 1)])
-        ).alias("dx"),
-    ).select(
-        "pid",
-        "px",
-        "py",
-        (F.expr(f"px div {r}") + F.col("dx")).alias("cx"),
-        F.explode(F.array(*[F.lit(d) for d in (-1, 0, 1)])).alias("dy"),
-    ).select(
-        "pid", "px", "py", "cx", (F.expr(f"py div {r}") + F.col("dy")).alias("cy")
-    )
-    build = pts.select(
-        F.col("pid").alias("nid"),
-        F.col("px").alias("nx"),
-        F.col("py").alias("ny"),
-        F.expr(f"px div {r}").alias("cx"),
-        F.expr(f"py div {r}").alias("cy"),
-    )
-    d2 = (F.col("px") - F.col("nx")) * (F.col("px") - F.col("nx")) + (
-        F.col("py") - F.col("ny")
-    ) * (F.col("py") - F.col("ny"))
-    cand = (
-        probe.join(build, ["cx", "cy"])
-        .where(F.col("pid") != F.col("nid"))
-        .select("pid", d2.alias("d2"), "nid")
-        .where(F.col("d2") <= F.lit(r * r))
-    )
-    best = cand.groupBy("pid").agg(F.min(F.struct("d2", "nid")).alias("b"))
+    _, pairs = _grid_pairs(points, id_col, x, y, int(radius))
+    best = pairs.groupBy("pid").agg(F.min(F.struct("d2", "nid")).alias("b"))
     return best.select(
         F.col("pid").alias("id"),
         F.col("b.nid").alias("nn_id"),
@@ -107,12 +69,36 @@ def density_core_points(
     (count 0) via a left join back to the input — the isolated-point
     case an inner-join formulation silently drops.
     """
+    pts, pairs = _grid_pairs(points, id_col, x, y, int(eps))
+    counts = pairs.groupBy("pid").agg(F.count(F.lit(1)).alias("n_neighbors"))
+    return (
+        pts.select("pid")
+        .join(counts, "pid", "left")
+        .select(
+            F.col("pid").alias("id"),
+            F.coalesce("n_neighbors", F.lit(0)).alias("n_neighbors"),
+            (F.coalesce("n_neighbors", F.lit(0)) >= F.lit(int(min_pts))).alias(
+                "is_core"
+            ),
+        )
+    )
+
+
+def _grid_pairs(
+    points: DataFrame, id_col: str, x: str, y: str, r: int
+) -> tuple[DataFrame, DataFrame]:
+    """(pts (pid, px, py), pairs (pid, d2, nid)): every ordered pair of
+    distinct points with ``d2 = dx² + dy² ≤ r²``, by the 3×3 grid join.
+
+    Cell size = ``r``, so an in-range neighbor is ALWAYS within a point's
+    3×3 cell neighborhood: the 9-offset explode on the probe side turns
+    the spatial predicate into a HASH equi-join on (cx, cy), then the
+    exact integer residual filters."""
     pts = points.select(
         F.col(id_col).cast("long").alias("pid"),
         F.col(x).cast("long").alias("px"),
         F.col(y).cast("long").alias("py"),
     )
-    r = int(eps)
     probe = pts.select(
         "pid",
         "px",
@@ -137,21 +123,10 @@ def density_core_points(
     d2 = (F.col("px") - F.col("nx")) * (F.col("px") - F.col("nx")) + (
         F.col("py") - F.col("ny")
     ) * (F.col("py") - F.col("ny"))
-    counts = (
+    pairs = (
         probe.join(build, ["cx", "cy"])
         .where(F.col("pid") != F.col("nid"))
-        .where(d2 <= F.lit(r * r))
-        .groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n_neighbors"))
+        .select("pid", d2.alias("d2"), "nid")
+        .where(F.col("d2") <= F.lit(r * r))
     )
-    return (
-        pts.select("pid")
-        .join(counts, "pid", "left")
-        .select(
-            F.col("pid").alias("id"),
-            F.coalesce("n_neighbors", F.lit(0)).alias("n_neighbors"),
-            (F.coalesce("n_neighbors", F.lit(0)) >= F.lit(int(min_pts))).alias(
-                "is_core"
-            ),
-        )
-    )
+    return pts, pairs

@@ -103,9 +103,10 @@ def q_streaming_outer_join_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming import events as se
 
     apply_runtime_confs(spark)
-    joined = se.stream_stream_signup_purchase_outer(
+    joined = se.stream_stream_signup_purchase(
         se.read_events_stream_with_flush(spark, sf_dir),
         se.read_events_stream_with_flush(spark, sf_dir),
+        how="left_outer",
     )
     out = se.run_available_now(joined, output_mode="append")
     return out.filter(F.col("user_id") >= 0).orderBy(

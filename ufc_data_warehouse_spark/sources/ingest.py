@@ -137,19 +137,32 @@ def load_raw(spark: SparkSession, warehouse_dir: str) -> dict[str, DataFrame]:
     }
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table (``<sf_dir>/<name>.parquet``) for a query.
+def events_ts_is_nanos(events: DataFrame) -> bool:
+    """Whether an events frame's ``ts`` holds epoch nanos as a bigint.
 
     events.parquet may carry TIMESTAMP(NANOS), which the parquet reader
     only accepts as a bigint of nanos (``nanosAsLong``, set in
-    ``session.RUNTIME_CONFS``); truncate to micros with INTEGER division —
-    ``ns / 1000`` through double loses precision (epoch-nanos exceed 2^53)
-    and drifts ±1µs off the DuckDB oracle."""
+    ``session.RUNTIME_CONFS``); other testdata generations carry plain
+    TIMESTAMP(MICROS), so the frame's own dtype decides."""
+    return dict(events.dtypes).get("ts") == "bigint"
+
+
+def events_ts_micros(events: DataFrame) -> DataFrame:
+    """``events`` with a nanos ``ts`` truncated to a micros timestamp
+    (unchanged otherwise), by INTEGER division — ``ns / 1000`` through
+    double loses precision (epoch-nanos exceed 2^53) and drifts ±1µs off
+    the DuckDB oracle. Works on batch and streaming frames alike."""
+    if not events_ts_is_nanos(events):
+        return events
+    return events.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table (``<sf_dir>/<name>.parquet``) for a query;
+    events get their ``ts`` in micros (:func:`events_ts_micros`)."""
     apply_runtime_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return events_ts_micros(df) if name == "events" else df
 
 
 # ---------------------------------------------------------------------------

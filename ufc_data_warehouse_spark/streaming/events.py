@@ -15,7 +15,9 @@ nondeterministic by design).
 
 from __future__ import annotations
 
+import datetime
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -28,15 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-def _events_batch_schema(spark: SparkSession, sf_dir: str):
-    """Probe events.parquet with the batch reader to learn how this file's
-    ``ts`` column lands in Spark. Testdata generations have shipped both
-    TIMESTAMP(NANOS) (read as a bigint of nanos under session.RUNTIME_CONFS'
-    nanosAsLong) and plain TIMESTAMP(MICROS) — the stream must adapt
-    rather than assume a unit."""
-    probe = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ts_is_nanos_long = dict(probe.dtypes).get("ts") == "bigint"
-    return probe.schema, ts_is_nanos_long
+from ..sources.ingest import events_ts_is_nanos, events_ts_micros
 
 
 def _stream_from_links(
@@ -45,27 +39,61 @@ def _stream_from_links(
     prefix: str,
     n_links: int,
     max_files_per_trigger: int | None = None,
+    flush_days: int | None = None,
 ) -> DataFrame:
     """File-source stream over events.parquet. The file streaming source
     monitors a DIRECTORY; the testdata is a bare file, so a temp dir with
     symlink(s) stands in as the watched source. ``n_links > 1`` models an
     at-least-once upstream that redelivers every record;
     ``max_files_per_trigger=1`` then forces each delivery into its OWN
-    micro-batch (AvailableNow honors the cap) instead of one batch."""
-    schema, ts_is_nanos_long = _events_batch_schema(spark, sf_dir)
+    micro-batch (AvailableNow honors the cap) instead of one batch.
+    ``flush_days`` adds the flush-sentinel file of
+    :func:`read_events_stream_with_flush` to the watched directory.
+
+    The stream reads with the batch reader's schema, so ``ts`` lands the
+    same way it does in a batch read (testdata generations have shipped
+    both nanos and micros) and :func:`events_ts_micros` adapts to it."""
+    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     src_dir = tempfile.mkdtemp(prefix=prefix)
     for i in range(n_links):
         os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events_{i}.parquet")
-    reader = spark.readStream.schema(schema).format("parquet")
+    if flush_days is not None:
+        _write_flush_file(batch, flush_days, f"{src_dir}/zz_flush.parquet")
+    reader = spark.readStream.schema(batch.schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(src_dir)
-    if ts_is_nanos_long:
-        # integer division: double `/ 1000` loses precision above 2^53 (±1µs)
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    raw = events_ts_micros(reader.load(src_dir))
     # withWatermark rejects TIMESTAMP_NTZ; the session timezone is pinned
     # to UTC (session.py) so this cast is value-preserving.
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _write_flush_file(batch: DataFrame, flush_days: int, dest: str) -> None:
+    """Write the two flush-sentinel rows (one per join role, ``user_id =
+    -1``), timestamped ``flush_days`` past ``batch``'s latest event, as the
+    single parquet file ``dest``, in ``batch``'s schema and ``ts`` unit."""
+    max_ts = batch.agg(F.max("ts")).collect()[0][0]
+    if events_ts_is_nanos(batch):
+        # empty stream: any epoch works as the base
+        flush_ts = (max_ts or 0) + flush_days * 86400 * 10**9
+    else:
+        flush_ts = (max_ts or datetime.datetime(1970, 1, 1)) + datetime.timedelta(
+            days=flush_days
+        )
+    flush = batch.sparkSession.createDataFrame(
+        [
+            (-1, flush_ts, -1, "signup", 0.0, None),
+            (-2, flush_ts, -1, "purchase", 0.0, None),
+        ],
+        schema=batch.schema,
+    )
+    tmp_out = tempfile.mkdtemp(prefix="events_flush_row_")
+    try:
+        flush.coalesce(1).write.mode("overwrite").parquet(tmp_out)
+        part = next(f for f in os.listdir(tmp_out) if f.endswith(".parquet"))
+        os.rename(f"{tmp_out}/{part}", dest)
+    finally:
+        shutil.rmtree(tmp_out, ignore_errors=True)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,21 +128,25 @@ def dedup_redelivered(stream: DataFrame) -> DataFrame:
 def tumbling_counts(stream: DataFrame) -> DataFrame:
     """5-minute tumbling windows per event_type with a 10-minute watermark
     for late data; DECIMAL sum keeps results engine-exact."""
+    return _tumbling_count_sum(stream, "5 minutes", "event_type", "n")
+
+
+def _tumbling_count_sum(
+    stream: DataFrame, width: str, key: str, n_name: str
+) -> DataFrame:
+    """(window_start, key, n_name, sum_value): row count and DECIMAL value
+    sum per ``width`` tumbling window and ``key``, under a 10-minute
+    watermark."""
     return (
         stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+        .groupBy(F.window("ts", width).alias("w"), key)
         .agg(
-            F.count("*").alias("n"),
+            F.count("*").alias(n_name),
             F.sum(F.col("value").cast("decimal(18,4)"))
             .cast("double")
             .alias("sum_value"),
         )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+        .select(F.col("w.start").alias("window_start"), key, n_name, "sum_value")
     )
 
 
@@ -159,29 +191,14 @@ def stream_static_nation_activity(stream: DataFrame, customer: DataFrame) -> Dat
         stream["user_id"] == F.col("c_custkey"),
         "inner",
     )
-    return (
-        joined.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "15 minutes").alias("w"), "c_nationkey")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "c_nationkey",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _tumbling_count_sum(joined, "15 minutes", "c_nationkey", "n_events")
 
 
 def stream_stream_signup_purchase(
-    signups: DataFrame, purchases: DataFrame
+    signups: DataFrame, purchases: DataFrame, how: str = "inner"
 ) -> DataFrame:
-    """Watermarked stream-stream inner join: every purchase a user makes
-    within 1 hour of a signup event, emitted in append mode.
+    """Watermarked stream-stream join: every purchase a user makes within
+    1 hour of a signup event, emitted in append mode.
 
     Both sides carry a watermark and the join predicate bounds
     ``purchase_ts`` relative to ``signup_ts``, so Spark derives a state
@@ -190,6 +207,13 @@ def stream_stream_signup_purchase(
     condition the buffers would grow forever; this is the canonical shape
     for correlating two unbounded firehoses. Equality on user_id keys the
     state-store partitioning (scales like a keyed shuffle).
+
+    ``how="left_outer"`` keeps every signup: one with no purchase is
+    emitted null-padded only when the watermark passes ``signup_ts + 1h``
+    (the latest time a qualifying purchase could carry) — the
+    streaming-correct version of "we waited long enough". Rows younger
+    than that at end-of-stream are withheld, NOT null-completed: emitting
+    them would be wrong if the stream resumed.
     """
     s = (
         signups.filter(F.col("event_type") == "signup")
@@ -215,7 +239,7 @@ def stream_stream_signup_purchase(
         (F.col("user_id") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("signup_ts"))
         & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
+        how,
     ).select("user_id", "signup_id", "signup_ts", "purchase_id", "purchase_ts", "value")
 
 
@@ -334,8 +358,6 @@ def run_foreach_batch_upsert(
     a 100 TB fact sink would partition the target and swap only affected
     partitions (dynamic partition overwrite) or use a MERGE-capable format.
     """
-    import shutil
-
     spark = stream.sparkSession
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -376,52 +398,6 @@ def user_value_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_stream_signup_purchase_outer(
-    signups: DataFrame, purchases: DataFrame
-) -> DataFrame:
-    """Watermarked stream-stream LEFT OUTER join: every signup with the
-    purchases made within 1 hour of it — or a null-padded row once the
-    watermark proves no purchase can still arrive.
-
-    Same state-bounding shape as the inner variant
-    (``stream_stream_signup_purchase``): equality on user_id keys the
-    state store, the time-range condition derives an eviction horizon
-    for both buffers. The outer semantics add the null-completion rule:
-    an unmatched signup row is emitted with nulls only when the
-    watermark passes ``signup_ts + 1h`` (the latest time a qualifying
-    purchase could carry) — the streaming-correct version of "we waited
-    long enough". Rows younger than that at end-of-stream are withheld,
-    NOT null-completed: emitting them would be wrong if the stream
-    resumed. The oracle states exactly this final-watermark cutoff.
-    """
-    s = (
-        signups.filter(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id"),
-            F.col("event_id").alias("signup_id"),
-            F.col("ts").alias("signup_ts"),
-        )
-        .withWatermark("signup_ts", "10 minutes")
-    )
-    p = (
-        purchases.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value"),
-        )
-        .withWatermark("purchase_ts", "10 minutes")
-    )
-    return s.join(
-        p,
-        (F.col("user_id") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("signup_ts"))
-        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    ).select("user_id", "signup_id", "signup_ts", "purchase_id", "purchase_ts", "value")
-
-
 def read_events_stream_with_flush(
     spark: SparkSession, sf_dir: str, flush_days: int = 1
 ) -> DataFrame:
@@ -443,42 +419,9 @@ def read_events_stream_with_flush(
     update after batch N gates evictions in batch N+1, so a separate
     batch is unnecessary.)
     """
-    schema, ts_is_nanos_long = _events_batch_schema(spark, sf_dir)
-    src_dir = tempfile.mkdtemp(prefix="events_flush_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events_0.parquet")
-
-    probe = spark.read.parquet(f"{sf_dir}/events.parquet")
-    import datetime as _dt
-
-    if ts_is_nanos_long:
-        max_ts = probe.agg(F.max("ts")).collect()[0][0]  # nanos long
-        if max_ts is None:  # empty stream: any epoch works as the base
-            max_ts = 0
-        flush_ts = max_ts + flush_days * 86400 * 10**9
-    else:
-        max_ts = probe.agg(F.max("ts")).collect()[0][0]
-        if max_ts is None:  # empty stream: any epoch works as the base
-            max_ts = _dt.datetime(1970, 1, 1)
-        flush_ts = max_ts + _dt.timedelta(days=flush_days)
-    flush = spark.createDataFrame(
-        [
-            (-1, flush_ts, -1, "signup", 0.0, None),
-            (-2, flush_ts, -1, "purchase", 0.0, None),
-        ],
-        schema=schema,
+    return _stream_from_links(
+        spark, sf_dir, "events_flush_", 1, flush_days=flush_days
     )
-    tmp_out = tempfile.mkdtemp(prefix="events_flush_row_")
-    flush.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-    part = next(
-        f for f in os.listdir(tmp_out) if f.endswith(".parquet")
-    )
-    os.rename(f"{tmp_out}/{part}", f"{src_dir}/zz_flush.parquet")
-
-    reader = spark.readStream.schema(schema).format("parquet")
-    raw = reader.load(src_dir)
-    if ts_is_nanos_long:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def windowed_distinct_users(stream: DataFrame) -> DataFrame:
