@@ -1,6 +1,7 @@
 """Every top-level definition in the package has a caller outside tests/,
-every module-level import in the package is used, and no run of code
-lines is written twice outside the query modules.
+every module-level import in the package is used, no run of code lines
+is written twice outside the query modules, and no module but
+``cache.py`` reaches for the system temp dir.
 
 The scans are static and use no Spark: they parse every non-test Python
 file (the package, ``bench.py``, ``__spark_entry__.py``, ``tools/`` and
@@ -257,3 +258,36 @@ def test_no_copied_blocks_outside_query_modules():
     assert not copies, (
         f"runs of {_COPY_LINES} code lines written more than once, in "
         f"{modules}:\n  " + "\n  ".join(" = ".join(at) for at in copies))
+
+
+_TEMP_CALLS = {"mkdtemp", "gettempdir"}
+
+
+def _temp_uses(path):
+    """``path:line`` for each ``tempfile`` import and each ``mkdtemp``/
+    ``gettempdir`` call in ``path``."""
+    for n in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+        if isinstance(n, ast.Import):
+            hit = any(a.name.partition(".")[0] == "tempfile" for a in n.names)
+        elif isinstance(n, ast.ImportFrom):
+            hit = (n.module or "").partition(".")[0] == "tempfile"
+        elif isinstance(n, ast.Call):
+            f = n.func
+            hit = (f.id if isinstance(f, ast.Name) else
+                   getattr(f, "attr", None)) in _TEMP_CALLS
+        else:
+            continue
+        if hit:
+            yield f"{path.relative_to(PKG)}:{n.lineno}"
+
+
+def test_scratch_dirs_come_from_cache():
+    """Scratch dirs have one owner: ``cache.scratch`` makes them under the
+    session root that ``cache.release`` and ``spark.stop()`` remove. A
+    directory from the system temp dir outlives both, so no module but
+    ``cache.py`` may reach for ``tempfile``."""
+    uses = [u for p in sorted(PKG.rglob("*.py")) if p != PKG / "cache.py"
+            for u in _temp_uses(p)]
+    assert not uses, (
+        "system temp dirs outside cache.py (use cache.scratch):\n  "
+        + "\n  ".join(uses))

@@ -22,32 +22,100 @@ def test_extra_query_matches_oracle(spark, duck, name):
     assert spark.conf.getAll == conf, f"{name} changed the session conf"
 
 
-def test_flush_stream_leaves_no_temp_dir(spark):
-    """Writing the flush-sentinel file goes through a Spark write into a
-    scratch dir; only its part file is kept, so every call must remove
-    the scratch dir (and its _SUCCESS/.crc files) again."""
-    import glob
+# Every query that writes on-disk scratch: stream link dirs, the
+# flush-sentinel staging dir, streaming checkpoints, the SDP
+# materialization, the upsert target and the memoized indexes.
+SCRATCH_QUERIES = [
+    "ann_ivf_incremental_append",
+    "ann_ivf_partition_pruned",
+    "federated_multiformat_join",
+    "file_provenance_partition_counts",
+    "sdp_daily_type_rollup",
+    "streaming_dedup_redelivered",
+    "streaming_foreach_batch_upsert",
+    "streaming_hll_distinct",
+    "streaming_lsh_dedup",
+    "streaming_outer_join_flush",
+    "streaming_session_windows",
+    "streaming_sliding_windows",
+    "streaming_stateful_profiles",
+    "streaming_static_join",
+    "streaming_stream_stream_join",
+    "streaming_tumbling_counts",
+    "streaming_windowed_distinct",
+]
+
+
+@pytest.mark.parametrize("name", SCRATCH_QUERIES)
+def test_query_leaves_no_scratch_behind(spark, name):
+    """Three runs of a query that writes scratch add nothing to the system
+    temp dir, and no temp view or persisted RDD after the first run (which
+    may fill the memo); api.release_caches then empties the session's
+    scratch root."""
     import os
     import tempfile
 
-    from ufc_data_warehouse_spark.streaming import events as ev
+    from pyspark import SparkFiles
 
-    pattern = os.path.join(tempfile.gettempdir(), "events_flush_row_*")
-    before = set(glob.glob(pattern))
-    stream = ev.read_events_stream_with_flush(spark, SF_DIR)
-    assert stream.isStreaming
-    assert set(glob.glob(pattern)) <= before
+    from ufc_data_warehouse_spark import api
+
+    jsc = spark.sparkContext._jsc
+
+    def held():
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return views, set(jsc.getPersistentRDDs().keys())
+
+    tmp_before = set(os.listdir(tempfile.gettempdir()))
+    QUERIES[name].fn(spark, SF_DIR).collect()
+    held_after_first = held()
+    for _ in range(2):
+        QUERIES[name].fn(spark, SF_DIR).collect()
+    assert set(os.listdir(tempfile.gettempdir())) - tmp_before == set()
+    views, rdds = held()
+    assert views <= held_after_first[0], views - held_after_first[0]
+    assert rdds <= held_after_first[1], rdds - held_after_first[1]
+
+    root = os.path.join(SparkFiles.getRootDirectory(), "ufc_scratch")
+    assert os.listdir(root), f"{name} wrote no scratch dir"
+    api.release_caches(spark)
+    assert not os.path.exists(root) or not os.listdir(root)
 
 
-def test_stateful_query_on_rocksdb_state_store(spark):
+def test_ivf_index_is_rebuilt_after_release(spark, tmp_path):
+    """The partition-pruned IVF index is a memo entry, not a file that
+    outlives its source: after embeddings.parquet is rewritten and
+    api.release_caches is called, ann_ivf_partition_pruned reads a rebuilt
+    index and equals ann_ivf_topk on the rewritten data."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from ufc_data_warehouse_spark import api
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf, copy_function=shutil.copyfile)
+    pruned = QUERIES["ann_ivf_partition_pruned"].fn
+    before = pruned(spark, str(sf)).toPandas()
+
+    # keep the even vec_ids: every query vector (vec_id % 50 == 0) stays,
+    # half of the candidates go
+    emb = pq.read_table(sf / "embeddings.parquet")
+    even = pc.equal(pc.bit_wise_and(emb["vec_id"], 1), 0)
+    pq.write_table(emb.filter(even), sf / "embeddings.parquet")
+    api.release_caches(spark)
+
+    expected = QUERIES["ann_ivf_topk"].fn(spark, str(sf)).toPandas()
+    assert not before.equals(expected), "the rewrite changed no neighbour"
+    assert_frames_match(pruned(spark, str(sf)), expected, label="rebuilt index")
+
+
+def test_stateful_query_on_rocksdb_state_store(spark, tmp_path):
     """The watermarked dedup must run unchanged on the RocksDB state
     store provider — the disk-backed store that holds 100 TB-scale
     streaming state (the default in-memory HDFS-backed store is bounded
     by executor heap). Results must equal the default-provider run and
     the progress metrics must prove RocksDB actually engaged."""
-    import tempfile
-
-    from tests.conftest import SF_DIR
     from ufc_data_warehouse_spark.streaming import events as ev
 
     conf = "spark.sql.streaming.stateStore.providerClass"
@@ -73,7 +141,7 @@ def test_stateful_query_on_rocksdb_state_store(spark):
             result.writeStream.format("memory")
             .queryName("rocksdb_dedup_out")
             .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_rdb_"))
+            .option("checkpointLocation", str(tmp_path / "ckpt_rdb"))
             .trigger(availableNow=True)
             .start()
         )
@@ -86,6 +154,7 @@ def test_stateful_query_on_rocksdb_state_store(spark):
         metrics = progress["stateOperators"][0]["customMetrics"]
         assert any("rocksdb" in k.lower() for k in metrics), metrics
     finally:
+        spark.catalog.dropTempView("rocksdb_dedup_out")
         if saved is None:
             spark.conf.unset(conf)
         else:

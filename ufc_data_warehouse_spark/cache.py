@@ -4,8 +4,12 @@ Entries are keyed by ``(applicationId, key)``: applicationId is unique per
 SparkContext and survives GC churn (an id()-based key could collide after
 a session is collected). What lives here: the lazy raw-layer plans and the
 persisted ``api._PERSISTED`` frames per sf_dir, the dedup shingles and LSH
-candidates per sf_dir, and the ``spread_single_split`` partition probes
-per plan. :func:`release` is the only invalidation.
+candidates per sf_dir, the ``spread_single_split`` partition probes per
+plan, and the paths of the on-disk indexes queries write once per sf_dir.
+:func:`release` is the only invalidation. It owns on-disk scratch too:
+:func:`scratch` makes every directory the package writes under one
+per-session root, ``<SparkFiles.getRootDirectory()>/ufc_scratch``, which
+``spark.stop()`` and :func:`release` remove.
 
 It also owns the lineage-truncation policy: :func:`truncate` is the one
 place the package calls ``localCheckpoint``/``checkpoint``, so every
@@ -18,10 +22,14 @@ without an import cycle.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
 from collections.abc import Callable, Hashable
 from typing import TypeVar
 
 from py4j.protocol import Py4JError
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
@@ -42,12 +50,25 @@ def memo(spark: SparkSession, key: Hashable, build: Callable[[], T]) -> T:
     return _memo[k]  # type: ignore[return-value]
 
 
+def _scratch_root() -> str:
+    return os.path.join(SparkFiles.getRootDirectory(), "ufc_scratch")
+
+
+def scratch(spark: SparkSession, prefix: str) -> str:
+    """A new empty directory ``prefix*`` under ``spark``'s scratch root,
+    kept until :func:`release` or ``spark.stop()``."""
+    root = _scratch_root()
+    os.makedirs(root, exist_ok=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
 def release(spark: SparkSession) -> None:
     """Release everything the engine holds for ``spark``: the lazy raw
     plans and persisted ``api._PERSISTED`` frames of every sf_dir, the
-    dedup shingles and LSH candidates, the spread probes, and (through
-    ``clearCache``) query-internal persists that outlive their builder
-    (title_reigns' status_changes, text_token_rarity's vocab).
+    dedup shingles and LSH candidates, the spread probes, the scratch root
+    (a frame that reads a :func:`scratch` dir is invalid afterwards), and
+    (through ``clearCache``) query-internal persists that outlive their
+    builder (title_reigns' status_changes, text_token_rarity's vocab).
 
     This is the only invalidation: call it after rewriting files under an
     sf_dir, or to get memory back. The next build re-derives and
@@ -65,6 +86,7 @@ def release(spark: SparkSession) -> None:
                     pass
     try:
         spark.catalog.clearCache()
+        shutil.rmtree(_scratch_root(), ignore_errors=True)
     except Py4JError:  # JVM side already stopped: nothing held
         pass
 

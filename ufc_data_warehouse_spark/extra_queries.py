@@ -1961,13 +1961,11 @@ def q_streaming_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFr
     into parquet. Forcing one file per micro-batch makes the sink apply
     multiple overlapping batches — the final table must still equal the
     batch ground truth, which is exactly what the oracle states."""
-    import tempfile as _tf
-
     from .streaming import events as se
 
     apply_runtime_confs(spark)
     stream = se.read_events_stream_redelivered(spark, sf_dir, max_files_per_trigger=1)
-    target = _tf.mkdtemp(prefix="upsert_target_") + "/totals"
+    target = cache.scratch(spark, "upsert_target_") + "/totals"
     se.run_foreach_batch_upsert(
         se.user_value_totals(stream), keys=["user_id"], target_dir=target
     )

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import cache
 from .analytics_queries import _RRF_ORACLE
 from .extra_queries import q_dedup_clusters, q_dedup_minhash_lsh, q_dedup_simhash_pairs
 from .operators import dedup, simsearch, text
@@ -2863,6 +2864,17 @@ query("ann_probe_sweep", q_ann_probe_sweep, _probe_sweep_oracle())
 # ---------------------------------------------------------------------------
 
 
+def _ivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """The label-partitioned IVF index of ``sf_dir``, written once per session."""
+
+    def build() -> str:
+        path = cache.scratch(spark, "ivf_index_")
+        simsearch.write_ivf_partitioned(_read(spark, sf_dir, "embeddings"), path)
+        return path
+
+    return cache.memo(spark, ("ivf_index", sf_dir), build)
+
+
 def q_ann_ivf_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The storage-side ANN path: the IVF lists live as label-partitioned
     parquet (write once), and the probe reads ONLY the probed partitions
@@ -2870,15 +2882,9 @@ def q_ann_ivf_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py). Same rows as ann_ivf_topk; the oracle is the
     same SQL, which is the point: layout changed, semantics didn't.
     """
-    import tempfile
-
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    path = f"{tempfile.gettempdir()}/ivf_index_{sf_dir.strip('/').replace('/', '_')}"
-    import os as _os
-
-    if not _os.path.exists(f"{path}/_SUCCESS"):
-        simsearch.write_ivf_partitioned(emb, path)
+    path = _ivf_index(spark, sf_dir)
     return simsearch.ivf_topk_from_partitioned(
         spark, path, queries, k=10, n_probe=2, schema=emb.schema
     ).orderBy("query_id", "rank")
@@ -3117,19 +3123,13 @@ def q_federated_multiformat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers through ORC, joined against native parquet nation — three
     formats in ONE plan, proving the source layer is transport, not
     semantics (the oracle reads only the original parquet). Writes land
-    once per session in tmp; the join itself broadcasts the dims.
+    once per session in a scratch dir; the join itself broadcasts the dims.
     """
-    import os as _os
-    import tempfile
-
     from .sources import ingest
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    ev_path = f"{tempfile.gettempdir()}/fed_events_{tag}"
-    cu_path = f"{tempfile.gettempdir()}/fed_customer_{tag}"
-    events = _read(spark, sf_dir, "events")
-    customer = _read(spark, sf_dir, "customer")
-    if not _os.path.exists(ev_path):
+    def build() -> str:
+        root = cache.scratch(spark, "fed_")
+        events = _read(spark, sf_dir, "events")
         ingest.write_jsonl(
             events.select(
                 "event_id",
@@ -3137,28 +3137,18 @@ def q_federated_multiformat_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type",
                 F.floor(F.col("value") * 100).cast("long").alias("cents"),
             ),
-            ev_path,
+            f"{root}/events",
         )
+        customer = _read(spark, sf_dir, "customer")
         ingest.write_orc(
-            customer.select("c_custkey", "c_nationkey"), cu_path
+            customer.select("c_custkey", "c_nationkey"), f"{root}/customer"
         )
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+        return root
 
-    ev_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("cents", LongType()),
-        ]
-    )
-    ev_jsonl = ingest.read_jsonl(spark, ev_path, schema=ev_schema)
-    cu_orc = ingest.read_orc(spark, cu_path)
+    root = cache.memo(spark, ("federated", sf_dir), build)
+    ev_schema = "event_id BIGINT, user_id BIGINT, event_type STRING, cents BIGINT"
+    ev_jsonl = ingest.read_jsonl(spark, f"{root}/events", schema=ev_schema)
+    cu_orc = ingest.read_orc(spark, f"{root}/customer")
     nation = _read(spark, sf_dir, "nation")
     return (
         ev_jsonl.join(
@@ -3201,23 +3191,18 @@ def q_ann_ivf_incremental_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL. At 100 TB this is the difference between an hourly index refresh
     and an hourly full rewrite.
     """
-    import os as _os
-    import tempfile
-
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = f"{tempfile.gettempdir()}/ivf_incr_{tag}"
-    # guard on a marker written AFTER the append — _SUCCESS alone lands
-    # after the base write, which would cache a half-built index if the
-    # process died between the two writes
-    marker = f"{path}/_APPENDED"
-    if not _os.path.exists(marker):
-        old = emb.filter(F.col("vec_id") % 5 != 0)
-        new = emb.filter(F.col("vec_id") % 5 == 0)
-        simsearch.write_ivf_partitioned(old, path)
-        new.write.mode("append").partitionBy("label").parquet(path)
-        open(marker, "w").close()
+
+    def build() -> str:
+        path = cache.scratch(spark, "ivf_incr_")
+        simsearch.write_ivf_partitioned(emb.filter(F.col("vec_id") % 5 != 0), path)
+        emb.filter(F.col("vec_id") % 5 == 0).write.mode("append").partitionBy(
+            "label"
+        ).parquet(path)
+        return path
+
+    path = cache.memo(spark, ("ivf_incr", sf_dir), build)
     return simsearch.ivf_topk_from_partitioned(
         spark, path, queries, k=10, n_probe=2, schema=emb.schema
     ).orderBy("query_id", "rank")
@@ -4869,14 +4854,8 @@ def q_file_provenance_partition_counts(spark: SparkSession, sf_dir: str) -> Data
     the logical per-label counts (the oracle) — file layout and logical
     content reconciled in one query.
     """
-    import os as _os
-    import tempfile
-
     emb = _read(spark, sf_dir, "embeddings")
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = f"{tempfile.gettempdir()}/ivf_index_{tag}"
-    if not _os.path.exists(f"{path}/_SUCCESS"):
-        simsearch.write_ivf_partitioned(emb, path)
+    path = _ivf_index(spark, sf_dir)
     # schema declared so an index built from an empty corpus (no
     # partition dirs) still reads as zero rows instead of failing inference
     full = spark.read.schema(emb.schema).parquet(path)

@@ -24,7 +24,7 @@ truncation rationale as `etl.run_pipeline`).
 from __future__ import annotations
 
 import os
-import tempfile
+from collections import Counter
 from collections.abc import Callable
 from pathlib import Path
 
@@ -36,6 +36,8 @@ from pyspark.pipelines.graph_element_registry import (
 from pyspark.pipelines.output import Output
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
+
+from . import cache
 
 
 class LocalGraphRegistry(GraphElementRegistry):
@@ -66,7 +68,8 @@ def run_pipeline(
 
     ``define`` is a zero-arg callable whose body declares datasets with
     the standard ``pyspark.pipelines`` decorators. Returns
-    {dataset name → DataFrame} for every flow target.
+    {dataset name → DataFrame} for every flow target; by default they read
+    a :func:`cache.scratch` dir, valid until ``cache.release``.
     """
     from pyspark.pipelines.output import MaterializedView, StreamingTable
 
@@ -74,14 +77,12 @@ def run_pipeline(
     with graph_element_registration_context(reg):
         define()
 
-    mv_dir = materialize_dir or tempfile.mkdtemp(prefix="sdp_mv_")
+    mv_dir = materialize_dir or cache.scratch(spark, "sdp_mv_")
     results: dict[str, DataFrame] = {}
     # streaming tables can receive MULTIPLE append flows; count them so
     # the target registers once every contributing flow has committed
-    flows_per_target: dict[str, int] = {}
-    for f in reg.flows:
-        flows_per_target[f.target] = flows_per_target.get(f.target, 0) + 1
-    done_per_target: dict[str, int] = {}
+    flows_per_target = Counter(f.target for f in reg.flows)
+    done_per_target: Counter[str] = Counter()
 
     pending = list(reg.flows)
     while pending:
@@ -128,9 +129,7 @@ def run_pipeline(
             elif isinstance(out, MaterializedView):
                 df.write.mode("overwrite").parquet(path)
                 df = spark.read.parquet(path)
-            done_per_target[flow.target] = (
-                done_per_target.get(flow.target, 0) + 1
-            )
+            done_per_target[flow.target] += 1
             if done_per_target[flow.target] == flows_per_target[flow.target]:
                 df.createOrReplaceTempView(flow.target)
                 results[flow.target] = df

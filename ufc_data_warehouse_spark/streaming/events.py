@@ -18,11 +18,11 @@ from __future__ import annotations
 import datetime
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import cache
 from ..sources.ingest import events_ts_is_nanos, events_ts_micros
 
 
@@ -42,8 +43,8 @@ def _stream_from_links(
     flush_days: int | None = None,
 ) -> DataFrame:
     """File-source stream over events.parquet. The file streaming source
-    monitors a DIRECTORY; the testdata is a bare file, so a temp dir with
-    symlink(s) stands in as the watched source. ``n_links > 1`` models an
+    monitors a DIRECTORY; the testdata is a bare file, so a scratch dir
+    with symlink(s) stands in as the watched source. ``n_links > 1`` models an
     at-least-once upstream that redelivers every record;
     ``max_files_per_trigger=1`` then forces each delivery into its OWN
     micro-batch (AvailableNow honors the cap) instead of one batch.
@@ -54,7 +55,7 @@ def _stream_from_links(
     same way it does in a batch read (testdata generations have shipped
     both nanos and micros) and :func:`events_ts_micros` adapts to it."""
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix=prefix)
+    src_dir = cache.scratch(spark, prefix)
     for i in range(n_links):
         os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events_{i}.parquet")
     if flush_days is not None:
@@ -87,7 +88,7 @@ def _write_flush_file(batch: DataFrame, flush_days: int, dest: str) -> None:
         ],
         schema=batch.schema,
     )
-    tmp_out = tempfile.mkdtemp(prefix="events_flush_row_")
+    tmp_out = cache.scratch(batch.sparkSession, "events_flush_row_")
     try:
         flush.coalesce(1).write.mode("overwrite").parquet(tmp_out)
         part = next(f for f in os.listdir(tmp_out) if f.endswith(".parquet"))
@@ -322,23 +323,29 @@ def stateful_user_profiles(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_available_now(
-    result: DataFrame, name: str | None = None, output_mode: str = "complete"
-) -> DataFrame:
+def _drain(writer: DataStreamWriter, spark: SparkSession) -> None:
+    """Run ``writer``'s query over all currently-available data
+    (``Trigger.AvailableNow``) and wait for it to end. Nothing resumes a
+    drained query, so its scratch checkpoint is removed once it ends."""
+    ckpt = cache.scratch(spark, "ckpt_")
+    writer = writer.option("checkpointLocation", ckpt).trigger(availableNow=True)
+    try:
+        writer.start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Execute a streaming query over all currently-available data and
-    return the result as a batch DataFrame (memory sink)."""
+    return the result as a batch DataFrame bound to its memory sink, whose
+    temp view is dropped again."""
     spark = result.sparkSession
-    table = name or f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.format("memory")
-        .queryName(table)
-        .outputMode(output_mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(table)
+    view = f"stream_out_{uuid.uuid4().hex[:8]}"
+    writer = result.writeStream.format("memory").queryName(view)
+    _drain(writer.outputMode(output_mode), spark)
+    out = spark.table(view)
+    spark.catalog.dropTempView(view)
+    return out
 
 
 def run_foreach_batch_upsert(
@@ -373,14 +380,7 @@ def run_foreach_batch_upsert(
         shutil.rmtree(target_dir, ignore_errors=True)
         os.rename(tmp, target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upsert_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(merge_batch).outputMode("update"), spark)
 
 
 def user_value_totals(stream: DataFrame) -> DataFrame:
@@ -451,7 +451,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern as the events stream) — the arriving-corpus side of streaming
     dedup."""
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="docs_stream_")
+    src_dir = cache.scratch(spark, "docs_stream_")
     os.symlink(f"{sf_dir}/documents.parquet", f"{src_dir}/documents_0.parquet")
     return spark.readStream.schema(schema).format("parquet").load(src_dir)
 
