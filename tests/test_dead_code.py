@@ -1,11 +1,12 @@
 """Every top-level definition in the package has a caller outside tests/,
-every module-level import in the package is used, no run of code lines
-is written twice outside the query modules, and no module but
+every defaulted parameter of a top-level package function is passed by
+some call, every module-level import in the package is used, no run of
+code lines is written twice outside the query modules, and no module but
 ``cache.py`` reaches for the system temp dir.
 
 The scans are static and use no Spark: they parse every non-test Python
 file (the package, ``bench.py``, ``__spark_entry__.py``, ``tools/`` and
-``perfbench/``).  Names are resolved to package-qualified names through
+``perfbench/``); the parameter scan also counts the calls in ``tests/``.  Names are resolved to package-qualified names through
 imports: ``from .x import f [as g]`` makes ``g`` name ``x.f``; ``from .
 import x`` (or an absolute ``ufc_data_warehouse_spark`` import) makes
 ``x.f`` name ``x.f``; a bare ``f`` in a package module names that module's
@@ -38,6 +39,8 @@ _KEPT = {
     "sources.vacancies.scrape_vacancies":
         "end-to-end entry of the reference's scraper (SURVEY S5)",
     "api.register_views": "public SQL-serving API",
+    "registry.write_jdbc":
+        "the reference's Postgres load target (dlt/load.py:55-59)",
 }
 
 
@@ -176,6 +179,85 @@ def test_kept_names_still_exist():
     assert not missing, f"_KEPT names with no definition: {missing}"
 
 
+# Defaulted parameters no call passes, each kept for a stated reason.
+_SETTABLE = {
+    "exprs.image_slug_url(base=)":
+        "an address: a deployment setting stays configurable",
+}
+
+
+def _defaulted(fn):
+    """``[(position or None for keyword-only, name)]`` of ``fn``'s
+    parameters that carry a default."""
+    pos = fn.args.posonlyargs + fn.args.args
+    out = list(enumerate(a.arg for a in pos))[len(pos) - len(fn.args.defaults):]
+    return out + [(None, a.arg) for a, d in
+                  zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
+
+
+def _callee(node, aliases, mod):
+    """Package-qualified names the callee expression ``node`` names: an
+    aliased chain, or a bare name of the calling package module."""
+    chain = _chain(node)
+    if chain is None:
+        return set()
+    base, attrs = chain
+    if base in aliases:
+        return {_join(t, *attrs) for t in aliases[base]}
+    return {_join(mod, base)} if mod is not None and not attrs else set()
+
+
+def _unset_parameters():
+    """``module.function(name=)`` for each defaulted parameter of a
+    top-level package function that no call passes, by keyword or by
+    position. Calls count in every scanned file and in tests/ (tests set
+    bucket counts and round limits that small data cannot reach with the
+    defaults). A call with ``*args`` or ``**kwargs`` passes everything; a
+    function named other than as a callee (stored, passed as a value,
+    wrapped) is skipped, since its calls cannot be seen."""
+    funcs = {}
+    for path in PKG.rglob("*.py"):
+        for stmt in ast.parse(path.read_text(), filename=str(path)).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                funcs[_join(_module(path), stmt.name)] = stmt
+    passed, escaped = defaultdict(set), set()
+    for path in _sources() + sorted((ROOT / "tests").rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        mod, aliases = _module(path), _aliases(tree, path)
+        callees = set()
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            callees.add(id(n.func))
+            for q in _callee(n.func, aliases, mod) & funcs.keys():
+                if (any(isinstance(a, ast.Starred) for a in n.args)
+                        or any(k.arg is None for k in n.keywords)):
+                    passed[q].add("*")
+                passed[q].update(range(len(n.args)))
+                passed[q].update(k.arg for k in n.keywords)
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.Name, ast.Attribute)) and id(n) not in callees:
+                escaped |= _callee(n, aliases, mod) & funcs.keys()
+    return sorted(
+        f"{q}({name}=)"
+        for q, fn in funcs.items()
+        if q not in escaped and not fn.decorator_list and "*" not in passed[q]
+        for i, name in _defaulted(fn)
+        if name not in passed[q] and i not in passed[q])
+
+
+def test_every_defaulted_parameter_is_passed_somewhere():
+    """A default no call overrides is a constant spelled as an option:
+    inline it and delete the paths only other values reach."""
+    unset = _unset_parameters()
+    stale = sorted(set(_SETTABLE) - set(unset))
+    unset = [p for p in unset if p not in _SETTABLE]
+    assert not unset, (
+        f"{len(unset)} defaulted parameters that no call passes; make "
+        f"each a constant:\n  " + "\n  ".join(unset))
+    assert not stale, f"_SETTABLE entries some call now passes: {stale}"
+
+
 def _annotations(tree):
     """String annotations parsed as expressions: pandas UDF type hints
     such as ``"Iterator[pd.DataFrame]"`` are evaluated at run time against
@@ -242,18 +324,20 @@ def _code_lines(path):
 
 def test_no_copied_blocks_outside_query_modules():
     """A run of ``_COPY_LINES`` normalized code lines written twice is an
-    operator step with two bodies: give it one helper both call. The query
-    modules are exempt — folding a copy there moves the query's
-    fingerprint."""
+    operator step with two bodies: give it one helper both call. A run
+    that only the query modules repeat is exempt — folding a copy there
+    moves the query's fingerprint — but a query module may not repeat a
+    run of any other module: that is an operator body pasted into a
+    query."""
     seen = defaultdict(list)
     for path in sorted(PKG.rglob("*.py")):
-        if path.stem in QUERY_MODULES:
-            continue
         lines = _code_lines(path)
         for i in range(len(lines) - _COPY_LINES + 1):
             run = tuple(text for _, text in lines[i:i + _COPY_LINES])
-            seen[run].append(f"{path.relative_to(PKG)}:{lines[i][0]}")
-    copies = sorted({tuple(at) for at in seen.values() if len(at) > 1})
+            seen[run].append((path.stem in QUERY_MODULES,
+                              f"{path.relative_to(PKG)}:{lines[i][0]}"))
+    copies = sorted({tuple(a for _, a in at) for at in seen.values()
+                     if len(at) > 1 and not all(q for q, _ in at)})
     modules = sorted({a.partition(":")[0] for at in copies for a in at})
     assert not copies, (
         f"runs of {_COPY_LINES} code lines written more than once, in "

@@ -49,9 +49,9 @@ SCRATCH_QUERIES = [
 @pytest.mark.parametrize("name", SCRATCH_QUERIES)
 def test_query_leaves_no_scratch_behind(spark, name):
     """Three runs of a query that writes scratch add nothing to the system
-    temp dir, and no temp view or persisted RDD after the first run (which
-    may fill the memo); api.release_caches then empties the session's
-    scratch root."""
+    temp dir and no temp view, and no persisted RDD after the first run
+    (which may fill the memo); api.release_caches then empties the
+    session's scratch root."""
     import os
     import tempfile
 
@@ -65,15 +65,16 @@ def test_query_leaves_no_scratch_behind(spark, name):
         views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
         return views, set(jsc.getPersistentRDDs().keys())
 
+    views_before = held()[0]
     tmp_before = set(os.listdir(tempfile.gettempdir()))
     QUERIES[name].fn(spark, SF_DIR).collect()
-    held_after_first = held()
+    rdds_after_first = held()[1]
     for _ in range(2):
         QUERIES[name].fn(spark, SF_DIR).collect()
     assert set(os.listdir(tempfile.gettempdir())) - tmp_before == set()
     views, rdds = held()
-    assert views <= held_after_first[0], views - held_after_first[0]
-    assert rdds <= held_after_first[1], rdds - held_after_first[1]
+    assert views <= views_before, views - views_before
+    assert rdds <= rdds_after_first, rdds - rdds_after_first
 
     root = os.path.join(SparkFiles.getRootDirectory(), "ufc_scratch")
     assert os.listdir(root), f"{name} wrote no scratch dir"

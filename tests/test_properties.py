@@ -1687,12 +1687,19 @@ def test_rowlocal_minhash_matches_grouped(spark):
         min_size=1,
         max_size=40,
     ),
+    partitions=st.integers(min_value=1, max_value=4),
 )
-def test_bloom_membership_matches_python_reference(spark, dim_keys, probe_keys):
+@example([], [0, 7, -3, None], 2)  # empty build side: every probe row fails
+@example([5, 9], [None, 5, None, 4, 9], 3)  # NULL probe keys never pass
+@example([1, 2, 3, 2**40], [3, 2**40, 17, 1, -1], 1)  # probe in one partition
+def test_bloom_membership_matches_python_reference(
+    spark, dim_keys, probe_keys, partitions
+):
     """operators/bloomjoin.py's seeded-md5 bitmap must agree bit-for-bit
     with an independent pure-Python construction on arbitrary int64 keys
     (the cross-engine idiom's ground truth): every dim key passes (FN=0
-    structurally) and every probe flag equals the reference bitmap test."""
+    structurally), every probe flag equals the reference bitmap test, and
+    a NULL probe key never passes."""
     import hashlib
 
     from ufc_data_warehouse_spark.operators.bloomjoin import (
@@ -1717,93 +1724,24 @@ def test_bloom_membership_matches_python_reference(spark, dim_keys, probe_keys):
     dim = spark.createDataFrame([(k,) for k in dim_keys], "k long")
     probe = spark.createDataFrame(
         [(i, k) for i, k in enumerate(probe_keys)], "i long, k long"
-    )
-    filt = bloom_filter_map(dim, "k", m_bits=M, n_hashes=K)
+    ).repartition(partitions)
+    assert probe.rdd.getNumPartitions() == partitions
+    filt = bloom_filter_map(dim, "k")
     got = {
         r["i"]: r["bloom_pass"]
         for r in with_bloom_membership(probe, "k", filt).collect()
     }
+    assert len(got) == len(probe_keys)
     for i, k in enumerate(probe_keys):
-        assert got[i] == ref_pass(k), (i, k)
+        if k is None:
+            assert got[i] is not True, i
+        else:
+            assert got[i] == ref_pass(k), (i, k)
     # structural FN=0: every dim key itself must pass
     dflags = with_bloom_membership(
         dim.withColumnRenamed("k", "k2"), "k2", filt
     ).collect()
     assert all(r["bloom_pass"] for r in dflags)
-
-
-def test_bloom_probe_rejects_build_parameter_mismatch(spark):
-    """A probe whose m_bits/n_hashes differ from the build's would
-    silently drop matching rows (false negatives); the filter row carries
-    its build parameters in field metadata and the probe must refuse a
-    conflicting override."""
-    import pytest
-
-    from ufc_data_warehouse_spark.operators.bloomjoin import (
-        bloom_filter_map,
-        with_bloom_membership,
-    )
-
-    dim = spark.createDataFrame([(1,), (2,)], "k long")
-    probe = spark.createDataFrame([(1,), (3,)], "k long")
-    filt = bloom_filter_map(dim, "k", m_bits=8192, n_hashes=2)
-    with pytest.raises(ValueError, match="m_bits"):
-        with_bloom_membership(probe, "k", filt, m_bits=16384)
-    with pytest.raises(ValueError, match="n_hashes"):
-        with_bloom_membership(probe, "k", filt, n_hashes=3)
-    # metadata-driven defaults: no explicit params needed, FN=0 holds
-    flags = {
-        r["k"]: r["bloom_pass"]
-        for r in with_bloom_membership(probe, "k", filt).collect()
-    }
-    assert flags[1] is True
-
-
-def test_bloom_probe_requires_params_when_metadata_missing(spark, tmp_path):
-    """A filter row built OUTSIDE bloom_filter_map carries no fmap field
-    metadata; probing it with silent defaults would be exactly the
-    build/probe mismatch the metadata coupling exists to prevent — the
-    probe must REFUSE unless every build parameter is explicit (r5
-    ADVICE). (A Spark-parquet round-trip, tested here, PRESERVES field
-    metadata — the self-check below pins that, so the refuse-path is for
-    foreign writers/readers that drop it.)"""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from ufc_data_warehouse_spark.operators.bloomjoin import (
-        bloom_filter_map,
-        with_bloom_membership,
-    )
-
-    dim = spark.createDataFrame([(1,), (2,)], "k long")
-    probe = spark.createDataFrame([(1,), (3,)], "k long")
-    filt = bloom_filter_map(dim, "k", m_bits=8192, n_hashes=2)
-
-    # Spark's own parquet round-trip keeps the metadata: still proceeds
-    path = str(tmp_path / "bloom_filter")
-    filt.write.mode("overwrite").parquet(path)
-    reread = spark.read.parquet(path)
-    ok = {
-        r["k"]: r["bloom_pass"]
-        for r in with_bloom_membership(probe, "k", reread).collect()
-    }
-    assert ok[1] is True
-
-    # stripped metadata (what a foreign writer would hand back): refuse
-    bare = filt.select(F.col("fmap").alias("fmap", metadata={}))
-    with pytest.raises(ValueError, match="no build metadata"):
-        with_bloom_membership(probe, "k", bare)
-    with pytest.raises(ValueError, match="no build metadata"):
-        # partial params are not enough either
-        with_bloom_membership(probe, "k", bare, m_bits=8192)
-    # fully explicit params matching the build restore FN=0
-    flags = {
-        r["k"]: r["bloom_pass"]
-        for r in with_bloom_membership(
-            probe, "k", bare, m_bits=8192, n_hashes=2, salt=""
-        ).collect()
-    }
-    assert flags[1] is True
 
 
 def test_lsh_bucket_signatures_skips_leading_null_vectors(spark):

@@ -1594,6 +1594,7 @@ def q_sdp_daily_type_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     results = run_pipeline(spark, define)
+    spark.catalog.dropTempView("sdp_events_src")
     return results["sdp_daily_type_rollup"].orderBy("event_type", "epoch_day")
 
 
@@ -6432,10 +6433,8 @@ def q_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
-    filt = bloom_filter_map(dim, "c_custkey", m_bits=16384, n_hashes=3)
+    filt = bloom_filter_map(dim, "c_custkey")
     probe = _read(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    # probe parameters come from the fmap field metadata the build wrote —
-    # passing them again is unnecessary (and a mismatch would raise)
     flagged = with_bloom_membership(probe, "o_custkey", filt)
     dimk = dim.distinct().withColumnRenamed("c_custkey", "_dk")
     flagged = flagged.join(

@@ -8,25 +8,27 @@ opaque — you cannot audit its false-positive rate, pin its size, or reuse
 it across queries. This module builds the same thing declaratively:
 
 - **Build** (`bloom_filter_map`): hash every dimension key with
-  ``n_hashes`` seeded md5 positions into an ``m_bits``-wide bitmap,
+  ``N_HASHES`` seeded md5 positions into an ``M_BITS``-wide bitmap,
   packed 32 bits per word via ``bit_or`` — a groupBy over at most
-  ``n_hashes × |dim|`` tiny rows producing ≤ ``m_bits/32`` words, then
+  ``N_HASHES × |dim|`` tiny rows producing ≤ ``M_BITS/32`` words, then
   collapsed to ONE row holding a ``map<long,long>``. At m = 16 Ki bits
   that is a ≤2 KiB broadcast no matter how large the dimension's table
   is on disk.
 - **Probe** (`with_bloom_membership`): the fact side gets a boolean
-  column from pure per-row expressions — md5 → word lookup
+  ``bloom_pass`` column from pure per-row expressions — md5 → word lookup
   (``element_at`` on the broadcast map) → bit test. No explode, no
   shuffle, no Python: the membership test rides the scan inside
   whole-stage codegen, so a 100 TB probe pays zero extra passes and the
   downstream join sees only ``n_exact + fp`` rows instead of the whole
   fact.
 
-False negatives are impossible by construction (every dim key sets all
-its bits); the paired query `bloom_join_prune` PROVES that per run by
-counting exact-matching rows that fail the bloom test (must be 0) and
-audits the false-positive rate against the classic
-``(1 - e^{-kn/m})^k`` expectation.
+Build and probe read the same two module constants, so a build/probe
+width or hash-count mismatch cannot be written. False negatives are
+impossible by construction (every dim key sets all its bits); the
+paired query `bloom_join_prune` PROVES that per run by counting
+exact-matching rows that fail the bloom test (must be 0) and audits
+the false-positive rate against the classic ``(1 - e^{-kn/m})^k``
+expectation.
 
 Everything is exact integer math on the seeded-md5 idiom shared with
 operators/training.py, so the DuckDB oracle reproduces the bitmap — and
@@ -42,25 +44,26 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# The one filter shape: 16 Ki bits (≤512 packed words, a ≤2 KiB map) and
+# 3 seeded md5 positions per key; the oracle of bloom_join_prune rebuilds
+# the same bitmap.
+M_BITS = 16384
+N_HASHES = 3
 # 32 bits per packed word: 1 << 31 still fits a signed 64-bit integer on
 # both engines (DuckDB's checked BIGINT << would overflow at 1 << 63).
 _WORD_BITS = 32
 
 
-def _position(key: Column, seed: int, salt: str, m_bits: int) -> Column:
+def _position(key: Column, seed: int) -> Column:
     """Bloom position i for ``key``: first 28 bits of the seeded md5,
-    mod ``m_bits`` — `('0x' || substr(md5('bf<salt><i>:' || key), 1, 7))
+    mod ``M_BITS`` — `('0x' || substr(md5('bf<i>:' || key), 1, 7))
     ::BIGINT % m` in DuckDB, identical lowercase-hex md5 on both."""
     return (
         F.conv(
             F.substring(
                 F.md5(
-                    F.encode(
-                        F.concat(
-                            F.lit(f"bf{salt}{seed}:"), key.cast("string")
-                        ),
-                        "utf-8",
-                    )
+                    F.encode(F.concat(F.lit(f"bf{seed}:"), key.cast("string")),
+                             "utf-8")
                 ),
                 1,
                 7,
@@ -68,161 +71,69 @@ def _position(key: Column, seed: int, salt: str, m_bits: int) -> Column:
             16,
             10,
         ).cast("long")
-        % m_bits
+        % M_BITS
     )
 
 
-def bloom_filter_map(
-    dim: DataFrame,
-    key: str,
-    m_bits: int = 16384,
-    n_hashes: int = 3,
-    salt: str = "",
-    with_count: bool = False,
-) -> DataFrame:
-    """1-row DataFrame ``(fmap map<long,long>)``: the packed bloom bitmap
-    over ``dim[key]`` (plus ``n_keys``, the build-side distinct key count
-    for FP-expectation sizing, when ``with_count`` — it costs one extra
-    1-row cross in the plan, so it is off by default).
+def _bit(h: Column) -> Column:
+    """The word bit of position ``h``: ``1 << (h & 31)``. shiftleft goes
+    through call_function: the Python wrapper only takes a literal int
+    for numBits, the SQL function takes a column."""
+    return F.call_function(
+        "shiftleft",
+        F.lit(1).cast("long"),
+        h.bitwiseAND(F.lit(_WORD_BITS - 1)).cast("int"),
+    )
 
-    The groupBy shuffles at most ``n_hashes × |dim|`` (word, bit) pairs
-    into ≤ ``m_bits/32`` groups; the final collect_list is over those
+
+def bloom_filter_map(dim: DataFrame, key: str) -> DataFrame:
+    """1-row DataFrame ``(fmap map<long,long>)``: the packed bloom bitmap
+    over ``dim[key]``.
+
+    The groupBy shuffles at most ``N_HASHES × |dim|`` (word, bit) pairs
+    into ≤ ``M_BITS/32`` groups; the final collect_list is over those
     ≤512 words — driver-safe at any dimension size that a bloom filter
     of this width is useful for.
     """
     k = F.col(key)
     positions = dim.select(
-        F.explode(
-            F.array(*[_position(k, i, salt, m_bits) for i in range(n_hashes)])
-        ).alias("h")
+        F.explode(F.array(*[_position(k, i) for i in range(N_HASHES)]))
+        .alias("h")
     )
-    words = positions.groupBy(
-        F.shiftright(F.col("h"), 5).alias("w")
-    ).agg(
-        F.bit_or(
-            # shiftleft via call_function: the Python wrapper only takes a
-            # literal int for numBits, the SQL function takes a column
-            F.call_function(
-                "shiftleft",
-                F.lit(1).cast("long"),
-                F.col("h").bitwiseAND(F.lit(_WORD_BITS - 1)).cast("int"),
-            )
-        ).alias("bits")
+    words = positions.groupBy(F.shiftright(F.col("h"), 5).alias("w")).agg(
+        F.bit_or(_bit(F.col("h"))).alias("bits")
     )
-    fmap = words.agg(
+    return words.agg(
         F.map_from_entries(
             F.collect_list(F.struct(F.col("w"), F.col("bits")))
-        ).alias(
-            "fmap",
-            # the build parameters travel WITH the bitmap as schema-field
-            # metadata (zero runtime cost): the probe reads them back so a
-            # build/probe m_bits or hash-count mismatch — which would
-            # silently produce false negatives, i.e. dropped matching
-            # rows — is impossible instead of merely discouraged
-            metadata={"m_bits": m_bits, "n_hashes": n_hashes, "salt": salt},
-        )
+        ).alias("fmap")
     )
-    if with_count:
-        n_keys = dim.select(F.countDistinct(k).alias("n_keys"))
-        fmap = fmap.crossJoin(F.broadcast(n_keys))
-    return fmap
-
-
-def bloom_membership_expr(
-    key: Column,
-    fmap: Column,
-    m_bits: int = 16384,
-    n_hashes: int = 3,
-    salt: str = "",
-) -> Column:
-    """Boolean: all ``n_hashes`` bits for ``key`` are set in ``fmap``.
-
-    Pure Column expressions — evaluated row-at-a-time inside codegen on
-    the probe scan, no join/shuffle/explode on the probe side.
-    """
-    hits = []
-    for i in range(n_hashes):
-        h = _position(key, i, salt, m_bits)
-        word = F.coalesce(
-            F.element_at(fmap, F.shiftright(h, 5)), F.lit(0).cast("long")
-        )
-        mask = F.call_function(
-            "shiftleft",
-            F.lit(1).cast("long"),
-            h.bitwiseAND(F.lit(_WORD_BITS - 1)).cast("int"),
-        )
-        hits.append(word.bitwiseAND(mask) != F.lit(0))
-    out = hits[0]
-    for hit in hits[1:]:
-        out = out & hit
-    return out
 
 
 def with_bloom_membership(
-    probe: DataFrame,
-    key: str,
-    filter_row: DataFrame,
-    flag: str = "bloom_pass",
-    m_bits: int | None = None,
-    n_hashes: int | None = None,
-    salt: str | None = None,
+    probe: DataFrame, key: str, filter_row: DataFrame
 ) -> DataFrame:
-    """Attach ``flag`` to ``probe`` via a broadcast of the 1-row filter.
-
-    The probe parameters default to the values the BUILD recorded in the
-    ``fmap`` field metadata — a mismatch (which would silently turn into
-    false negatives, pruning rows that DO match) is rejected with a
-    ``ValueError`` rather than trusted. Explicit arguments are only
-    needed for a filter row that did not come from
-    :func:`bloom_filter_map` (a Spark-parquet round-trip PRESERVES field
-    metadata — pinned by test — but a foreign writer/reader or a manual
-    reconstruction drops it) — and for such a row they are REQUIRED:
-    missing metadata with no explicit value raises instead of assuming
-    defaults (a non-default build would otherwise probe with the wrong
-    params and silently false-negative).
+    """Attach ``bloom_pass`` to ``probe`` via a broadcast of the 1-row
+    filter: true when all ``N_HASHES`` bits for ``key`` are set in
+    ``fmap``, NULL for a NULL key.
 
     The cross join is a 1-row broadcast (allowlisted nested-loop shape,
     same class as the scalar-stats crosses in tools/plan_audit.py); the
-    membership predicate itself is map-side only.
+    membership predicate itself is pure Column expressions, evaluated
+    row-at-a-time inside codegen on the probe scan — no join, shuffle or
+    explode on the probe side.
     """
-    built: dict = {}
-    for f in filter_row.schema.fields:
-        if f.name == "fmap":
-            built = dict(f.metadata or {})
-    for name, given in (("m_bits", m_bits), ("n_hashes", n_hashes),
-                        ("salt", salt)):
-        if given is not None and name in built and built[name] != given:
-            raise ValueError(
-                f"bloom probe {name}={given!r} != build {built[name]!r}: "
-                "a build/probe parameter mismatch produces false negatives"
-            )
-    unknown = [
-        name
-        for name, given in (
-            ("m_bits", m_bits), ("n_hashes", n_hashes), ("salt", salt)
+    hits = []
+    for i in range(N_HASHES):
+        h = _position(F.col(key), i)
+        word = F.coalesce(
+            F.element_at(F.col("fmap"), F.shiftright(h, 5)),
+            F.lit(0).cast("long"),
         )
-        if given is None and name not in built
-    ]
-    if unknown:
-        # No build metadata for these params (filter row round-tripped
-        # through parquet, or built outside bloom_filter_map) and no
-        # explicit value: guessing defaults here is exactly the
-        # silent-false-negative mismatch the metadata coupling exists to
-        # prevent — refuse instead.
-        raise ValueError(
-            f"bloom filter row carries no build metadata for {unknown} "
-            "(fmap field metadata missing — filter built outside "
-            "bloom_filter_map, or round-tripped through a writer that "
-            "drops field metadata); pass explicit values matching the "
-            "build — guessed defaults would produce silent false "
-            "negatives"
-        )
-    m_bits = m_bits if m_bits is not None else built["m_bits"]
-    n_hashes = n_hashes if n_hashes is not None else built["n_hashes"]
-    salt = salt if salt is not None else built["salt"]
+        hits.append(word.bitwiseAND(_bit(h)) != F.lit(0))
+    passed = hits[0]
+    for hit in hits[1:]:
+        passed = passed & hit
     return probe.crossJoin(F.broadcast(filter_row)).withColumn(
-        flag,
-        bloom_membership_expr(
-            F.col(key), F.col("fmap"), int(m_bits), int(n_hashes), salt
-        ),
+        "bloom_pass", passed
     )

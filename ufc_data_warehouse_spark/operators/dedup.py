@@ -47,16 +47,14 @@ def tokens(col: F.Column) -> F.Column:
     return F.split(normalized_text(col), " ")
 
 
-def word_shingles(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def word_shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle).
 
     flatMap-shaped (explode) — no shuffle; ``distinct`` is deferred to the
     consumer's aggregation to avoid an extra exchange.
     """
     base = df.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+        F.col("doc_id").alias("id"), tokens(F.col("text")).alias("toks")
     ).filter(F.size("toks") >= n)
     idx = F.sequence(F.lit(0), F.size("toks") - n)
     shingle = F.array_join(F.slice(F.col("toks"), F.col("pos") + 1, n), " ")
@@ -72,9 +70,7 @@ def word_shingles(
 # ---------------------------------------------------------------------------
 
 
-def exact_duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     """Groups of byte-identical documents: (text_hash, n_docs, keep_id).
 
     Hash-groupBy on the md5 digest: the shuffle carries 32 bytes + id per
@@ -82,21 +78,19 @@ def exact_duplicate_groups(
     scales to 100 TB.
     """
     return (
-        df.select(F.md5(F.col(text_col)).alias("text_hash"), F.col(id_col).alias("id"))
+        df.select(F.md5(F.col("text")).alias("text_hash"), F.col("doc_id").alias("id"))
         .groupBy("text_hash")
         .agg(F.count("*").alias("n_docs"), F.min("id").alias("keep_id"))
         .filter(F.col("n_docs") > 1)
     )
 
 
-def fingerprint(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Normalized-text md5 fingerprint per document (whitespace/case
     insensitive dedup key): (id, fingerprint)."""
     return df.select(
-        F.col(id_col).alias("id"),
-        F.md5(normalized_text(F.col(text_col))).alias("fingerprint"),
+        F.col("doc_id").alias("id"),
+        F.md5(normalized_text(F.col("text"))).alias("fingerprint"),
     )
 
 
@@ -118,10 +112,7 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 16) -> DataFrame:
 
 def minhash_signatures_rowlocal(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 16,
-    n: int = 3,
 ) -> DataFrame:
     """(id, sig_0..sig_{H-1}) computed entirely ROW-LOCALLY: the shingle
     set becomes an array expression (sequence → slice → array_distinct)
@@ -132,18 +123,18 @@ def minhash_signatures_rowlocal(
     This is the signature path for STREAMS (stateless per micro-batch —
     no aggregation state) and for map-only batch stages; the groupBy
     variant remains preferable when shingles are already materialized for
-    other consumers. Documents shorter than ``n`` tokens produce no
+    other consumers. Documents shorter than 3 tokens produce no
     shingles there and no row here (empty-set minhash is undefined).
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     base = df.select(
-        F.col(id_col).alias("id"), toks.alias("toks")
-    ).filter(F.size("toks") >= n)
+        F.col("doc_id").alias("id"), toks.alias("toks")
+    ).filter(F.size("toks") >= 3)
     shingle_at = lambda i: F.array_join(  # noqa: E731
-        F.slice(F.col("toks"), i + 1, n), " "
+        F.slice(F.col("toks"), i + 1, 3), " "
     )
     shingles = F.array_distinct(
-        F.transform(F.sequence(F.lit(0), F.size("toks") - n), shingle_at)
+        F.transform(F.sequence(F.lit(0), F.size("toks") - 3), shingle_at)
     )
     def sig_expr(i: int) -> F.Column:
         # NB: the lambda must take ONE arg — F.transform passes the array
@@ -185,8 +176,6 @@ def lsh_band_keys(
 def incremental_lsh_candidates(
     corpus_sigs: DataFrame,
     batch_sigs: DataFrame,
-    bands: int = 4,
-    rows_per_band: int = 4,
 ) -> DataFrame:
     """(batch_id, corpus_id) near-dup candidates of an incoming batch
     against an already-indexed corpus — the PRODUCTION dedup scenario:
@@ -200,10 +189,10 @@ def incremental_lsh_candidates(
     collisions only. Batch-internal duplicates are a separate (tiny)
     ``lsh_candidate_pairs`` call on the batch alone.
     """
-    cb = lsh_band_keys(corpus_sigs, bands, rows_per_band).select(
+    cb = lsh_band_keys(corpus_sigs).select(
         F.col("id").alias("corpus_id"), "band", "bucket"
     )
-    bb = lsh_band_keys(batch_sigs, bands, rows_per_band).select(
+    bb = lsh_band_keys(batch_sigs).select(
         F.col("id").alias("batch_id"), "band", "bucket"
     )
     return (
@@ -330,9 +319,7 @@ def jaccard_pairs(
 SIMHASH_BITS = 24
 
 
-def simhash(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = SIMHASH_BITS
-) -> DataFrame:
+def simhash(df: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     """(id, simhash): per-token md5-derived hash bits; each bit
     contributes ±1; the sign vector packs into a ``bits``-wide fingerprint.
 
@@ -351,10 +338,10 @@ def simhash(
         raise ValueError(
             "simhash packs into one 64-bit fingerprint; bits must be <= 64"
         )
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     tok_hash = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
     per_tok = (
-        df.select(F.col(id_col).alias("id"), toks.alias("toks"))
+        df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
         .select("id", F.explode("toks").alias("tok"))
     )
     # r7: signatures ≤ 60 bits never read the second md5 word, but the old
@@ -532,9 +519,7 @@ def simhash_near_pairs(
     )
 
 
-def repeated_span_coverage(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 5
-) -> DataFrame:
+def repeated_span_coverage(df: DataFrame, n: int = 5) -> DataFrame:
     """Per-document coverage by CROSS-document verbatim ``n``-gram spans →
     ``(id, n_tokens, n_positions, dup_positions, covered_tokens,
     coverage_bps)`` — the substring-dedup / memorization-risk signal
@@ -556,7 +541,7 @@ def repeated_span_coverage(
     text is ``text.ngram_repetition``'s job, not this one's.
     """
     base = df.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+        F.col("doc_id").alias("id"), tokens(F.col("text")).alias("toks")
     ).filter(F.size("toks") >= n)
     gram = F.array_join(F.slice(F.col("toks"), F.col("pos") + 1, n), " ")
     pos = base.select(
@@ -631,13 +616,7 @@ def contamination_pairs(
     )
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 8, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD
     2003 — the MOSS algorithm): (id, pos, fp), the selected k-gram hashes.
 
@@ -654,7 +633,7 @@ def winnow_fingerprints(
     are md5-derived bigints, bit-reproducible in the DuckDB oracle.
     """
     base = df.select(
-        F.col(id_col).alias("id"), normalized_text(F.col(text_col)).alias("norm")
+        F.col("doc_id").alias("id"), normalized_text(F.col("text")).alias("norm")
     ).filter(F.length("norm") >= k + w - 1)
 
     def gram_hash(sub: F.Column) -> F.Column:
@@ -809,12 +788,7 @@ def blocked_edit_distance_pairs(
     )
 
 
-def prefix_filter_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_jaccard_pct: int = 40,
-) -> DataFrame:
+def prefix_filter_pairs(df: DataFrame, min_jaccard_pct: int = 40) -> DataFrame:
     """EXACT token-Jaccard similarity join via prefix filtering
     (Chaudhuri/Xiao et al., the PPJoin family) → (id_a, id_b, shared,
     union_size, jaccard) for all pairs with Jaccard ≥ min_jaccard_pct/100.
@@ -838,8 +812,8 @@ def prefix_filter_pairs(
     t = int(min_jaccard_pct)
     tok = (
         df.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("token"),
+            F.col("doc_id").alias("id"),
+            F.explode(F.array_distinct(tokens(F.col("text")))).alias("token"),
         )
         .where(F.col("token") != "")
         .persist()

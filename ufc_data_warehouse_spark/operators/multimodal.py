@@ -1374,13 +1374,11 @@ def media_metadata(media: DataFrame) -> DataFrame:
     )
 
 
-def patchify_plan(
-    decoded: DataFrame, patch: int = 16, cls_token: bool = True
-) -> DataFrame:
+def patchify_plan(decoded: DataFrame, patch: int = 16) -> DataFrame:
     """ViT-style patch-grid planning for image rows: patches per axis
     (ceil division), the zero-padding each axis needs to reach a whole
     patch multiple, and the resulting transformer token count
-    (+1 CLS when ``cls_token``). Pure integer Column math — the pixel
+    (+1 CLS token). Pure integer Column math — the pixel
     unfold belongs in the codec UDF; this computes the token budget a
     vision-encoder batcher packs on, which is what the PIPELINE needs
     at 100 TB (group images by n_tokens to build fixed-budget batches
@@ -1396,26 +1394,21 @@ def patchify_plan(
         n_py.alias("n_patches_y"),
         (n_px * p - F.col("width")).alias("pad_x"),
         (n_py * p - F.col("height")).alias("pad_y"),
-        (n_px * n_py + (1 if cls_token else 0)).alias("n_tokens"),
+        (n_px * n_py + 1).alias("n_tokens"),
     )
 
 
-def audio_window_plan(
-    media: DataFrame,
-    sample_rate: int = 16000,
-    win_ms: int = 25,
-    hop_ms: int = 10,
-) -> DataFrame:
-    """STFT/feature frame planning for audio rows: sample count, frame
-    window/hop in samples, and the resulting frame count
+def audio_window_plan(media: DataFrame) -> DataFrame:
+    """STFT/feature frame planning for audio rows: sample count, the
+    25 ms frame window and 10 ms hop in samples at 16 kHz (400 and 160),
+    and the resulting frame count
     n_frames = 1 + (n_samples − win) div hop (0 when the clip is
     shorter than one window) — the token budget an audio encoder
     batcher packs on, computed WITHOUT decoding (sample count derives
     from the payload byte length; the stub models 16-bit mono, 2
     bytes/sample). Pure integer Column math, same contract as
     ``patchify_plan`` for images."""
-    win = sample_rate * win_ms // 1000
-    hop = sample_rate * hop_ms // 1000
+    win, hop = 400, 160
     n_samples = F.expr("n_bytes div 2")
     return media.filter(F.col("kind") == "audio").select(
         "media_id",
@@ -1430,19 +1423,19 @@ def audio_window_plan(
     )
 
 
-def scene_cut_stats(decoded: DataFrame, threshold: int = 1 << 19) -> DataFrame:
-    """Shot-boundary detection plan for video rows → ``(media_id,
-    n_frames, n_cuts)``: a cut wherever consecutive frame signatures
-    differ by more than ``threshold``.
+def frame_deltas(decoded: DataFrame) -> DataFrame:
+    """One row per video frame → ``(media_id, n_frames, frame_idx,
+    delta)``: ``delta`` is the absolute difference of the frame's
+    signature from the previous frame's (NULL on a clip's first frame).
 
     The frame signature is the deterministic md5 stand-in for a real
     per-frame perceptual hash (the codec libs aren't in this container —
     the decode itself stays stubbed in :func:`decode_media`); everything
     downstream of the signature — frame explosion, the per-video lag
-    window, the cut threshold, the rollup — is the REAL production
-    plumbing and is pure JVM Column logic. Per-video windows partition by
-    media_id, so the shuffle key matches the natural parallelism: one
-    video never straddles executors, and no global sort exists.
+    window — is the REAL production plumbing and is pure JVM Column
+    logic. Per-video windows partition by media_id, so the shuffle key
+    matches the natural parallelism: one video never straddles
+    executors, and no global sort exists.
     """
     frames = decoded.filter(F.col("kind") == "video").select(
         "media_id",
@@ -1459,11 +1452,15 @@ def scene_cut_stats(decoded: DataFrame, threshold: int = 1 << 19) -> DataFrame:
         10,
     ).cast("long")
     w = Window.partitionBy("media_id").orderBy("frame_idx")
-    cuts = frames.withColumn("sig", sig).withColumn(
-        "cut",
-        F.when(
-            F.abs(F.col("sig") - F.lag("sig").over(w)) > threshold, 1
-        ).otherwise(0),
+    return frames.withColumn("delta", F.abs(sig - F.lag(sig).over(w)))
+
+
+def scene_cut_stats(decoded: DataFrame) -> DataFrame:
+    """Shot-boundary detection plan for video rows → ``(media_id,
+    n_frames, n_cuts)``: a cut wherever consecutive frame signatures
+    (:func:`frame_deltas`) differ by more than 2^19."""
+    cuts = frame_deltas(decoded).withColumn(
+        "cut", F.when(F.col("delta") > 1 << 19, 1).otherwise(0)
     )
     return cuts.groupBy("media_id").agg(
         F.max("n_frames").alias("n_frames"),

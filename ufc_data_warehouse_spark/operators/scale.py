@@ -74,9 +74,8 @@ def write_bucketed(
     table: str,
     bucket_cols: list[str],
     num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sort-ordered) table.
+    """Persist ``df`` as a bucketed table.
 
     Joins and aggregations keyed on ``bucket_cols`` against another table
     bucketed the same way are co-located: no Exchange in the plan.
@@ -93,8 +92,6 @@ def write_bucketed(
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
     shutil.rmtree(f"{warehouse.path}/{table.lower()}", ignore_errors=True)
     writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
 
 
@@ -260,7 +257,6 @@ def global_prefix_sum(
     value_col: str,
     order_col: str,
     n_buckets: int = 256,
-    out_col: str = "cum",
 ) -> DataFrame:
     """Global (whole-table) running sum WITHOUT the single-partition
     window that ``Window.orderBy(...)`` with no partitionBy degenerates
@@ -274,7 +270,7 @@ def global_prefix_sum(
     2. per-bucket totals (≤ ``n_buckets`` rows) get an EXCLUSIVE cumsum
        on the driver-sized frame, then broadcast-join back as offsets.
 
-    ``out_col`` is the inclusive prefix sum in ``order_col`` order.
+    ``cum`` is the inclusive prefix sum in ``order_col`` order.
     Requires ``order_col`` integer-typed (range bucketing); uniqueness is
     NOT required — ties are summed in (order_col, monotonic-in-bucket)
     order, which is only deterministic per-bucket totals-wise, so
@@ -309,7 +305,7 @@ def global_prefix_sum(
     )
     return (
         local.join(F.broadcast(offsets), "_bkt")
-        .withColumn(out_col, F.col("_local_cum") + F.col("_offset"))
+        .withColumn("cum", F.col("_local_cum") + F.col("_offset"))
         .drop("_bkt", "_local_cum", "_offset")
     )
 
@@ -319,19 +315,17 @@ def _composite_splitters(
     sort_col: str,
     tiebreak_cols: list[str],
     n_buckets: int,
-    sample_per_bucket: int = 100,
 ) -> list[tuple]:
     """Deterministic equi-depth splitter tuples over the composite key
     ``(sort_col, *tiebreak_cols)``.
 
     A hash filter (xxhash64 of the composite, fixed modulus derived from
-    one count job) keeps an expected ``n_buckets * sample_per_bucket``
-    rows; they collect to the driver (expected ``n_buckets *
-    sample_per_bucket`` tuples, worst case just under 2x that when the
-    modulus rounds down to 1 and every row is kept — size the driver for
-    ``2 * n_buckets * sample_per_bucket`` rows of key width), sort by the
-    composite order, and every (len/n_buckets)-th tuple becomes a
-    splitter. Same input -> same splitters, every time — no
+    one count job) keeps an expected ``n_buckets * 100`` rows; they
+    collect to the driver (expected ``n_buckets * 100`` tuples, worst
+    case just under 2x that when the modulus rounds down to 1 and every
+    row is kept — size the driver for ``200 * n_buckets`` rows of key
+    width), sort by the composite order, and every (len/n_buckets)-th
+    tuple becomes a splitter. Same input -> same splitters, every time — no
     RangePartitioner, no partition-id coupling.
 
     Rows containing a NULL key component are excluded from the sample
@@ -348,7 +342,7 @@ def _composite_splitters(
     n = df.count()
     if n == 0:
         return []
-    target = n_buckets * sample_per_bucket
+    target = n_buckets * 100
     k = max(1, n // target)
     dtypes = dict(df.dtypes)
     notnull = [F.col(c).isNotNull() for c in cols]
@@ -726,23 +720,21 @@ def global_order_rank(
     return out.drop(*drop)
 
 
-def exact_ntile_expr(
-    k: int, rn_col: str = "rn", total_col: str = "n_total"
-) -> Column:
-    """``ntile(k)`` in CLOSED FORM from a global row number + total count
-    (both from ``global_order_rank``) — bit-identical to the SQL window
+def exact_ntile_expr(k: int) -> Column:
+    """``ntile(k)`` in CLOSED FORM from the global row number ``rn`` and
+    total count ``n_total`` (both from ``global_order_rank``) — bit-identical to the SQL window
     function without any global sort: with q = n div k and r = n mod k,
     the first r tiles hold q+1 rows and the rest hold q, so the tile of
     row rn (1-based) is pure integer arithmetic. Integer div-by-zero
     (q = 0 when n < k) nulls the ELSE arm, which is unreachable then
     (rn ≤ n = r·(q+1) always takes the THEN arm)."""
-    q = f"({total_col} div {k})"
-    r = f"({total_col} % {k})"
+    q = f"(n_total div {k})"
+    r = f"(n_total % {k})"
     big = f"({r} * ({q} + 1))"
     return F.expr(
-        f"cast(CASE WHEN {rn_col} <= {big} "
-        f"THEN ({rn_col} - 1) div ({q} + 1) + 1 "
-        f"ELSE {r} + 1 + ({rn_col} - {big} - 1) div {q} END as int)"
+        f"cast(CASE WHEN rn <= {big} "
+        f"THEN (rn - 1) div ({q} + 1) + 1 "
+        f"ELSE {r} + 1 + (rn - {big} - 1) div {q} END as int)"
     )
 
 

@@ -51,8 +51,6 @@ def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query: (query_id, neighbor_id,
     rank, cosine). Self-matches excluded.
@@ -60,34 +58,32 @@ def cosine_topk(
     ``queries`` is broadcast; ranking ties broken by neighbor id for
     cross-engine determinism.
     """
-    pairs = _corpus_side(embeddings, id_col, vec_col).join(
-        F.broadcast(_query_side(queries, id_col, vec_col)),
+    pairs = _corpus_side(embeddings).join(
+        F.broadcast(_query_side(queries)),
         F.col("neighbor_id") != F.col("query_id"),
     )
     return _rank_by_cosine(pairs, k)
 
 
-def _query_side(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _query_side(queries: DataFrame) -> DataFrame:
     """(query_id, qvec, qnorm). Norms are per-row constants: computed ONCE
     per side before the join (N + N_q sqrt-aggregates) instead of inside
     the pair expression (2 × N × N_q) — at 100 TB the pair space dwarfs
     both inputs."""
     return queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        _norm(F.col("embedding")).alias("qnorm"),
     )
 
 
-def _corpus_side(
-    corpus: DataFrame, id_col: str, vec_col: str, *extra: F.Column
-) -> DataFrame:
+def _corpus_side(corpus: DataFrame, *extra: F.Column) -> DataFrame:
     """(neighbor_id, vec, vnorm, *extra): the candidate side of a cosine
     ranking, normed once per row like :func:`_query_side`."""
     return corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("vnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("vec"),
+        _norm(F.col("embedding")).alias("vnorm"),
         *extra,
     )
 
@@ -119,8 +115,6 @@ def embedding_near_dup(
     embeddings: DataFrame,
     threshold: float = 0.9,
     candidates: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥ t) —
     the dedup modality for already-embedded corpora.
@@ -135,14 +129,14 @@ def embedding_near_dup(
     baseline, small-n only.
     """
     a = embeddings.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("na"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
+        _norm(F.col("embedding")).alias("na"),
     )
     b = embeddings.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("nb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
+        _norm(F.col("embedding")).alias("nb"),
     )
     if candidates is not None:
         # Candidate-first: two equi hash joins, each shuffling only the
@@ -173,9 +167,6 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 10,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    list_col: str = "label",
 ) -> DataFrame:
     """IVF-flavored ANN: the corpus is pre-partitioned into inverted lists
     (here the ``label`` column — in production a clustering assignment);
@@ -190,32 +181,29 @@ def ivf_topk(
     candidate scan touches |corpus| × n_probe/n_lists rows — the sublinear
     path; final top-k is one window per query over candidates only.
     """
-    probes = _ivf_probes(embeddings, queries, n_probe, id_col, vec_col, list_col)
-    return _ivf_rank(embeddings, probes, k, id_col, vec_col, list_col)
+    probes = _ivf_probes(embeddings, queries, n_probe)
+    return _ivf_rank(embeddings, probes, k)
 
 
 def _ivf_probes(
-    corpus: DataFrame,
-    queries: DataFrame,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-    list_col: str,
+    corpus: DataFrame, queries: DataFrame, n_probe: int
 ) -> DataFrame:
     """(query_id, qvec, qnorm, probe_list): each query's ``n_probe`` lists
     with the most cosine-similar representative — the list's minimum-id
     member, broadcast (one row per list); ties break by list id."""
-    w_rep = Window.partitionBy(list_col).orderBy(F.asc(id_col))
+    w_rep = Window.partitionBy("label").orderBy(F.asc("vec_id"))
     reps = (
         corpus.withColumn("_rn", F.row_number().over(w_rep))
         .filter(F.col("_rn") == 1)
-        .select(F.col(list_col).alias("rep_list"), F.col(vec_col).alias("rep_vec"))
+        .select(
+            F.col("label").alias("rep_list"), F.col("embedding").alias("rep_vec")
+        )
     )
     probe_rank = Window.partitionBy("query_id").orderBy(
         F.desc("rep_cos"), F.asc("rep_list")
     )
     return (
-        _query_side(queries, id_col, vec_col)
+        _query_side(queries)
         .join(F.broadcast(reps))
         .select(
             "query_id",
@@ -233,19 +221,12 @@ def _ivf_probes(
     )
 
 
-def _ivf_rank(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    list_col: str,
-) -> DataFrame:
+def _ivf_rank(corpus: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """(query_id, neighbor_id, rank): exact cosine top-``k`` per query over
     the members of its probed lists, self-matches excluded."""
-    cands = _corpus_side(
-        corpus, id_col, vec_col, F.col(list_col).alias("probe_list")
-    ).join(F.broadcast(probes), "probe_list")
+    cands = _corpus_side(corpus, F.col("label").alias("probe_list")).join(
+        F.broadcast(probes), "probe_list"
+    )
     return _rank_by_cosine(
         cands.filter(F.col("neighbor_id") != F.col("query_id")), k
     ).drop("cosine")
@@ -275,8 +256,6 @@ _LSH_XSCALE = 1_000_000
 def lsh_bucket_signatures(
     embeddings: DataFrame,
     num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, bucket): ``num_planes`` sign-bits against deterministic
     hyperplanes, packed into a bigint bucket key.
@@ -295,9 +274,9 @@ def lsh_bucket_signatures(
     # first row happens to be null/empty must not zero out every bucket
     head = (
         embeddings.filter(
-            F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
+            F.col("embedding").isNotNull() & (F.size("embedding") > 0)
         )
-        .select(F.size(vec_col).alias("d"))
+        .select(F.size("embedding").alias("d"))
         .first()
     )
     dims = head["d"] if head is not None else 0
@@ -305,7 +284,7 @@ def lsh_bucket_signatures(
     if not dims or dims <= 0:
         # no usable vector anywhere: no buckets, stable schema
         return embeddings.select(
-            F.col(id_col).alias("id"), F.lit(0).cast("long").alias("bucket")
+            F.col("vec_id").alias("id"), F.lit(0).cast("long").alias("bucket")
         ).limit(0)
     # one range, plane = id div dims / dim = id mod dims — no cross join,
     # so downstream plans stay NLJ-free
@@ -317,8 +296,8 @@ def lsh_bucket_signatures(
     )
     comps = (
         embeddings.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(vec_col).alias("dim", "x"),
+            F.col("vec_id").alias("id"),
+            F.posexplode("embedding").alias("dim", "x"),
         )
         .join(F.broadcast(weights), "dim")
         .groupBy("id", "plane")
@@ -338,7 +317,7 @@ def lsh_bucket_signatures(
     )
 
 
-def quantize_int8(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Scalar int8 quantization of an embedding column: per-corpus global
     [min, max] → each component maps to floor((x-min)/(max-min)*255),
     clamped to [0, 255].
@@ -352,7 +331,7 @@ def quantize_int8(embeddings: DataFrame, vec_col: str = "embedding") -> DataFram
     reproduce the codes exactly. Adds ``codes array<int>`` plus the
     ``q_min``/``q_scale`` needed to dequantize (x ≈ code/255*scale+min).
     """
-    flat = embeddings.select(F.explode(vec_col).alias("x"))
+    flat = embeddings.select(F.explode("embedding").alias("x"))
     stats = flat.agg(
         F.min("x").cast("double").alias("q_min"),
         F.max("x").cast("double").alias("q_max"),
@@ -362,7 +341,7 @@ def quantize_int8(embeddings: DataFrame, vec_col: str = "embedding") -> DataFram
         .withColumn(
             "codes",
             F.transform(
-                F.col(vec_col),
+                F.col("embedding"),
                 lambda x: F.least(
                     F.lit(255),
                     F.greatest(
@@ -380,11 +359,11 @@ def quantize_int8(embeddings: DataFrame, vec_col: str = "embedding") -> DataFram
     )
 
 
-def dequantized(df: DataFrame, codes_col: str = "codes") -> F.Column:
+def dequantized(df: DataFrame) -> F.Column:
     """Reconstruct approximate float vectors from int8 codes (midpoint of
     each quantization cell, the standard unbiased choice)."""
     return F.transform(
-        F.col(codes_col),
+        F.col("codes"),
         lambda c: (c.cast("double") + 0.5) / 255.0 * F.col("q_scale")
         + F.col("q_min"),
     )
@@ -447,8 +426,6 @@ def kmeans(
     embeddings: DataFrame,
     k: int = 4,
     n_assign: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd's k-means over an embedding column, fully deterministic:
     returns (assignments (id, cluster), final centroids).
@@ -471,7 +448,7 @@ def kmeans(
     oracle replays the whole algorithm unrolled.
     """
     q = embeddings.select(
-        F.col(id_col).alias("id"), _quantized(F.col(vec_col)).alias("q")
+        F.col("vec_id").alias("id"), _quantized(F.col("embedding")).alias("q")
     )
     init_rows = q.orderBy("id").limit(k).collect()
     centroids = [[qi / _KM_SCALE for qi in r["q"]] for r in init_rows]
@@ -548,16 +525,15 @@ def pq_encode(
     m: int = 4,
     k: int = 4,
     n_assign: int = 2,
-    dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, list[list[list[float]]]]:
-    """Product quantization: split each ``dims``-d vector into ``m``
+    """Product quantization: split each 64-d vector into ``m``
     subvectors and learn an independent ``k``-centroid codebook per
     subspace with the deterministic fixed-point :func:`kmeans`; each
     vector compresses to ``m`` small codes (here 4 × 2 bits).
 
-    Returns (codes (id, code_0..code_{m-1}), codebooks[m][k][dims/m]).
+    Returns (codes (id, code_0..code_{m-1}), codebooks[m][k][64/m]).
 
     Scale shape: ALL ``m`` subspace k-means train in ONE melted plan —
     the corpus explodes to (id, sub, subvector) rows once, assignment is
@@ -575,7 +551,7 @@ def pq_encode(
     (256 B) → m log2(k) bits (1 B here), so candidate scoring reads 256×
     less.
     """
-    d_sub = dims // m
+    d_sub = 64 // m
     sub_slices = F.array(
         *[F.slice(F.col(vec_col), mm * d_sub + 1, d_sub) for mm in range(m)]
     )
@@ -687,18 +663,13 @@ def _adc_topk(
     )
 
 
-def coarse_centroids(
-    embeddings: DataFrame,
-    vec_col: str = "embedding",
-    list_col: str = "label",
-    dims: int = 64,
-) -> DataFrame:
+def coarse_centroids(embeddings: DataFrame) -> DataFrame:
     """(list_id, centroid array<double>): the exact per-inverted-list mean
     via fixed-point component sums (order-free integers, so the centroid
     is bit-identical across engines and partitionings — same trick as
     :func:`kmeans`). One narrow posexplode + one (list, dim) agg."""
     q = embeddings.select(
-        F.col(list_col).alias("list_id"), _quantized(F.col(vec_col)).alias("q")
+        F.col("label").alias("list_id"), _quantized(F.col("embedding")).alias("q")
     )
     sums = (
         q.select("list_id", F.posexplode("q").alias("dim", "qx"))
@@ -724,10 +695,6 @@ def ivfadc_topk(
     m: int = 4,
     pq_k: int = 4,
     n_assign: int = 2,
-    dims: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    list_col: str = "label",
     exclude_id: int | None = None,
 ) -> DataFrame:
     """Residual IVFADC — the FAISS IVFADC shape: PQ codebooks learn on
@@ -743,19 +710,21 @@ def ivfadc_topk(
     floats are read at query time. All arithmetic is deterministic IEEE
     replayed by the DuckDB oracle (fixed-point centroids + codebooks).
     """
-    cents = coarse_centroids(embeddings, vec_col=vec_col, list_col=list_col, dims=dims)
+    cents = coarse_centroids(embeddings)
     resid = embeddings.join(
-        F.broadcast(cents), F.col(list_col) == F.col("list_id")
+        F.broadcast(cents), F.col("label") == F.col("list_id")
     ).select(
-        F.col(id_col).alias("rid"),
-        F.col(list_col).alias("rlist"),
+        F.col("vec_id").alias("rid"),
+        F.col("label").alias("rlist"),
         F.zip_with(
-            F.col(vec_col), F.col("centroid"), lambda x, c: x.cast("double") - c
+            F.col("embedding"),
+            F.col("centroid"),
+            lambda x, c: x.cast("double") - c,
         ).alias("residual"),
     )
     codes, books = pq_encode(
-        resid, m=m, k=pq_k, n_assign=n_assign, dims=dims,
-        id_col="rid", vec_col="residual",
+        resid, m=m, k=pq_k, n_assign=n_assign, id_col="rid",
+        vec_col="residual",
     )
     cent_map = {
         r["list_id"]: [float(v) for v in r["centroid"]]
@@ -766,7 +735,7 @@ def ivfadc_topk(
         for lid, cvec in cent_map.items()
     )[:n_probe]
     probe_lists = [lid for _, lid in probed]
-    d_sub = dims // m
+    d_sub = 64 // m
     # per-(list, subspace) distance tables from the per-list probe residual
     tables = {
         lid: [
@@ -787,7 +756,7 @@ def ivfadc_topk(
     }
     labeled = codes.join(  # pq_encode returns codes keyed "id"
         embeddings.select(
-            F.col(id_col).alias("id"), F.col(list_col).alias("rlist")
+            F.col("vec_id").alias("id"), F.col("label").alias("rlist")
         ),
         "id",
     ).filter(F.col("rlist").isin(probe_lists))
@@ -812,8 +781,6 @@ def semantic_dedup_pairs(
     embeddings: DataFrame,
     assignments: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs: candidate pairs come ONLY
     from the same k-means cluster (the cluster key is the join/shuffle
@@ -822,9 +789,9 @@ def semantic_dedup_pairs(
     independently in parallel. Returns (cluster, id_a, id_b).
     """
     side = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        _norm(F.col("embedding")).alias("nrm"),
     ).join(assignments, "id")
     a = side.select(
         F.col("cluster"),
@@ -851,8 +818,6 @@ def semantic_dedup_pairs(
 def cosine_scores_arrow(
     embeddings: DataFrame,
     query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Bulk cosine scoring against one query via ``mapInArrow`` — the
     batch-inference shape: each Arrow RecordBatch's list<float> column is
@@ -879,15 +844,15 @@ def cosine_scores_arrow(
         import pyarrow as pa
 
         for b in batches:
-            ids = b.column(id_col)
-            vecs = b.column(vec_col)
+            ids = b.column("vec_id")
+            vecs = b.column("embedding")
             lengths = vecs.value_lengths().to_numpy(zero_copy_only=False)
             ok = (~ids.is_null().to_numpy(zero_copy_only=False)) & (
                 ~vecs.is_null().to_numpy(zero_copy_only=False)
             ) & (lengths == dim)
             if not ok.all():
                 b = b.filter(pa.array(ok))
-                ids, vecs = b.column(id_col), b.column(vec_col)
+                ids, vecs = b.column("vec_id"), b.column("embedding")
             if b.num_rows == 0:
                 continue
             mat = vecs.flatten().to_numpy(zero_copy_only=False).astype(
@@ -897,11 +862,11 @@ def cosine_scores_arrow(
             scores = (mat @ q) / (norms * qn)
             yield pa.record_batch(
                 [ids, pa.array(scores, type=pa.float64())],
-                names=[id_col, "cosine"],
+                names=["vec_id", "cosine"],
             )
 
-    return embeddings.select(id_col, vec_col).mapInArrow(
-        score, schema=f"{id_col} long, cosine double"
+    return embeddings.select("vec_id", "embedding").mapInArrow(
+        score, schema="vec_id long, cosine double"
     )
 
 
@@ -910,8 +875,6 @@ def incremental_topk_update(
     new_embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Incremental top-k maintenance (the EDBT'20 incremental-top-k
     shape): when a NEW batch of vectors lands, update each query's top-k
@@ -923,7 +886,7 @@ def incremental_topk_update(
     maintained top-k == full recompute over corpus ∪ batch — cosine is a
     per-pair score, so the true top-k over the union can only come from
     (old top-k ∪ new-batch scores)."""
-    fresh = cosine_topk(new_embeddings, queries, k=k, id_col=id_col, vec_col=vec_col)
+    fresh = cosine_topk(new_embeddings, queries, k=k)
     merged = base_topk.select(
         "query_id", "neighbor_id", "cosine"
     ).unionByName(fresh.select("query_id", "neighbor_id", "cosine"))
@@ -950,9 +913,6 @@ def int_vector_near_pairs(
     feats: DataFrame,
     max_d2: int,
     dims: int,
-    id_col: str = "media_id",
-    vec_col: str = "fi",
-    n_bands: int = 4,
 ) -> DataFrame:
     """Exact near-neighbor pairs over integer feature vectors:
     (id_a, id_b, d2) for every pair with squared L2 distance <= max_d2,
@@ -960,7 +920,7 @@ def int_vector_near_pairs(
     WITHOUT the cartesian product.
 
     Banded grid blocking (lossless, pigeonhole): the ``dims`` coordinates
-    split into ``n_bands`` contiguous bands; any pair within ``max_d2``
+    split into ``n_bands`` = 4 contiguous bands; any pair within ``max_d2``
     total has at least one band whose partial squared distance is
     <= max_d2 / n_bands, so every coordinate in that band differs by at
     most r = floor(sqrt(max_d2 / n_bands)). Quantizing that band's
@@ -978,6 +938,7 @@ def int_vector_near_pairs(
     perceptual-hash thresholds are far tighter than this demo's, giving
     correspondingly finer grids.
     """
+    n_bands = 4
     dpb, rem = divmod(dims, n_bands)
     assert rem == 0, "dims must divide evenly into n_bands"
     w = int((max_d2 // n_bands) ** 0.5) + 1
@@ -985,7 +946,7 @@ def int_vector_near_pairs(
     def cells(b: int, offs: tuple[int, ...] | None = None) -> list[F.Column]:
         out = []
         for j in range(dpb):
-            c = F.floor(F.element_at(F.col(vec_col), b * dpb + j + 1) / F.lit(w))
+            c = F.floor(F.element_at(F.col("fi"), b * dpb + j + 1) / F.lit(w))
             if offs is not None:
                 c = c + F.lit(offs[j])
             out.append(c.cast("long").alias(f"c{j}"))
@@ -1007,11 +968,11 @@ def int_vector_near_pairs(
     # shuffled bytes by redundant array copies; the verify re-fetches each
     # side's vector with one id-keyed join instead
     probe = feats.select(
-        F.col(id_col).alias("id_a"),
+        F.col("media_id").alias("id_a"),
         F.explode(F.array(*probe_structs)).alias("k"),
     ).select("id_a", *[F.col(f"k.{c}").alias(c) for c in key])
     build = feats.select(
-        F.col(id_col).alias("id_b"),
+        F.col("media_id").alias("id_b"),
         F.explode(F.array(*build_structs)).alias("k"),
     ).select("id_b", *[F.col(f"k.{c}").alias(c) for c in key])
     pairs = (
@@ -1027,11 +988,11 @@ def int_vector_near_pairs(
     )
     return (
         pairs.join(
-            feats.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("fa")),
+            feats.select(F.col("media_id").alias("id_a"), F.col("fi").alias("fa")),
             "id_a",
         )
         .join(
-            feats.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("fb")),
+            feats.select(F.col("media_id").alias("id_b"), F.col("fi").alias("fb")),
             "id_b",
         )
         .withColumn("d2", d2)
@@ -1112,12 +1073,10 @@ def kcenter_coreset(embeddings: DataFrame, k: int = 4) -> DataFrame:
 def maxsim_scores_arrow(
     codes_df: DataFrame,
     query_codes: list[tuple[int, list[int]]],
-    subvecs: int = 8,
-    subdim: int = 8,
 ) -> DataFrame:
     """Vectorized late-interaction MaxSim over int8 codes via
     ``mapInArrow`` → ``(query_id, neighbor_id, score)``: each corpus
-    batch is reshaped to (rows × subvecs × subdim) int64 and scored
+    batch is reshaped to (rows × 8 subvectors × 8 dims) int64 and scored
     against ALL queries with one einsum — Σᵢ maxⱼ ⟨qᵢ, dⱼ⟩ per
     (query, doc) pair, exact integer arithmetic, bit-identical to the
     JVM HOF scorer and the SQL oracle.
@@ -1131,10 +1090,9 @@ def maxsim_scores_arrow(
     """
     import numpy as np
 
-    dim = subvecs * subdim
     qids = np.asarray([q[0] for q in query_codes], dtype=np.int64)
     qmat = np.asarray([q[1] for q in query_codes], dtype=np.int64).reshape(
-        len(query_codes), subvecs, subdim
+        len(query_codes), 8, 8
     )
 
     def score(batches):
@@ -1149,7 +1107,7 @@ def maxsim_scores_arrow(
                 .flatten()
                 .to_numpy(zero_copy_only=False)
                 .astype(np.int64)
-                .reshape(b.num_rows, subvecs, subdim)
+                .reshape(b.num_rows, 8, 8)
             )
             # (q, n, i, j) integer dots, max over doc subvecs, sum over
             # query subvecs — all int64, no float ever
@@ -1166,23 +1124,19 @@ def maxsim_scores_arrow(
                 names=["query_id", "neighbor_id", "score"],
             )
 
-    assert all(len(q[1]) == dim for q in query_codes)
+    assert all(len(q[1]) == 64 for q in query_codes)
     return codes_df.select("vec_id", "codes").mapInArrow(
         score, schema="query_id long, neighbor_id long, score long"
     )
 
 
-def write_ivf_partitioned(
-    embeddings: DataFrame,
-    path: str,
-    list_col: str = "label",
-) -> None:
+def write_ivf_partitioned(embeddings: DataFrame, path: str) -> None:
     """Materialize the IVF index as list-partitioned parquet
     (``path/label=<list>/...``): the storage layout that turns a probe
     into PARTITION PRUNING — a 2-of-10-lists probe reads 20% of the
     files, enforced by the catalog, not by a post-scan filter. At 100 TB
     this (plus per-list file sizing) IS the index build."""
-    embeddings.write.mode("overwrite").partitionBy(list_col).parquet(path)
+    embeddings.write.mode("overwrite").partitionBy("label").parquet(path)
 
 
 def ivf_topk_from_partitioned(
@@ -1191,15 +1145,12 @@ def ivf_topk_from_partitioned(
     queries: DataFrame,
     k: int = 10,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    list_col: str = "label",
     schema=None,
 ):
     """IVF probe over the partitioned index written by
     :func:`write_ivf_partitioned`: probe lists are chosen exactly like
     :func:`ivf_topk` (broadcast medoid reps), but the candidate scan
-    filters ``list_col IN (probed)`` against the PARTITIONED store — the
+    filters ``label IN (probed)`` against the PARTITIONED store — the
     plan shows PartitionFilters, so unprobed lists are never read.
 
     The probed list set is collected to the driver first (bounded:
@@ -1215,11 +1166,10 @@ def ivf_topk_from_partitioned(
     """
     reader = spark.read.schema(schema) if schema is not None else spark.read
     full = reader.parquet(path)
-    probes = _ivf_probes(full, queries, n_probe, id_col, vec_col, list_col)
+    probes = _ivf_probes(full, queries, n_probe)
     probe_lists = sorted(
         {r["probe_list"] for r in probes.select("probe_list").distinct().collect()}
     )
     return _ivf_rank(
-        full.filter(F.col(list_col).isin(probe_lists)),
-        probes, k, id_col, vec_col, list_col,
+        full.filter(F.col("label").isin(probe_lists)), probes, k
     )

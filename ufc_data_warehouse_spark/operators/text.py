@@ -17,9 +17,7 @@ from .dedup import normalized_text, tokens
 EN_STOPWORDS = ["the", "a", "an", "of", "and", "to", "in", "is", "it", "on"]
 
 
-def token_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Per-doc token counts: (id, n_tokens, n_unique_tokens, n_chars_norm).
 
     Token counting = whitespace split of the normalized text; a BPE-ish
@@ -27,12 +25,12 @@ def token_stats(
     chars for English) — kept as the raw char count so consumers pick
     their own divisor. Map-only: no shuffle.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_unique_tokens"),
-        F.length(normalized_text(F.col(text_col))).alias("n_chars_norm"),
+        F.length(normalized_text(F.col("text"))).alias("n_chars_norm"),
     )
 
 
@@ -55,15 +53,13 @@ def lang_guess_expr(text_col: F.Column) -> F.Column:
     ).otherwise("und")
 
 
-def language_id(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Stopword-ratio language heuristic: (id, n_tokens, stop_tokens,
     lang_guess). ``en`` when ≥5%% of tokens are English function words,
     else ``und``. Integer arithmetic → engine-exact."""
-    c = F.col(text_col)
+    c = F.col("text")
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.size(tokens(c)).alias("n_tokens"),
         stop_token_count_expr(c).alias("stop_tokens"),
         lang_guess_expr(c).alias("lang_guess"),
@@ -72,8 +68,6 @@ def language_id(
 
 def chunk_documents(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_chars: int = 200,
     overlap: int = 50,
 ) -> DataFrame:
@@ -95,8 +89,8 @@ def chunk_documents(
     chunk = F.substring(F.col("norm"), F.col("start") + 1, chunk_chars)
     return (
         df.select(
-            F.col(id_col).alias("id"),
-            normalized_text(F.col(text_col)).alias("norm"),
+            F.col("doc_id").alias("id"),
+            normalized_text(F.col("text")).alias("norm"),
         )
         .filter(F.length("norm") > 0)
         .select("id", "norm", F.posexplode(starts).alias("chunk_idx", "start"))
@@ -121,12 +115,10 @@ _PUNCT_RE = r"[^a-z0-9 ]"
 IDF_MAP_CAP = 100_000
 
 
-def bpe_token_estimate(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bpe_token_estimate(df: DataFrame) -> DataFrame:
     """(id, word_runs, punct_chars, est_tokens): regex-based token-count
     estimate — whitespace counting's BPE-aware sibling (both JVM-side)."""
-    norm = normalized_text(F.col(text_col))
+    norm = normalized_text(F.col("text"))
     words = F.regexp_extract_all(norm, F.lit(_WORD_RE), 0)
     word_runs = F.size(words)
     # ceil(len/4) summed over runs = sum((len+3) div 4)
@@ -137,7 +129,7 @@ def bpe_token_estimate(
     )
     punct = F.size(F.regexp_extract_all(norm, F.lit(_PUNCT_RE), 0))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         word_runs.alias("word_runs"),
         punct.cast("int").alias("punct_chars"),
         (est_word_tokens + punct).cast("long").alias("est_tokens"),
@@ -145,7 +137,7 @@ def bpe_token_estimate(
 
 
 def quality_component_exprs(
-    text_col: F.Column,
+    text_col: F.Column
 ) -> tuple[F.Column, F.Column, F.Column]:
     """(len_ok, diversity_ok, alpha_ok) 0/1 signals — expression-level so
     composed pipelines score in one scan. All ratio tests use
@@ -168,15 +160,13 @@ def quality_expr(text_col: F.Column) -> F.Column:
     return len_ok + div_ok + alpha_ok
 
 
-def quality_score(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Integer quality score 0-3: (id, len_ok, diversity_ok, alpha_ok,
     quality). One point each for: length in [100, 20000] chars; unique
     token ratio ≥ 20%%; alphabetic-char ratio ≥ 60%%."""
-    len_ok, div_ok, alpha_ok = quality_component_exprs(F.col(text_col))
+    len_ok, div_ok, alpha_ok = quality_component_exprs(F.col("text"))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         len_ok.alias("len_ok"),
         div_ok.alias("diversity_ok"),
         alpha_ok.alias("alpha_ok"),
@@ -184,9 +174,7 @@ def quality_score(
     )
 
 
-def vocab_top_terms(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 100
-) -> DataFrame:
+def vocab_top_terms(df: DataFrame, k: int = 100) -> DataFrame:
     """Corpus vocabulary heavy-hitters: (term, n_occurrences, n_docs),
     top-k by occurrence — the vocabulary/IDF-statistics step of a
     training pipeline.
@@ -201,9 +189,9 @@ def vocab_top_terms(
     distinct-term set won't fit: per-partition count-min sketch, merged
     on the driver (bounded error, no term-keyed shuffle at all).
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     exploded = df.select(
-        F.col(id_col).alias("id"), F.explode(toks).alias("term")
+        F.col("doc_id").alias("id"), F.explode(toks).alias("term")
     ).filter(F.col("term") != "")
     return (
         exploded.groupBy("term")
@@ -216,9 +204,7 @@ def vocab_top_terms(
     )
 
 
-def ngram_repetition(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 2
-) -> DataFrame:
+def ngram_repetition(df: DataFrame, n: int = 2) -> DataFrame:
     """Gopher-style repetition quality signal: per document, the fraction
     of word n-grams that are repeats (1 − distinct/total). High values
     flag boilerplate/looping text that a pretraining pipeline drops.
@@ -231,7 +217,7 @@ def ngram_repetition(
     The ratio is one INT/INT division done in DOUBLE at the end, so it is
     bit-stable across engines.
     """
-    words = F.split(F.col(text_col), " ")
+    words = F.split(F.col("text"), " ")
     k = F.size(words) - (n - 1)  # number of n-grams
     grams = F.when(k >= 1, F.transform(
         F.sequence(F.lit(1), F.greatest(k, F.lit(1))),
@@ -242,7 +228,7 @@ def ngram_repetition(
     total = F.size(grams)
     distinct = F.size(F.array_distinct(grams))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         total.alias("total_ngrams"),
         distinct.alias("distinct_ngrams"),
         F.when(total > 0, 1.0 - distinct.cast("double") / total.cast("double"))
@@ -263,9 +249,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def redact_pii(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """PII scrubbing for training-data curation: (id, n_email, n_ipv4,
     n_phone, redacted) — emails, IPv4 addresses, and phone numbers
     replaced by typed placeholder tokens, with per-document match counts
@@ -277,12 +261,12 @@ def redact_pii(
     reference repo has no scrubbing step; this extends it the way the
     rest of this module does.)
     """
-    out = [F.col(id_col).alias("id")]
-    red = F.col(text_col)
+    out = [F.col("doc_id").alias("id")]
+    red = F.col("text")
     for name, pat, token in PII_PATTERNS:
         out.append(
             F.size(
-                F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0))
+                F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))
             ).alias(f"n_{name}")
         )
         red = F.regexp_replace(red, pat, token)
@@ -290,12 +274,7 @@ def redact_pii(
     return df.select(*out)
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
     """Per-document top-k TF-IDF terms: (id, term, tf, df, score), score
     = tf · ln(N/df), ranked per document with a total tie order
     (score DESC, term ASC).
@@ -323,9 +302,9 @@ def tfidf_top_terms(
     import math
 
     spark = df.sparkSession
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     exploded = df.select(
-        F.col(id_col).alias("id"), F.explode(toks).alias("term")
+        F.col("doc_id").alias("id"), F.explode(toks).alias("term")
     ).filter(F.col("term") != "")
     tf = exploded.groupBy("id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -360,9 +339,7 @@ def tfidf_top_terms(
     )
 
 
-def nfc_normalized(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def nfc_normalized(df: DataFrame) -> DataFrame:
     """Unicode NFC normalization — the canonicalization step that must
     run BEFORE hashing/dedup (the same glyph can arrive composed or as
     base+combining marks; md5 of the two differs, so un-normalized
@@ -384,9 +361,9 @@ def nfc_normalized(
         useArrow=True,
     )
     return df.select(
-        F.col(id_col).alias("id"),
-        nfc(F.col(text_col)).alias("nfc_text"),
-        (~nfc(F.col(text_col)).eqNullSafe(F.col(text_col)))
+        F.col("doc_id").alias("id"),
+        nfc(F.col("text")).alias("nfc_text"),
+        (~nfc(F.col("text")).eqNullSafe(F.col("text")))
         .cast("int")
         .alias("changed"),
     )

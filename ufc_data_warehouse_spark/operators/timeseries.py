@@ -193,7 +193,7 @@ def zscore_outlier_counts(
 
 
 def time_weighted_avg(
-    df: DataFrame, key: str, ts: str, value: str, tiebreak: str = "event_id"
+    df: DataFrame, key: str, ts: str, value: str
 ) -> DataFrame:
     """Per-key time-weighted average: each observation holds until the
     next one (step interpolation), weighted by its holding duration.
@@ -210,7 +210,7 @@ def time_weighted_avg(
     partitioning on ``key`` is the only shuffle, and the final groupBy
     reuses it.
     """
-    w = Window.partitionBy(key).orderBy(ts, tiebreak)
+    w = Window.partitionBy(key).orderBy(ts, "event_id")
     secs = F.unix_timestamp(F.col(ts))
     dt = F.lead(secs).over(w) - secs
     vd = F.col(value).cast("decimal(18,4)")

@@ -204,15 +204,9 @@ def mixture_sample(
     return df.filter(bucket < thresh)
 
 
-def quota_top_per_source(
-    df: DataFrame,
-    quota: int,
-    source_col: str = "source",
-    score_col: str = "score",
-    id_col: str = "id",
-) -> DataFrame:
-    """Per-domain quota retention: keep the ``quota`` highest-``score_col``
-    rows per ``source_col`` (ties broken deterministically by id) and add
+def quota_top_per_source(df: DataFrame, quota: int) -> DataFrame:
+    """Per-domain quota retention: keep the ``quota`` highest-``score``
+    rows per ``source`` (ties broken deterministically by ``id``) and add
     their 1-based ``rk``. The quality-weighted sibling of
     ``mixture_sample``: where mixture_sample keeps a *rate* per source,
     this keeps a *count* — the "at most N pages per domain" rule of web
@@ -224,9 +218,7 @@ def quota_top_per_source(
     per-source score threshold (computed via partial agg) so the window
     only sees candidate rows — same two-pass trick as top-k-per-group.
     """
-    w = Window.partitionBy(source_col).orderBy(
-        F.desc(score_col), F.asc(id_col)
-    )
+    w = Window.partitionBy("source").orderBy(F.desc("score"), F.asc("id"))
     return (
         df.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= quota)
@@ -263,15 +255,13 @@ def fixed_n_per_key(
     )
 
 
-def shard_assignments(
-    df: DataFrame, id_col: str, n_shards: int, seed: int = 42
-) -> DataFrame:
+def shard_assignments(df: DataFrame, id_col: str, n_shards: int) -> DataFrame:
     """Deterministic shard id per row: first 8 hex chars of the seeded md5
     mod ``n_shards``. A pure projection (no shuffle), stable across
     reruns, engines, and partition layouts — the file-level unit of a
     training-data export (readers stream shard files independently).
     """
-    bucket = F.conv(F.substring(_seeded_hash(F.col(id_col), seed), 1, 8), 16, 10)
+    bucket = F.conv(F.substring(_seeded_hash(F.col(id_col), 42), 1, 8), 16, 10)
     return df.withColumn(
         "shard", (bucket.cast("bigint") % n_shards).cast("int")
     )

@@ -45,12 +45,10 @@ def mad_agg(v: pd.Series) -> float:
     return float((v - v.median()).abs().median())
 
 
-def robust_stats(
-    df: DataFrame, key_col: str, value_col: str, decimals: int = 6
-) -> DataFrame:
+def robust_stats(df: DataFrame, key_col: str, value_col: str) -> DataFrame:
     """Per-key robust location/scale: (key, n, median_value, mad_value).
 
-    Outputs round to ``decimals`` so cross-engine hash comparison is
+    Outputs round to 6 decimals so cross-engine hash comparison is
     stable: pandas computes the even-count midpoint as (a+b)/2 while SQL
     engines compute a+(b−a)/2 — equal values, potentially different last
     bits.
@@ -59,8 +57,8 @@ def robust_stats(
         df.groupBy(key_col)
         .agg(
             count_agg(F.col(value_col)).alias("n"),
-            F.round(median_agg(F.col(value_col)), decimals).alias("median_value"),
-            F.round(mad_agg(F.col(value_col)), decimals).alias("mad_value"),
+            F.round(median_agg(F.col(value_col)), 6).alias("median_value"),
+            F.round(mad_agg(F.col(value_col)), 6).alias("mad_value"),
         )
         .orderBy(key_col)
     )

@@ -1951,29 +1951,9 @@ def q_multimodal_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded = multimodal.decode_media(
         multimodal.synthesize_media(docs), fake=True
     )
-    frames = decoded.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1)
-        ).alias("frame_idx"),
-    )
-    sig = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.col("media_id"), F.col("frame_idx"))), 1, 5
-        ),
-        16,
-        10,
-    ).cast("long")
-    w = Window.partitionBy("media_id").orderBy("frame_idx")
     deltas = (
-        frames.withColumn("sig", sig)
-        .withColumn(
-            "delta",
-            F.coalesce(
-                F.abs(F.col("sig") - F.lag("sig").over(w)),
-                F.lit(0).cast("long"),
-            ),
-        )
+        multimodal.frame_deltas(decoded)
+        .withColumn("delta", F.coalesce("delta", F.lit(0).cast("long")))
         .withColumn("bucket", F.expr("frame_idx div 30"))
     )
     wk = Window.partitionBy("media_id", "bucket").orderBy(

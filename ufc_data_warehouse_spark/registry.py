@@ -114,13 +114,8 @@ class Registry:
         targets: list[str] | None = None,
         partition_by: dict[str, list[str]] | None = None,
         metrics: dict[str, dict] | None = None,
-        jdbc_url: str | None = None,
-        jdbc_options: dict[str, str] | None = None,
-        jdbc_num_partitions: int | dict[str, int] | None = None,
     ) -> dict[str, str]:
-        """Write models to ``{warehouse}/{layer}/{name}`` parquet, or —
-        when ``jdbc_url`` is given — to ``{layer}_{name}`` tables over
-        JDBC (the reference's Postgres load target, dlt/load.py:55-59).
+        """Write models to ``{warehouse}/{layer}/{name}`` parquet.
 
         ``partition_by`` maps model name → partition columns (natural keys,
         e.g. weight_category) — the 100 TB layout knob.
@@ -129,17 +124,7 @@ class Registry:
         ``df.observe`` and per-mart row counts land in ``metrics[name]`` —
         pipeline observability measured DURING the write itself (the
         accumulator rides the job), not by re-scanning the written output.
-
-        ``jdbc_num_partitions`` caps the sink's connection fan-out (a
-        global int, or per-model dict) — without it every upstream output
-        partition opens its own connection, the max_connections hazard
-        ``write_jdbc``'s docstring warns about.
         """
-        if jdbc_url is not None and partition_by:
-            raise ValueError(
-                "partition_by is a parquet-layout knob; JDBC tables have no "
-                "directory partitioning — drop it or use the parquet sink"
-            )
         resolved = self.build(sources, targets)
         written: dict[str, str] = {}
         for name in self.topo_order(targets):
@@ -152,23 +137,11 @@ class Registry:
 
                 obs = Observation(f"mart_{name}")
                 df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-            if jdbc_url is not None:
-                path = f"{model.layer}_{name}"
-                n_parts = (
-                    jdbc_num_partitions.get(name)
-                    if isinstance(jdbc_num_partitions, dict)
-                    else jdbc_num_partitions
-                )
-                write_jdbc(
-                    df, jdbc_url, path, options=jdbc_options,
-                    num_partitions=n_parts,
-                )
-            else:
-                writer = df.write.mode("overwrite")
-                cols = (partition_by or {}).get(name)
-                if cols:
-                    writer = writer.partitionBy(*cols)
-                writer.parquet(path)
+            writer = df.write.mode("overwrite")
+            cols = (partition_by or {}).get(name)
+            if cols:
+                writer = writer.partitionBy(*cols)
+            writer.parquet(path)
             if obs is not None:
                 metrics[name] = obs.get
             written[name] = path
@@ -179,7 +152,6 @@ def write_jdbc(
     df: DataFrame,
     url: str,
     table: str,
-    mode: str = "overwrite",
     options: dict[str, str] | None = None,
     num_partitions: int | None = None,
 ) -> None:
@@ -195,7 +167,7 @@ def write_jdbc(
     batchsize raised to 10k (Spark's 1k default round-trips too often
     for bulk loads). ``truncate`` defaults true so overwrite keeps the
     target table's DDL (indexes, grants) instead of drop+recreate —
-    dbt's incremental-friendly behavior.
+    dbt's incremental-friendly behavior. Each call overwrites ``table``.
     """
     opts = {"batchsize": "10000", "truncate": "true"}
     opts.update(options or {})
@@ -204,7 +176,7 @@ def write_jdbc(
     # job) and can never raise the count; the extra exchange is the price
     # of decoupling compute parallelism from connection fan-out
     writer = df.repartition(num_partitions) if num_partitions else df
-    writer.write.mode(mode).options(**opts).jdbc(url, table)
+    writer.write.mode("overwrite").options(**opts).jdbc(url, table)
 
 
 REGISTRY = Registry()

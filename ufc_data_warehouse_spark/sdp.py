@@ -69,7 +69,9 @@ def run_pipeline(
     ``define`` is a zero-arg callable whose body declares datasets with
     the standard ``pyspark.pipelines`` decorators. Returns
     {dataset name → DataFrame} for every flow target; by default they read
-    a :func:`cache.scratch` dir, valid until ``cache.release``.
+    a :func:`cache.scratch` dir, valid until ``cache.release``. The temp
+    view each target registers for its downstream flows is dropped before
+    the run returns or raises.
     """
     from pyspark.pipelines.output import MaterializedView, StreamingTable
 
@@ -84,61 +86,70 @@ def run_pipeline(
     flows_per_target = Counter(f.target for f in reg.flows)
     done_per_target: Counter[str] = Counter()
 
-    pending = list(reg.flows)
-    while pending:
-        progress = False
-        deferred: list[Flow] = []
-        for flow in pending:
-            try:
-                df = flow.func()
-            except AnalysisException as exc:
-                # upstream not yet registered -> try again next round
-                if "TABLE_OR_VIEW_NOT_FOUND" in str(exc):
-                    deferred.append(flow)
-                    continue
-                raise
-            out = reg.outputs.get(flow.target)
-            path = os.path.join(mv_dir, flow.target)
-            if df.isStreaming or isinstance(out, StreamingTable):
-                # each append flow drains AvailableNow into its OWN
-                # subdirectory with its own checkpoint: the parquet
-                # streaming sink keeps a _spark_metadata commit log at
-                # the output path, and two queries cannot share one log
-                # — the registered table is a multi-path read over every
-                # flow's subdirectory (incremental and restartable per
-                # flow)
-                flow_path = os.path.join(path, f"flow={flow.name}")
-                ckpt = os.path.join(
-                    mv_dir, f"_ckpt_{flow.target}_{flow.name}"
+    try:
+        pending = list(reg.flows)
+        while pending:
+            progress = False
+            deferred: list[Flow] = []
+            for flow in pending:
+                try:
+                    df = flow.func()
+                except AnalysisException as exc:
+                    # upstream not yet registered -> try again next round
+                    if "TABLE_OR_VIEW_NOT_FOUND" in str(exc):
+                        deferred.append(flow)
+                        continue
+                    raise
+                out = reg.outputs.get(flow.target)
+                path = os.path.join(mv_dir, flow.target)
+                if df.isStreaming or isinstance(out, StreamingTable):
+                    # each append flow drains AvailableNow into its OWN
+                    # subdirectory with its own checkpoint: the parquet
+                    # streaming sink keeps a _spark_metadata commit log at
+                    # the output path, and two queries cannot share one log
+                    # — the registered table is a multi-path read over every
+                    # flow's subdirectory (incremental and restartable per
+                    # flow)
+                    flow_path = os.path.join(path, f"flow={flow.name}")
+                    ckpt = os.path.join(
+                        mv_dir, f"_ckpt_{flow.target}_{flow.name}"
+                    )
+                    q = (
+                        df.writeStream.format("parquet")
+                        .option("path", flow_path)
+                        .option("checkpointLocation", ckpt)
+                        .outputMode("append")
+                        .trigger(availableNow=True)
+                        .start()
+                    )
+                    q.awaitTermination()
+                    flow_dirs = [
+                        os.path.join(path, d)
+                        for d in sorted(os.listdir(path))
+                        if d.startswith("flow=")
+                    ]
+                    df = spark.read.parquet(*flow_dirs)
+                elif isinstance(out, MaterializedView):
+                    df.write.mode("overwrite").parquet(path)
+                    df = spark.read.parquet(path)
+                done_per_target[flow.target] += 1
+                if done_per_target[flow.target] == flows_per_target[
+                    flow.target
+                ]:
+                    df.createOrReplaceTempView(flow.target)
+                    results[flow.target] = df
+                progress = True
+            if deferred and not progress:
+                missing = [f.target for f in deferred]
+                raise RuntimeError(
+                    "pipeline cannot make progress; unresolved flows: "
+                    f"{missing} (cycle or reference to a table no flow "
+                    "produces)"
                 )
-                q = (
-                    df.writeStream.format("parquet")
-                    .option("path", flow_path)
-                    .option("checkpointLocation", ckpt)
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                flow_dirs = [
-                    os.path.join(path, d)
-                    for d in sorted(os.listdir(path))
-                    if d.startswith("flow=")
-                ]
-                df = spark.read.parquet(*flow_dirs)
-            elif isinstance(out, MaterializedView):
-                df.write.mode("overwrite").parquet(path)
-                df = spark.read.parquet(path)
-            done_per_target[flow.target] += 1
-            if done_per_target[flow.target] == flows_per_target[flow.target]:
-                df.createOrReplaceTempView(flow.target)
-                results[flow.target] = df
-            progress = True
-        if deferred and not progress:
-            missing = [f.target for f in deferred]
-            raise RuntimeError(
-                f"pipeline cannot make progress; unresolved flows: {missing} "
-                "(cycle or reference to a table no flow produces)"
-            )
-        pending = deferred
-    return results
+            pending = deferred
+        return results
+    finally:
+        # the views only let flows reference each other; the returned
+        # frames carry their plans, so none outlives the run
+        for name in results:
+            spark.catalog.dropTempView(name)

@@ -40,7 +40,7 @@ def _stream_from_links(
     prefix: str,
     n_links: int,
     max_files_per_trigger: int | None = None,
-    flush_days: int | None = None,
+    flush: bool = False,
 ) -> DataFrame:
     """File-source stream over events.parquet. The file streaming source
     monitors a DIRECTORY; the testdata is a bare file, so a scratch dir
@@ -48,7 +48,7 @@ def _stream_from_links(
     at-least-once upstream that redelivers every record;
     ``max_files_per_trigger=1`` then forces each delivery into its OWN
     micro-batch (AvailableNow honors the cap) instead of one batch.
-    ``flush_days`` adds the flush-sentinel file of
+    ``flush`` adds the flush-sentinel file of
     :func:`read_events_stream_with_flush` to the watched directory.
 
     The stream reads with the batch reader's schema, so ``ts`` lands the
@@ -58,8 +58,8 @@ def _stream_from_links(
     src_dir = cache.scratch(spark, prefix)
     for i in range(n_links):
         os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events_{i}.parquet")
-    if flush_days is not None:
-        _write_flush_file(batch, flush_days, f"{src_dir}/zz_flush.parquet")
+    if flush:
+        _write_flush_file(batch, f"{src_dir}/zz_flush.parquet")
     reader = spark.readStream.schema(batch.schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -69,17 +69,17 @@ def _stream_from_links(
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _write_flush_file(batch: DataFrame, flush_days: int, dest: str) -> None:
+def _write_flush_file(batch: DataFrame, dest: str) -> None:
     """Write the two flush-sentinel rows (one per join role, ``user_id =
-    -1``), timestamped ``flush_days`` past ``batch``'s latest event, as the
+    -1``), timestamped one day past ``batch``'s latest event, as the
     single parquet file ``dest``, in ``batch``'s schema and ``ts`` unit."""
     max_ts = batch.agg(F.max("ts")).collect()[0][0]
     if events_ts_is_nanos(batch):
         # empty stream: any epoch works as the base
-        flush_ts = (max_ts or 0) + flush_days * 86400 * 10**9
+        flush_ts = (max_ts or 0) + 86400 * 10**9
     else:
         flush_ts = (max_ts or datetime.datetime(1970, 1, 1)) + datetime.timedelta(
-            days=flush_days
+            days=1
         )
     flush = batch.sparkSession.createDataFrame(
         [
@@ -398,11 +398,9 @@ def user_value_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-def read_events_stream_with_flush(
-    spark: SparkSession, sf_dir: str, flush_days: int = 1
-) -> DataFrame:
+def read_events_stream_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events stream plus FLUSH sentinels: two rows (one per join
-    role, ``user_id = -1``) timestamped ``flush_days`` past the real
+    role, ``user_id = -1``) timestamped one day past the real
     data, linked into the watched directory as an extra file.
 
     This is the punctuation/heartbeat pattern: outer-join null results
@@ -419,9 +417,7 @@ def read_events_stream_with_flush(
     update after batch N gates evictions in batch N+1, so a separate
     batch is unnecessary.)
     """
-    return _stream_from_links(
-        spark, sf_dir, "events_flush_", 1, flush_days=flush_days
-    )
+    return _stream_from_links(spark, sf_dir, "events_flush_", 1, flush=True)
 
 
 def windowed_distinct_users(stream: DataFrame) -> DataFrame:

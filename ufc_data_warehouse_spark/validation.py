@@ -125,7 +125,7 @@ def run_checks(
     return out.orderBy("check_name")
 
 
-def pii_column_scan(df, columns: list[str] | None = None):
+def pii_column_scan(df):
     """Data-governance discovery: which STRING columns contain PII-shaped
     values, and how many rows match per (column, kind)? One fused scan —
     all columns × all patterns aggregate in a single pass (N rules ≠ N
@@ -136,8 +136,7 @@ def pii_column_scan(df, columns: list[str] | None = None):
 
     from .operators.text import PII_PATTERNS
 
-    if columns is None:
-        columns = [c for c, t in df.dtypes if t == "string"]
+    columns = [c for c, t in df.dtypes if t == "string"]
     aggs = [F.count(F.lit(1)).alias("__n_rows")]
     for c in columns:
         for kind, pat, _ in PII_PATTERNS:
